@@ -71,6 +71,7 @@ def ship_package(spark: SparkSession) -> None:
     SparkContext — addPyFile dedupes by filename). Cheap no-op when the
     worker could already import it (same-machine local mode with cwd on
     path), and required when the driver only patched its own sys.path."""
+    import uuid
     import zipfile
 
     sc = spark.sparkContext
@@ -80,22 +81,27 @@ def ship_package(spark: SparkSession) -> None:
     zip_path = os.path.join(
         os.environ.get("TMPDIR", "/tmp"), "osmesa_spark_pkg.zip"
     )
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < max(
-        os.path.getmtime(os.path.join(root, f))
+    sources = [
+        os.path.join(root, f)
         for root, _, files in os.walk(pkg_dir)
         for f in files
         if f.endswith(".py")
+    ]
+    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < max(
+        map(os.path.getmtime, sources)
     ):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _, files in os.walk(pkg_dir):
-                for f in files:
-                    if not f.endswith(".py"):
-                        continue
-                    full = os.path.join(root, f)
-                    rel = os.path.join(
-                        "osmesa_spark", os.path.relpath(full, pkg_dir)
-                    )
-                    zf.write(full, rel)
+        # build beside the target, then rename: another process reading or
+        # building the same path never sees a partial zip
+        tmp = f"{zip_path}.{uuid.uuid4().hex}.tmp"
+        try:
+            with zipfile.ZipFile(tmp, "w") as zf:
+                for full in sources:
+                    rel = os.path.relpath(full, pkg_dir)
+                    zf.write(full, os.path.join("osmesa_spark", rel))
+            os.replace(tmp, zip_path)
+        finally:
+            if os.path.exists(tmp):
+                os.unlink(tmp)
     sc.addPyFile(zip_path)
     sc._osmesa_spark_shipped = True
 

@@ -566,47 +566,27 @@ def run_streaming_stats_to_jdbc(
     proc_name: str = "augmented-diff-stats",
     countries=None,
 ):
-    """writeStream.foreachBatch → JDBC upsert + checkpoint row — the
-    reference's actual sink chain (ChangesetStatsUpdater → ForeachWriter →
-    Postgres). Twin of `run_streaming_stats_to_upsert` with the parquet
-    table swapped for the DB."""
-    from osmesa_spark.streaming.stats_stream import streaming_changeset_stats
+    """writeStream.foreachBatch → rollup + JDBC upsert + checkpoint row —
+    the reference's actual sink chain (ChangesetStatsUpdater → ForeachWriter
+    → Postgres). Twin of `run_streaming_stats_to_upsert` with the parquet
+    table swapped for the DB; the rollup runs statelessly on the bounded
+    micro-batch, and a replayed batch is a no-op under the DB's guard."""
+    from osmesa_spark.streaming.stats_stream import stats_upsert_rows
 
-    rolled = streaming_changeset_stats(diffs_stream, countries)
     sink = JdbcStatsSink(db_path)
 
     def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        # one materialization: the stateful rollup would otherwise re-run
-        # for the emptiness probe, the upsert and the max-sequence agg
-        mat = batch.localCheckpoint(eager=True)
-        try:
-            if mat.isEmpty():
-                return
-            prepared = mat.select(
-                F.col("changeset").alias("id"),
-                F.col("counts").cast("map<string,bigint>").alias("counts"),
-                "measurements",
-                F.col("total_edits").cast("bigint"),
-                F.array(F.col("sequence")).cast("array<int>").alias(
-                    "augmented_diffs"
-                ),
-            )
-            sink.upsert_stats(prepared)
-            # Checkpointing past max(sequence) is safe because every
-            # upserted row carries a SINGLE-sequence augmented_diffs array
-            # (array(sequence) above) and upsert_stats pre-merges per
-            # (id, sequence-set): a redelivered sequence is skipped
-            # row-by-row by the overlap guard while unseen sequences in
-            # the same batch still apply, so shifted foreachBatch
-            # boundaries under at-least-once delivery cannot lose edits.
-            max_seq = mat.agg(F.max("sequence")).first()[0]
-            if max_seq is not None:
-                sink.save_checkpoint(proc_name, int(max_seq))
-        finally:
-            mat.unpersist()
+        sink.upsert_stats(stats_upsert_rows(batch, countries))
+        # max(sequence) is a separate read: foreachPartition's write does
+        # not complete an Observation. Checkpointing past it is safe: rows
+        # carry single-sequence augmented_diffs, so a redelivered sequence
+        # is skipped row-by-row by the guard while unseen ones still apply.
+        max_seq = batch.agg(F.max("sequence")).first()[0]
+        if max_seq is not None:
+            sink.save_checkpoint(proc_name, int(max_seq))
 
     return (
-        rolled.writeStream.outputMode("append")
+        diffs_stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(write_batch)
         .start()

@@ -2,11 +2,22 @@
 `osmesa.apps.streaming.StreamingChangesetStatsUpdater`
 (`src/apps/src/main/scala/osmesa/apps/streaming/StreamingChangesetStatsUpdater.scala:80-142`).
 
-Chain (§3.2): augdiff stream → tagged filter → geocode → event time from
-sequence (T1) → watermark 0s (T2: sequences arrive atomically and ordered;
-the agg for sequence N finalizes when N+1 arrives) → stateful
-groupBy(timestamp, sequence, changeset, uid, user) map-sum agg (T4/A2) →
-foreachBatch idempotent upsert (T6) + checkpoint bookkeeping (T7).
+Chain (§3.2): augdiff stream → foreachBatch: per micro-batch, the bounded
+rollup (tagged filter → geocode → event time from sequence (T1) →
+groupBy(timestamp, sequence, changeset, uid, user) map-sum agg (T4/A2)) →
+idempotent upsert (T6) + checkpoint bookkeeping (T7).
+
+No state store: the reference's 0 s watermark (T2) rests on sequences
+arriving whole and in order, so a sequence's groups are final once its own
+batch is read and the state only delays them by one (eviction) batch. Our
+source hands over one `<sequence>.jsonl` per trigger, so the sink rolls up
+the bounded micro-batch (T8) and the batch that reads a sequence also
+checkpoints it; a replayed batch is a no-op under the upsert's overlap
+guard. A sequence split across two files (outside that contract) was
+dropped as late by the stateful rollup; now the guard skips the changesets
+that already hold the sequence and applies the rest. Upgrading from the
+stateful runner: restart on a fresh checkpoint directory — the guard makes
+the replay a no-op.
 
 Also provides the watermarked stream-stream join (J9/T5):
 augdiffs ⋈ changeset metadata on `changeset`, watermarks 0s / 25h
@@ -94,16 +105,13 @@ def augdiff_feature_stats(
 def streaming_changeset_stats(
     diffs: DataFrame, countries: BBoxCountries | None = None
 ) -> DataFrame:
-    """The watermarked stateful rollup (T2/T4). On a streaming input this is
-    an append-mode aggregation whose groups finalize as the watermark (next
-    sequence) passes; on a bounded input it degenerates to the batch rollup —
-    same code path, T8."""
-    per_row = augdiff_feature_stats(diffs, countries)
-    if per_row.isStreaming:
-        per_row = per_row.withWatermark("event_time", "0 seconds")
-    # HOF fold here (not explode/reassemble): streaming aggs need a single
-    # agg stage; groups are (changeset, sequence)-bounded so lists stay small.
-    return per_row.groupBy(
+    """The per-(sequence, changeset) rollup (T4) of a bounded frame: a whole
+    augdiff dataset, or one micro-batch inside the stats runners' sinks.
+    Stateless — each group lives within one sequence, and the source hands
+    over whole sequences (module docstring)."""
+    # HOF fold here (not explode/reassemble): one agg stage; groups are
+    # (changeset, sequence)-bounded so lists stay small.
+    return augdiff_feature_stats(diffs, countries).groupBy(
         "event_time", "sequence", "changeset", "uid", "user"
     ).agg(
         sum_map_values(F.collect_list("counts"), "int").alias("counts"),
@@ -111,6 +119,22 @@ def streaming_changeset_stats(
             "measurements"
         ),
         F.count(F.lit(1)).alias("total_edits"),
+    )
+
+
+def stats_upsert_rows(
+    batch: DataFrame, countries: BBoxCountries | None = None
+) -> DataFrame:
+    """One micro-batch's rollup in the changesets-table shape both stats
+    sinks upsert. Each row carries a single-sequence `augmented_diffs`, so
+    the overlap guard skips exactly the (changeset, sequence) pairs already
+    applied."""
+    return streaming_changeset_stats(batch, countries).select(
+        F.col("changeset").alias("id"),
+        F.col("counts").cast("map<string,bigint>").alias("counts"),
+        "measurements",
+        F.col("total_edits").cast("bigint"),
+        F.array(F.col("sequence")).cast("array<int>").alias("augmented_diffs"),
     )
 
 
@@ -122,23 +146,23 @@ def run_streaming_stats_to_upsert(
     countries: BBoxCountries | None = None,
     observe_metrics: bool = False,
 ):
-    """writeStream.foreachBatch → idempotent upsert + checkpoint row —
-    the full streaming sink chain (S7 + S10 semantics). Returns the query.
+    """writeStream.foreachBatch → rollup of the bounded micro-batch +
+    idempotent upsert + checkpoint row — the full streaming sink chain
+    (S7 + S10 semantics), stateless (module docstring). Returns the query.
 
-    `observe_metrics=True` attaches a Dataset.observe node at the
-    finalized-rollup point: per micro-batch, (finalized_groups, edits,
-    min_seq, max_seq) surface in the query's progress events
-    (`observedMetrics['stats_ingest']`) — the production keep-up /
-    lag dashboard feed. Metrics piggyback the existing batch plan as
-    accumulator-style aggregates: zero extra passes, zero extra shuffle,
-    and they observe AFTER the watermark so a stalled sequence shows up
-    as an empty-metrics batch rather than silently-retained state."""
-    rolled = streaming_changeset_stats(diffs_stream, countries)
+    `observe_metrics=True` attaches a Dataset.observe node to the tagged
+    input stream (observations made inside foreachBatch never reach the
+    progress events): per micro-batch, (finalized_groups, edits, min_seq,
+    max_seq) surface in `observedMetrics['stats_ingest']` — the keep-up /
+    lag dashboard feed — piggybacking the batch's one read. `observe`
+    rejects DISTINCT, hence the group count as the size of a key set."""
     if observe_metrics:
-        rolled = rolled.observe(
+        diffs_stream = diffs_stream.where(is_tagged("tags")).observe(
             "stats_ingest",
-            F.count(F.lit(1)).alias("finalized_groups"),
-            F.coalesce(F.sum("total_edits"), F.lit(0)).alias("edits"),
+            F.size(
+                F.collect_set(F.struct("sequence", "changeset", "uid", "user"))
+            ).alias("finalized_groups"),
+            F.count(F.lit(1)).alias("edits"),
             F.min("sequence").alias("min_seq"),
             F.max("sequence").alias("max_seq"),
         )
@@ -148,38 +172,17 @@ def run_streaming_stats_to_upsert(
     def sink(batch: DataFrame, epoch_id: int) -> None:
         from pyspark.sql import Observation
 
-        # ONE materialization per micro-batch: the batch plan re-executes
-        # for every action inside foreachBatch (the emptiness probe and
-        # the upsert write would otherwise run the stateful rollup twice
-        # — and fire any observe() metrics twice over)
-        mat = batch.localCheckpoint(eager=True)
-        try:
-            if mat.isEmpty():
-                return
-            # max(sequence) rides the upsert's own write job as a batch
-            # Observation instead of a separate agg action — one fewer
-            # Spark job per micro-batch for the checkpoint bookkeeping
-            seq_obs = Observation()
-            prepared = mat.observe(
-                seq_obs, F.max("sequence").alias("max_seq")
-            ).select(
-                F.col("changeset").alias("id"),
-                F.col("counts").cast("map<string,bigint>").alias("counts"),
-                "measurements",
-                F.col("total_edits").cast("bigint"),
-                F.array(F.col("sequence")).cast("array<int>").alias(
-                    "augmented_diffs"
-                ),
-            )
-            table.upsert_stats(prepared)
-            max_seq = seq_obs.get["max_seq"]
-            if max_seq is not None:
-                checkpoints.save(proc_name, int(max_seq))
-        finally:
-            mat.unpersist()
+        # max(sequence) rides the upsert's write as an Observation: rollup,
+        # upsert and checkpoint value are one Spark action per micro-batch
+        seq_obs = Observation()
+        observed = batch.observe(seq_obs, F.max("sequence").alias("max_seq"))
+        table.upsert_stats(stats_upsert_rows(observed, countries))
+        max_seq = seq_obs.get["max_seq"]
+        if max_seq is not None:
+            checkpoints.save(proc_name, int(max_seq))
 
     return (
-        rolled.writeStream.outputMode("append")
+        diffs_stream.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(sink)
         .start()

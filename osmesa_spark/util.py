@@ -89,7 +89,8 @@ def ensure_parallelism(df: DataFrame, *cols: str) -> DataFrame:
     w = _prespread_width(df)
     if w is not None and w >= target:
         return df
-    if _probed_partitions(df) >= target:
+    # a promised width below target needs the spread: no probe of its exchange
+    if w is None and _probed_partitions(df) >= target:
         return df
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
@@ -105,7 +106,9 @@ def ensure_parallelism(df: DataFrame, *cols: str) -> DataFrame:
 # re-read after an append), the memo can serve a stale width — perf-only
 # (a spread decision), never a correctness issue, and the probe it
 # replaces was itself a point-in-time answer. Streaming never reaches
-# here.
+# here. Only probes over an exchange are kept: an exchange-free one runs no
+# job, and each foreachBatch micro-batch is a fresh plan (a LogicalRDD), so
+# keeping those would grow the memo by one entry per batch, without bound.
 _PROBE_MEMO: dict = {}
 
 
@@ -123,7 +126,8 @@ def _probed_partitions(df: DataFrame) -> int:
     n = _PROBE_MEMO.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()
-        _PROBE_MEMO[key] = n
+        if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+            _PROBE_MEMO[key] = n
     return n
 
 

@@ -666,3 +666,41 @@ def test_ensure_parallelism_skips_probe_on_prespread_frame(spark):
     assert set(tracker.getJobIdsForGroup(None)) == before, (
         "ensure_parallelism launched a job probing an already-spread frame"
     )
+
+
+def test_ensure_parallelism_spreads_narrow_promise_without_probe(spark):
+    """A frame whose plan promises FEWER partitions than the target needs
+    the spread whatever a probe would say — probing it would materialize
+    its exchange as a job only to repartition on top."""
+    from osmesa_spark.util import _prespread_width, ensure_parallelism
+
+    target = spark.sparkContext.defaultParallelism
+    if target < 2:
+        pytest.skip("needs defaultParallelism >= 2")
+    narrow = spark.range(1013).repartition(target - 1, "id")
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = ensure_parallelism(narrow, "id")
+    assert set(tracker.getJobIdsForGroup(None)) == before, (
+        "ensure_parallelism probed a frame it had to spread anyway"
+    )
+    assert _prespread_width(out) == target
+
+
+def test_ensure_parallelism_memoizes_only_shuffle_probes(spark):
+    """An exchange-free probe launches no job, so its answer is not kept:
+    a stream hands every micro-batch over as a fresh plan, and memoizing
+    those grew the memo by one entry per batch. A probe over an exchange
+    is still memoized."""
+    from pyspark.sql import functions as F
+
+    from osmesa_spark import util as U
+
+    size = len(U._PROBE_MEMO)
+    for i in range(20):
+        U.ensure_parallelism(spark.range(100 + i, numPartitions=1), "id")
+    assert len(U._PROBE_MEMO) == size
+
+    agg = spark.range(777).groupBy((F.col("id") % 5).alias("k")).count()
+    U.ensure_parallelism(agg, "k")
+    assert len(U._PROBE_MEMO) == size + 1

@@ -1793,3 +1793,102 @@ def test_streaming_intake_repetition_gate(spark, tmp_path):
     }
     assert {1, 2} <= ids
     assert 12 not in ids, "A2 gate must drop the repetitive doc"
+
+
+def test_stats_stream_one_stateless_batch_per_sequence(spark, tmp_path):
+    """The rollup runs inside the sink on the bounded micro-batch: the
+    query holds no state, and the micro-batch that reads a sequence also
+    upserts and checkpoints it — no second, no-data batch to evict it."""
+    drop = str(tmp_path / "one_seq")
+    write_augdiff_dropdir(drop, n_sequences=1, per_seq=60, corrupt_every=0)
+    good_stream, _ = R.split_errors(
+        R.read_augmented_diffs(spark, drop, streaming=True)
+    )
+    table_path = str(tmp_path / "stats_table")
+    q = S.run_streaming_stats_to_upsert(
+        good_stream, table_path, str(tmp_path / "ckpt"), countries=COUNTRIES
+    )
+    try:
+        q.processAllAvailable()
+        progress = q.recentProgress
+    finally:
+        q.stop()
+    assert progress
+    assert all(not p["stateOperators"] for p in progress), progress
+    assert sum(1 for p in progress if p["numInputRows"] > 0) == 1
+    assert CheckpointTable(f"{table_path}/_checkpoints").load(
+        "augmented-diff-stats"
+    ) == 1000
+    good, _ = R.split_errors(R.read_augmented_diffs(spark, drop))
+    want = (
+        S.streaming_changeset_stats(good, COUNTRIES)
+        .agg(F.sum("total_edits")).first()[0]
+    )
+    stored = ParquetUpsertTable(table_path).read(spark)
+    assert stored.agg(F.sum("total_edits")).first()[0] == want > 0
+
+
+def test_stats_with_deadletter_exactly_once_across_restart(spark, tmp_path):
+    """Kill and restart: the stats query crashes after its upsert but
+    before Spark commits the batch (the newest `commits/` entry removed),
+    so the restart replays that batch. The upsert guard makes the replay a
+    no-op: every (changeset, sequence) lands once, and the errors table
+    holds each injected corrupt line once."""
+    import os
+    import shutil
+
+    from osmesa_spark.sinks.upsert import ErrorsTable
+
+    staging, drop = tmp_path / "staging", tmp_path / "drop"
+    write_augdiff_dropdir(str(staging), n_sequences=3, per_seq=30, corrupt_every=0)
+    # distinct corrupt lines: the errors table keys on (sequence, payload)
+    injected = 0
+    for seq in (1000, 1001, 1002):
+        with open(staging / f"{seq}.jsonl", "a") as f:
+            for i in range(seq - 998):
+                f.write('{"sequence": %d, "id": BROKEN-%d\n' % (seq, i))
+                injected += 1
+    drop.mkdir()
+    ckpt = tmp_path / "ckpt"
+    table_path, errors_path = str(tmp_path / "stats"), str(tmp_path / "errors")
+
+    def run_to_idle():
+        raw = R.read_augmented_diffs(spark, str(drop), streaming=True)
+        queries = S.run_streaming_stats_with_deadletter(
+            raw, table_path, errors_path, str(ckpt), countries=COUNTRIES
+        )
+        try:
+            for q in queries:
+                q.processAllAvailable()
+            return [p["batchId"] for p in queries[0].recentProgress]
+        finally:
+            for q in queries:
+                q.stop()
+
+    for seq in (1000, 1001):
+        shutil.copy(staging / f"{seq}.jsonl", drop)
+    run_to_idle()
+    commits = ckpt / "stats" / "commits"
+    newest = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    for name in (str(newest), f".{newest}.crc"):
+        if (commits / name).exists():
+            os.remove(commits / name)
+    shutil.copy(staging / "1002.jsonl", drop)
+    assert run_to_idle()[0] == newest, "the uncommitted batch was not replayed"
+
+    good, _ = R.split_errors(R.read_augmented_diffs(spark, str(staging)))
+    want = {
+        r["changeset"]: (r["edits"], sorted(r["seqs"]))
+        for r in S.streaming_changeset_stats(good, COUNTRIES)
+        .groupBy("changeset")
+        .agg(
+            F.sum("total_edits").alias("edits"),
+            F.collect_set("sequence").alias("seqs"),
+        )
+        .collect()
+    }
+    stored = ParquetUpsertTable(table_path).read(spark).collect()
+    got = {r["id"]: (r["total_edits"], sorted(r["augmented_diffs"])) for r in stored}
+    assert got == want
+    assert sum(e for e, _ in got.values()) == good.count()
+    assert ErrorsTable(errors_path).read(spark).count() == injected
