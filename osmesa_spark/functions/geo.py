@@ -292,15 +292,6 @@ def tile_y(lat: Column, zoom: int | Column) -> Column:
     return F.least(F.greatest(y, F.lit(0)), (n - 1).cast("int"))
 
 
-def cell_in_tile(coord: Column, tile_idx: Column, zoom: int | Column, cells: int) -> Column:
-    """Sub-cell index (0..cells-1) of a fractional tile coordinate."""
-    z = F.lit(zoom) if isinstance(zoom, int) else zoom
-    n = F.pow(F.lit(2.0), z.cast("double"))
-    frac = coord * n - tile_idx.cast("double")
-    c = F.floor(frac * cells).cast("int")
-    return F.least(F.greatest(c, F.lit(0)), F.lit(cells - 1))
-
-
 def lon_to_unit(lon: Column) -> Column:
     """lon → [0,1) Web-Mercator x."""
     return (lon + 180.0) / 360.0

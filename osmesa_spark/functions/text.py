@@ -14,6 +14,7 @@ The text-analysis ops are the training-data-pipeline extension surface
 
 from __future__ import annotations
 
+from osmesa_spark.functions.litexpr import q
 from osmesa_spark.util import column_memo
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -72,11 +73,9 @@ def token_count(text: Column | str) -> Column:
 
 
 @column_memo
-def word_tokens(text: Column | str) -> Column:
-    """Lowercased word tokens (runs of letters/digits) — the shingling and
-    language-ID normalization basis."""
-    text = F.col(text) if isinstance(text, str) else text
-    return F.regexp_extract_all(F.lower(text), F.lit("([a-z0-9]+)"), 1)
+def word_tokens(text: str) -> Column:
+    """`word_tokens_sql` over the string column named `text`."""
+    return F.expr(word_tokens_sql(q(text)))
 
 
 # GPT-2-style pretokenizer pattern, restricted to RE2-compatible syntax (no
@@ -141,43 +140,29 @@ def doc_fingerprint(text: Column | str) -> Column:
 
 
 @column_memo
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles (for MinHash / Jaccard dedup). Returns
-    array<string> of space-joined n-grams; empty array if fewer than n tokens.
-
-    The token array is LET-BOUND via a single-element transform so the
-    tokenizing regex runs ONCE per row: higher-order-function lambdas
-    re-evaluate captured subtrees per element, so the former direct
-    `slice(word_tokens(text), i+1, n)` re-ran regexp_extract_all once per
-    shingle POSITION — measured 8x slower on sf0.1 documents (3.5 s vs
-    0.45 s for the shingle projection; r11). Values are identical."""
-    toks = word_tokens(text)
-    return F.element_at(
-        F.transform(
-            F.array(toks),
-            lambda t: F.when(
-                F.size(t) >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.size(t) - n),
-                    lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)),
-                ),
-            ).otherwise(F.array().cast("array<string>")),
-        ),
-        1,
-    )
+def shingles(text: str, n: int = 3) -> Column:
+    """`shingles_sql` over the string column named `text`."""
+    return F.expr(shingles_sql(q(text), n))
 
 
 def word_tokens_sql(text_sql: str) -> str:
-    """SQL-string twin of `word_tokens` (see functions/litexpr.py for why:
-    one F.expr parse replaces per-operator py4j round-trips in constructors
-    that are rebuilt on every query execution)."""
+    """Lowercased word tokens (runs of letters/digits) — the shingling and
+    language-ID normalization basis. Rendered as one SQL string (see
+    functions/litexpr.py): one F.expr parse instead of a py4j round-trip
+    per operator."""
     return f"regexp_extract_all(lower({text_sql}), '([a-z0-9]+)', 1)"
 
 
 def shingles_sql(text_sql: str, n: int = 3) -> str:
-    """SQL-string twin of `shingles` — identical tree, including the
-    let-binding of the token array (see `shingles` for the 8x measured
-    cost of capturing the regex inside the per-position lambda)."""
+    """Word n-gram shingles (for MinHash / Jaccard dedup): array<string> of
+    space-joined n-grams; empty array if fewer than n tokens.
+
+    The token array is LET-BOUND via a single-element transform so the
+    tokenizing regex runs ONCE per row: higher-order-function lambdas
+    re-evaluate captured subtrees per element, so a direct
+    `slice(<tokens>, i + 1, n)` re-runs regexp_extract_all once per
+    shingle POSITION — measured 8x slower on sf0.1 documents (3.5 s vs
+    0.45 s for the shingle projection; r11). Values are identical."""
     toks = word_tokens_sql(text_sql)
     return (
         f"element_at(transform(array({toks}), t -> "
@@ -198,7 +183,7 @@ def winnow_fingerprints(
     it stays JVM-side in whole-stage codegen.
 
     `shingle_hashes`: array<bigint> of per-shingle rolling hashes
-    (see operators.dedup.base_shingle_hash).
+    (see operators.dedup.shingle_hashes_sql).
 
     The hash array is bound ONCE as a lambda variable (via a one-element
     array wrapper): referencing the input expression directly inside the
@@ -365,7 +350,7 @@ def _ngram_strings(words: Column, n: int) -> Column:
 
 
 @column_memo
-def gopher_repetition_flags(text: Column | str) -> Column:
+def gopher_repetition_flags(text: str) -> Column:
     """The Gopher REPETITION rule bundle (Rae et al. 2021 table A2 — the
     second half of the MassiveWeb filter set; `gopher_quality_flags` is
     table A1) as ONE struct of row-local signals + per-rule booleans +
@@ -396,8 +381,7 @@ def gopher_repetition_flags(text: Column | str) -> Column:
     Row-local cost is O(G²) per doc in gram count (first-occurrence and
     frequency tests are array scans) — bounded by document length, the
     same regime as shingling, never a join. Fractions rounded 4dp."""
-    text = F.col(text) if isinstance(text, str) else text
-    text = F.coalesce(text, F.lit(""))
+    text_sql = f"coalesce({q(text)}, '')"
     chars = lambda arr: F.aggregate(  # noqa: E731
         arr, F.lit(0).cast("bigint"), lambda acc, l: acc + F.length(l)
     )
@@ -526,17 +510,15 @@ def gopher_repetition_flags(text: Column | str) -> Column:
         )
 
     return _let(
-        line_part(F.split(text, "\n")),
+        line_part(F.split(F.expr(text_sql), "\n")),
         lambda lp: _let(
-            _let(word_tokens(text), gram_part),
+            _let(F.expr(word_tokens_sql(text_sql)), gram_part),
             lambda gp: assemble(lp, gp),
         ),
     )
 
 
-def blocklist_flags(
-    text: Column | str, terms: list[str]
-) -> Column:
+def blocklist_flags(text: str, terms: list[str]) -> Column:
     """C4-style blocklist gate (Raffel et al. 2020 §2.2 drop any page
     containing a term from the public \"List of Dirty, Naughty ...\"
     list): per-doc blocked-token census over the shared `word_tokens`
@@ -555,8 +537,7 @@ def blocklist_flags(
 
     Null text counts as empty (0 tokens, keep=true) — the repo-wide
     null-survival convention for dedup/curation operators."""
-    text = F.col(text) if isinstance(text, str) else text
-    toks = word_tokens(F.coalesce(text, F.lit("")))
+    toks = F.expr(word_tokens_sql(f"coalesce({q(text)}, '')"))
     n_tokens = F.size(toks)
     n_blocked = F.size(F.filter(toks, lambda t: t.isin(*terms)))
     frac = n_blocked / F.greatest(n_tokens, F.lit(1))

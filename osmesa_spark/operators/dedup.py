@@ -23,7 +23,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from osmesa_spark.functions.text import doc_fingerprint, shingles, word_tokens
+from osmesa_spark.functions.text import (
+    doc_fingerprint,
+    shingles_sql,
+    word_tokens,
+)
 from osmesa_spark.util import ensure_parallelism
 
 
@@ -51,25 +55,20 @@ def _minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
     ]
 
 
-def base_shingle_hash(col: Column) -> Column:
-    """Portable base hash of a shingle, reduced below 2^31."""
+def shingle_hashes_sql(text_sql: str, n: int = 3) -> str:
+    """array<bigint>: the portable base hash of each word n-gram shingle
+    (`shingles_sql`) — bigint(first 15 hex chars of md5(shingle)), reduced
+    below 2^31 — in shingle order."""
     return (
-        F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-        % MINHASH_PRIME
-    )
-
-
-def _base_shingle_hash_sql(col_sql: str) -> str:
-    """SQL-string twin of `base_shingle_hash`."""
-    return (
-        f"(CAST(conv(substring(md5({col_sql}), 1, 15), 16, 10) AS BIGINT)"
-        f" % {MINHASH_PRIME})"
+        f"transform({shingles_sql(text_sql, n)}, s -> "
+        f"(CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)"
+        f" % {MINHASH_PRIME}))"
     )
 
 
 def gram_hash60(col: Column) -> Column:
     """Full-width (60-bit) portable gram hash for identity joins/counts.
-    Unlike `base_shingle_hash`, NOT reduced below 2^31 — that reduction is
+    Unlike `shingle_hashes_sql`, NOT reduced below 2^31 — that reduction is
     a MinHash overflow guard and birthday-collides around ~46k distinct
     grams, which corrupts exact gram-identity semantics. DuckDB mirror:
     ('0x' || substr(md5(g), 1, 15))::BIGINT."""
@@ -107,7 +106,7 @@ def minhash_signatures(
     rehashes of ONE portable base hash per shingle; explode-free via
     transform+array_min, all in whole-stage codegen."""
     from osmesa_spark.functions.litexpr import q as _qn
-    from osmesa_spark.functions.text import shingles_sql, word_tokens_sql
+    from osmesa_spark.functions.text import word_tokens_sql
 
     coeffs = _minhash_coeffs(num_hashes)
     text_sql = _qn(text_col)
@@ -120,10 +119,7 @@ def minhash_signatures(
     )
     # per-shingle md5 is the CPU hot spot: spread small scans across cores
     kept = ensure_parallelism(kept, id_col)
-    base = (
-        f"transform({shingles_sql(text_sql, shingle_n)}, "
-        f"s -> {_base_shingle_hash_sql('s')})"
-    )
+    base = shingle_hashes_sql(text_sql, shingle_n)
     # The base hash array is materialized into its OWN projection column,
     # then each of the K affine minima is one array_min(transform(...))
     # pass over that column. Referencing a multi-used non-cheap alias
@@ -347,7 +343,6 @@ def jaccard_verify(
     jaccard ≥ threshold. Shingle sets are joined in (two broadcast-or-shuffle
     hash joins keyed on id), then compared with array set ops in-column."""
     from osmesa_spark.functions.litexpr import q as _qn
-    from osmesa_spark.functions.text import shingles_sql
 
     sh = ensure_parallelism(df.select(id_col, text_col), id_col).select(
         F.col(id_col).alias("id"),
@@ -405,7 +400,6 @@ def containment_verify(
     sub-dup signal the symmetric metric misses). Same single-join shape as
     jaccard_verify."""
     from osmesa_spark.functions.litexpr import q as _qn
-    from osmesa_spark.functions.text import shingles_sql
 
     sh = ensure_parallelism(df.select(id_col, text_col), id_col).select(
         F.col(id_col).alias("id"),
@@ -445,7 +439,7 @@ def containment_verify(
     )
 
 
-def simhash64(text: Column | str, token_hash_bits: int = 60) -> Column:
+def simhash64(text: str, token_hash_bits: int = 60) -> Column:
     """64-bit (well, `token_hash_bits`-bit) SimHash of word tokens, pure
     Column HOFs: per-bit vote = sum over tokens of (+1 if bit set else -1);
     fingerprint bit b = vote > 0. Implemented as a fold over bit positions."""
@@ -1028,11 +1022,12 @@ def winnow_overlap_pairs(
     stage, all shuffles keyed on the 60-bit fingerprint or the id pair.
 
     Output: (id_a, id_b, shared, overlap) — id_a < id_b, overlap 6dp."""
-    from osmesa_spark.functions.text import shingles, winnow_fingerprints
+    from osmesa_spark.functions.litexpr import q as _qn
+    from osmesa_spark.functions.text import winnow_fingerprints
     from osmesa_spark.util import ensure_parallelism
 
     d = ensure_parallelism(df.select(id_col, text_col), id_col)
-    hashes = F.transform(shingles(text_col, shingle_n), base_shingle_hash)
+    hashes = F.expr(shingle_hashes_sql(_qn(text_col), shingle_n))
     fps = d.select(
         F.col(id_col).alias("id"),
         F.explode(winnow_fingerprints(hashes, window=window)).alias("fp"),

@@ -305,24 +305,6 @@ def _resize_batch(pdf: pd.DataFrame, tw: int, th: int) -> pd.DataFrame:
     )
 
 
-def resize_thumbnail(media: DataFrame, tw: int = 4, th: int = 3) -> DataFrame:
-    """Arrow-batched thumbnail resize: (media_id, out_w, out_h,
-    thumb array<bigint> of tw·th cell sums). Real codecs would replace
-    `_decode_payload` + the cell fold; the Spark plumbing (batch shape,
-    schema, payload never re-emitted) is the production one."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType()),
-            T.StructField("out_w", T.IntegerType()),
-            T.StructField("out_h", T.IntegerType()),
-            T.StructField("thumb", T.ArrayType(T.LongType())),
-        ]
-    )
-    return _map_batches(
-        media, lambda pdf: _resize_batch(pdf, tw, th), schema
-    )
-
-
 AUDIO_STATS_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -383,26 +365,6 @@ def _audio_stats_batch(
             "rms": pd.Series(rms, dtype="float64"),
             "zero_crossings": pd.Series(zc, dtype="int32"),
         }
-    )
-
-
-def audio_window_stats(
-    media: DataFrame,
-    window: int = _AUDIO_WINDOW,
-    max_windows: int = _AUDIO_MAX_WINDOWS,
-) -> DataFrame:
-    """Windowed waveform statistics for the AUDIO modality — the audio
-    analogue of `frame_sample`: per `window`-sample window (first
-    `max_windows` only, the bounded-probe discipline), RMS energy and
-    zero-crossing count of the decoded signal. The decode is the same
-    honest synthetic-format gate as every multimodal kernel
-    (`_decode_payload` raises NotImplementedError on real codecs); the
-    windowing is reduceat/bincount vectorized — payload bytes never leave
-    the stage."""
-    return _map_batches(
-        media.where(F.col("kind") == "audio"),
-        lambda pdf: _audio_stats_batch(pdf, window, max_windows),
-        AUDIO_STATS_SCHEMA,
     )
 
 

@@ -18,37 +18,22 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+from osmesa_spark.functions.litexpr import q as _qn
 
 
-def _norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
-
-
-# --- single-py4j-call expression builders (r10 optimization) ---------------
-# Trained-model literals (codebooks, centroids, hyperplanes) embedded via
-# the Column DSL cost one py4j round-trip per literal/operator — measured
-# 13-15k calls ≈ 2-4 s of serial DRIVER time per ANN query construction.
-# These twins render the identical expression as ONE Spark-SQL string for a
-# single F.expr parse (~300x cheaper to build; the analyzed plan, and thus
-# every result, is unchanged — see functions/litexpr.py and
-# OPTIMIZATION_r10.md). Each mirrors its Column-DSL sibling term for term.
+# --- expression builders: each renders ONE Spark-SQL string -----------------
+# Every vector expression here (dot, norm, cosine, LSH bucket, PQ distances)
+# exists only as a SQL string parsed by a single F.expr call. Building the
+# same tree through the Column DSL costs one py4j round-trip per operator
+# or literal (a DSL cosine is 370 calls, the SQL string 3), and embedded
+# trained-model literals (codebooks, centroids, hyperplanes) reached
+# 13-15k calls ≈ 2-4 s of serial DRIVER time per ANN query construction
+# (see functions/litexpr.py and OPTIMIZATION_r10.md). Column names are
+# backtick-quoted with `q`, one part at a time for qualified names.
 
 
 def _dot_sql(a_sql: str, b_sql: str) -> str:
-    """SQL twin of `_dot` (same casts, same fold)."""
+    """Dot product of two numeric arrays, folded in double precision."""
     return (
         f"aggregate(zip_with({a_sql}, {b_sql}, "
         f"(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -105,7 +90,7 @@ def _argmin_pos_sql(dists_sql: str) -> str:
 
 
 def _norm_sql(a_sql: str) -> str:
-    """SQL twin of `_norm`."""
+    """L2 norm of a numeric array, folded in double precision."""
     return (
         f"sqrt(aggregate(transform({a_sql}, "
         f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
@@ -114,9 +99,9 @@ def _norm_sql(a_sql: str) -> str:
 
 
 def _cosine_sql(a_sql: str, b_sql: str) -> str:
-    """SQL twin of `cosine`. Both sides are LET-BOUND via a two-array
-    zip_with, so each input expression evaluates once per row instead of
-    twice (dot + norm)."""
+    """Cosine similarity dot / max(|a|·|b|, 1e-12). Both sides are
+    LET-BOUND via a two-array zip_with, so each input expression evaluates
+    once per row instead of twice (dot + norm)."""
     body = (
         f"({_dot_sql('va', 'vb')} / "
         f"greatest({_norm_sql('va')} * {_norm_sql('vb')}, 1e-12D))"
@@ -130,7 +115,7 @@ def _cosine_sql(a_sql: str, b_sql: str) -> str:
 def _lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
     """Random-hyperplane LSH bucket id: bit b = sign(dot(vec, plane_b)).
     `planes` is a small driver-side list (deterministic, seeded).
-    Disjoint bits, so integer + IS bitwise-or; same `_dot` casts. The
+    Disjoint bits, so integer + IS bitwise-or; same `_dot_sql` casts. The
     vector is LET-BOUND so its cast/projection evaluates once per row
     instead of once per plane."""
     from osmesa_spark.functions.litexpr import darr
@@ -165,8 +150,9 @@ def _topk_by_cos(
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / F.greatest(_norm(a) * _norm(b), F.lit(1e-12))
+def cosine(a: str, b: str) -> Column:
+    """`_cosine_sql` over two array columns given by name."""
+    return F.expr(_cosine_sql(_qn(a), _qn(b)))
 
 
 def knn_bruteforce(
@@ -194,7 +180,7 @@ def knn_bruteforce(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
+            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
         )
     )
     return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
@@ -229,7 +215,7 @@ def knn_ivf(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
+            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
         )
     )
     return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
@@ -296,7 +282,6 @@ def ivf_probe_frozen(
     (`colocate.write_bucketed(assigned, ..., "cluster")`): the sort-merge
     join then reads the index buckets in place — no corpus-side exchange
     either (asserted in tests/test_colocate.py)."""
-    from osmesa_spark.functions.litexpr import q as _qn
 
     qv_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
     structs = ",".join(
@@ -321,7 +306,7 @@ def ivf_probe_frozen(
         .select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
-            F.round(cosine(F.col("qvec"), F.col("v")), 6).alias("cos"),
+            F.round(cosine("qvec", "v"), 6).alias("cos"),
         )
     )
     return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
@@ -347,7 +332,7 @@ def neardup_cosine(
     side = ensure_parallelism(df, id_col).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("nrm"),
+        F.expr(_norm_sql(_qn(vec_col))).alias("nrm"),
         F.col(bucket_col).alias("bucket"),
     )
     a, b = side.alias("a"), side.alias("b")
@@ -370,12 +355,9 @@ def neardup_cosine(
         .select(
             F.col("a.id").alias("id_a"),
             F.col("b.id").alias("id_b"),
-            F.round(
-                _dot(F.col("a.vec"), F.col("b.vec"))
-                / F.greatest(
-                    F.col("a.nrm") * F.col("b.nrm"), F.lit(1e-12)
-                ),
-                6,
+            F.expr(
+                f"round({_dot_sql('`a`.`vec`', '`b`.`vec`')} / "
+                f"greatest(`a`.`nrm` * `b`.`nrm`, 1e-12D), 6)"
             ).alias("cos"),
         )
         .where(F.col("cos") >= threshold)
@@ -478,8 +460,6 @@ def knn_lsh(
     trade-off. Same output shape as knn_bruteforce."""
     from osmesa_spark.util import ensure_parallelism
 
-    from osmesa_spark.functions.litexpr import q as _qn
-
     bucket = F.expr(_lsh_bucket_sql(_qn(vec_col), planes))
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -497,7 +477,7 @@ def knn_lsh(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
+            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
         )
     )
     return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
@@ -526,8 +506,6 @@ def knn_lsh_multiprobe(
     single-probe `knn_lsh` (asserted in tests). Same output shape."""
     from osmesa_spark.util import ensure_parallelism
 
-    from osmesa_spark.functions.litexpr import q as _qn
-
     b_sql = _lsh_bucket_sql(_qn(vec_col), planes)
     probes = F.expr(
         "explode(array("
@@ -550,7 +528,7 @@ def knn_lsh_multiprobe(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
+            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
         )
     )
     return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
@@ -783,8 +761,6 @@ def knn_label_accuracy(
     same-bucket neighbor get pred_label null / correct false."""
     from osmesa_spark.util import ensure_parallelism
 
-    from osmesa_spark.functions.litexpr import q as _qn
-
     base = (
         ensure_parallelism(df, id_col)
         .select(
@@ -813,7 +789,7 @@ def knn_label_accuracy(
         .select(
             "id_a",
             "label_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
+            F.round(cosine("va", "vb"), 6).alias("cos"),
             "id_b",
         )
     )
@@ -877,7 +853,7 @@ def mmr_select(
     spark = corpus.sparkSession
     from osmesa_spark.util import ensure_parallelism
 
-    from osmesa_spark.functions.litexpr import darr, dlit, q as _qn
+    from osmesa_spark.functions.litexpr import darr, dlit
 
     vc_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
     base = (
@@ -1005,14 +981,14 @@ def density_census(
         a.join(b, "bucket")
         .where(F.col("va") != F.col("vb"))
         .where(
-            F.round(cosine(F.col("va"), F.col("vb")), 6)
+            F.round(cosine("va", "vb"), 6)
             >= F.lit(radius_cos)
         )
         .groupBy("va")
         .agg(F.sum("mult_b").cast("bigint").alias("n_other"))
     )
     self_n = F.when(
-        F.round(cosine(F.col("v"), F.col("v")), 6) >= F.lit(radius_cos),
+        F.round(cosine("v", "v"), 6) >= F.lit(radius_cos),
         F.col("mult") - 1,
     ).otherwise(F.lit(0).cast("bigint"))
     per_group = (
@@ -1083,7 +1059,7 @@ def prototypicality(
     j = clustered.join(cent_df, "cluster").select(
         id_col,
         "cluster",
-        F.round(cosine(F.col("v"), F.col("cvec")), 6).alias("cos_c"),
+        F.round(cosine("v", "cvec"), 6).alias("cos_c"),
     )
     w = Window.partitionBy("cluster").orderBy(F.col("cos_c").desc(), id_col)
     wc = Window.partitionBy("cluster")
@@ -1144,7 +1120,7 @@ def semdedup(
         F.col(vec_col).alias("vb"),
     )
     pairs = a.join(b, "c").where(F.col("id_a") < F.col("id_b"))
-    cos = F.round(cosine(F.col("va"), F.col("vb")), 6)
+    cos = F.round(cosine("va", "vb"), 6)
     return (
         pairs.where(cos >= threshold)
         .select(F.col("id_b").alias(id_col))
@@ -1309,7 +1285,6 @@ def knn_pq(
         corpus, m=m, k=k_centroids, iters=iters, id_col=id_col,
         vec_col=vec_col, seed=seed,
     )
-    from osmesa_spark.functions.litexpr import q as _qn
 
     ds = len(books[0][0][1])  # sub-dim from a codebook centroid, no job
     vec_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
@@ -1438,7 +1413,6 @@ def pq_encode(
     (stable under codebook reordering, directly replayable by the SQL
     oracle's per-subspace assignment). Write this next to the corpus once,
     and every subsequent probe job reads m-byte codes, not vectors."""
-    from osmesa_spark.functions.litexpr import q as _qn
 
     m = len(books)
     ds = len(books[0][0][1])  # sub-dim from a codebook centroid, no job
@@ -1521,7 +1495,6 @@ def knn_ivfpq(
         resid, m=m, k=pq_k, iters=iters, id_col=id_col, vec_col="r",
         seed=seed + 1,
     )
-    from osmesa_spark.functions.litexpr import q as _qn
 
     dim = len(coarse[0][1])
     ds = dim // m
@@ -1636,7 +1609,7 @@ def hard_negatives(
         .select(
             "query_id",
             "negative_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
+            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
         )
         .where(F.col("cos") < dup_threshold)
     )
@@ -1754,7 +1727,7 @@ def knn_rp(
     ).select(
         "query_id",
         "neighbor_id",
-        F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
+        F.round(cosine("qvec", "cvec"), 6).alias("cos"),
     )
     return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
 
@@ -1781,7 +1754,7 @@ def kmeans_assign(
     eval; the HOF form stays compiled. argmin = array_min over
     (dist, cid) structs: lexicographic struct ordering IS the
     first-minimum tie-break."""
-    from osmesa_spark.functions.litexpr import darr, q as _qn
+    from osmesa_spark.functions.litexpr import darr
 
     # the vector cast is let-bound: referenced once per centroid, it would
     # otherwise re-allocate the double array k times per row
@@ -1846,8 +1819,6 @@ def knn_binary_rerank(
     ties by (cos desc, neighbor_id)."""
     from osmesa_spark.util import ensure_parallelism
 
-    from osmesa_spark.functions.litexpr import q as _qn
-
     qwords = _binary_sign_pack_sql(_qn(vec_col), dim)
     q = queries.select(
         F.col(id_col).alias("query_id"),
@@ -1883,7 +1854,7 @@ def knn_binary_rerank(
         .select(
             "query_id",
             "neighbor_id",
-            F.round(cosine(F.col("qvec"), F.col("cvec")), 6).alias("cos"),
+            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(

@@ -1,5 +1,5 @@
 """Text-analysis operators over the `documents` table: language ID,
-quality scoring, token counting, fingerprinting. All Column-native.
+quality scoring, token counting. All Column-native.
 """
 
 from __future__ import annotations
@@ -7,12 +7,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from osmesa_spark.functions.text import (
-    doc_fingerprint,
-    quality_score,
-    token_count,
-    word_tokens,
-)
+from osmesa_spark.functions.litexpr import q as _qn
+from osmesa_spark.functions.text import word_tokens, word_tokens_sql
 
 # tiny per-language stopword marker lists for the n-gram/stopword heuristic
 # language detector (deterministic; SQL-mirrorable)
@@ -24,7 +20,7 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
-def lang_guess(text: Column | str) -> Column:
+def lang_guess(text: str) -> Column:
     """Heuristic language ID: argmax over per-language marker-token hit
     counts; 'und' when nothing matches. Pure CASE/array expressions."""
     toks = word_tokens(text)
@@ -41,17 +37,6 @@ def lang_guess(text: Column | str) -> Column:
         best = F.when(is_better, F.lit(lang)).otherwise(best)
         best_score = F.when(is_better, score).otherwise(best_score)
     return best
-
-
-def analyze_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """One row per document with the full text-feature set."""
-    return df.select(
-        "*",
-        token_count(text_col).alias("n_tokens"),
-        quality_score(text_col).alias("quality"),
-        doc_fingerprint(text_col).alias("fingerprint"),
-        lang_guess(text_col).alias("lang_guess"),
-    )
 
 
 def repetition_stats(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -107,14 +92,14 @@ def lm_nll_scores(
     counter rows, never holder lists).
 
     Output: (id, n_bigrams, nll) — docs with ≥2 tokens only."""
-    from osmesa_spark.functions.text import _let, word_tokens
+    from osmesa_spark.functions.text import _let
     from osmesa_spark.util import ensure_parallelism
 
     base = ensure_parallelism(df.select(id_col, text_col), id_col)
     toks = word_tokens(text_col)
     # let-bind the token array: referencing `toks` inside the per-position
     # lambda would re-run the tokenizing regex twice per bigram (see
-    # functions.text.shingles, same fix)
+    # functions.text.shingles_sql, same fix)
     bigrams = _let(
         toks,
         lambda t: F.transform(
@@ -280,11 +265,11 @@ def collocations_pmi(
     result is a TakeOrdered(top_k).
 
     Output: (a, b, c_ab, pmi) — top_k rows."""
-    from osmesa_spark.functions.text import _let, word_tokens
+    from osmesa_spark.functions.text import _let
     from osmesa_spark.util import ensure_parallelism
 
     base = ensure_parallelism(df.select(text_col), text_col)
-    toks = word_tokens(F.coalesce(F.col(text_col), F.lit("")))
+    toks = F.expr(word_tokens_sql(f"coalesce({_qn(text_col)}, '')"))
     # let-bound token array — same regex-in-lambda fix as lm_nll_scores
     bigrams = _let(
         toks,
@@ -361,12 +346,11 @@ def zipf_fit(
     regression agg per language.
 
     Output: (lang, n_terms, slope, intercept)."""
-    from osmesa_spark.functions.text import word_tokens
 
     words = df.select(
         F.col(lang_col).alias("lang"),
         F.explode(
-            word_tokens(F.coalesce(F.col(text_col), F.lit("")))
+            F.expr(word_tokens_sql(f"coalesce({_qn(text_col)}, '')"))
         ).alias("w"),
     )
     counts = words.groupBy("lang", "w").agg(
@@ -435,12 +419,11 @@ def source_js_divergence(
     Output: (source_a, source_b, n_shared, jsd), source_a < source_b.
     Pairs sharing ZERO vocabulary produce no row (their jsd is exactly
     ln 2 — the caller treats absence as maximal divergence)."""
-    from osmesa_spark.functions.text import word_tokens
 
     words = df.select(
         F.col(source_col).alias("source"),
         F.explode(
-            word_tokens(F.coalesce(F.col(text_col), F.lit("")))
+            F.expr(word_tokens_sql(f"coalesce({_qn(text_col)}, '')"))
         ).alias("w"),
     )
     # counts feeds the per-source totals AND the probability projection
@@ -498,7 +481,6 @@ def blocklist_filter_join(
     map-side combine bounds it at one row per (doc, matched term). Output
     schema is identical to `blocklist_flags` unpacked: (id_col, n_tokens,
     n_blocked, blocked_frac, keep)."""
-    from osmesa_spark.functions.text import word_tokens
 
     spark = df.sparkSession
     # explicit schema: an EMPTY lexicon (config-driven pipelines with a
@@ -509,7 +491,7 @@ def blocklist_filter_join(
             [(t,) for t in sorted(set(terms))], "tok string"
         )
     )
-    toks = word_tokens(F.coalesce(F.col(text_col), F.lit("")))
+    toks = F.expr(word_tokens_sql(f"coalesce({_qn(text_col)}, '')"))
     base = df.select(
         F.col(id_col), F.size(toks).cast("bigint").alias("n_tokens"),
         toks.alias("toks"),
@@ -739,7 +721,7 @@ def _bpe_apply_merge(syms: Column, a: str, b: str) -> Column:
 
 
 def bpe_token_count_trained(
-    text: Column | str, merges: list[tuple[str, str]]
+    text: str, merges: list[tuple[str, str]]
 ) -> Column:
     """Token count of `text` under a TRAINED merge table: each word starts
     as characters, every learned merge applies in rank order (the exact
@@ -949,7 +931,6 @@ def _lr_fit(
     hash-agg arrival), which the 1e-9 err quantization already absorbs by
     design; oracle hashes verified identical at sf0.01 and sf0.1."""
     from osmesa_spark.functions.litexpr import darr, dlit
-    from osmesa_spark.functions.text import word_tokens
     from osmesa_spark.operators.dedup import _portable_hash
     from osmesa_spark.util import ensure_parallelism
 
@@ -1080,7 +1061,6 @@ def lr_score(
     an id-keyed agg per batch; stream-composable inside foreachBatch.
 
     Output: (id, n_tokens, p, pred)."""
-    from osmesa_spark.functions.text import word_tokens
     from osmesa_spark.operators.dedup import _portable_hash
     from osmesa_spark.util import ensure_parallelism
 

@@ -3854,13 +3854,13 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "of shingle hashes, exploded (text-analysis extension)",
 )
 def q_doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osmesa_spark.functions.text import shingles, winnow_fingerprints
+    from osmesa_spark.functions.text import winnow_fingerprints
     from osmesa_spark.util import ensure_parallelism
 
     d = ensure_parallelism(
         _t(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
-    hashes = F.transform(shingles("text", 3), dd.base_shingle_hash)
+    hashes = F.expr(dd.shingle_hashes_sql("`text`", 3))
     # explode() drops empty arrays on its own; an explicit size()>0 filter
     # would re-evaluate the whole winnow expression per row a second time
     # (no CSE across Filter/Generate) — measured 7× slower at sf0.1.
@@ -5218,7 +5218,7 @@ def q_decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.col("embedding").alias("tvec"))
     scored = tr.join(F.broadcast(ev)).select(
         "vec_id",
-        F.round(sim.cosine(F.col("tvec"), F.col("evec")), 6).alias("cos"),
+        F.round(sim.cosine("tvec", "evec"), 6).alias("cos"),
     )
     return (
         scored.where(F.col("cos") >= 0.3)
@@ -5494,9 +5494,8 @@ def q_split_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_length_bucket_padding(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
-    n_tok = F.size(
-        text_fns.word_tokens(F.coalesce(F.col("text"), F.lit("")))
-    ).cast("bigint")
+    toks = text_fns.word_tokens_sql("coalesce(`text`, '')")
+    n_tok = F.expr(f"size({toks})").cast("bigint")
     b = d.select(
         n_tok.alias("n_tokens"),
         F.least(F.floor(n_tok / 16), F.lit(7)).cast("int").alias("bucket"),
@@ -6141,7 +6140,7 @@ def q_doc_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = text_fns.word_tokens("text")
     # let-bind the token array: the per-chunk lambda referencing `toks`
     # directly re-ran the tokenizing regex once per 6-word chunk (see
-    # functions.text.shingles, same fix)
+    # functions.text.shingles_sql, same fix)
     lined_text = text_fns._let(
         toks,
         lambda t: F.array_join(
@@ -6958,7 +6957,7 @@ def _register_hybrid_rrf() -> None:
             .crossJoin(F.broadcast(qv))
             .select(
                 F.col("vec_id").alias("doc_id"),
-                F.round(sim.cosine(F.col("qvec"), F.col("embedding")), 6)
+                F.round(sim.cosine("qvec", "embedding"), 6)
                 .alias("cos"),
             )
         )
@@ -7498,7 +7497,7 @@ def _two_word_lined(d: DataFrame) -> DataFrame:
     construction — keeping it in one place keeps them in lockstep."""
     toks = text_fns.word_tokens("text")
     # let-bound token array: the per-chunk lambda otherwise re-runs the
-    # tokenizing regex once per 2-word chunk (functions.text.shingles fix)
+    # tokenizing regex once per 2-word chunk (functions.text.shingles_sql fix)
     lined_text = text_fns._let(
         toks,
         lambda t: F.array_join(
@@ -8748,99 +8747,45 @@ register_osm_queries(register)
 register_osm_extras_r8(register)
 
 
-# The driver's per-round correctness file records the FIRST 50 registry
-# entries; local tests cover all 188 identically
-# (tests/test_queries_oracle.py). ROUND-11 WINDOW, computed from the
-# committed CORRECTNESS_r*.json files (max_round=10, stale = latest
-# evidence <= 5 or never checked) — exactly the plan the r10 comment
-# recorded:
-#   * the 21 osm_* parity queries that were the r10 overflow zone (all
-#     their evidence is r8; rule 3 requires r10-or-r11 coverage, and the
-#     other 9 osm got r10 evidence last round);
-#   * the full round-5 cohort (29 queries, latest evidence r5 — flipped
-#     stale the moment CORRECTNESS_r10 landed, which is the red test
-#     this rotation fixes). 21 + 29 = exactly 50.
-# OVERFLOW (contiguous after the boundary, machine-checked): the 18
-# queries whose latest evidence is r6 — they turn stale the moment
-# CORRECTNESS_r11 lands, so they are the FRONT of the r12 window.
-DRIVER_PRIORITY = [
-    # osm parity: the r10 overflow zone, order kept (evidence r8)
-    "osm_relation_assembly",
-    "osm_coedit_pagerank",
-    "osm_snapshot_diff",
-    "osm_user_retention",
-    "osm_changeset_duration",
-    "osm_geometry_validity",
-    "osm_map_age",
-    "osm_way_tile_cover_pyramid",
-    "osm_power_users",
-    "osm_tag_cooccurrence",
-    "osm_node_validity",
-    "osm_snapshot_asof",
-    "osm_way_reconstruction",
-    "osm_utm_area",
-    "osm_changeset_stats",
-    "osm_geocode",
-    "osm_hashtags",
-    "osm_user_statistics",
-    "osm_changeset_metadata",
-    "osm_way_tile_cover",
-    "osm_relation_assembly_deep",
-    # the full round-5 cohort (latest driver evidence = r5)
-    "ann_recall_ivfpq",
-    "ann_recall_pq",
-    "building_match",
-    "cms_heavy_users",
-    "corpus_curation_app",
-    "corpus_profile",
-    "dataset_split",
-    "dedup_cluster_stats",
-    "distinct_user_types",
-    "doc_bpe_segment",
-    "doc_bpe_tokens",
-    "doc_bpe_train",
-    "doc_hashed_features",
-    "doc_tfidf_top_terms",
-    "embedding_pq_codes",
-    "event_sliding_rollup",
-    "event_tumbling_rollup",
-    "explode_membership_join",
-    "hard_negatives",
-    "knn_ivfpq",
-    "knn_pq",
-    "mixture_sample",
-    "multimodal_audio_stats",
-    "neardup_winnow_pairs",
-    "price_quantiles",
-    "rollup_pricing",
-    "sequence_rollup",
-    "user_cardinality_approx",
-    "weighted_sample_quality",
-    # ---- 50-slot window boundary ----
-    # OVERFLOW: the round-6 cohort (latest evidence r6) — stale the
-    # moment CORRECTNESS_r11 lands, the front of the r12 window
-    "ann_recall_rp",
-    "ann_recall_trunc",
-    "corpus_ngram_diversity",
-    "decontaminate_semantic",
-    "doc_chunking",
-    "embedding_drift",
-    "embedding_rp_project",
-    "event_funnel",
-    "event_props_rollup",
-    "hybrid_rrf_retrieval",
-    "ivf_append",
-    "knn_rp",
-    "lsh_miss_rate",
-    "minhash_calibration",
-    "mixture_temperature",
-    "price_quantiles_sketch",
-    "quality_dup_correlation",
-    "source_dup_matrix",
-]
+def driver_order(
+    names: list[str],
+    evidence_dir: str = os.path.dirname(os.path.dirname(__file__)),
+) -> list[str]:
+    """`names` in driver-window order. The external checker that calls
+    `__spark_entry__.py` records only the FIRST 50 registry entries per
+    round (tests cover all of them every run), so the order rotates the
+    stalest evidence to the front. Evidence is every
+    `CORRECTNESS_r<N>.json` in `evidence_dir`, a JSON object keyed by
+    query name; a query's latest round is the highest N naming it (0 if
+    none). Order: osm_* queries whose latest round is older than the
+    newest round come first, then the rest by ascending latest round;
+    ties keep declaration order. With no evidence files this is
+    declaration order."""
+    import glob
+    import json
+    import re
+
+    latest: dict[str, int] = {}
+    newest = 0
+    for path in glob.glob(os.path.join(evidence_dir, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            continue
+        rnd = int(m.group(1))
+        newest = max(newest, rnd)
+        with open(path) as f:
+            for name in json.load(f):
+                latest[name] = max(latest.get(name, 0), rnd)
+
+    def key(name: str) -> tuple[bool, int]:
+        rnd = latest.get(name, 0)
+        return (not (name.startswith("osm_") and rnd < newest), rnd)
+
+    return sorted(names, key=key)
+
+
+_DRIVER_ORDER = driver_order(list(REGISTRY))
 
 
 def registry() -> dict[str, QuerySpec]:
-    ordered = {n: REGISTRY[n] for n in DRIVER_PRIORITY if n in REGISTRY}
-    ordered.update((n, s) for n, s in REGISTRY.items() if n not in ordered)
-    return ordered
+    return {n: REGISTRY[n] for n in _DRIVER_ORDER}

@@ -104,28 +104,3 @@ def ship_package(spark: SparkSession) -> None:
                 os.unlink(tmp)
     sc.addPyFile(zip_path)
     sc._osmesa_spark_shipped = True
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, "object"]:
-    """Register every parquet table under ``sf_dir`` as a temp view and return
-    {name: DataFrame}. Mirrors the driver's DuckDB view registration."""
-    names = [
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    ]
-    out = {}
-    for n in names:
-        path = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(n)
-            out[n] = df
-    return out

@@ -31,7 +31,6 @@ the driver never sees tile bytes.
 from __future__ import annotations
 
 import gzip
-import os
 import struct
 from dataclasses import dataclass, field
 
@@ -385,10 +384,6 @@ def decode_tile(buf: bytes) -> dict[str, list[MvtFeature]]:
 # ---------------------------------------------------------------------------
 # tile store (read / upsert)
 # ---------------------------------------------------------------------------
-
-def tile_path(root: str, zoom: int, tx: int, ty: int) -> str:
-    return os.path.join(root, str(zoom), str(tx), f"{ty}.mvt.gz")
-
 
 def _tile_key(zoom: int, tx: int, ty: int) -> str:
     return f"{zoom}/{tx}/{ty}.mvt.gz"

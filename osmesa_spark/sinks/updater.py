@@ -39,7 +39,6 @@ collect_list, bounded by tile occupancy × feature size.
 from __future__ import annotations
 
 import gzip
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -248,24 +247,6 @@ def diffs_with_tiles(diffs: DataFrame, zoom: int) -> DataFrame:
         F.explode(F.sequence("tymin", "tymax")).alias("ty"),
         "sequence", "id", "type", "version", "updated", "visible", "user",
         "geomType", *extras, "px", "py",
-    )
-
-
-def point_diffs_with_tiles(diffs: DataFrame, zoom: int) -> DataFrame:
-    """Point-only compatibility wrapper over `diffs_with_tiles`: one tile
-    per feature + extent-local (fx, fy)."""
-    keyed = diffs_with_tiles(
-        diffs.where(F.col("geomType") == "Point"), zoom
-    )
-    ext = F.lit(EXTENT).cast("bigint")
-    return keyed.select(
-        "zoom", "tx", "ty",
-        (F.element_at("px", 1) - F.col("tx") * ext).cast("int").alias("fx"),
-        (F.element_at("py", 1) - F.col("ty") * ext).cast("int").alias("fy"),
-        "sequence", "id", "version", "updated", "visible", "user",
-    ).where(
-        (F.col("fx") >= 0) & (F.col("fx") < EXTENT)
-        & (F.col("fy") >= 0) & (F.col("fy") < EXTENT)
     )
 
 

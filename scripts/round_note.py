@@ -6,9 +6,8 @@ CORRECTNESS_r*.json — the check that the rotation the code PLANNED is
 the one the driver actually RECORDED (VERDICT r9 item 6: the
 window-integrity test only fires at round start; this makes drift
 visible in the committed round note too), (b) the staleness histogram,
-and (c) the machine-computed window plan for the NEXT round, so the
-rotation comment in queries.py can be written from data instead of by
-hand.
+and (c) the window plan for the NEXT round. The registry order itself is
+derived from the same files at import (`queries.driver_order`).
 
 Usage: python scripts/round_note.py   (from the repo root; no Spark)
 """

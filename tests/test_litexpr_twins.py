@@ -1,20 +1,22 @@
-"""Equivalence coverage for functions/litexpr.py and the hand-mirrored
-DSL→SQL twins (r10 ADVICE, medium): the litexpr mechanism's whole safety
-argument is that a rendered SQL string evaluates to EXACTLY the value the
-DSL form produces — so drift between a twin and its sibling must fail a
-test, not wait for an oracle-hash miss.
+"""Coverage for functions/litexpr.py and the SQL-string expression
+builders: each expression exists only as a rendered SQL string, so every
+builder is pinned to an independent pure-Python (or numpy) replay of its
+definition — drift must fail a test, not wait for an oracle-hash miss.
 
 Covers:
   * dlit: bit-exact double literal round-trip through Spark SQL for the
     adversarial set (−0.0, denormals incl. the smallest subnormal, double
     extremes, inf/−inf, NaN) plus seeded random bit patterns;
   * darr / larr round-trips;
-  * the similarity SQL twins (_dot_sql, _norm_sql, _cosine_sql,
-    _lsh_bucket_sql, _sq_l2_sql, _pq_dists_sql) against their DSL/numpy
-    siblings on seeded random vectors;
+  * the similarity builders (_dot_sql, _norm_sql, _cosine_sql,
+    _lsh_bucket_sql, _sq_l2_sql, _pq_dists_sql) against Python/numpy
+    replays on seeded random vectors;
+  * word_tokens_sql / shingles_sql against a Python `re` replay;
   * kmeans_assign (pure-SQL literal-fold argmin) against the numpy
     replay of the Arrow kernel's rounded-distance argmin;
-  * minhash_signatures against a hashlib/md5 Python replay.
+  * minhash_signatures against a hashlib/md5 Python replay;
+  * the let-binding lint: a computed input appears exactly once in every
+    builder that feeds it to a higher-order-function lambda (Spark-free).
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ from __future__ import annotations
 import hashlib
 import math
 import random
+import re
 import struct
 
 import pytest
@@ -98,25 +101,63 @@ def vec_df(spark):
     ).localCheckpoint()
 
 
-def test_dot_norm_cosine_sql_twins_match_dsl(vec_df):
+def test_dot_norm_cosine_sql_match_python_replay(vec_df):
     from osmesa_spark.operators.similarity import (
         _cosine_sql,
-        _dot,
         _dot_sql,
-        _norm,
         _norm_sql,
-        cosine,
     )
 
-    got = vec_df.select(
-        (_dot(F.col("a"), F.col("b")) == F.expr(_dot_sql("`a`", "`b`")))
-        .alias("dot_ok"),
-        (_norm(F.col("a")) == F.expr(_norm_sql("`a`"))).alias("norm_ok"),
-        (cosine(F.col("a"), F.col("b"))
-         == F.expr(_cosine_sql("`a`", "`b`"))).alias("cos_ok"),
-    )
-    bad = got.where("NOT (dot_ok AND norm_ok AND cos_ok)").count()
-    assert bad == 0
+    rows = vec_df.select(
+        "id", "a", "b",
+        F.expr(_dot_sql("`a`", "`b`")).alias("dot"),
+        F.expr(_norm_sql("`a`")).alias("norm"),
+        F.expr(_cosine_sql("`a`", "`b`")).alias("cos"),
+    ).collect()
+    for r in rows:
+        # left-to-right double folds from 0.0, exactly as the SQL aggregate
+        dot = 0.0
+        for x, y in zip(r["a"], r["b"]):
+            dot += x * y
+        sa = sb = 0.0
+        for x in r["a"]:
+            sa += x * x
+        for y in r["b"]:
+            sb += y * y
+        na, nb = math.sqrt(sa), math.sqrt(sb)
+        assert r["dot"] == dot, f"id={r['id']}"
+        assert r["norm"] == na, f"id={r['id']}"
+        assert r["cos"] == dot / max(na * nb, 1e-12), f"id={r['id']}"
+
+
+def test_word_tokens_and_shingles_sql_match_python_re(spark):
+    from osmesa_spark.functions.text import shingles_sql, word_tokens_sql
+
+    rng = random.Random(1409)
+    vocab = ["Alpha", "beta", "GAMMA", "d3lta", "42", "x", "e-mail", "it's"]
+    seps = [" ", "  ", ", ", "\n", "; ", "--", "\t"]
+    texts = ["", "   ", "one", "one two", "one two three", "A, b; C!"]
+    for _ in range(60):
+        k = rng.randint(0, 12)
+        texts.append(
+            "".join(rng.choice(vocab) + rng.choice(seps) for _ in range(k))
+        )
+    df = spark.createDataFrame(list(enumerate(texts)), "id long, t string")
+    got = {
+        r["id"]: r
+        for r in df.select(
+            "id",
+            F.expr(word_tokens_sql("`t`")).alias("toks"),
+            F.expr(shingles_sql("`t`", 2)).alias("sh2"),
+            F.expr(shingles_sql("`t`", 3)).alias("sh3"),
+        ).collect()
+    }
+    for i, t in enumerate(texts):
+        toks = re.findall(r"[a-z0-9]+", t.lower())
+        assert list(got[i]["toks"]) == toks, f"text {t!r}"
+        for n, col in ((2, "sh2"), (3, "sh3")):
+            want = [" ".join(toks[j:j + n]) for j in range(len(toks) - n + 1)]
+            assert list(got[i][col]) == want, f"n={n} text {t!r}"
 
 
 def test_lsh_bucket_and_sq_l2_sql_match_python_replay(vec_df):
@@ -232,3 +273,32 @@ def test_minhash_signatures_match_hashlib_replay(spark):
             for a, b in coeffs
         ]
         assert got[doc_id] == want, f"doc {doc_id}"
+
+
+def test_hof_builders_let_bind_their_input():
+    """A higher-order-function lambda re-evaluates every captured subtree
+    per element (r11: 8x on shingles), so each builder that feeds a
+    computed input to a lambda must reference it exactly ONCE in the
+    rendered string — bound through a one-element array, never captured."""
+    from osmesa_spark.functions.text import shingles_sql
+    from osmesa_spark.operators.similarity import (
+        _argmin_pos_sql,
+        _cosine_sql,
+        _lsh_bucket_sql,
+        _pq_dists_sql,
+    )
+
+    sentinel = "CAST(`v_sentinel` AS ARRAY<DOUBLE>)"
+    other = "CAST(`w_other` AS ARRAY<DOUBLE>)"
+    planes = [[0.5, -0.5, 1.0], [1.0, 0.25, -2.0], [-1.0, 1.0, 0.0]]
+    book = [(0, [0.0, 1.0, 2.0]), (1, [1.0, 0.0, -1.0]), (2, [3.0, 3.0, 3.0])]
+    rendered = {
+        "_cosine_sql(a)": _cosine_sql(sentinel, other),
+        "_cosine_sql(b)": _cosine_sql(other, sentinel),
+        "_lsh_bucket_sql": _lsh_bucket_sql(sentinel, planes),
+        "_pq_dists_sql": _pq_dists_sql(sentinel, book),
+        "_argmin_pos_sql": _argmin_pos_sql(sentinel),
+        "shingles_sql": shingles_sql(sentinel, 3),
+    }
+    for name, sql in rendered.items():
+        assert sql.count("v_sentinel") == 1, f"{name}: {sql}"

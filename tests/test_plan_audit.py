@@ -398,15 +398,19 @@ def test_let_class_plan_compile_budget(spark, name):
     )
 
 
-def _driver_evidence_rounds() -> "tuple[dict[str, int], int]":
-    """Latest external-checker round per query, computed from the committed
-    CORRECTNESS_r*.json files at the repo root. Queries never checked map
-    to 0. Returns ({query: latest_round}, max_round_seen)."""
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _driver_evidence_rounds(
+    root: str = _REPO_ROOT,
+) -> "tuple[dict[str, int], int]":
+    """Latest external-checker round per query, computed from the
+    CORRECTNESS_r*.json files in `root`. Queries never checked map to 0.
+    Returns ({query: latest_round}, max_round_seen)."""
     import glob
     import json
     import re
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     latest: dict[str, int] = {}
     max_round = 0
     for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
@@ -421,47 +425,35 @@ def _driver_evidence_rounds() -> "tuple[dict[str, int], int]":
     return latest, max_round
 
 
-def test_driver_priority_window_integrity():
+def _assert_driver_window(order: list[str], root: str = _REPO_ROOT) -> None:
     """The external checker records only the FIRST 50 registry entries each
     round, so the window ordering is what keeps every query's driver
-    evidence fresh. Three invariants, computed from the committed
-    CORRECTNESS_r*.json files (not hand-maintained lists):
+    evidence fresh. Two invariants, computed from the evidence files:
 
-    1. every DRIVER_PRIORITY name exists (a typo silently wastes a slot);
-    2. the stale backlog rotates in: any query whose latest evidence is
-       >= 5 rounds old (or never checked) must be inside the window;
-    3. osm_* reference-parity pipelines never go more than 2 rounds
+    1. the stale backlog rotates in: any query whose latest evidence is
+       >= 5 rounds old (or never checked) must be inside the window — or,
+       when the backlog exceeds one window, every window slot holds a
+       stale query and the overflow queues contiguously right after the
+       boundary (the front of the next round's window);
+    2. osm_* reference-parity pipelines never go more than 2 rounds
        unchecked: each is either in the window or has evidence from the
-       latest-or-previous recorded round (this is what lets the osm set
-       alternate in halves instead of pinning all 30 slots forever).
+       latest-or-previous recorded round.
     """
-    from osmesa_spark.queries import DRIVER_PRIORITY
+    latest, max_round = _driver_evidence_rounds(root)
+    window = set(order[:50])
 
-    reg = Q.registry()
-    missing = [n for n in DRIVER_PRIORITY if n not in reg]
-    assert not missing, f"DRIVER_PRIORITY names not in registry: {missing}"
-
-    latest, max_round = _driver_evidence_rounds()
-    window = set(list(reg)[:50])
-
-    stale = sorted(n for n in reg if latest.get(n, 0) <= max_round - 5)
+    stale = sorted(n for n in order if latest.get(n, 0) <= max_round - 5)
     left_out = [n for n in stale if n not in window]
     if len(stale) <= 50:
         assert not left_out, (
             f"stale queries not rotated into the window: {left_out}"
         )
     else:
-        # backlog exceeds one window: the machine-checked multi-round
-        # rotation plan is (a) EVERY window slot is spent on a stale
-        # entry — no slot wasted on a fresh query — and (b) the overflow
-        # sits contiguously right after the boundary, so it is the FRONT
-        # of the next round's window by construction.
-        in_window_fresh = [n for n in list(reg)[:50] if n not in stale]
+        in_window_fresh = [n for n in order[:50] if n not in stale]
         assert not in_window_fresh, (
             f"stale backlog ({len(stale)}) exceeds the window but these "
             f"window slots hold fresh queries: {in_window_fresh}"
         )
-        order = list(reg)
         overflow_zone = order[50:50 + len(left_out)]
         assert sorted(overflow_zone) == sorted(left_out), (
             f"stale overflow must queue contiguously after the window "
@@ -470,7 +462,7 @@ def test_driver_priority_window_integrity():
         )
 
     osm_stale = sorted(
-        n for n in reg
+        n for n in order
         if n.startswith("osm_")
         and n not in window
         and latest.get(n, 0) < max_round - 1
@@ -479,6 +471,35 @@ def test_driver_priority_window_integrity():
         f"osm_* parity queries neither in the window nor recently checked: "
         f"{osm_stale}"
     )
+
+
+def test_driver_priority_window_integrity():
+    """The registry order derived from the committed evidence keeps the
+    stale backlog and the osm_* set inside the driver window."""
+    order = list(Q.registry())
+    assert sorted(order) == sorted(Q.REGISTRY)
+    _assert_driver_window(order)
+
+
+def test_driver_window_survives_next_round(tmp_path):
+    """Landing the next round's evidence (the current first 50, as the
+    driver records it; CORRECTNESS_r12.json at the time of writing) must
+    not break the derived window: the order is
+    recomputed from the files, never rotated by hand."""
+    import glob
+    import json
+    import shutil
+
+    for path in glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json")):
+        shutil.copy(path, tmp_path)
+    _, max_round = _driver_evidence_rounds(str(tmp_path))
+    first50 = list(Q.registry())[:50]
+    (tmp_path / f"CORRECTNESS_r{max_round + 1}.json").write_text(
+        json.dumps({n: {"hash_match": True} for n in first50})
+    )
+    order = Q.driver_order(list(Q.REGISTRY), str(tmp_path))
+    assert order[:50] != first50
+    _assert_driver_window(order, str(tmp_path))
 
 
 # queries whose join strategy must survive the NO-broadcast regime: at

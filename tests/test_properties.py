@@ -155,8 +155,8 @@ def _py_winnow(hashes: list[int], w: int = 4) -> list[int]:
 def test_winnow_matches_python_reference(spark):
     from pyspark.sql import functions as F
 
-    from osmesa_spark.functions.text import shingles, winnow_fingerprints
-    from osmesa_spark.operators.dedup import MINHASH_PRIME, base_shingle_hash
+    from osmesa_spark.functions.text import winnow_fingerprints
+    from osmesa_spark.operators.dedup import MINHASH_PRIME, shingle_hashes_sql
 
     rng = random.Random(7)
     words = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
@@ -165,7 +165,7 @@ def test_winnow_matches_python_reference(spark):
         for _ in range(200)
     ]
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
-    hashes = F.transform(shingles("t", 3), base_shingle_hash)
+    hashes = F.expr(shingle_hashes_sql("`t`", 3))
     got = {
         r.i: list(r.fp)
         for r in df.select("i", winnow_fingerprints(hashes, 4).alias("fp")).collect()
@@ -1126,14 +1126,16 @@ def test_random_projection_preserves_cosine(spark):
         e.alias("a").join(e.alias("b"), F.col("a.vec_id") + 250 == F.col("b.vec_id"))
         .select(
             F.col("a.vec_id").alias("ia"), F.col("b.vec_id").alias("ib"),
-            sim.cosine(F.col("a.embedding"), F.col("b.embedding")).alias("c"),
+            F.expr(
+                sim._cosine_sql("`a`.`embedding`", "`b`.`embedding`")
+            ).alias("c"),
         )
     )
     pj = (
         p.alias("a").join(p.alias("b"), F.col("a.vec_id") + 250 == F.col("b.vec_id"))
         .select(
             F.col("a.vec_id").alias("ia"),
-            sim.cosine(F.col("a.rp"), F.col("b.rp")).alias("pc"),
+            F.expr(sim._cosine_sql("`a`.`rp`", "`b`.`rp`")).alias("pc"),
         )
     )
     rows = joined.join(pj, "ia").select("c", "pc").collect()
