@@ -583,7 +583,7 @@ def score_pairs(pairs: DataFrame, with_vertex: bool = True) -> DataFrame:
     # 2×defaultParallelism hash-repartition of the pairs (to undo AQE's
     # byte-based 16-task coalescing, guide §2.5) was tried in r11 and
     # measured 0.85-0.88× — SLOWER at sf0.1 in an interleaved same-session
-    # A/B (scripts/ab_buildings.py AB_MODE=score): the extra exchange +
+    # A/B (OPTIMIZATION_r11.md, carried item 3): the extra exchange +
     # stage latency outweighs doubling the kernel's task width while each
     # task is only ~0.5 s. At 100 TB the byte-based coalescing could still
     # pack Python-CPU-dense scoring too coarsely (the r10 tile-sink

@@ -70,7 +70,10 @@ def lookup_codes(lon: Column, lat: Column, countries: BBoxCountries) -> Column:
 
 
 # polygon countries: code -> ring vertices [(lon, lat), ...] (unclosed; the
-# ray-cast wraps the last edge back to vertex 0)
+# ray-cast wraps the last edge back to vertex 0). The grid path memoizes
+# its index per content sentinel (each code, its ring's length and first,
+# middle and last vertex): adding, removing or replacing a country or ring
+# is seen; editing a ring's vertices in place is not — replace the ring.
 PolygonCountries = dict[str, list[tuple[float, float]]]
 
 
@@ -237,27 +240,27 @@ def _index_fingerprint(
     return h.hexdigest()[:20]
 
 
-# (countries, nx, ny, index, fingerprint) entries. build_grid_index +
-# _index_fingerprint are pure Python over every country vertex (~1 s for
-# the 311-country set) and were re-run on EVERY geocode_grid call — per
-# bench rep, per micro-batch — even though the result depends only on the
-# constant country set. Identity-keyed memo: the held strong reference
-# keeps the dict alive, so a matching `is` can never be a recycled id
-# (the column_memo lesson from r10 ADVICE). Index structures, not query
-# results: nothing here derives from the input tables.
-_GRID_INDEX_MEMO: list = []
-
-
-def _grid_index_cached(
-    countries: PolygonCountries, nx: int, ny: int
+def _grid_index(
+    spark, countries: PolygonCountries, nx: int, ny: int
 ) -> tuple[dict, str]:
-    for ref, cnx, cny, idx, fp in _GRID_INDEX_MEMO:
-        if ref is countries and cnx == nx and cny == ny:
-            return idx, fp
-    idx = build_grid_index(countries, nx, ny)
-    fp = _index_fingerprint(countries, nx, ny)
-    _GRID_INDEX_MEMO.append((countries, nx, ny, idx, fp))
-    return idx, fp
+    """(index, fingerprint), memoized per content sentinel (see
+    PolygonCountries). Both are pure Python over every country vertex
+    (~0.8 s for the 311-country set), and geocode_grid runs per bench rep
+    and per micro-batch. Stored together, so the on-disk parquet index is
+    never looked up under another country set's fingerprint."""
+    from osmesa_spark.util import ctx_memo
+
+    sentinel = tuple(
+        (code, len(r), tuple(tuple(r[i]) for i in (0, len(r) // 2, -1)))
+        for code, r in sorted(countries.items())
+    )
+    return ctx_memo(
+        spark.sparkContext, ("grid_index", nx, ny, sentinel),
+        lambda: (
+            build_grid_index(countries, nx, ny),
+            _index_fingerprint(countries, nx, ny),
+        ),
+    )
 
 
 def grid_index_frames(
@@ -430,7 +433,7 @@ def geocode_grid(
     # 311-country / 100k-point bench when spread over local[32]); the
     # guard no-ops on streaming inputs
     features = ensure_parallelism(features)
-    index, fp = _grid_index_cached(countries, nx, ny)
+    index, fp = _grid_index(spark, countries, nx, ny)
     cells_df, cands_df = grid_index_frames(spark, countries, index, fp)
 
     n = F.greatest(F.size(geom_col), F.lit(1)).cast("double")

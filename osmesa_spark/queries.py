@@ -54,24 +54,17 @@ class QuerySpec:
         return self.oracle_src
 
 
-# (ctx token, path) -> inferred StructType. Plain spark.read.parquet()
-# runs a footer-reading schema-inference JOB on every call; a bench rep
-# constructing a 2-table query pays 2 such jobs for schemas of files that
-# never change within a run. First read infers (and caches the schema —
-# metadata, the thing a metastore would hold; no data or results); later
-# reads pass it explicitly, which skips the inference job entirely.
-_TABLE_SCHEMAS: dict = {}
-
-
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    from osmesa_spark.util import _ctx_token
+    """spark.read.parquet with the inferred schema memoized per path: a
+    plain read runs a footer-reading schema-inference JOB on every call,
+    an explicit schema (metadata, no data) skips it. A rewrite of the path
+    re-infers."""
+    from osmesa_spark.util import ctx_memo, path_stamp
 
-    key = (_ctx_token(spark.sparkContext), path)
-    s = _TABLE_SCHEMAS.get(key)
-    if s is None:
-        df = spark.read.parquet(path)
-        _TABLE_SCHEMAS[key] = df.schema
-        return df
+    s = ctx_memo(
+        spark.sparkContext, ("schema", path),
+        lambda: spark.read.parquet(path).schema, stamp=path_stamp(path),
+    )
     return spark.read.schema(s).parquet(path)
 
 

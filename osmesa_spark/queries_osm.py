@@ -31,6 +31,7 @@ from osmesa_spark.operators import geometry as G
 from osmesa_spark.operators import preprocess as P
 from osmesa_spark.operators import vectorgrid as VG
 from osmesa_spark.operators.stats import changeset_stats
+from osmesa_spark.util import ctx_memo, path_stamp
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURE_DIR = os.path.join(_REPO_ROOT, ".fixtures", "osm_v3")
@@ -1076,18 +1077,22 @@ OSM_GEOCODE_GRID_SQL = f"""
 # 0.5° lattice derived from event_id, so the oracle replays them exactly.
 _RW_GEOJSON = os.path.join(FIXTURE_DIR, "countries_realworld.geojson")
 _COUNTRY_EDGES = os.path.join(FIXTURE_DIR, "country_edges.parquet")
-_rw_countries_cache: dict | None = None
 
 
-def _realworld_countries() -> dict:
-    global _rw_countries_cache
-    if _rw_countries_cache is None:
-        if not (os.path.exists(_RW_GEOJSON) and os.path.exists(_COUNTRY_EDGES)):
-            datagen.write_realworld_countries(FIXTURE_DIR)
-        from osmesa_spark.operators.geocode import load_countries_geojson
+def _ensure_rw_fixture() -> None:
+    if not (os.path.exists(_RW_GEOJSON) and os.path.exists(_COUNTRY_EDGES)):
+        datagen.write_realworld_countries(FIXTURE_DIR)
 
-        _rw_countries_cache = load_countries_geojson(_RW_GEOJSON)
-    return _rw_countries_cache
+
+def _realworld_countries(spark: SparkSession) -> dict:
+    from osmesa_spark.operators.geocode import load_countries_geojson
+
+    _ensure_rw_fixture()
+    return ctx_memo(
+        spark.sparkContext, ("countries_geojson", _RW_GEOJSON),
+        lambda: load_countries_geojson(_RW_GEOJSON),
+        stamp=path_stamp(_RW_GEOJSON),
+    )
 
 
 def osm_geocode_realworld(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1095,7 +1100,7 @@ def osm_geocode_realworld(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from osmesa_spark import queries as _q
 
-    countries = _realworld_countries()
+    countries = _realworld_countries(spark)
     # events.parquet carries NANOsecond timestamps — _t sets nanosAsLong
     # (a vanilla driver session doesn't), even though only event_id is read
     ev = _q._t(spark, sf_dir, "events")
@@ -1117,7 +1122,7 @@ def _rw_geocode_sql() -> str:
     # fixture-generation time, so every double here is bit-identical to the
     # folded ring the engine ray-casts; the crossing expression replays
     # point_in_ring term-for-term (envelope gate, half-open span, strict x)
-    _realworld_countries()  # ensure the fixture (and edges file) exist
+    _ensure_rw_fixture()
     return f"""
     WITH pts AS (
         SELECT event_id AS id,
@@ -1261,24 +1266,22 @@ OSM_USER_FOOTPRINT_SQL = (
 # Rollup materialized views (A15/W3) over the changeset-stats output
 # ---------------------------------------------------------------------------
 
-_STATS_CACHE: dict[int, DataFrame] = {}
-
-
 def _stats_df(spark: SparkSession) -> DataFrame:
     # The rollup views fan the stats table into many aggregation branches;
     # localCheckpoint materializes it once (executor-local, self-cleaning via
     # ContextCleaner) instead of recomputing the whole geometry+geocode
     # pipeline per branch — the Spark analog of the reference's PG-table
     # boundary between ChangesetStatsCreator and the materialized views.
-    # Memoized per session: all four rollup views share one materialization,
+    # Memoized per context: all four rollup views share one materialization,
     # exactly as they share one PG table in the reference.
-    key = id(spark)
-    if key not in _STATS_CACHE:
-        _STATS_CACHE.clear()  # at most one live session in tests/bench
-        _STATS_CACHE[key] = changeset_stats(
+    ensure_fixtures()
+    return ctx_memo(
+        spark.sparkContext, "osm_stats",
+        lambda: changeset_stats(
             _history(spark), _changesets(spark), countries=datagen.COUNTRY_POLYGONS
-        ).localCheckpoint()
-    return _STATS_CACHE[key]
+        ).localCheckpoint(),
+        stamp=path_stamp(_HISTORY, _CHANGESETS),
+    )
 
 
 def osm_user_statistics(spark: SparkSession, sf_dir: str) -> DataFrame:

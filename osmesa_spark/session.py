@@ -67,16 +67,21 @@ def ship_package(spark: SparkSession) -> None:
     package; cloudpickle serializes those by module reference, so every
     worker must be able to `import osmesa_spark`. On a real cluster that's
     `spark-submit --py-files osmesa_spark.zip`; for library use we self-ship:
-    zip the installed package once and `addPyFile` it (idempotent per
-    SparkContext — addPyFile dedupes by filename). Cheap no-op when the
-    worker could already import it (same-machine local mode with cwd on
-    path), and required when the driver only patched its own sys.path."""
+    zip the installed package once and `addPyFile` it, once per
+    SparkContext (`ctx_memo`). Cheap no-op when the worker could already
+    import it (same-machine local mode with cwd on path), and required when
+    the driver only patched its own sys.path."""
+    from osmesa_spark.util import ctx_memo
+
+    sc = spark.sparkContext
+    ctx_memo(sc, "ship_package", lambda: sc.addPyFile(_package_zip()))
+
+
+def _package_zip() -> str:
+    """The package zip under TMPDIR, rebuilt when a source is newer."""
     import uuid
     import zipfile
 
-    sc = spark.sparkContext
-    if getattr(sc, "_osmesa_spark_shipped", False):
-        return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     zip_path = os.path.join(
         os.environ.get("TMPDIR", "/tmp"), "osmesa_spark_pkg.zip"
@@ -102,5 +107,4 @@ def ship_package(spark: SparkSession) -> None:
         finally:
             if os.path.exists(tmp):
                 os.unlink(tmp)
-    sc.addPyFile(zip_path)
-    sc._osmesa_spark_shipped = True
+    return zip_path

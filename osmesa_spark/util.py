@@ -1,31 +1,57 @@
-"""Small engine utilities."""
+"""Small engine utilities, and the package's one memo, `ctx_memo`: an
+entry lives as long as its SparkContext, and it is rebuilt whenever its
+stamp differs from the one recorded when it was built."""
 
 from __future__ import annotations
 
 import functools
+import os
 import weakref
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
-# SparkContext -> opaque token. Keying the column_memo cache on the token
-# (instead of id(sc), which CPython can recycle for a NEW SparkContext after
-# a stop/restart) guarantees a restarted JVM never hits entries wrapping
-# stale py4j references: a dead context's weak entry vanishes, so the new
-# context mints a fresh token even if it reuses the old object's address.
-_CTX_TOKENS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+# SparkContext -> {key: (stamp, value)}. Weakly keyed, so a new context
+# starts empty even when CPython hands it a dead one's address (an id(sc)
+# key could serve values wrapping a stopped JVM's py4j references).
+_MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
-def _ctx_token(sc) -> object:
-    tok = _CTX_TOKENS.get(sc)
-    if tok is None:
-        tok = object()
-        _CTX_TOKENS[sc] = tok
-    return tok
+def ctx_memo(sc, key, build, stamp=None):
+    """`build()`'s value for `key`, memoized per SparkContext `sc` under the
+    module's rule. Pass a `path_stamp` as `stamp` for a value read from
+    files; it is taken before `build` runs, so a change made during the
+    build is seen on the next call. If `build` raises, nothing is stored.
+    Two threads missing one key at once may both build (the later value is
+    kept), so a build must be safe to repeat. A value that references `sc`
+    (a DataFrame) keeps the context alive."""
+    entries = _MEMO.setdefault(sc, {})
+    hit = entries.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    value = build()
+    entries[key] = (stamp, value)
+    return value
+
+
+def path_stamp(*paths: str) -> tuple:
+    """(st_mtime_ns, st_size) per path, None for one not on the local
+    filesystem. A directory's mtime moves when a file is added, removed or
+    renamed in it, which is how Spark rewrites a table."""
+
+    def one(p):
+        try:
+            st = os.stat(p)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size
+
+    return tuple(map(one, paths))
 
 
 def column_memo(fn):
-    """Memoize a Column-builder keyed by its primitive args and the live
-    SparkContext.
+    """Memoize a Column-builder per live SparkContext, keyed by its
+    primitive args (no stamp: the tree depends on nothing else).
 
     Why (r10 optimization): a Column expression built through the PySpark
     DSL costs one py4j round-trip per operator (~0.5 ms measured here), so
@@ -39,31 +65,19 @@ def column_memo(fn):
     changes. No data is cached — the tree is code, not results.
 
     Only calls whose args are all primitives (str/int/float/bool/None)
-    are cached; anything holding a Column falls through to a fresh build.
-    The cache key includes a per-SparkContext weakref token (see
-    _ctx_token) — a non-reusable identity, unlike id(sc), which CPython
-    can recycle for a new SparkContext after a stop/restart and thereby
-    serve memoized Columns wrapping stale py4j references (r10 ADVICE);
-    the token costs no py4j round-trip per call."""
-    cache: dict = {}
+    are cached; anything holding a Column falls through to a fresh build,
+    as does a call with no active SparkContext."""
 
     @functools.wraps(fn)
     def wrapper(*args, **kwargs):
-        parts = args + tuple(v for _, v in sorted(kwargs.items()))
-        if not all(
+        sc = SparkContext._active_spark_context
+        if sc is None or not all(
             isinstance(a, (str, int, float, bool, type(None)))
-            for a in parts
+            for a in args + tuple(kwargs.values())
         ):
             return fn(*args, **kwargs)
-        from pyspark import SparkContext
-
-        sc = SparkContext._active_spark_context
-        if sc is None:
-            return fn(*args, **kwargs)
-        key = (_ctx_token(sc), args, tuple(sorted(kwargs.items())))
-        if key not in cache:
-            cache[key] = fn(*args, **kwargs)
-        return cache[key]
+        key = (fn, args, tuple(sorted(kwargs.items())))
+        return ctx_memo(sc, key, lambda: fn(*args, **kwargs))
 
     return wrapper
 
@@ -95,40 +109,21 @@ def ensure_parallelism(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
 
-# (ctx token, analyzed-plan semantic hash) -> observed partition count.
-# The rdd.getNumPartitions() probe on a frame whose plan contains an
-# exchange runs the subtree as real jobs (AQE materializes all non-result
-# stages), and the answer cannot be reused by the query's own execution —
-# so a query constructed 3× per bench pays the probe 3×. The count is
-# pure plan/metadata (split layout of the scanned files + AQE coalescing
-# of a deterministic subtree), so memoize it per semantic plan. If the
-# files BEHIND an identical plan change between constructions (a path
-# re-read after an append), the memo can serve a stale width — perf-only
-# (a spread decision), never a correctness issue, and the probe it
-# replaces was itself a point-in-time answer. Streaming never reaches
-# here. Only probes over an exchange are kept: an exchange-free one runs no
-# job, and each foreachBatch micro-batch is a fresh plan (a LogicalRDD), so
-# keeping those would grow the memo by one entry per batch, without bound.
-_PROBE_MEMO: dict = {}
-
-
 def _probed_partitions(df: DataFrame) -> int:
-    try:
-        from pyspark import SparkContext
-
-        sc = SparkContext._active_spark_context
-        key = (
-            _ctx_token(sc),
-            int(df._jdf.queryExecution().analyzed().semanticHash()),
-        )
-    except Exception:  # pragma: no cover — py4j drift: probe uncached
+    """df's partition count. On a plan with an exchange the probe runs the
+    subtree as real jobs (AQE materializes every non-result stage), so the
+    count, plan metadata, is memoized per semantic plan: a query built 3×
+    per bench pays it once. An exchange-free probe runs no job and is not
+    kept — each foreachBatch micro-batch is a fresh plan, and keeping those
+    would grow the memo per batch. A stale width after the files behind a
+    plan change costs only a spread decision, never correctness."""
+    qe = df._jdf.queryExecution()
+    if "Exchange" not in qe.executedPlan().toString():
         return df.rdd.getNumPartitions()
-    n = _PROBE_MEMO.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
-            _PROBE_MEMO[key] = n
-    return n
+    key = ("probe", int(qe.analyzed().semanticHash()))
+    return ctx_memo(
+        df.sparkSession.sparkContext, key, lambda: df.rdd.getNumPartitions()
+    )
 
 
 def _prespread_width(df: DataFrame) -> int | None:

@@ -717,11 +717,15 @@ def test_ensure_parallelism_memoizes_only_shuffle_probes(spark):
 
     from osmesa_spark import util as U
 
-    size = len(U._PROBE_MEMO)
+    def probes() -> int:
+        entries = U._MEMO.get(spark.sparkContext, {})
+        return sum(isinstance(k, tuple) and k[0] == "probe" for k in entries)
+
+    size = probes()
     for i in range(20):
         U.ensure_parallelism(spark.range(100 + i, numPartitions=1), "id")
-    assert len(U._PROBE_MEMO) == size
+    assert probes() == size
 
     agg = spark.range(777).groupBy((F.col("id") % 5).alias("k")).count()
     U.ensure_parallelism(agg, "k")
-    assert len(U._PROBE_MEMO) == size + 1
+    assert probes() == size + 1
