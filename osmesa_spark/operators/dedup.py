@@ -9,9 +9,10 @@ Four tiers, cheapest-first (each one a candidate-pruning stage for the next):
                   few bits (Charikar '02, used at web scale in Manku '07).
 4. n-gram Jaccard — exact verification on the LSH candidate pairs.
 
-Scale notes: nothing here collects to the driver; every stage is an
-explode/groupBy/join of narrow rows, so it partitions by content hash and
-scales linearly. The only O(n²) surface is *within an LSH bucket*, bounded by
+Scale notes: every stage is an explode/groupBy/join of narrow rows, so it
+partitions by content hash and scales linearly; the one collect to the
+driver is `connected_components`' finish on a graph under a fixed edge
+budget. The only O(n²) surface is *within an LSH bucket*, bounded by
 band width. Portable hashing: md5-hex→int (same bits in any engine) so the
 DuckDB oracle can replay signatures exactly — xxhash64 would be faster but is
 Spark-private; swap `_portable_hash` for `F.xxhash64` when oracle parity is
@@ -530,10 +531,12 @@ def _cc_raw(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
     the pair subtree upstream (typically the whole LSH pipeline) must not
     re-execute for every downstream consumer (node set, edge set, star
     fallback)."""
-    # eager=False: the first consumer's job (the propagation init agg)
-    # materializes the blocks — one job instead of a separate checkpoint
-    # job followed by the agg (guide §1.2: fewer passes/barriers); every
-    # later consumer (star fallback, self-roots union) reads the blocks.
+    # eager=False: AQE still runs the pair plan's non-result stages when
+    # the pin is created, but its final stage runs inside the first
+    # consumer's job (the driver pull) — one job instead of a separate
+    # checkpoint job followed by the pull (guide §1.2: fewer
+    # passes/barriers); above the edge budget every later consumer
+    # (propagation, star fallback, self-roots union) reads the blocks.
     return pairs.select(
         F.col(id_a).cast("bigint").alias("a"),
         F.col(id_b).cast("bigint").alias("b"),
@@ -555,18 +558,77 @@ def _with_self_roots(raw: DataFrame, labels: DataFrame) -> DataFrame:
     return labels.union(roots)
 
 
+# Edge budget of connected_components' driver finish: a graph of at most
+# this many (a, b) pairs (about 16 MB of bigints) is labelled in the
+# driver; a larger one stays distributed.
+_CC_DRIVER_EDGES = 1_000_000
+
+
+def _cc_driver_labels(raw: DataFrame) -> DataFrame | None:
+    """All labels of the pair graph `raw`, computed in the driver, or None
+    when it has more than `_CC_DRIVER_EDGES` pairs. One action pulls at
+    most budget + 1 pairs through Arrow; the union-find is numpy
+    hook-and-jump: every edge whose endpoints sit in different trees hooks
+    the larger root onto the smaller, then pointer jumping flattens each
+    tree onto its root. A tree's root is its smallest node, and a tree
+    adjacent to a smaller one merges within two rounds, so the tree count
+    of a component halves every two rounds: O(log n) rounds of O(m) work.
+    Same contract as `_with_self_roots` over the distributed labels,
+    including the (null, null) row a null id yields there."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = raw.limit(_CC_DRIVER_EDGES + 1).toArrow()
+    if tbl.num_rows > _CC_DRIVER_EDGES:
+        return None
+    a, b = tbl.column("a"), tbl.column("b")
+    has_null = a.null_count + b.null_count > 0
+    # a pair with one null id still makes its other id a node
+    pairs = pa.table({"a": pc.coalesce(a, b), "b": pc.coalesce(b, a)})
+    pairs = pairs.drop_null()
+    ends = np.concatenate(
+        [pairs.column("a").to_numpy(), pairs.column("b").to_numpy()]
+    )
+    nodes, ix = np.unique(ends, return_inverse=True)
+    ia, ib = ix[: pairs.num_rows], ix[pairs.num_rows :]
+    parent = np.arange(len(nodes))
+    while True:
+        ra, rb = parent[ia], parent[ib]
+        split = ra != rb
+        if not split.any():
+            break
+        np.minimum.at(
+            parent, np.maximum(ra, rb)[split], np.minimum(ra, rb)[split]
+        )
+        while not np.array_equal(parent[parent], parent):
+            parent = parent[parent]
+    out = pa.table({"node": nodes, "component_id": nodes[parent]})
+    if has_null:
+        null = pa.table({"node": [None], "component_id": [None]}, out.schema)
+        out = pa.concat_tables([out, null])
+    return raw.sparkSession.createDataFrame(
+        out, "node bigint, component_id bigint"
+    )
+
+
 def _cc_propagation_labels(raw: DataFrame, max_rounds: int):
     """Min-label propagation over normalized (a, b) pairs. Returns the
     label frame (covering every node with at least one non-self edge) if
     the fixpoint was reached within `max_rounds`, else None — the caller
-    decides whether that means "fall back to the star kernel" (hybrid
-    dispatch) or "raise". Convergence check: sum(label) is monotone
-    non-increasing and stalls exactly at the fixpoint (labels only ever
-    decrease), so one cheap agg per round replaces a self-join diff."""
+    then falls back to the star kernel. Convergence check: sum(label) is
+    monotone non-increasing and stalls exactly at the fixpoint (labels
+    only ever decrease), so one cheap agg per round replaces a self-join
+    diff."""
     e = raw.where(F.col("a") != F.col("b")).distinct()
-    edges = e.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).union(e.select(F.col("b").alias("src"), F.col("a").alias("dst"))).persist()
+    # a lazy pin, not persist(): a cached plan runs without AQE
+    # (canChangeCachedPlanOutputPartitioning=false), so every round would
+    # read this union of two shuffles at 2 × shuffle.partitions tasks
+    edges = (
+        e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+        .union(e.select(F.col("b").alias("src"), F.col("a").alias("dst")))
+        .localCheckpoint(eager=False)
+    )
     # init: label(v) = min(v, min neighbor) — one propagation round for free
     # lazy: the convergence agg right below materializes the checkpoint —
     # one job per round instead of two (checkpoint job + agg job)
@@ -577,7 +639,6 @@ def _cc_propagation_labels(raw: DataFrame, max_rounds: int):
     # decimal(38,0): immune to ANSI bigint-sum overflow at any node count
     lab_sum = F.sum(F.col("component_id").cast("decimal(38,0)"))
     prev_sum = labels.agg(lab_sum).first()[0]
-    converged = False
     for _ in range(max_rounds):
         neigh = (
             edges.join(
@@ -605,11 +666,9 @@ def _cc_propagation_labels(raw: DataFrame, max_rounds: int):
         )
         cur_sum = labels.agg(lab_sum).first()[0]
         if cur_sum == prev_sum:
-            converged = True
-            break
+            return labels
         prev_sum = cur_sum
-    edges.unpersist()
-    return labels if converged else None
+    return None
 
 
 def connected_components(
@@ -627,42 +686,34 @@ def connected_components(
     simhash stages above emit *pairs*; curation needs *clusters* so one
     representative per cluster can be kept — see `curation.keep_best_dedup`).
 
-    Hybrid dispatch: near-dup graphs are dense small clusters (diameter
-    2-3 in practice, Manku '07), so `propagation_rounds` of cheap min-label
-    propagation (one join + groupBy(min) each) settle the common case. If
-    the graph hides long chains (adversarial shingled spam mirrors) and
-    propagation has NOT reached its fixpoint by then, the whole graph is
-    re-run through the alternating large-star/small-star kernel
-    (`connected_components_star`, Kiveris '14), which converges in O(log n)
-    rounds regardless of component diameter — a 10k-link path costs ~30
-    star rounds instead of 10k propagation rounds. The pair subtree is
-    localCheckpointed once up front, so the fallback re-reads materialized
-    blocks, not the LSH pipeline."""
+    Three-tier dispatch. The pair subtree is localCheckpointed once up
+    front, so no tier re-runs the LSH pipeline.
+
+    1. Driver: a graph of at most `_CC_DRIVER_EDGES` pairs is pulled in
+       one action and labelled by a driver union-find
+       (`_cc_driver_labels`). Each distributed round is a job with its
+       own stages, so on a small graph the rounds, not the data, are the
+       cost.
+    2. Propagation: near-dup graphs are dense small clusters (diameter
+       2-3 in practice, Manku '07), so `propagation_rounds` of cheap
+       min-label propagation (one join + groupBy(min) each) settle the
+       common large case.
+    3. Star: if the graph hides long chains (adversarial shingled spam
+       mirrors) and propagation has NOT reached its fixpoint by then, the
+       whole graph is re-run through the alternating large-star/small-star
+       kernel (`connected_components_star`, Kiveris '14), which converges
+       in O(log n) rounds regardless of component diameter — a 10k-link
+       path costs ~30 star rounds instead of 10k propagation rounds.
+
+    A graph above the budget pays one bounded extra action for the
+    driver attempt."""
     raw = _cc_raw(pairs, id_a, id_b)
+    labels = _cc_driver_labels(raw)
+    if labels is not None:
+        return labels
     labels = _cc_propagation_labels(raw, propagation_rounds)
     if labels is None:
         labels = _cc_star_labels(raw, max_iterations)
-    return _with_self_roots(raw, labels)
-
-
-def connected_components_propagation(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 25,
-) -> DataFrame:
-    """Pure min-label propagation connected components — O(diameter)
-    rounds, raising if the fixpoint is not reached in `max_iterations`.
-    Prefer `connected_components` (hybrid with the O(log n) star-kernel
-    fallback) unless the graph is known to be dense small clusters."""
-    raw = _cc_raw(pairs, id_a, id_b)
-    labels = _cc_propagation_labels(raw, max_iterations)
-    if labels is None:
-        raise RuntimeError(
-            "connected_components_propagation did not converge in "
-            f"{max_iterations} rounds — the graph has components of "
-            "diameter > rounds; use connected_components (star fallback)"
-        )
     return _with_self_roots(raw, labels)
 
 

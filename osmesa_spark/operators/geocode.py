@@ -431,7 +431,10 @@ def geocode_grid(
     # and broadcast joins preserve the probe side's splits — a one-file
     # input would run it as a single task (measured 6.8 s -> 0.9 s on the
     # 311-country / 100k-point bench when spread over local[32]); the
-    # guard no-ops on streaming inputs
+    # guard no-ops on streaming inputs. `features` is usually the stats
+    # chain's way reconstruction (shuffles), which the guard sizes from
+    # its file-scan bytes without running it, so the caller's action is
+    # the only pass over that lineage
     features = ensure_parallelism(features)
     index, fp = _grid_index(spark, countries, nx, ny)
     cells_df, cands_df = grid_index_frames(spark, countries, index, fp)

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import functools
 import os
+import sys
 import weakref
 
 from pyspark import SparkContext
@@ -15,6 +16,11 @@ from pyspark.sql import DataFrame
 # starts empty even when CPython hands it a dead one's address (an id(sc)
 # key could serve values wrapping a stopped JVM's py4j references).
 _MEMO: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+# logical leaves whose stats().sizeInBytes is exact: file-scan relations
+# (file bytes), driver-local rows and ranges
+_SIZED_LEAVES = ("LogicalRelation", "LocalRelation", "Range")
+_MIN_PARTITION_SIZE = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
 
 
 def ctx_memo(sc, key, build, stamp=None):
@@ -85,13 +91,13 @@ def column_memo(fn):
 def ensure_parallelism(df: DataFrame, *cols: str) -> DataFrame:
     """Spread a DataFrame to at least the cluster's default parallelism
     before a CPU-heavy narrow stage (per-row hashing, regex shingling,
-    Python kernels).
+    Python kernels). The guard itself never runs a Spark job.
 
     A small input (one parquet file / one row-group) scans as a single
     task, serializing all downstream per-row compute no matter how many
-    cores exist. When the scan already produced enough splits — the normal
-    case at real scale, where maxPartitionBytes bounds split size — this is
-    a no-op, so the extra shuffle is only paid when it buys parallelism.
+    cores exist. When the input is already wide enough — the normal case
+    at real scale, where maxPartitionBytes bounds split size — this is a
+    no-op, so the extra shuffle is only paid when it buys parallelism.
     Hash-partitioning on `cols` (e.g. the id) keeps placement deterministic.
     """
     if df.isStreaming:
@@ -110,20 +116,41 @@ def ensure_parallelism(df: DataFrame, *cols: str) -> DataFrame:
 
 
 def _probed_partitions(df: DataFrame) -> int:
-    """df's partition count. On a plan with an exchange the probe runs the
-    subtree as real jobs (AQE materializes every non-result stage), so the
-    count, plan metadata, is memoized per semantic plan: a query built 3×
-    per bench pays it once. An exchange-free probe runs no job and is not
-    kept — each foreachBatch micro-batch is a fresh plan, and keeping those
-    would grow the memo per batch. A stale width after the files behind a
-    plan change costs only a spread decision, never correctness."""
+    """df's partition count as far as the spread decision needs it, read
+    from plan metadata: no Spark job runs.
+
+    An exchange-free plan reports its split count — df.rdd.
+    getNumPartitions() only plans the scan. A plan with an exchange is
+    never converted to an RDD: with AQE on, that MATERIALIZES every
+    non-result query stage as a real Spark job (r11): over the grid
+    geocode's features that runs the whole stats lineage only to learn
+    "1", and the caller's action runs it again. Its width is estimated as
+    AQE's coalescing sets it for small inputs: the exact bytes of the
+    optimized plan's leaves (file scans, local rows, ranges) over
+    spark.sql.adaptive.coalescePartitions.minPartitionSize. A total below
+    defaultParallelism × that size estimates fewer partitions than the
+    target, so it gets the spread. A leaf with no exact size (a
+    checkpoint's LogicalRDD, a cache, a JDBC table) counts as large, like
+    every input above the line: spreading there would add a full shuffle
+    of the input. The plan root's sizeInBytes is no use — it is a product
+    estimate through the joins (over 10 GB for the geocode's few hundred
+    KB of history). With AQE's coalescing off the estimate errs toward a
+    spread of a small input. A wrong estimate costs a spread decision,
+    never correctness."""
     qe = df._jdf.queryExecution()
     if "Exchange" not in qe.executedPlan().toString():
         return df.rdd.getNumPartitions()
-    key = ("probe", int(qe.analyzed().semanticHash()))
-    return ctx_memo(
-        df.sparkSession.sparkContext, key, lambda: df.rdd.getNumPartitions()
-    )
+    leaves = qe.optimizedPlan().collectLeaves()
+    total = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() not in _SIZED_LEAVES:
+            return sys.maxsize
+        total += int(str(leaf.stats().sizeInBytes()))
+    spark = df.sparkSession
+    utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    min_size = utils.byteStringAsBytes(spark.conf.get(_MIN_PARTITION_SIZE, "1MB"))
+    return total // max(min_size, 1)
 
 
 def _prespread_width(df: DataFrame) -> int | None:
@@ -138,7 +165,7 @@ def _prespread_width(df: DataFrame) -> int | None:
     probe and again in the caller's action (r11 stage profile: two extra
     jobs per buildings query). The logical-plan peek answers the common
     composed case (caller spread → operator guard) with zero jobs; any
-    other shape falls back to the RDD probe as before."""
+    other shape falls back to `_probed_partitions`."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         while True:

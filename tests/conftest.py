@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -30,6 +31,17 @@ TABLES = [
 def spark():
     s = get_spark("osmesa-tests", shuffle_partitions=8)
     yield s
+
+
+@contextlib.contextmanager
+def jobs_launched(spark):
+    """Yield a set that holds, once the block exits, the ids of the Spark
+    jobs (outside any job group) that started inside it."""
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    jobs: set = set()
+    yield jobs
+    jobs.update(set(tracker.getJobIdsForGroup(None)) - before)
 
 
 @pytest.fixture(scope="session")

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from osmesa_spark import util as U
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, jobs_launched
 
 PKG = pathlib.Path(__file__).resolve().parent.parent / "osmesa_spark"
 
@@ -152,10 +152,9 @@ def test_warm_construction_launches_no_jobs(spark, name):
 
     q = Q.registry()[name]
     q.spark(spark, SF_CORRECT)
-    tracker = spark.sparkContext._jsc.sc().statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    q.spark(spark, SF_CORRECT)
-    assert set(tracker.getJobIdsForGroup(None)) == before, (
+    with jobs_launched(spark) as jobs:
+        q.spark(spark, SF_CORRECT)
+    assert not jobs, (
         f"a warm construction of {name} launched jobs"
     )
 

@@ -11,7 +11,7 @@ import pytest
 
 from osmesa_spark import queries as Q
 from osmesa_spark.plans import assert_scaleable, audit_plan
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, jobs_launched
 
 # queries whose operators are DEFINED by an Arrow-batched Python kernel
 PYTHON_OK = {
@@ -103,6 +103,33 @@ def test_dedup_components_dispatches_to_star_kernel(spark):
         [(i, i + 1) for i in range(400)], "id_a long, id_b long"
     )
     out = dd.connected_components(chain, max_iterations=12)
+    assert out.where("component_id != 0").count() == 0
+    assert out.count() == 401
+
+
+def test_dedup_components_dispatches_to_star_kernel_above_budget(
+    spark, monkeypatch
+):
+    """Above the driver finish's edge budget `dd.connected_components`
+    stays distributed and still ends in the O(log n) star kernel: with the
+    budget one edge below the 400-link chain, propagation cannot finish
+    it and the star kernel must close it within 12 alternating rounds."""
+    from osmesa_spark.operators import dedup as dd
+
+    star = dd._cc_star_labels
+    rounds = []
+
+    def spy(raw, max_iterations):
+        rounds.append(max_iterations)
+        return star(raw, max_iterations)
+
+    monkeypatch.setattr(dd, "_CC_DRIVER_EDGES", 399)
+    monkeypatch.setattr(dd, "_cc_star_labels", spy)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(400)], "id_a long, id_b long"
+    )
+    out = dd.connected_components(chain, max_iterations=12)
+    assert rounds == [12], "the above-budget chain did not reach the star kernel"
     assert out.where("component_id != 0").count() == 0
     assert out.count() == 401
 
@@ -634,11 +661,9 @@ def test_semdedup_pair_stage_runs_at_parallelism(spark):
     cluster-blocked pair stage inherits the spread scan's partitioning);
     without the spread the whole kernel-to-pair chain runs in the
     embeddings table's native split count (1 at fixture scale)."""
-    jsc = spark.sparkContext._jsc.sc()
-    tracker = jsc.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    Q.registry()["semdedup_prune"].spark(spark, SF_CORRECT).count()
-    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    with jobs_launched(spark) as jobs:
+        Q.registry()["semdedup_prune"].spark(spark, SF_CORRECT).count()
     widths = []
     for jid in sorted(jobs):
         info = tracker.getJobInfo(jid)
@@ -680,11 +705,10 @@ def test_ensure_parallelism_skips_probe_on_prespread_frame(spark):
     assert _prespread_width(base.coalesce(target)) is None
     assert _prespread_width(base) is None
 
-    tracker = spark.sparkContext._jsc.sc().statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    out = ensure_parallelism(spread, "id")
+    with jobs_launched(spark) as jobs:
+        out = ensure_parallelism(spread, "id")
     assert out is spread, "pre-spread frame must pass through untouched"
-    assert set(tracker.getJobIdsForGroup(None)) == before, (
+    assert not jobs, (
         "ensure_parallelism launched a job probing an already-spread frame"
     )
 
@@ -699,20 +723,20 @@ def test_ensure_parallelism_spreads_narrow_promise_without_probe(spark):
     if target < 2:
         pytest.skip("needs defaultParallelism >= 2")
     narrow = spark.range(1013).repartition(target - 1, "id")
-    tracker = spark.sparkContext._jsc.sc().statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    out = ensure_parallelism(narrow, "id")
-    assert set(tracker.getJobIdsForGroup(None)) == before, (
+    with jobs_launched(spark) as jobs:
+        out = ensure_parallelism(narrow, "id")
+    assert not jobs, (
         "ensure_parallelism probed a frame it had to spread anyway"
     )
     assert _prespread_width(out) == target
 
 
-def test_ensure_parallelism_memoizes_only_shuffle_probes(spark):
+def test_ensure_parallelism_keeps_no_probe_memo(spark):
     """An exchange-free probe launches no job, so its answer is not kept:
     a stream hands every micro-batch over as a fresh plan, and memoizing
-    those grew the memo by one entry per batch. A probe over an exchange
-    is still memoized."""
+    those grew the memo by one entry per batch. A plan with an exchange is
+    judged from plan metadata, so it adds no entry and launches no job
+    either."""
     from pyspark.sql import functions as F
 
     from osmesa_spark import util as U
@@ -727,5 +751,78 @@ def test_ensure_parallelism_memoizes_only_shuffle_probes(spark):
     assert probes() == size
 
     agg = spark.range(777).groupBy((F.col("id") % 5).alias("k")).count()
-    U.ensure_parallelism(agg, "k")
-    assert probes() == size + 1
+    with jobs_launched(spark) as jobs:
+        U.ensure_parallelism(agg, "k")
+    assert probes() == size
+    assert not jobs
+
+
+def test_ensure_parallelism_sizes_exchange_plans_without_a_job(spark, tmp_path):
+    """A frame with an exchange is never probed through df.rdd (with AQE
+    that runs every non-result stage as a job); its width is judged from
+    its leaves' exact bytes against defaultParallelism ×
+    coalescePartitions.minPartitionSize. A small parquet aggregate is
+    spread to defaultParallelism with no job; with minPartitionSize at one
+    byte the same input counts as large and passes through; a leaf with
+    no exact size (a checkpoint's LogicalRDD) counts as large too."""
+    from pyspark.sql import functions as F
+
+    from osmesa_spark.util import _prespread_width, ensure_parallelism
+
+    target = spark.sparkContext.defaultParallelism
+    if target < 2:
+        pytest.skip("needs defaultParallelism >= 2")
+    path = str(tmp_path / "ids.parquet")
+    spark.range(777).write.parquet(path)
+    agg = spark.read.parquet(path).groupBy((F.col("id") % 5).alias("k")).count()
+    with jobs_launched(spark) as jobs:
+        out = ensure_parallelism(agg, "k")
+    assert not jobs, "ensure_parallelism ran the aggregate's exchange"
+    assert _prespread_width(out) == target
+    assert out.rdd.getNumPartitions() == target
+
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    saved = spark.conf.get(key, None)
+    spark.conf.set(key, "1b")
+    try:
+        with jobs_launched(spark) as jobs:
+            out = ensure_parallelism(agg, "k")
+    finally:
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
+    assert not jobs
+    assert out is agg
+
+    pinned = (
+        spark.range(777)
+        .localCheckpoint(eager=False)
+        .groupBy((F.col("id") % 5).alias("k"))
+        .count()
+    )
+    with jobs_launched(spark) as jobs:
+        out = ensure_parallelism(pinned, "k")
+    assert not jobs
+    assert out is pinned
+
+
+def test_changeset_stats_construction_launches_no_jobs(spark, tmp_path):
+    """Building the batch stats app over a parquet history with the 311
+    real-world countries (grid geocode) runs no Spark job. The geocode's
+    parallelism guard used to convert its exchange-bearing feature frame
+    to an RDD, which under AQE ran the whole feature lineage (6 jobs) only
+    for the caller's action to run it again."""
+    from osmesa_spark import datagen
+    from osmesa_spark.operators import stats
+    from osmesa_spark.operators.geocode import load_countries_geojson
+
+    datagen.write_fixtures(str(tmp_path), n_elements=1000, seed=7)
+    countries = load_countries_geojson(
+        datagen.write_realworld_countries(str(tmp_path))
+    )
+    history = spark.read.parquet(str(tmp_path / "history.parquet"))
+    changesets = spark.read.parquet(str(tmp_path / "changesets.parquet"))
+    with jobs_launched(spark) as jobs:
+        stats.changeset_stats(history, changesets, countries=countries)
+    assert not jobs, f"construction launched {len(jobs)} jobs"

@@ -211,6 +211,24 @@ def test_zorder_bijective(spark):
     assert mn == 0 and mx == n * n - 1  # and onto [0, 4^bits)
 
 
+def _cc_reference(edges: list[tuple[int, int]]) -> dict[int, int]:
+    """node -> min id reachable through `edges`; self-loop-only nodes label
+    themselves (the connected_components contract)."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
 def test_connected_components_chain_and_cliques(spark):
     """connected_components (star kernel since r5) must close chains and
     keep disjoint cliques separate."""
@@ -253,33 +271,61 @@ def test_connected_components_matches_union_find(spark):
             for _ in range(m)
         ]
 
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    nodes = set()
-    for a, b in edges:
-        if a != b:
-            nodes |= {a, b}
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-    expect = {v: find(v) for v in nodes}
-    # contract: self-loop-only nodes label themselves
-    for a, b in edges:
-        expect.setdefault(a, a)
-        expect.setdefault(b, b)
-
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {
         r["node"]: r["component_id"]
         for r in connected_components(df).collect()
     }
-    assert got == expect
+    assert got == _cc_reference(edges)
+
+
+@pytest.mark.parametrize("seed", [0, 1])
+def test_connected_components_driver_matches_distributed(
+    spark, monkeypatch, seed
+):
+    """The driver finish and the distributed propagation/star path give the
+    same labels on a seeded random graph: a 2,000-link chain, stars and
+    disjoint cliques over shuffled (also negative) ids, with duplicate and
+    reversed edges, self-loops and self-loop-only nodes. The budget is set
+    to the graph's exact edge count for the driver run and one below it
+    for the distributed run, so both sides of the boundary are taken."""
+    import random
+
+    from osmesa_spark.operators import dedup as dd
+
+    rng = random.Random(seed)
+    ids = iter(rng.sample(range(-10**12, 10**12), 3000))
+    chain = [next(ids) for _ in range(2001)]
+    edges = list(zip(chain, chain[1:]))
+    for _ in range(rng.randint(3, 6)):
+        hub = next(ids)
+        edges += [(hub, next(ids)) for _ in range(rng.randint(2, 40))]
+    for _ in range(rng.randint(3, 6)):
+        k = [next(ids) for _ in range(rng.randint(2, 9))]
+        edges += [(a, b) for i, a in enumerate(k) for b in k[i + 1:]]
+    edges += rng.sample(edges, 50) + [(b, a) for a, b in rng.sample(edges, 50)]
+    edges += [(v, v) for v in rng.sample(chain, 5)]
+    edges += [(v, v) for v in (next(ids), next(ids))]
+    rng.shuffle(edges)
+    df = spark.createDataFrame(edges, "id_a long, id_b long")
+
+    propagation = dd._cc_propagation_labels
+    runs = []
+
+    def spy(raw, max_rounds):
+        runs.append(max_rounds)
+        return propagation(raw, max_rounds)
+
+    monkeypatch.setattr(dd, "_cc_propagation_labels", spy)
+    got = {}
+    for budget, distributed in ((len(edges), False), (len(edges) - 1, True)):
+        monkeypatch.setattr(dd, "_CC_DRIVER_EDGES", budget)
+        runs.clear()
+        out = dd.connected_components(df).collect()
+        assert bool(runs) == distributed
+        got[distributed] = {r.node: r.component_id for r in out}
+        assert len(got[distributed]) == len(out)
+    assert got[False] == got[True] == _cc_reference(edges)
 
 
 def test_scrub_pii_redacts(spark):
@@ -697,38 +743,13 @@ def test_connected_components_star_differential(spark):
     edges += [(rng.choice(sparse), rng.choice(sparse)) for _ in range(60)]
     edges += [(7001, 7002), (8_000, 8_000)]
 
-    # union-find ground truth
-    parent: dict[int, int] = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        if a != b:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-    truth = {n: find(n) for n in parent}
-    # canonical: min id per component
-    comp_min: dict[int, int] = {}
-    for n, r in truth.items():
-        comp_min[r] = min(comp_min.get(r, n), n)
-    truth = {n: comp_min[find(n)] for n in parent}
-    # contract: self-loop-only nodes (8000 above) label themselves
-    for a, b in edges:
-        truth.setdefault(a, a)
-        truth.setdefault(b, b)
-
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     got = {
         r.node: r.component_id
         for r in connected_components_star(df).collect()
     }
-    assert got == truth
+    # self-loop-only 8000 labels itself
+    assert got == _cc_reference(edges)
 
 
 def test_connected_components_star_round_bound_and_raise(spark):
