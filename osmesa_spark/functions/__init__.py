@@ -5,7 +5,7 @@ higher-order functions so plans stay inside whole-stage codegen.
 """
 
 from osmesa_spark.functions.maps import (  # noqa: F401
-    count_values,
+    map_entry,
     map_sum_agg,
     merge_counts,
     simplify_counts,

@@ -5,26 +5,36 @@ and `map<string,double>` measurements element-wise across rows, and counts
 country-code frequencies — Scala UDFs `sum_counts` / `sum_measurements` /
 `count_values` / `merge_counts` / `simplify_counts`
 (`src/analytics/src/main/scala/osmesa/analytics/stats/functions/package.scala:12-36`,
-call site `.../apps/batch/ChangesetStatsCreator.scala:125-142`).
+call site `.../apps/batch/ChangesetStatsCreator.scala:125-142`); the four
+materialized views then roll the per-changeset table up per user, hashtag,
+country and (hashtag, user) with `jsonb_object_agg` maps and `RANK() <= k`
+cuts (`deployment/sql/materialized_views/*.sql`).
 
-Spark-first design, two strategies:
+Two strategies:
 
-1. **HOF fold** (`sum_map_values`): `aggregate(collect_list(m), map(), merge)`
-   — literal translation, but `collect_list` has NO partial aggregation: every
-   map row crosses the shuffle. Fine for small groups; wrong at 100 TB.
+1. **HOF fold** (`sum_map_values`, `merge_counts`): `aggregate(collect_list(m),
+   map(), merge)` — a literal translation, but `collect_list` has no partial
+   aggregation: every map row crosses the shuffle. The streaming sinks use it
+   on one micro-batch's groups, where that is cheap.
 
-2. **explode → partial-agg → reassemble** (`map_sum_agg`): explode the map into
-   (key, value) rows *before* the groupBy, sum per (group, key) — this gets
-   map-side combine so the shuffle carries one row per (group, key) — then
-   reassemble with `map_from_entries(collect_list(struct(k, v)))` over the
-   already-reduced rows. Two narrow shuffles, both partially aggregated.
-   This is the scale path; all engine pipelines use it.
+2. **explode → partial-agg → reassemble** (`map_sum_agg`): every batch
+   rollup — `operators.stats.changeset_stats`' per-changeset maps and the
+   four `operators.rollups` views — is one call of this kernel. Each input
+   row contributes an array of tagged `(kind, key, values…)` entries
+   (`map_entry`); the kernel sums them per (group, kind, key) with map-side
+   combine, so the shuffle carries one partial row per (group, kind, key),
+   never whole maps; cuts the ranked kinds to `RANK() <= k`; and builds
+   every map and scalar column from one `collect_list` per group. Two
+   shuffles, three with a cut (the rank window partitions by (group, kind),
+   which the (group, kind, key) aggregate does not satisfy).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from osmesa_spark.functions.litexpr import q
 
 
 def sum_map_values(maps_col: Column, value_type: str = "int") -> Column:
@@ -64,45 +74,80 @@ def simplify_counts(m: Column) -> Column:
     return F.map_filter(m, lambda _k, v: v.isNotNull() & (v != 0))
 
 
-def count_values(values: Column) -> Column:
-    """Frequency map of an array<string> (reference `count_values`, used for
-    per-changeset country edit counts `ChangesetStatsCreator.scala:129`).
-
-    HOF form; for the scale path explode + groupBy instead (map_sum_agg).
-    """
-    return F.aggregate(
-        values,
-        F.expr("cast(map() as map<string,int>)"),
-        lambda acc, v: F.map_zip_with(
-            acc,
-            F.create_map(v, F.lit(1)),
-            lambda _k, a, b: F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0)),
-        ),
+def map_entry(values: dict, kind: str, key: str, **given: str) -> str:
+    """SQL for one `map_sum_agg` entry: `kind`, the SQL string `key`, and
+    one field per `values` name, cast to its type — `given[name]` (a SQL
+    expression) or NULL. Every entry of one call has the same struct type."""
+    fields = "".join(
+        f", '{f}', CAST({given.get(f, 'NULL')} AS {t})" for f, (t, _) in values.items()
     )
+    return f"named_struct('kind', '{kind}', 'key', {key}{fields})"
 
 
 def map_sum_agg(
     df: DataFrame,
     group_cols: list[str],
-    map_col: str,
-    out_col: str | None = None,
-    value_type: str = "bigint",
+    entries: str,
+    values: dict,
+    maps: dict,
+    scalars: dict | None = None,
+    top: dict | None = None,
+    present: dict | None = None,
 ) -> DataFrame:
-    """Scale-path map aggregation: element-wise sum of ``map_col`` per group.
+    """Roll tagged entries up per group into map and scalar columns.
 
-    explode → groupBy(group, key).sum (partial agg kicks in) →
-    groupBy(group).map_from_entries. Returns one row per group with a
-    map column ``out_col``. Keys are sorted for deterministic output.
+    entries: SQL array of `map_entry` structs per input row (NULL keys are
+             the caller's to drop: a map cannot hold one).
+    values:  {field: (sql type, aggregate)} — each field is combined per
+             (group, kind, key) with its aggregate (`sum`, `max`, ...).
+    maps:    {out: (kind, field)} — out is the map key → field over the
+             group's entries of that kind, keys ascending; NULL when the
+             group has no entry of any kind in `present[out]` (default: the
+             map's own kind), {} when it has some but none of this kind.
+    scalars: {out: (kind, field)} — field of the kind's single key.
+    top:     {kind: k} — keep the kind's keys of RANK() <= k by
+             (`edits` desc, key), per group.
+
+    Returns the group columns, then `scalars`, then `maps`, in order.
     """
-    out_col = out_col or map_col
-    exploded = df.select(*group_cols, F.explode_outer(map_col).alias("__k", "__v"))
+    g = ", ".join(q(c) for c in group_cols)
     per_key = (
-        exploded.where(F.col("__k").isNotNull())
-        .groupBy(*group_cols, "__k")
-        .agg(F.sum("__v").cast(value_type).alias("__v"))
+        df.selectExpr(*map(q, group_cols), f"explode({entries}) AS e")
+        .selectExpr(*map(q, group_cols), "e.*")
+        .groupBy(*group_cols, "kind", "key")
+        .agg(*[F.expr(f"{agg}({q(f)})").alias(f) for f, (_, agg) in values.items()])
     )
-    return per_key.groupBy(*group_cols).agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct(F.col("__k"), F.col("__v"))))
-        ).alias(out_col)
+    if top:
+        # uncut kinds order by NULL: all their keys tie at rank 1. The
+        # literal bound lets the optimizer put a WindowGroupLimit (a per-
+        # partition top-k) below the window's exchange.
+        cut = "kind IN (" + ", ".join(f"'{k}'" for k in top) + ")"
+        ks = " ".join(f"WHEN '{kind}' THEN {k}" for kind, k in top.items())
+        kmax = max(top.values())
+        per_key = per_key.withColumn(
+            "__rank",
+            F.expr(
+                f"rank() OVER (PARTITION BY {g}, kind "
+                f"ORDER BY IF({cut}, edits, NULL) DESC, IF({cut}, key, NULL))"
+            ),
+        ).where(f"__rank <= {kmax} AND __rank <= CASE kind {ks} ELSE {kmax} END")
+    struct = ", ".join(q(f) for f in ("kind", "key", *values))
+    rolled = per_key.groupBy(*group_cols).agg(
+        F.expr(f"array_sort(collect_list(struct({struct})))").alias("__e")
     )
+
+    def of(kind: str) -> str:
+        return f"filter(__e, e -> e.kind = '{kind}')"
+
+    outs = [q(c) for c in group_cols]
+    outs += [
+        f"try_element_at({of(kind)}, 1).{q(f)} AS {q(out)}"
+        for out, (kind, f) in (scalars or {}).items()
+    ]
+    for out, (kind, f) in maps.items():
+        kinds = ", ".join(f"'{k}'" for k in (present or {}).get(out, (kind,)))
+        outs.append(
+            f"IF(exists(__e, e -> e.kind IN ({kinds})), map_from_entries("
+            f"transform({of(kind)}, e -> struct(e.key, e.{q(f)}))), NULL) AS {q(out)}"
+        )
+    return rolled.selectExpr(*outs)

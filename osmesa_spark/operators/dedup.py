@@ -285,9 +285,11 @@ def sparse_cosine_pairs(
     # tf feeds THREE consumers (the n_docs scalar, the df_ marginal and
     # the wts projection) — without a pin the tokenize+count subtree runs
     # once under the n_docs job and TWICE more inside the final action
-    # (Catalyst plans the subtree per reference). Lazy checkpoint: the
-    # n_docs count below materializes it; everything downstream reads the
-    # (doc_id, w, tf) counter blocks.
+    # (Catalyst plans the subtree per reference). Lazy checkpoint: creating
+    # it already runs the count's shuffle-map stage as a job (AQE executes
+    # a pinned plan's non-result stages to build its RDD); the n_docs count
+    # below materializes the blocks, and everything downstream reads them.
+    # An eager pin costs one job more (its own result job).
     tf = words.groupBy("doc_id", "w").agg(
         F.count(F.lit(1)).cast("double").alias("tf")
     ).localCheckpoint(eager=False)
@@ -630,8 +632,11 @@ def _cc_propagation_labels(raw: DataFrame, max_rounds: int):
         .localCheckpoint(eager=False)
     )
     # init: label(v) = min(v, min neighbor) — one propagation round for free
-    # lazy: the convergence agg right below materializes the checkpoint —
-    # one job per round instead of two (checkpoint job + agg job)
+    # lazy: the convergence agg right below materializes the checkpoint.
+    # Each pin still runs its plan's shuffle stages as jobs when it is
+    # created; lazy only drops the pin's own result job — one job fewer per
+    # round (70 pairs holding a 40-link chain: 8 jobs per round, 6 of them
+    # at the pin's creation, against 9 eager)
     labels = edges.groupBy("src").agg(F.min("dst").alias("m")).select(
         F.col("src").alias("node"),
         F.least(F.col("src"), F.col("m")).alias("component_id"),
@@ -967,7 +972,11 @@ def _cc_star_labels(raw: DataFrame, max_iterations: int) -> DataFrame:
         .distinct()
         # lazy: each round's signature agg materializes that round's
         # small-star checkpoint, whose computation folds in the pending
-        # large-star checkpoint — 1 job per star round instead of 3
+        # large-star checkpoint. Each pin still runs its plan's shuffle
+        # stages as jobs when it is created; lazy only drops the two pins'
+        # result jobs — two jobs fewer per star round (70 pairs holding a
+        # 40-link chain: 10 jobs per round, 8 of them at pin creation,
+        # against 12 eager)
         .localCheckpoint(eager=False)
     )
 
@@ -1088,7 +1097,9 @@ def winnow_overlap_pairs(
     )
     # lazy: counts/a/b all sit under the caller's single action — the first
     # stage to touch `pruned` materializes it (partition-level cache locks
-    # keep it computed once); saves the separate construction-time job
+    # keep it computed once). Creating the pin still runs the per-fp count
+    # and the semi-join's shuffle stages as jobs (3 at construction); lazy
+    # only drops the checkpoint's own result job
     pruned = fps.join(keep.select("fp"), "fp", "left_semi").localCheckpoint(
         eager=False
     )

@@ -4,268 +4,127 @@ PostgreSQL materialized views (`deployment/sql/materialized_views/
 
 Input: the changeset-stats table produced by operators.stats.changeset_stats
 (one row per changeset: maps + total_edits + editor + user_id + hashtags +
-countries). `jsonb_object_agg` becomes `map_from_entries(collect_list(...))`,
-`jsonb_each` becomes `explode(map)`, RANK() top-k filters are Spark windows.
+countries). `jsonb_each` becomes an array of tagged entries per changeset,
+`jsonb_object_agg` a map built from the group's entries, and the RANK() top-k
+filters one rank window in which only the cut kinds are ordered.
 
-Scale notes: every per-key aggregation explodes FIRST and aggregates on
-narrow (group, key, value) rows — partial aggregation applies, and the
-rank windows partition by the same key as the preceding groupBy so AQE can
-reuse the shuffle partitioning.
+Each view is one entry list and one `functions.maps.map_sum_agg` call: the
+group's scalar columns (`_GENERAL`) and all of its maps come out of one
+(group, kind, key) aggregate, so a view costs two shuffles, three when it has
+a top-k cut — not one aggregate, shuffle and join per map. A NULL group key
+(user_id, hashtag) contributes only its scalar entry: in the reference's
+joins a NULL key matches nothing, so its maps are NULL.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osmesa_spark.functions.maps import map_entry, map_sum_agg
 
-def _agg_map(df: DataFrame, group: str, map_col: str, out: str) -> DataFrame:
-    """sum a map column element-wise per group (jsonb_each + object_agg)."""
+# per (group, kind, key): n changesets (or summed counts), edits summed (the
+# top-k order), v a summed measurement, last the latest edit
+_VALUES = {
+    "n": ("bigint", "sum"),
+    "edits": ("bigint", "sum"),
+    "v": ("double", "sum"),
+    "last": ("timestamp", "max"),
+}
+_LAST = "coalesce(closed_at, created_at)"
+_GENERAL = {
+    "last_edit": ("all", "last"),
+    "changeset_count": ("all", "n"),
+    "edit_count": ("all", "edits"),
+}
+# measurements and counts share one presence: a group with entries in either
+# gets {} for the other, NULL only with neither
+_SUMMED = {"measurements": ("m", "v"), "counts": ("c", "n")}
+_SUMMED_PRESENT = dict.fromkeys(_SUMMED, ("m", "c"))
+_SUMMED_ENTRIES = [
+    f"transform(map_entries(coalesce(measurements, map())), "
+    f"x -> {map_entry(_VALUES, 'm', 'x.key', v='x.value')})",
+    f"transform(map_entries(coalesce(counts, map())), "
+    f"x -> {map_entry(_VALUES, 'c', 'x.key', n='x.value')})",
+]
+
+
+def _general(edits: str) -> str:
+    """The group's scalar entry for one changeset."""
+    return map_entry(_VALUES, "all", "''", n="1", edits=f"coalesce({edits}, 0)", last=_LAST)
+
+
+def _tallies(kind: str, keys: str, edits: str = "total_edits") -> str:
+    """One changeset (n = 1, its edits) under each element of the array `keys`."""
+    entry = map_entry(_VALUES, kind, "k", n="1", edits=f"coalesce({edits}, 0)")
+    return f"transform(coalesce({keys}, array()), k -> {entry})"
+
+
+def _entries(group: str, edits: str, *parts: str) -> str:
+    """The scalar entry, then `parts` minus NULL keys and, for a NULL
+    group key, minus everything."""
     return (
-        df.select(group, F.explode_outer(map_col).alias("k", "v"))
-        .where(F.col("k").isNotNull())
-        .groupBy(group, "k")
-        .agg(F.sum("v").alias("v"))
-        .groupBy(group)
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("k", "v")))
-            ).alias(out)
-        )
+        f"concat(array({_general(edits)}), filter(concat({', '.join(parts)}), "
+        f"e -> e.key IS NOT NULL AND {group} IS NOT NULL))"
     )
 
 
-def _agg_maps(
-    df: DataFrame, group: str, specs: list[tuple[str, str, str]]
-) -> DataFrame:
-    """Element-wise sum of SEVERAL map columns per group in one
-    explode → aggregate chain. Each spec is (map_col, out_name, value_type).
-
-    Tagging every entry key with its source-column ordinal lets all maps
-    share a single shuffle pair (narrow rows keyed (group, tagged_key)),
-    where one `_agg_map` per column pays a full explode+2×shuffle+join
-    each — at 100 TB the input scan and the (group, key) exchange are the
-    dominant costs, so halving them is a straight 2× on this stage."""
-    def _tagger(prefix: str):
-        # factory closure: extra default args on the lambda itself would
-        # change its arity and make pyspark bind them to HOF arguments
-        return lambda e: F.struct(
-            F.concat(F.lit(prefix), e["key"]).alias("k"),
-            e["value"].cast("double").alias("v"),
-        )
-
-    tagged = F.concat(
-        *[
-            F.transform(
-                F.map_entries(F.coalesce(F.col(c), F.create_map())),
-                _tagger(f"{i}:"),
-            )
-            for i, (c, _, _) in enumerate(specs)
-        ]
-    )
-    summed = (
-        df.select(group, F.explode(tagged).alias("e"))
-        .select(group, F.col("e.k").alias("k"), F.col("e.v").alias("v"))
-        .groupBy(group, "k")
-        .agg(F.sum("v").alias("v"))
-        .groupBy(group)
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("k", "v")))
-            ).alias("_m")
-        )
-    )
-    def _starts(prefix: str):
-        return lambda k, v: k.startswith(prefix)
-
-    def _strip(n: int):
-        return lambda k, v: F.substring(k, n + 1, 1 << 20)
-
-    def _cast_v(vtype: str):
-        return lambda k, v: v.cast(vtype)
-
-    outs = [F.col(group)]
-    for i, (_, out, vtype) in enumerate(specs):
-        pref = f"{i}:"
-        picked = F.map_filter("_m", _starts(pref))
-        stripped = F.transform_keys(picked, _strip(len(pref)))
-        outs.append(F.transform_values(stripped, _cast_v(vtype)).alias(out))
-    return summed.select(*outs)
-
-
-def _topk_map(
-    df: DataFrame, group: str, key: str, k: int, out_prefix: str
-) -> DataFrame:
-    """RANK() ≤ k by summed edits per (group, key) → two maps
-    {key→changesets}, {key→edits} (editor_counts/hashtag_counts pattern)."""
-    counts = (
-        df.where(F.col(key).isNotNull())
-        .groupBy(group, key)
-        .agg(
-            F.count(F.lit(1)).alias("changesets"),
-            F.sum(F.coalesce("total_edits", F.lit(0))).alias("edits"),
-        )
-    )
-    if k >= 10000:
-        # effectively-unlimited k (the day-counts map): the rank window
-        # would sort every partition just to keep everything — skip it.
-        ranked = counts
-    else:
-        w = Window.partitionBy(group).orderBy(F.col("edits").desc(), F.col(key))
-        ranked = counts.withColumn("rank", F.rank().over(w)).where(
-            F.col("rank") <= k
-        )
-    return ranked.groupBy(group).agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct(key, F.col("changesets"))))
-        ).alias(f"{out_prefix}_changesets"),
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct(key, F.col("edits"))))
-        ).alias(f"{out_prefix}_edits"),
-    )
+def _pair(kind: str) -> dict:
+    return {f"{kind}_changesets": (kind, "n"), f"{kind}_edits": (kind, "edits")}
 
 
 def user_statistics(changesets: DataFrame) -> DataFrame:
-    """user_statistics.sql parity: per-user lifetime rollup."""
-    last = F.coalesce("closed_at", "created_at")
-    general = changesets.groupBy("user_id").agg(
-        F.max(last).alias("last_edit"),
-        F.count(F.lit(1)).alias("changeset_count"),
-        F.sum(F.coalesce("total_edits", F.lit(0))).alias("edit_count"),
-    )
-    editors = _topk_map(changesets, "user_id", "editor", 10, "editor")
-    ht = changesets.select(
-        "user_id", "total_edits", F.explode_outer("hashtags").alias("hashtag")
-    )
-    hashtags_m = _topk_map(ht, "user_id", "hashtag", 50, "hashtag")
-    days = changesets.select(
+    """user_statistics.sql parity: per-user lifetime rollup, top-10 editors,
+    top-50 hashtags, per-day and per-country maps."""
+    day = f"CAST(CAST(date_trunc('day', {_LAST}) AS DATE) AS STRING)"
+    country = map_entry(_VALUES, "country", "x.key", n="1", edits="x.value")
+    entries = _entries(
         "user_id",
         "total_edits",
-        F.date_trunc("day", last).cast("date").cast("string").alias("day"),
+        *_SUMMED_ENTRIES,
+        _tallies("editor", "array(editor)"),
+        _tallies("day", f"array({day})"),
+        f"transform(map_entries(coalesce(countries, map())), x -> {country})",
+        _tallies("hashtag", "hashtags"),
     )
-    days_m = _topk_map(days.where(F.col("day").isNotNull()), "user_id", "day", 10000, "day")
-    # one explode + one groupBy chain produces BOTH country maps (the naive
-    # shape — one _agg_map per map — pays two identical shuffles)
-    cc = changesets.select(
-        "user_id", F.explode_outer("countries").alias("code", "cedits")
-    ).where(F.col("code").isNotNull())
-    country_maps = (
-        cc.groupBy("user_id", "code")
-        .agg(
-            F.count(F.lit(1)).alias("n_cs"),
-            F.sum("cedits").alias("n_edits"),
-        )
-        .groupBy("user_id")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("code", "n_cs")))
-            ).alias("country_changesets"),
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("code", "n_edits")))
-            ).alias("country_edits"),
-        )
+    maps = {**_SUMMED, **_pair("editor"), **_pair("day"), **_pair("country"), **_pair("hashtag")}
+    return map_sum_agg(
+        changesets, ["user_id"], entries, _VALUES, maps, _GENERAL,
+        top={"editor": 10, "hashtag": 50}, present=_SUMMED_PRESENT,
     )
-    maps = _agg_maps(
-        changesets,
-        "user_id",
-        [("measurements", "measurements", "double"), ("counts", "counts", "bigint")],
-    )
-    out = general
-    for piece in (maps, editors, days_m, country_maps, hashtags_m):
-        out = out.join(piece, "user_id", "left")
-    return out
 
 
 def hashtag_statistics(changesets: DataFrame) -> DataFrame:
     """hashtag_statistics.sql parity: per-hashtag rollup + top-10 users."""
-    cs = changesets.select(
-        F.explode("hashtags").alias("hashtag"),
-        "id",
-        "user_id",
+    cs = changesets.select(F.explode("hashtags").alias("hashtag"), "*")
+    entries = _entries(
+        "hashtag",
         "total_edits",
-        "measurements",
-        "counts",
-        "created_at",
-        "closed_at",
+        *_SUMMED_ENTRIES,
+        _tallies("user", "array(CAST(user_id AS STRING))"),
     )
-    last = F.coalesce("closed_at", "created_at")
-    general = cs.groupBy("hashtag").agg(
-        F.max(last).alias("last_edit"),
-        F.count(F.lit(1)).alias("changeset_count"),
-        F.sum(F.coalesce("total_edits", F.lit(0))).alias("edit_count"),
+    return map_sum_agg(
+        cs, ["hashtag"], entries, _VALUES, {**_SUMMED, **_pair("user")}, _GENERAL,
+        top={"user": 10}, present=_SUMMED_PRESENT,
     )
-    users = _topk_map(
-        cs.withColumn("user_id_s", F.col("user_id").cast("string")),
-        "hashtag",
-        "user_id_s",
-        10,
-        "user",
-    )
-    maps = _agg_maps(
-        cs,
-        "hashtag",
-        [("measurements", "measurements", "double"), ("counts", "counts", "bigint")],
-    )
-    out = general
-    for piece in (maps, users):
-        out = out.join(piece, "hashtag", "left")
-    return out
 
 
 def country_statistics(changesets: DataFrame) -> DataFrame:
     """country_statistics.sql parity: per-country rollup + top-10 hashtags
-    (RANK ≤ 10, country_statistics.sql:33-41)."""
-    cc = changesets.select(
-        F.explode("countries").alias("code", "country_edits_in_cs"),
-        "id",
-        "total_edits",
-        "hashtags",
-        "created_at",
-        "closed_at",
+    (RANK ≤ 10, country_statistics.sql:33-41), edits counted in the country."""
+    cc = changesets.select(F.explode("countries").alias("code", "cedits"), "*")
+    entries = _entries("code", "cedits", _tallies("hashtag", "hashtags", edits="cedits"))
+    return map_sum_agg(
+        cc, ["code"], entries, _VALUES, _pair("hashtag"), _GENERAL, top={"hashtag": 10}
     )
-    last = F.coalesce("closed_at", "created_at")
-    general = cc.groupBy("code").agg(
-        F.max(last).alias("last_edit"),
-        F.count(F.lit(1)).alias("changeset_count"),
-        F.sum(F.coalesce("country_edits_in_cs", F.lit(0))).alias("edit_count"),
-    )
-    ht = cc.select(
-        "code",
-        F.col("country_edits_in_cs").alias("total_edits"),
-        F.explode_outer("hashtags").alias("hashtag"),
-    )
-    hashtags_m = _topk_map(ht, "code", "hashtag", 10, "hashtag")
-    return general.join(hashtags_m, "code", "left")
 
 
 def hashtag_user_statistics(changesets: DataFrame) -> DataFrame:
-    """hashtag_user_statistics.sql parity: per (hashtag, user) rollup."""
-    cs = changesets.select(
-        F.explode("hashtags").alias("hashtag"),
-        "user_id",
-        "total_edits",
-        "measurements",
-        "counts",
-        "created_at",
-        "closed_at",
+    """hashtag_user_statistics.sql parity: per (hashtag, user) rollup; a
+    NULL user is a group of its own and keeps its maps."""
+    cs = changesets.select(F.explode("hashtags").alias("hashtag"), "*")
+    entries = f"concat(array({_general('total_edits')}), {', '.join(_SUMMED_ENTRIES)})"
+    return map_sum_agg(
+        cs, ["hashtag", "user_id"], entries, _VALUES, _SUMMED, _GENERAL,
+        present=_SUMMED_PRESENT,
     )
-    last = F.coalesce("closed_at", "created_at")
-    general = cs.groupBy("hashtag", "user_id").agg(
-        F.max(last).alias("last_edit"),
-        F.count(F.lit(1)).alias("changeset_count"),
-        F.sum(F.coalesce("total_edits", F.lit(0))).alias("edit_count"),
-    )
-    key = cs.select(
-        F.concat_ws("|", "hashtag", F.col("user_id").cast("string")).alias("hu"),
-        "measurements",
-        "counts",
-    )
-    maps = _agg_maps(
-        key,
-        "hu",
-        [("measurements", "measurements", "double"), ("counts", "counts", "bigint")],
-    )
-    general = general.withColumn(
-        "hu", F.concat_ws("|", "hashtag", F.col("user_id").cast("string"))
-    )
-    return general.join(maps, "hu", "left").drop("hu")

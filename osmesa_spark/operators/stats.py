@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmesa_spark.functions import tags as tg
-from osmesa_spark.functions.maps import simplify_counts
-from osmesa_spark.functions.text import hashtags, merge_sets
+from osmesa_spark.functions.maps import map_entry, map_sum_agg, simplify_counts
+from osmesa_spark.functions.text import changeset_hashtags
 from osmesa_spark.operators import geometry as G
 from osmesa_spark.operators import preprocess as P
 from osmesa_spark.operators.geocode import BBoxCountries, geocode
@@ -58,6 +58,11 @@ _MEASUREMENT_FAMILIES = [
     ("landuse_km2", tg.is_landuse, "areaDelta", 1.0 / 1_000_000),
     ("natural_km2", tg.is_natural, "areaDelta", 1.0 / 1_000_000),
 ]
+
+
+# per (changeset, kind, key): n summed counts (feature or country tallies),
+# v summed measurements
+_ROLLUP_VALUES = {"n": ("bigint", "sum"), "v": ("double", "sum")}
 
 
 def _edit_state():
@@ -168,67 +173,28 @@ def changeset_stats(
     )
 
     # Single-pass rollup: counts, measurements, country frequencies and
-    # total_edits all ride ONE prefixed (key, value) entry stream, so the
-    # feature lineage (way reconstruction — the heaviest stage) executes once
-    # and one shuffle with map-side combine carries (changeset, key, sum).
+    # total_edits all ride ONE tagged entry stream, so the feature lineage
+    # (way reconstruction — the heaviest stage) executes once and one
+    # shuffle with map-side combine carries (changeset, kind, key, sum).
     # The 4-branch alternative (one agg per map + 3 joins) recomputes that
     # lineage four times: Catalyst does not dedupe shared subplans across
-    # self-joins.
-    def _prefixed(col: F.Column, prefix: str) -> F.Column:
-        return F.transform(
-            F.map_entries(col),
-            lambda e: F.struct(
-                F.concat(F.lit(prefix), e["key"]).alias("k"),
-                e["value"].cast("double").alias("v"),
-            ),
-        )
+    # self-joins. Every feature row carries a `total` entry, so a changeset
+    # with features gets {} for a map it has no entries in.
+    def entry(kind: str, key: str, **given: str) -> str:
+        return map_entry(_ROLLUP_VALUES, kind, key, **given)
 
-    entries = F.concat(
-        _prefixed(F.col("counts"), "c:"),
-        _prefixed(F.col("measurements"), "m:"),
-        F.transform(
-            "countries",
-            lambda c: F.struct(
-                F.concat(F.lit("n:"), c).alias("k"),
-                F.lit(1.0).alias("v"),
-            ),
-        ),
-        F.array(F.struct(F.lit("__total").alias("k"), F.lit(1.0).alias("v"))),
+    total = entry("total", "''", n="1")
+    entries = (
+        f"concat(array({total}), "
+        f"transform(map_entries(counts), x -> {entry('c', 'x.key', n='x.value')}), "
+        f"transform(map_entries(measurements), x -> {entry('m', 'x.key', v='x.value')}), "
+        f"transform(countries, c -> {entry('country', 'c', n='1')}))"
     )
-    per_key = (
-        per_row.select("changeset", F.explode(entries).alias("e"))
-        .select("changeset", "e.k", "e.v")
-        .groupBy("changeset", "k")
-        .agg(F.sum("v").alias("v"))
-    )
-    assembled = per_key.groupBy("changeset").agg(
-        F.map_from_entries(
-            F.array_sort(F.collect_list(F.struct("k", "v")))
-        ).alias("__m")
-    )
-
-    def _submap(prefix: str, value_type: str) -> F.Column:
-        ents = F.filter(
-            F.map_entries("__m"), lambda e: e["key"].startswith(prefix)
-        )
-        return F.map_from_entries(
-            F.transform(
-                ents,
-                lambda e: F.struct(
-                    e["key"]
-                    .substr(F.lit(len(prefix) + 1), F.length(e["key"]))
-                    .alias("k"),
-                    e["value"].cast(value_type).alias("v"),
-                ),
-            )
-        )
-
-    stats = assembled.select(
-        "changeset",
-        _submap("m:", "double").alias("measurements"),
-        _submap("c:", "bigint").alias("counts"),
-        _submap("n:", "bigint").alias("countries"),
-        F.element_at("__m", F.lit("__total")).cast("bigint").alias("total_edits"),
+    maps = {"measurements": ("m", "v"), "counts": ("c", "n"), "countries": ("country", "n")}
+    stats = map_sum_agg(
+        per_row, ["changeset"], entries, _ROLLUP_VALUES, maps,
+        scalars={"total_edits": ("total", "n")},
+        present=dict.fromkeys(maps, ("total",)),
     )
 
     meta = changesets.select(
@@ -237,17 +203,7 @@ def changeset_stats(
         F.col("uid").alias("user_id"),
         F.col("createdAt").alias("created_at"),
         F.col("closedAt").alias("closed_at"),
-        merge_sets(
-            hashtags(F.col("tags").getItem("comment")),
-            F.transform(
-                F.split(
-                    F.coalesce(F.col("tags").getItem("hashtags"), F.lit("")), ";"
-                ),
-                lambda t: F.lower(F.trim(t)),
-            ),
-        ).alias("hashtags"),
-    ).withColumn(
-        "hashtags", F.filter("hashtags", lambda t: t != "")
+        changeset_hashtags("tags").alias("hashtags"),
     )
 
     # right join keeps empty changesets (full-outer spirit of J3/J4: metadata

@@ -20,7 +20,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from osmesa_spark.functions.maps import map_sum_agg
+from osmesa_spark.functions.maps import map_entry, map_sum_agg
 from osmesa_spark.functions import text as text_fns
 from osmesa_spark.functions.text import (
     doc_fingerprint,
@@ -1157,11 +1157,13 @@ def q_changeset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("railway_features_added"), (tg.is_rail_feature("tags") & is_new).cast("int"),
         F.lit("total_edits"), F.lit(1),
     )
+    values = {"n": ("bigint", "sum")}
     rolled = map_sum_agg(
         edits.select("user_id", counts.alias("counts")),
         ["user_id"],
-        "counts",
-        value_type="bigint",
+        f"transform(map_entries(counts), x -> {map_entry(values, 'c', 'x.key', n='x.value')})",
+        values,
+        {"counts": ("c", "n")},
     )
     key_order = [
         "buildings_added",

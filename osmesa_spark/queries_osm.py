@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from osmesa_spark import datagen
-from osmesa_spark.functions.text import hashtags, merge_sets
+from osmesa_spark.functions.text import changeset_hashtags
 from osmesa_spark.operators import geometry as G
 from osmesa_spark.operators import preprocess as P
 from osmesa_spark.operators import vectorgrid as VG
@@ -1144,24 +1144,11 @@ def _rw_geocode_sql() -> str:
 
 
 def osm_hashtags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cs = _changesets(spark)
-    merged = cs.select(
-        "id",
-        merge_sets(
-            hashtags(F.col("tags").getItem("comment")),
-            F.filter(
-                F.transform(
-                    F.split(
-                        F.coalesce(F.col("tags").getItem("hashtags"), F.lit("")),
-                        ";",
-                    ),
-                    lambda t: F.lower(F.trim(t)),
-                ),
-                lambda t: t != "",
-            ),
-        ).alias("hs"),
+    return (
+        _changesets(spark)
+        .select("id", F.explode(changeset_hashtags("tags")).alias("hashtag"))
+        .distinct()
     )
-    return merged.select("id", F.explode("hs").alias("hashtag")).distinct()
 
 
 OSM_HASHTAGS_SQL = f"""

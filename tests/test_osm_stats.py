@@ -171,6 +171,22 @@ def test_changeset_stats_totals(spark, history, changesets, fx_duck):
             assert code in COUNTRIES
 
 
+def test_changeset_stats_map_presence(spark, history, changesets):
+    """A changeset with tagged features gets all three maps, {} for a kind
+    it has no entry of (countries, with no countries dict given); one with
+    none gets NULL maps and total_edits 0."""
+    rows = changeset_stats(history, changesets).collect()
+    feats = [r for r in rows if r["total_edits"] > 0]
+    bare = [r for r in rows if r["total_edits"] == 0]
+    assert feats and bare
+    assert any(r["measurements"] == {} for r in feats)
+    for r in feats:
+        assert r["countries"] == {}
+        assert r["counts"] is not None and r["measurements"] is not None
+    for r in bare:
+        assert (r["measurements"], r["counts"], r["countries"]) == (None, None, None)
+
+
 def test_editor_and_user_join(spark, history, changesets):
     stats = changeset_stats(history, changesets)
     row = stats.where(F.col("editor").isNotNull()).first()
