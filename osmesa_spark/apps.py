@@ -208,8 +208,11 @@ def footprint(
 
     Output: (entity, zoom, abs_col, abs_row, value) for zooms
     base_zoom..0 — the faceted pyramid (one partial-agg shuffle per level,
-    facet key rides the same exchange). Feed `sinks.mvt.write_tile_pyramid`
-    per entity for the reference's vector-tile output."""
+    facet key rides the same exchange). For the reference's vector-tile
+    output, `vectorgrid.vectorize(..., key_cols=["entity"])` it and feed
+    `sinks.mvt.write_tile_pyramid_grouped` with `key_col="entity"` and a
+    `sequence` column (`F.lit(s)` for a one-off run): one tile tree per
+    entity."""
     from osmesa_spark.functions.text import changeset_hashtags
     from osmesa_spark.operators import vectorgrid as VG
 

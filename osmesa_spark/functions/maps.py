@@ -25,8 +25,9 @@ Two strategies:
    combine, so the shuffle carries one partial row per (group, kind, key),
    never whole maps; cuts the ranked kinds to `RANK() <= k`; and builds
    every map and scalar column from one `collect_list` per group. Two
-   shuffles, three with a cut (the rank window partitions by (group, kind),
-   which the (group, kind, key) aggregate does not satisfy).
+   shuffles, three with a cut: the rank window partitions by (group, kind),
+   which the (group, kind, key) aggregate does not satisfy, so only the
+   cut kinds' rows cross it.
 """
 
 from __future__ import annotations
@@ -111,26 +112,34 @@ def map_sum_agg(
     Returns the group columns, then `scalars`, then `maps`, in order.
     """
     g = ", ".join(q(c) for c in group_cols)
+    aggs = [F.expr(f"{agg}({q(f)})").alias(f) for f, (_, agg) in values.items()]
+    if top:
+        # the cut flag is an aggregate output, so the optimizer cannot push
+        # the split below the per-key exchange: both branches reuse it
+        cut = "kind IN (" + ", ".join(f"'{k}'" for k in top) + ")"
+        aggs.append(F.expr(f"max({cut})").alias("__cut"))
     per_key = (
         df.selectExpr(*map(q, group_cols), f"explode({entries}) AS e")
         .selectExpr(*map(q, group_cols), "e.*")
         .groupBy(*group_cols, "kind", "key")
-        .agg(*[F.expr(f"{agg}({q(f)})").alias(f) for f, (_, agg) in values.items()])
+        .agg(*aggs)
     )
     if top:
-        # uncut kinds order by NULL: all their keys tie at rank 1. The
-        # literal bound lets the optimizer put a WindowGroupLimit (a per-
-        # partition top-k) below the window's exchange.
-        cut = "kind IN (" + ", ".join(f"'{k}'" for k in top) + ")"
+        # only the cut kinds cross the rank window's (group, kind)
+        # exchange; the uncut kinds go straight to the per-group collect.
+        # The literal bound lets the optimizer put a WindowGroupLimit (a
+        # per-partition top-k) below that exchange.
         ks = " ".join(f"WHEN '{kind}' THEN {k}" for kind, k in top.items())
         kmax = max(top.values())
-        per_key = per_key.withColumn(
-            "__rank",
-            F.expr(
-                f"rank() OVER (PARTITION BY {g}, kind "
-                f"ORDER BY IF({cut}, edits, NULL) DESC, IF({cut}, key, NULL))"
-            ),
-        ).where(f"__rank <= {kmax} AND __rank <= CASE kind {ks} ELSE {kmax} END")
+        ranked = (
+            per_key.where("__cut")
+            .withColumn("__rank", F.expr(
+                f"rank() OVER (PARTITION BY {g}, kind ORDER BY edits DESC, key)"
+            ))
+            .where(f"__rank <= {kmax} AND __rank <= CASE kind {ks} END")
+            .drop("__rank")
+        )
+        per_key = per_key.where("NOT __cut").unionByName(ranked)
     struct = ", ".join(q(f) for f in ("kind", "key", *values))
     rolled = per_key.groupBy(*group_cols).agg(
         F.expr(f"array_sort(collect_list(struct({struct})))").alias("__e")

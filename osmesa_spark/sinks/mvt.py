@@ -10,6 +10,7 @@ Parity targets in the reference:
   * committed-sequence bookkeeping — `VectorGrid.scala:35-60`
     (`__sequences__` layer, last 1000 kept)
   * concurrent tile IO — ForkJoinPool(8) in `Footprints.scala:42-53` (G10)
+  * zip packaging — GenerateVT.saveInZips (`GenerateVT.scala:85-115`)
 
 The reference links geotrellis' vectortile codec; we implement the
 vector-tile **spec 2.1 protobuf wire format** directly (~200 LoC, no
@@ -21,20 +22,27 @@ per spec §4.3.4.4). Multi-part geometries are additional parts in the
 same command stream, exactly how geotrellis' StrictLayer writes
 MultiLine/MultiPolygon. Values: int/string/bool/float.
 
-Scale notes: the sink consumes the already-aggregated per-tile rows (one
-row per tile after `collect_list` of its cells), so executor memory is
-bounded by cells-per-tile (≤128²). Writes are executor-side
-(`foreachPartition`) with a small thread pool per task for IO overlap —
-the driver never sees tile bytes.
+Sink shape: every tile path — the pyramid upsert
+(`write_tile_pyramid_grouped`), the bytes-as-rows encoder (`encode_tiles`,
+`updater.generate_geometry_vt`), the zip packager (`save_pyramid_in_zips`)
+and the per-element updater (`updater.update_tiles`) — is built from the
+same parts: one grouping chain (`_group_cells`: cell struct → spread →
+group by tile → `array_sort(collect_list)`), one cell → feature builder,
+one byte-stable gzip + store put (`put_tile`), one encode kernel and one
+executor write loop (`_foreach_rows_counted`, which returns its row count
+from the write job itself). Executor memory is bounded by one group's
+cells (≤128² per tile); the driver never sees tile bytes.
 """
 
 from __future__ import annotations
 
 import gzip
+import io
 import struct
+import zipfile
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SEQUENCES_LAYER = "__sequences__"
@@ -278,9 +286,7 @@ def layer_feature_order(feats: list["MvtFeature"]) -> list["MvtFeature"]:
     return pts + lns + pls
 
 
-def encode_tile(
-    layers: dict[str, list[MvtFeature]], extent: int = DEFAULT_EXTENT
-) -> bytes:
+def encode_tile(layers: dict[str, list[MvtFeature]]) -> bytes:
     """Encode {layer_name: [features]} into MVT protobuf bytes."""
     out = bytearray()
     for name, feats in layers.items():
@@ -318,7 +324,7 @@ def encode_tile(
             layer += _len_field(3, k.encode("utf-8"))
         for v in values:
             layer += _len_field(4, v)
-        layer += _key(5, 0) + _varint(extent)
+        layer += _key(5, 0) + _varint(DEFAULT_EXTENT)
         out += _len_field(3, bytes(layer))
     return bytes(out)
 
@@ -382,24 +388,67 @@ def decode_tile(buf: bytes) -> dict[str, list[MvtFeature]]:
 
 
 # ---------------------------------------------------------------------------
-# tile store (read / upsert)
+# tile store: one codec, one put, one read
 # ---------------------------------------------------------------------------
 
 def _tile_key(zoom: int, tx: int, ty: int) -> str:
     return f"{zoom}/{tx}/{ty}.mvt.gz"
 
 
-def read_tile(root: str, zoom: int, tx: int, ty: int):
-    """S12: read + gunzip + decode an existing tile, or None. `root` may be
-    a bare path, file://, mem://, or s3:// URI — scheme-routed through the
-    object-store seam (updater/package.scala:36-66 read semantics)."""
+def _zip_key(zoom: int, atx: int, aty: int) -> str:
+    """Archive key of an 8-block subtree: `zoom` is its base zoom and
+    (atx, aty) its tile there (GenerateVT.scala:85-115)."""
+    return f"{zoom}/{atx}/{aty}.zip"
+
+
+def _gzip(buf: bytes) -> bytes:
+    """Byte-stable gzip: mtime=0 keeps the wall clock out of the header,
+    so re-encoding identical content writes identical bytes."""
+    bio = io.BytesIO()
+    with gzip.GzipFile(fileobj=bio, mode="wb", mtime=0) as gz:
+        gz.write(buf)
+    return bio.getvalue()
+
+
+def _get(root: str, key: str) -> bytes | None:
     from osmesa_spark.sources.objectstore import join_key, open_store
 
     store, prefix = open_store(root)
-    raw = store.get(join_key(prefix, _tile_key(zoom, tx, ty)))
+    return store.get(join_key(prefix, key))
+
+
+def _put(root: str, key: str, data: bytes, content_encoding: str | None) -> None:
+    from osmesa_spark.sources.objectstore import join_key, open_store
+
+    store, prefix = open_store(root)
+    store.put(join_key(prefix, key), data, content_encoding=content_encoding)
+
+
+def put_tile(root: str, zoom: int, tx: int, ty: int, layers: dict) -> None:
+    """S13: encode + gzip + store one tile, labeled Content-Encoding: gzip
+    like the reference's S3 tile put (updater/package.scala:160-180). The
+    store seam routes bare paths, file://, mem:// and s3:// roots;
+    LocalStore writes tmp+rename so readers never see a partial tile."""
+    _put(root, _tile_key(zoom, tx, ty), _gzip(encode_tile(layers)), "gzip")
+
+
+def read_tile(root: str, zoom: int, tx: int, ty: int):
+    """S12: read + gunzip + decode an existing tile, or None
+    (updater/package.scala:36-66 read semantics)."""
+    raw = _get(root, _tile_key(zoom, tx, ty))
+    return None if raw is None else decode_tile(gzip.decompress(raw))
+
+
+def read_zip_tile(root: str, zoom: int, tx: int, ty: int) -> bytes | None:
+    """Fetch one tile payload back out of its `save_pyramid_in_zips`
+    archive, or None if the archive or entry is absent."""
+    off = zoom % 8
+    raw = _get(root, _zip_key(zoom - off, tx >> off, ty >> off))
     if raw is None:
         return None
-    return decode_tile(gzip.decompress(raw))
+    with zipfile.ZipFile(io.BytesIO(raw)) as zf:
+        name = f"{zoom}/{tx}/{ty}.mvt"
+        return zf.read(name) if name in zf.namelist() else None
 
 
 def committed_sequences(layers: dict[str, list[MvtFeature]]) -> list[int]:
@@ -410,7 +459,7 @@ def committed_sequences(layers: dict[str, list[MvtFeature]]) -> list[int]:
     )
 
 
-def _sequence_layer(seqs: list[int]) -> list[MvtFeature]:
+def _sequence_layer(seqs) -> list[MvtFeature]:
     kept = sorted(set(seqs))[-MAX_COMMITTED_SEQUENCES:]  # takeRight(1000)
     return [
         MvtFeature(fid=None, geom_type=_GEOM_POINT, points=[(0, 0)],
@@ -450,15 +499,13 @@ def upsert_tile_multi(
     ty: int,
     features_by_seq: dict[int, list["MvtFeature"]],
     layer_name: str,
-    extent: int = DEFAULT_EXTENT,
 ) -> str:
-    """Multi-sequence tile upsert — `getUncommittedTiles` semantics
+    """G8/G9 tile upsert — `getUncommittedTiles` semantics
     (EditHistogram.scala:285-305): drop sequences already committed in the
-    tile, merge ALL remaining sequences' features in one read-modify-write,
-    commit every new sequence atomically. One tile IO per tile per batch
-    regardless of how many replication sequences the batch spans (catch-up
-    batches), where the per-sequence `upsert_tile` loop would re-read and
-    re-write the tile once per sequence."""
+    tile ("skipped" when none remain), merge every remaining sequence's
+    features by `__id` (densities sum) in one read-modify-write, and
+    commit the new sequences in the same put. One tile IO per tile per
+    batch, however many replication sequences the batch spans."""
     existing = read_tile(root, zoom, tx, ty)
     committed = set(committed_sequences(existing)) if existing else set()
     pending = {
@@ -474,74 +521,20 @@ def upsert_tile_multi(
             merged[int(f.tags["__id"])] = f
     for s in sorted(pending):
         _merge_features(merged, pending[s])
-    seqs = sorted(committed | set(pending))
-    layers = {
+    put_tile(root, zoom, tx, ty, {
         layer_name: [merged[k] for k in sorted(merged)],
-        SEQUENCES_LAYER: _sequence_layer(seqs),
-    }
-    payload = gzip.compress(encode_tile(layers, extent))
-    from osmesa_spark.sources.objectstore import join_key, open_store
-
-    store, prefix = open_store(root)
-    store.put(
-        join_key(prefix, _tile_key(zoom, tx, ty)),
-        payload,
-        content_encoding="gzip",
-    )
+        SEQUENCES_LAYER: _sequence_layer(committed | set(pending)),
+    })
     return "written" if existing is None else "updated"
 
 
-def upsert_tile(
-    root: str,
-    zoom: int,
-    tx: int,
-    ty: int,
-    features: list[MvtFeature],
-    layer_name: str,
-    sequence: int | None = None,
-    extent: int = DEFAULT_EXTENT,
-) -> str:
-    """G8/G9: create or merge one tile.
+# ---------------------------------------------------------------------------
+# DataFrame side: one grouping chain, one write loop, one encode kernel
+# ---------------------------------------------------------------------------
 
-    Merge semantics (EditHistogram.scala:181-212 `aggregateValues`): features
-    keyed by `__id`; numeric tag values (the densities) sum; new ids append.
-    Idempotence: if `sequence` is already committed in the tile, skip
-    (returns "skipped"); afterwards the sequence joins the committed list.
-    The sequenced path is exactly the 1-sequence case of
-    `upsert_tile_multi` and delegates to it (one read-merge-commit-encode
-    body to maintain); only the unsequenced no-bookkeeping variant keeps
-    its own body.
-    """
-    if sequence is not None:
-        return upsert_tile_multi(
-            root,
-            zoom,
-            tx,
-            ty,
-            {int(sequence): features},
-            layer_name,
-            extent=extent,
-        )
-    existing = read_tile(root, zoom, tx, ty)
-    merged: dict[int, MvtFeature] = {}
-    if existing is not None:
-        for f in existing.get(layer_name, []):
-            merged[int(f.tags["__id"])] = f
-    _merge_features(merged, features)
-    layers = {layer_name: [merged[k] for k in sorted(merged)]}
-    payload = gzip.compress(encode_tile(layers, extent))
-    # scheme-routed write, labeled Content-Encoding: gzip like the
-    # reference's S3 tile put (updater/package.scala:160-180); LocalStore
-    # writes atomically (tmp+rename) so readers never see partial tiles
-    from osmesa_spark.sources.objectstore import join_key, open_store
-
-    store, prefix = open_store(root)
-    store.put(
-        join_key(prefix, _tile_key(zoom, tx, ty)),
-        payload,
-        content_encoding="gzip",
-    )
-    return "written" if existing is None else "updated"
+# concurrent store puts per task — the reference's ForkJoinPool(8)
+# (Footprints.scala:42-53, G10)
+_IO_THREADS = 8
 
 
 def _spread_groups(df: DataFrame, *keys: str) -> DataFrame:
@@ -568,107 +561,82 @@ def _spread_groups(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(n, *keys)
 
 
-def _foreach_rows_counted(
-    df: DataFrame, make_one, io_threads: int, count: bool = True
-) -> int:
-    """Shared sink executor loop: per partition, build the per-row writer
-    via the executor-side `make_one` factory (store handles / imports
-    live there), overlap IO with a small thread pool, and ride the row
-    count out on ONE accumulator so the caller never re-executes the
-    lineage just to report a number. Rows are consumed in bounded chunks
-    (4 × io_threads) so a large partition never materializes as one
-    Python list while still keeping the IO pool saturated.
+def _group_cells(df: DataFrame, keys: list[str], cell: Column) -> DataFrame:
+    """The one grouping chain of every tile path: (keys…, cell struct) →
+    `_spread_groups` → one row per group with its cells in
+    `array_sort(collect_list(cell))` order. The sort makes payloads
+    byte-stable run to run (the post-spread collect order is
+    partition-arrival order), so the struct leads with the field that
+    orders it. Fan-in per row is bounded by the group's occupancy."""
+    from osmesa_spark.session import ship_package
 
-    `count=False` skips the accumulator entirely and returns -1: a
-    long-running streaming sink calls this once per micro-batch, and
-    PySpark accumulators register permanently in the driver's
-    `_accumulatorRegistry` — one per batch would be an unbounded driver
-    leak for a return value foreachBatch never reads."""
-    counter = (
-        df.sparkSession.sparkContext.accumulator(0) if count else None
+    ship_package(df.sparkSession)
+    return (
+        df.select(*keys, cell.alias("cell"))
+        .transform(lambda d: _spread_groups(d, *keys))
+        .groupBy(*keys)
+        .agg(F.array_sort(F.collect_list("cell")).alias("cells"))
     )
+
+
+def _foreach_rows_counted(df: DataFrame, write) -> int:
+    """The one sink executor loop: call `write(row)` for every row with
+    `_IO_THREADS` concurrent puts per task, consuming rows in chunks of
+    4 × `_IO_THREADS` so a large partition never materializes as one
+    Python list. The row count is the write job's own result, one int
+    per partition summed on the driver: the single job `foreachPartition`
+    runs anyway (it is `mapPartitions(...).count()`), so counting never
+    re-runs the lineage."""
 
     def write_partition(rows):
         from concurrent.futures import ThreadPoolExecutor
         from itertools import islice
 
-        one = make_one()
         n = 0
         it = iter(rows)
-        with ThreadPoolExecutor(max_workers=io_threads) as pool:
-            while True:
-                chunk = list(islice(it, 4 * io_threads))
-                if not chunk:
-                    break
+        with ThreadPoolExecutor(max_workers=_IO_THREADS) as pool:
+            while chunk := list(islice(it, 4 * _IO_THREADS)):
                 n += len(chunk)
-                list(pool.map(one, chunk))
-        if counter is not None:
-            counter.add(n)
+                list(pool.map(write, chunk))
+        yield n
 
-    df.foreachPartition(write_partition)
-    return counter.value if counter is not None else -1
+    return df.rdd.mapPartitions(write_partition).sum()
 
 
-def write_tile_pyramid(
-    vectorized: DataFrame,
-    root: str,
-    layer_name: str = "density",
-    cells: int = 128,
-    value_col: str = "value",
-    sequence: int | None = None,
-    extent: int = DEFAULT_EXTENT,
-    io_threads: int = 8,
-) -> int:
-    """Sink the `vectorize` output (zoom, tx, ty, __id, ccol, crow, value)
-    as an MVT pyramid under `root`. Executor-side writes, one row per tile
-    after the per-tile collect, `io_threads` concurrent file writes per task
-    (G10 parity: Footprints.scala:42-53). Returns number of tiles touched."""
-    from osmesa_spark.session import ship_package
+def _encode_groups(grouped: DataFrame, layers_of) -> DataFrame:
+    """The one encode kernel: per grouped (zoom, tx, ty, cells) row,
+    `layers_of(row)` gives {layer: [features]} (or None: no tile), encoded
+    and gzipped byte-stably in an Arrow-batched mapInPandas. Returns
+    (zoom, tx, ty, data binary) — the input of `save_pyramid_in_zips`."""
 
-    ship_package(vectorized.sparkSession)
-    scale = extent // cells
-    tiles = (
-        vectorized.select(
-            "zoom",
-            "tx",
-            "ty",
-            F.struct("__id", "ccol", "crow", F.col(value_col).alias("value"))
-            .alias("cell"),
-        )
-        .transform(lambda d: _spread_groups(d, "zoom", "tx", "ty"))
-        .groupBy("zoom", "tx", "ty")
-        .agg(
-            # array_sort: byte-stable tile payloads run to run — the
-            # post-_spread_groups collect order is partition-arrival order
-            # (r10 ADVICE); cells sort by their unique leading __id
-            F.array_sort(F.collect_list("cell")).alias("cells")
-        )
+    def encode_batch(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            out = []
+            for row in pdf.to_dict("records"):
+                layers = layers_of(row)
+                if layers:
+                    out.append((int(row["zoom"]), int(row["tx"]),
+                                int(row["ty"]), _gzip(encode_tile(layers))))
+            yield pd.DataFrame(out, columns=["zoom", "tx", "ty", "data"])
+
+    return grouped.mapInPandas(
+        encode_batch, schema="zoom int, tx bigint, ty bigint, data binary"
     )
 
-    def make_one():
-        def one(row):
-            feats = [
-                MvtFeature(
-                    fid=int(c["__id"]),
-                    geom_type=_GEOM_POINT,
-                    points=[
-                        (
-                            int(c["ccol"]) * scale + scale // 2,
-                            int(c["crow"]) * scale + scale // 2,
-                        )
-                    ],
-                    tags={"density": int(c["value"]), "__id": int(c["__id"])},
-                )
-                for c in row["cells"]
-            ]
-            upsert_tile(
-                root, row["zoom"], row["tx"], row["ty"], feats,
-                layer_name, sequence=sequence, extent=extent,
-            )
 
-        return one
-
-    return _foreach_rows_counted(tiles, make_one, io_threads)
+def _cell_feature(c, scale: int, tag: str) -> MvtFeature:
+    """One vectorized grid cell → its point feature at the cell centre,
+    tagged `{tag: value, __id}` (the EditHistogram cell feature)."""
+    fid = int(c["__id"])
+    half = scale // 2
+    return MvtFeature(
+        fid=fid,
+        geom_type=_GEOM_POINT,
+        points=[(int(c["ccol"]) * scale + half, int(c["crow"]) * scale + half)],
+        tags={tag: int(c["value"]), "__id": fid},
+    )
 
 
 def write_tile_pyramid_grouped(
@@ -676,351 +644,105 @@ def write_tile_pyramid_grouped(
     root: str,
     layer_name: str = "density",
     cells: int = 128,
-    value_col: str = "value",
-    sequence_col: str = "sequence",
     key_col: str | None = None,
     facet_col: str | None = None,
-    extent: int = DEFAULT_EXTENT,
-    io_threads: int = 8,
-    count_tiles: bool = True,
 ) -> int:
-    """Multi-sequence, optionally keyed/faceted pyramid sink — the
-    single-plan replacement for the per-sequence driver loop
-    (EditHistogram.scala:238-281 `update`: group by tile, split features by
-    sequence INSIDE the plan, filter committed per tile, one IO per tile).
-
-    `vectorized` is the `vectorize` output plus a `sequence` column (tile
-    the batch with key_cols=[sequence] so per-sequence cells survive the
-    rasterize agg). `key_col` (user id, hashtag, …) routes each entity to
-    its own tile tree `root/<key>/` — the reference's keyed Footprints URI
-    (Footprints.scala:42-53). `facet_col` renames the density tag to
+    """Sink the `vectorize` output plus a `sequence` column (zoom, tx, ty,
+    __id, ccol, crow, value, sequence) as an MVT pyramid under `root` —
+    EditHistogram.scala:238-281 `update`: group by tile, split features by
+    sequence INSIDE the plan, upsert each tile once (`upsert_tile_multi`
+    skips its committed sequences). Tile a batch with key_cols=[sequence]
+    so per-sequence cells survive the rasterize agg; a one-sequence write
+    is `F.lit(s)` as the column. `key_col` (user id, hashtag, …) routes
+    each entity to its own tile tree `root/<key>/` — the keyed Footprints
+    URI (Footprints.scala:42-53). `facet_col` renames the density tag to
     `<layer_name>:<facet>` per facet, the faceted-histogram tag shape
-    (EditHistogram.scala:183-211). Returns number of tiles touched, or -1
-    with `count_tiles=False` (what the streaming sink passes: one
-    accumulator per micro-batch would leak in the driver registry)."""
-    from osmesa_spark.session import ship_package
-
-    ship_package(vectorized.sparkSession)
-    scale = extent // cells
-    cell_fields = [
-        F.col(sequence_col).cast("long").alias("seq"),
-        "__id",
-        "ccol",
-        "crow",
-        F.col(value_col).alias("value"),
-    ]
+    (EditHistogram.scala:183-211). Executor-side writes in one job;
+    returns the number of tiles touched."""
+    scale = DEFAULT_EXTENT // cells
+    fields = [F.col("sequence").cast("long").alias("seq"),
+              "__id", "ccol", "crow", "value"]
     if facet_col is not None:
-        cell_fields.append(F.col(facet_col).cast("string").alias("facet"))
-    group_keys = ([F.col(key_col).cast("string").alias("__key")] if key_col else []) + [
-        F.col("zoom"), F.col("tx"), F.col("ty")
-    ]
-    group_names = (["__key"] if key_col else []) + ["zoom", "tx", "ty"]
-    tiles = (
-        vectorized.select(
-            *group_keys, F.struct(*cell_fields).alias("cell")
+        fields.append(F.col(facet_col).cast("string").alias("facet"))
+    keys = ["zoom", "tx", "ty"]
+    if key_col is not None:
+        vectorized = vectorized.withColumn("__key", F.col(key_col).cast("string"))
+        keys = ["__key", *keys]
+    tiles = _group_cells(vectorized, keys, F.struct(*fields))
+
+    def write(row):
+        by_seq: dict[int, dict[int, MvtFeature]] = {}
+        for c in row["cells"]:
+            tag = layer_name if facet_col is None else f"{layer_name}:{c['facet']}"
+            _merge_features(by_seq.setdefault(int(c["seq"]), {}),
+                            [_cell_feature(c, scale, tag)])
+        upsert_tile_multi(
+            root if key_col is None else f"{root.rstrip('/')}/{row['__key']}",
+            row["zoom"],
+            row["tx"],
+            row["ty"],
+            {s: list(feats.values()) for s, feats in by_seq.items()},
+            layer_name,
         )
-        .transform(lambda d: _spread_groups(d, *group_names))
-        .groupBy(*group_names)
-        .agg(
-            # array_sort: byte-stable tile payloads run to run — the
-            # post-_spread_groups collect order is partition-arrival order
-            # (r10 ADVICE); cells sort by their unique leading __id
-            F.array_sort(F.collect_list("cell")).alias("cells")
-        )
-    )
 
-    def make_one():
-        def one(row):
-            by_seq: dict[int, dict[int, MvtFeature]] = {}
-            for c in row["cells"]:
-                seq = int(c["seq"])
-                fid = int(c["__id"])
-                tag = (
-                    f"{layer_name}:{c['facet']}"
-                    if facet_col is not None
-                    else layer_name
-                )
-                acc = by_seq.setdefault(seq, {})
-                _merge_features(
-                    acc,
-                    [
-                        MvtFeature(
-                            fid=fid,
-                            geom_type=_GEOM_POINT,
-                            points=[
-                                (
-                                    int(c["ccol"]) * scale + scale // 2,
-                                    int(c["crow"]) * scale + scale // 2,
-                                )
-                            ],
-                            tags={tag: int(c["value"]), "__id": fid},
-                        )
-                    ],
-                )
-            tile_root = (
-                f"{root.rstrip('/')}/{row['__key']}" if key_col else root
-            )
-            upsert_tile_multi(
-                tile_root,
-                row["zoom"],
-                row["tx"],
-                row["ty"],
-                {s: list(feats.values()) for s, feats in by_seq.items()},
-                layer_name,
-                extent=extent,
-            )
-
-        return one
-
-    return _foreach_rows_counted(
-        tiles, make_one, io_threads, count=count_tiles
-    )
-
-
-def save_tiles_in_zips(
-    tiles: DataFrame,
-    root: str,
-    zoom: int,
-    io_threads: int = 8,
-) -> int:
-    """Package one zoom level's encoded tiles into zip archives keyed by
-    the zoom-(zoom%8) ancestor tile — ≙ GenerateVT.saveInZips
-    (/root/reference/src/bm/src/main/scala/osmesa/bm/GenerateVT.scala:85-115):
-    offset = zoom % 8, so zooms 0-7 / 8-15 / … each collapse onto the zip
-    grid of their 8-block base zoom; zip object key
-    `{zoom-offset}/{tx>>offset}/{ty>>offset}.zip`; entries named
-    `{zoom}/{tx}/{ty}.mvt`, Z2(Morton)-ordered within the archive.
-
-    `tiles`: (tx, ty, data binary) rows — `data` is the encoded (optionally
-    gzipped) tile payload. Grouping is a single shuffle on the ancestor key
-    with the Z2 sort done engine-side (array_sort on a struct whose first
-    field is the Morton id) — no groupByKey of raw pairs. Per-ancestor
-    fan-in is bounded by 4^offset tiles, the same bound the reference
-    accepts. Archives use ZIP_STORED + a fixed DOS timestamp so a re-run
-    writes byte-identical objects (idempotent under the store's
-    atomic-rename put). Returns the number of zip objects written."""
-    from osmesa_spark.functions.geo import zorder
-    from osmesa_spark.session import ship_package
-
-    ship_package(tiles.sparkSession)
-    offset = zoom % 8
-    grouped = (
-        tiles.select(
-            F.shiftrightunsigned(F.col("tx").cast("bigint"), offset).alias("atx"),
-            F.shiftrightunsigned(F.col("ty").cast("bigint"), offset).alias("aty"),
-            F.struct(
-                # bits must cover the full tile-index range at this zoom
-                # (indices reach 2^zoom - 1; the default 16 would wrap
-                # beyond zoom 16 and break the guaranteed Z2 entry order)
-                zorder(F.col("tx"), F.col("ty"), bits=max(1, min(31, zoom))).alias(
-                    "z"
-                ),
-                F.col("tx").cast("bigint").alias("tx"),
-                F.col("ty").cast("bigint").alias("ty"),
-                F.col("data").alias("data"),
-            ).alias("t"),
-        )
-        .transform(lambda d: _spread_groups(d, "atx", "aty"))
-        .groupBy("atx", "aty")
-        .agg(F.array_sort(F.collect_list("t")).alias("entries"))
-    )
-
-    def make_one():
-        import io as _io
-        import zipfile
-
-        from osmesa_spark.sources.objectstore import join_key, open_store
-
-        store, prefix = open_store(root)
-
-        def one(row):
-            buf = _io.BytesIO()
-            with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
-                for t in row["entries"]:
-                    info = zipfile.ZipInfo(
-                        f"{zoom}/{t['tx']}/{t['ty']}.mvt",
-                        date_time=(1980, 1, 1, 0, 0, 0),
-                    )
-                    zf.writestr(info, bytes(t["data"]))
-            store.put(
-                join_key(prefix, f"{zoom - offset}/{row['atx']}/{row['aty']}.zip"),
-                buf.getvalue(),
-            )
-
-        return one
-
-    return _foreach_rows_counted(grouped, make_one, io_threads)
-
-
-def read_zip_tile(root: str, zoom: int, tx: int, ty: int) -> bytes | None:
-    """Fetch one tile payload back out of its saveInZips archive, or None
-    if the archive or entry is absent."""
-    import io as _io
-    import zipfile
-
-    from osmesa_spark.sources.objectstore import join_key, open_store
-
-    offset = zoom % 8
-    store, prefix = open_store(root)
-    raw = store.get(
-        join_key(prefix, f"{zoom - offset}/{tx >> offset}/{ty >> offset}.zip")
-    )
-    if raw is None:
-        return None
-    with zipfile.ZipFile(_io.BytesIO(raw)) as zf:
-        name = f"{zoom}/{tx}/{ty}.mvt"
-        if name not in zf.namelist():
-            return None
-        return zf.read(name)
+    return _foreach_rows_counted(tiles, write)
 
 
 def encode_tiles(
     vectorized: DataFrame,
     layer_name: str = "density",
     cells: int = 128,
-    value_col: str = "value",
-    extent: int = DEFAULT_EXTENT,
-    gzip_bytes: bool = True,
 ) -> DataFrame:
-    """DataFrame twin of write_tile_pyramid's sink loop: encode each tile
-    of the `vectorize` output (zoom, tx, ty, __id, ccol, crow, value) to
-    its (optionally gzipped) MVT payload and RETURN the bytes as rows
-    (zoom, tx, ty, data binary) instead of writing them — the input shape
-    for packaging sinks (save_tiles_in_zips) or any byte-level store.
-    Same per-tile collect_list fan-in bound as the writer; the codec runs
-    in one Arrow-batched kernel."""
-    from pyspark.sql import types as T
-
-    from osmesa_spark.session import ship_package
-
-    ship_package(vectorized.sparkSession)
-    scale = extent // cells
-    grouped = (
-        vectorized.select(
-            "zoom",
-            "tx",
-            "ty",
-            F.struct("__id", "ccol", "crow", F.col(value_col).alias("value"))
-            .alias("cell"),
-        )
-        .transform(lambda d: _spread_groups(d, "zoom", "tx", "ty"))
-        .groupBy("zoom", "tx", "ty")
-        .agg(
-            # array_sort: byte-stable tile payloads run to run — the
-            # post-_spread_groups collect order is partition-arrival order
-            # (r10 ADVICE); cells sort by their unique leading __id
-            F.array_sort(F.collect_list("cell")).alias("cells")
-        )
+    """Encode each tile of the `vectorize` output (zoom, tx, ty, __id,
+    ccol, crow, value) to its gzipped MVT payload and RETURN the bytes as
+    rows (zoom, tx, ty, data binary) instead of writing them — the input
+    of `save_pyramid_in_zips` or any byte-level store."""
+    scale = DEFAULT_EXTENT // cells
+    grouped = _group_cells(
+        vectorized, ["zoom", "tx", "ty"], F.struct("__id", "ccol", "crow", "value")
     )
-    schema = T.StructType(
-        [
-            T.StructField("zoom", T.IntegerType()),
-            T.StructField("tx", T.LongType()),
-            T.StructField("ty", T.LongType()),
-            T.StructField("data", T.BinaryType()),
-        ]
-    )
-
-    def encode_batch(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                feats = [
-                    MvtFeature(
-                        fid=int(c["__id"]),
-                        geom_type=_GEOM_POINT,
-                        points=[
-                            (
-                                int(c["ccol"]) * scale + scale // 2,
-                                int(c["crow"]) * scale + scale // 2,
-                            )
-                        ],
-                        tags={"density": int(c["value"]), "__id": int(c["__id"])},
-                    )
-                    for c in row["cells"]
-                ]
-                buf = encode_tile({layer_name: feats})
-                if gzip_bytes:
-                    # mtime=0: byte-stable archives across re-runs
-                    import io as _io
-
-                    bio = _io.BytesIO()
-                    with gzip.GzipFile(fileobj=bio, mode="wb", mtime=0) as gz:
-                        gz.write(buf)
-                    buf = bio.getvalue()
-                out.append(
-                    (int(row["zoom"]), int(row["tx"]), int(row["ty"]), buf)
-                )
-            yield pd.DataFrame(
-                out, columns=["zoom", "tx", "ty", "data"]
-            )
-
-    return grouped.mapInPandas(encode_batch, schema=schema)
+    return _encode_groups(grouped, lambda row: {
+        layer_name: [_cell_feature(c, scale, layer_name) for c in row["cells"]]
+    })
 
 
-def save_pyramid_in_zips(
-    encoded: DataFrame,
-    root: str,
-    io_threads: int = 8,
-) -> int:
-    """Multi-zoom packaging of a whole encoded pyramid (zoom, tx, ty,
-    data): every tile lands in the archive of its 8-block subtree — key
-    zoom base = zoom − (zoom % 8), ancestor (tx >> zoom%8, ty >> zoom%8),
-    path {base}/{atx}/{aty}.zip — so one zip carries up to 8 zoom levels
-    of one subtree (the 'zip of 8 zooms'). `save_tiles_in_zips` is the
-    single-zoom reference-signature twin (GenerateVT.scala:85-115, which
-    the reference only ever invokes per zoom); this variant is what a
-    tileserver wants to fetch. Entries ordered by (zoom, Z2). Returns the
+def save_pyramid_in_zips(encoded: DataFrame, root: str) -> int:
+    """≙ GenerateVT.saveInZips (GenerateVT.scala:85-115) over an encoded
+    pyramid (zoom, tx, ty, data): every tile lands in the archive of its
+    8-block subtree — base zoom = zoom − zoom%8, ancestor (tx >> zoom%8,
+    ty >> zoom%8), key `{base}/{atx}/{aty}.zip` — so one zip carries up to
+    8 zoom levels of one subtree; entries named `{zoom}/{tx}/{ty}.mvt`,
+    ordered by (zoom, Z2). The reference's single-zoom call is this with
+    a literal zoom column. Archives use ZIP_STORED and a fixed DOS
+    timestamp, so a re-run writes byte-identical objects. Returns the
     number of archives written."""
     from osmesa_spark.functions.geo import zorder
-    from osmesa_spark.session import ship_package
 
-    ship_package(encoded.sparkSession)
-    off = F.pmod("zoom", F.lit(8)).cast("int")
-    grouped = (
-        encoded.select(
-            (F.col("zoom") - off).alias("base"),
-            F.expr("shiftrightunsigned(CAST(tx AS BIGINT), CAST(pmod(zoom, 8) AS INT))").alias("atx"),
-            F.expr("shiftrightunsigned(CAST(ty AS BIGINT), CAST(pmod(zoom, 8) AS INT))").alias("aty"),
-            F.struct(
-                F.col("zoom").cast("int").alias("zoom"),
-                # zoom is a column here, so use the widest safe static
-                # width: 31 interleaved bit-pairs stay within a bigint
-                zorder(F.col("tx"), F.col("ty"), bits=31).alias("z"),
-                F.col("tx").cast("bigint").alias("tx"),
-                F.col("ty").cast("bigint").alias("ty"),
-                F.col("data").alias("data"),
-            ).alias("t"),
-        )
-        .transform(lambda d: _spread_groups(d, "base", "atx", "aty"))
-        .groupBy("base", "atx", "aty")
-        .agg(F.array_sort(F.collect_list("t")).alias("entries"))
+    off = "CAST(pmod(zoom, 8) AS INT)"
+    keyed = encoded.select(
+        "*",
+        F.expr(f"zoom - {off}").alias("base"),
+        F.expr(f"shiftrightunsigned(CAST(tx AS BIGINT), {off})").alias("atx"),
+        F.expr(f"shiftrightunsigned(CAST(ty AS BIGINT), {off})").alias("aty"),
     )
+    grouped = _group_cells(keyed, ["base", "atx", "aty"], F.struct(
+        F.col("zoom").cast("int").alias("zoom"),
+        # zoom is a column here, so use the widest safe static width: 31
+        # interleaved bit-pairs stay within a bigint, and below 2^zoom
+        # the order equals the per-zoom Z2 order
+        zorder(F.col("tx"), F.col("ty"), bits=31).alias("z"),
+        F.col("tx").cast("bigint").alias("tx"),
+        F.col("ty").cast("bigint").alias("ty"),
+        "data",
+    ))
 
-    def make_one():
-        import io as _io
-        import zipfile
+    def write(row):
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
+            for t in row["cells"]:
+                info = zipfile.ZipInfo(f"{t['zoom']}/{t['tx']}/{t['ty']}.mvt",
+                                       date_time=(1980, 1, 1, 0, 0, 0))
+                zf.writestr(info, bytes(t["data"]))
+        _put(root, _zip_key(row["base"], row["atx"], row["aty"]), buf.getvalue(), None)
 
-        from osmesa_spark.sources.objectstore import join_key, open_store
-
-        store, prefix = open_store(root)
-
-        def one(row):
-            buf = _io.BytesIO()
-            with zipfile.ZipFile(buf, "w", zipfile.ZIP_STORED) as zf:
-                for t in row["entries"]:
-                    info = zipfile.ZipInfo(
-                        f"{t['zoom']}/{t['tx']}/{t['ty']}.mvt",
-                        date_time=(1980, 1, 1, 0, 0, 0),
-                    )
-                    zf.writestr(info, bytes(t["data"]))
-            store.put(
-                join_key(prefix, f"{row['base']}/{row['atx']}/{row['aty']}.zip"),
-                buf.getvalue(),
-            )
-
-        return one
-
-    return _foreach_rows_counted(grouped, make_one, io_threads)
+    return _foreach_rows_counted(grouped, write)

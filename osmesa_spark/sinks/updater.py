@@ -15,11 +15,11 @@ apply one of three **tile schemas** to the affected tiles
     (`updater/schemas/Urchn.scala`, 113 LoC).
 
 Spark-first shape: schema application is per-(tile, element) and needs the
-existing tile state, so it reuses the read-modify-write executor path of
-`sinks.mvt` — the DataFrame side only computes tile keys (pure column
-Web-Mercator math) and groups; all feature-merge logic is per-tile local.
-Idempotence comes from the same committed-sequence layer as the pyramid
-sink.
+existing tile state, so it runs on the shared parts of `sinks.mvt` — the
+grouping chain, the byte-stable tile put and the counted write loop. The
+DataFrame side only computes tile keys (pure column Web-Mercator math);
+all feature-merge logic is per-tile local. Idempotence comes from the same
+committed-sequence layer as the pyramid sink.
 
 Geometry coverage (updater/package.scala:182-208 `tile`): a point touches
 exactly one tile per zoom; a way/relation LineString or Polygon touches
@@ -37,8 +37,6 @@ collect_list, bounded by tile occupancy × feature size.
 """
 
 from __future__ import annotations
-
-import gzip
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -361,44 +359,35 @@ def _clip_ring(pts, lo=0.0, hi=float(EXTENT)):
     return snapped if len(snapped) >= 3 else []
 
 
-def _tile_local_feature(f, tx: int, ty: int):
-    """Clip one fanned-out diff row's CURRENT geometry to tile (tx, ty)
-    and build the MvtFeature, or None when the geometry misses the tile
-    (bbox overcount, or the element moved away — the caller turns that
+def _tile_local_feature(px, py, geom_type: str, tags: dict, tx: int, ty: int):
+    """Clip one geometry (GLOBAL pixel arrays) to tile (tx, ty) and build
+    its tile-local MvtFeature, or None when the geometry misses the tile
+    (bbox overcount, or the element moved away — the updater turns that
     into a departure for snapshot semantics)."""
     ox, oy = tx * EXTENT, ty * EXTENT
-    xs = [int(v) - ox for v in f["px"]]
-    ys = [int(v) - oy for v in f["py"]]
-    gt = f["geomType"]
-    tags = dict(f["tags"].asDict())
-    try:
-        el = f["el_tags"]
-    except (KeyError, ValueError):
-        el = None
-    if el:
-        # element tags merge UNDER the __system keys (History.scala:103)
-        tags = {**dict(el), **tags}
-    if gt == "Point":
+    xs = [int(v) - ox for v in px]
+    ys = [int(v) - oy for v in py]
+    fid = int(tags["__id"])
+    if geom_type == "Point":
         x, y = xs[0], ys[0]
         if not (0 <= x < EXTENT and 0 <= y < EXTENT):
             return None
         return mvt.MvtFeature(
-            fid=int(tags["__id"]), geom_type=mvt._GEOM_POINT,
-            points=[(x, y)], tags=tags,
+            fid=fid, geom_type=mvt._GEOM_POINT, points=[(x, y)], tags=tags,
         )
-    if gt == "Polygon":
+    if geom_type == "Polygon":
         ring = _clip_ring(list(zip(xs, ys)))
         if not ring:
             return None
         return mvt.MvtFeature(
-            fid=int(tags["__id"]), geom_type=mvt._GEOM_POLYGON,
+            fid=fid, geom_type=mvt._GEOM_POLYGON,
             points=[], tags=tags, parts=[ring],
         )
     parts = _clip_polyline(list(zip(xs, ys)))
     if not parts:
         return None
     return mvt.MvtFeature(
-        fid=int(tags["__id"]), geom_type=mvt._GEOM_LINESTRING,
+        fid=fid, geom_type=mvt._GEOM_LINESTRING,
         points=[], tags=tags, parts=parts,
     )
 
@@ -418,11 +407,8 @@ def update_tiles(
     plan, so all zooms ride a single (zoom, tx, ty) shuffle and one write
     pass — the reference loops updateTiles per zoom and re-reads the diff
     file each time."""
-    from osmesa_spark.session import ship_package
-
     if schema not in SCHEMAS:
         raise ValueError(f"unknown tile schema {schema!r} (have {sorted(SCHEMAS)})")
-    ship_package(diffs.sparkSession)
     zooms = [zoom] if isinstance(zoom, int) else sorted(set(zoom))
     if len(zooms) > 1:
         # one consumer per zoom level below — pin the (usually micro-batch
@@ -443,80 +429,62 @@ def update_tiles(
             el_tags = F.col("tags")
     else:
         el_tags = F.lit(None).cast("map<string,string>")
-    tagged = keyed.select(
-        "zoom",
-        "tx",
-        "ty",
-        F.struct(
-            "px", "py", "geomType", "sequence",
-            el_tags.alias("el_tags"),
-            _feature_tags(schema, keyed.columns).alias("tags"),
-        ).alias("f"),
-    )
-    tiles = tagged.groupBy("zoom", "tx", "ty").agg(
-        F.collect_list("f").alias("fs")
-    )
+    # map_entries: the grouping chain's array_sort needs an orderable
+    # struct, and a map is not one
+    tiles = mvt._group_cells(keyed, ["zoom", "tx", "ty"], F.struct(
+        "px", "py", "geomType", "sequence",
+        F.map_entries(el_tags).alias("el_tags"),
+        _feature_tags(schema, keyed.columns).alias("tags"),
+    ))
     apply_fn = SCHEMAS[schema]
 
-    def write_partition(rows):
-        for row in rows:
-            z, tx, ty = row["zoom"], row["tx"], row["ty"]
-            existing_layers = mvt.read_tile(root, z, tx, ty) or {}
-            seqs = mvt.committed_sequences(existing_layers)
-            updates = []
-            batch_seqs = set()
-            for f in sorted(
-                row["fs"],
-                key=lambda f: (
-                    str(f["tags"]["__type"]),
-                    int(f["tags"]["__id"]),
-                    int(f["tags"]["__version"]),
-                    int(f["tags"]["__minorVersion"] or 0),
-                ),
-            ):
-                if f["sequence"] in seqs:
-                    continue  # idempotent re-delivery
-                batch_seqs.add(int(f["sequence"]))
-                feat = _tile_local_feature(f, int(tx), int(ty))
-                if feat is None:
-                    # bbox overcount, or the element's current geometry
-                    # left this tile (it was fanned here via prevGeom) —
-                    # a DEPARTURE: snapshot drops the element from the
-                    # tile; history/urchn keep the last state it had here
-                    if schema == "snapshot":
-                        tags = dict(f["tags"].asDict())
-                        tags["__visible"] = False
-                        updates.append(
-                            mvt.MvtFeature(
-                                fid=int(tags["__id"]), geom_type=1,
-                                points=[(0, 0)], tags=tags,
-                            )
-                        )
-                    continue
-                updates.append(feat)
-            if not updates:
+    def write(row):
+        z, tx, ty = row["zoom"], row["tx"], row["ty"]
+        existing_layers = mvt.read_tile(root, z, tx, ty) or {}
+        seqs = mvt.committed_sequences(existing_layers)
+        updates = []
+        batch_seqs = set()
+        for f in sorted(
+            row["cells"],
+            key=lambda f: (
+                str(f["tags"]["__type"]),
+                int(f["tags"]["__id"]),
+                int(f["tags"]["__version"]),
+                int(f["tags"]["__minorVersion"] or 0),
+            ),
+        ):
+            if f["sequence"] in seqs:
+                continue  # idempotent re-delivery
+            batch_seqs.add(int(f["sequence"]))
+            tags = f["tags"].asDict()
+            feat = _tile_local_feature(
+                f["px"], f["py"], f["geomType"],
+                # element tags merge UNDER the __system keys (History.scala:103)
+                {**dict(f["el_tags"] or []), **tags}, int(tx), int(ty),
+            )
+            if feat is None:
+                # bbox overcount, or the element's current geometry
+                # left this tile (it was fanned here via prevGeom) —
+                # a DEPARTURE: snapshot drops the element from the
+                # tile; history/urchn keep the last state it had here
+                if schema == "snapshot":
+                    updates.append(mvt.MvtFeature(
+                        fid=int(tags["__id"]), geom_type=mvt._GEOM_POINT,
+                        points=[(0, 0)], tags={**tags, "__visible": False},
+                    ))
                 continue
-            merged = apply_fn(existing_layers.get(layer_name, []), updates)
-            layers = {
+            updates.append(feat)
+        if updates:
+            mvt.put_tile(root, z, tx, ty, {
                 # StrictLayer write order: points, lines, polygons
                 # (area-descending) — GenerateVT.scala:255-256
-                layer_name: mvt.layer_feature_order(merged),
-                mvt.SEQUENCES_LAYER: mvt._sequence_layer(
-                    seqs + sorted(batch_seqs)
+                layer_name: mvt.layer_feature_order(
+                    apply_fn(existing_layers.get(layer_name, []), updates)
                 ),
-            }
-            payload = gzip.compress(mvt.encode_tile(layers, EXTENT))
-            from osmesa_spark.sources.objectstore import join_key, open_store
+                mvt.SEQUENCES_LAYER: mvt._sequence_layer(seqs + sorted(batch_seqs)),
+            })
 
-            store, prefix = open_store(root)
-            store.put(
-                join_key(prefix, mvt._tile_key(z, tx, ty)),
-                payload,
-                content_encoding="gzip",
-            )
-
-    tiles.foreachPartition(write_partition)
-    return tiles.count()
+    return mvt._foreach_rows_counted(tiles, write)
 
 
 def run_streaming_element_tiles(
@@ -552,24 +520,18 @@ def run_streaming_element_tiles(
 # GenerateVT-parity geometry vector tiles (bm/GenerateVT.scala:120-261)
 # ---------------------------------------------------------------------------
 
-def geometry_tile_cover(
-    df: DataFrame,
-    zoom: int,
-    id_col: str = "id",
-    geom_col: str = "geom",
-    geom_type_col: str = "geomType",
-) -> DataFrame:
+def geometry_tile_cover(df: DataFrame, zoom: int) -> DataFrame:
     """(id, geomType, geom) rows → one row per covering (zoom, tx, ty)
     with global pixel arrays — `GenerateVT.keyToLayout`'s
     keysForGeometry fan-out as pure Column bbox math (the per-tile exact
     intersection happens in the encode kernel, exactly like
     `timedIntersect` runs per SpatialKey in the reference)."""
-    base = df.where(F.size(geom_col) >= 1)
-    px, py = _pixel_arrays(geom_col, zoom)
+    base = df.where(F.size("geom") >= 1)
+    px, py = _pixel_arrays("geom", zoom)
     ext = F.lit(EXTENT).cast("bigint")
     g = base.select(
-        F.col(id_col).alias("id"),
-        F.col(geom_type_col).alias("geomType"),
+        "id",
+        "geomType",
         px.alias("px"),
         py.alias("py"),
         (F.array_min(px) / ext).cast("bigint").alias("txmin"),
@@ -593,92 +555,31 @@ def geometry_tile_cover(
 
 
 def generate_geometry_vt(
-    df: DataFrame,
-    zoom: int,
-    layer_name: str = "features",
-    id_col: str = "id",
-    geom_col: str = "geom",
-    geom_type_col: str = "geomType",
-    gzip_bytes: bool = True,
+    df: DataFrame, zoom: int, layer_name: str = "features"
 ) -> DataFrame:
-    """Encode lon/lat geometries (Point | LineString | Polygon) into one
-    MVT per covering tile at `zoom` — the GenerateVT.makeVectorTiles path
-    (bm/GenerateVT.scala:120-261) on the DataFrame plan: bbox fan-out,
-    per-tile clip (the reference's timedIntersect), StrictLayer feature
-    order with polygons area-descending (GenerateVT.scala:255-256), one
-    Arrow-batched codec kernel. Returns (zoom, tx, ty, data binary) —
-    feed `save_tiles_in_zips` / `save_pyramid_in_zips`."""
-    import io as _io
-
-    from pyspark.sql import types as T
-
-    from osmesa_spark.session import ship_package
-
-    ship_package(df.sparkSession)
-    keyed = geometry_tile_cover(
-        df, zoom, id_col=id_col, geom_col=geom_col,
-        geom_type_col=geom_type_col,
+    """Encode lon/lat geometries (id, geomType Point | LineString |
+    Polygon, geom) into one MVT per covering tile at `zoom` — the
+    GenerateVT.makeVectorTiles path (bm/GenerateVT.scala:120-261) on the
+    DataFrame plan: bbox fan-out, then the shared grouping chain and
+    encode kernel of `sinks.mvt` with a per-tile clip (the reference's
+    timedIntersect) and StrictLayer feature order, polygons
+    area-descending (GenerateVT.scala:255-256). Tiles whose clips all
+    come back empty are dropped. Returns (zoom, tx, ty, data binary) of
+    gzipped payloads — feed `mvt.save_pyramid_in_zips`."""
+    grouped = mvt._group_cells(
+        geometry_tile_cover(df, zoom),
+        ["zoom", "tx", "ty"],
+        F.struct("id", "geomType", "px", "py"),
     )
-    grouped = keyed.select(
-        "zoom", "tx", "ty",
-        F.struct("id", "geomType", "px", "py").alias("f"),
-    ).groupBy("zoom", "tx", "ty").agg(F.collect_list("f").alias("fs"))
-    schema = T.StructType(
-        [
-            T.StructField("zoom", T.IntegerType()),
-            T.StructField("tx", T.LongType()),
-            T.StructField("ty", T.LongType()),
-            T.StructField("data", T.BinaryType()),
+
+    def layers_of(row):
+        tx, ty = int(row["tx"]), int(row["ty"])
+        feats = [
+            feat for f in row["cells"]
+            if (feat := _tile_local_feature(
+                f["px"], f["py"], f["geomType"], {"__id": int(f["id"])}, tx, ty
+            )) is not None
         ]
-    )
+        return {layer_name: mvt.layer_feature_order(feats)} if feats else None
 
-    def encode_batch(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for _, row in pdf.iterrows():
-                tx, ty = int(row["tx"]), int(row["ty"])
-                feats = []
-                for f in row["fs"]:
-                    feat = _tile_local_feature(
-                        {
-                            "px": f["px"],
-                            "py": f["py"],
-                            "geomType": f["geomType"],
-                            "tags": _Tags({"__id": int(f["id"])}),
-                        },
-                        tx,
-                        ty,
-                    )
-                    if feat is not None:
-                        feats.append(feat)
-                if not feats:
-                    continue
-                buf = mvt.encode_tile(
-                    {layer_name: mvt.layer_feature_order(feats)}
-                )
-                if gzip_bytes:
-                    bio = _io.BytesIO()
-                    with gzip.GzipFile(fileobj=bio, mode="wb", mtime=0) as gz:
-                        gz.write(buf)
-                    buf = bio.getvalue()
-                out.append(
-                    {"zoom": int(row["zoom"]), "tx": tx, "ty": ty, "data": buf}
-                )
-            yield pd.DataFrame(
-                out, columns=["zoom", "tx", "ty", "data"]
-            )
-
-    return grouped.mapInPandas(encode_batch, schema=schema)
-
-
-class _Tags:
-    """Row-like shim so `_tile_local_feature` (written for grouped Row
-    structs with .asDict()) also accepts plain dict tags."""
-
-    def __init__(self, d: dict):
-        self._d = d
-
-    def asDict(self) -> dict:
-        return dict(self._d)
+    return mvt._encode_groups(grouped, layers_of)

@@ -23,6 +23,7 @@ reference runs is documented in UPSERT_SQL below for parity evidence.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import uuid
@@ -57,10 +58,19 @@ class ParquetUpsertTable:
 
     def read(self, spark: SparkSession) -> DataFrame | None:
         if not os.path.exists(self.data_dir):
-            return None
+            # a crash between _commit's two renames leaves `data` absent
+            # and the previous table whole under `_old_*`: roll it back
+            # (the newest one; an older one is a leftover of a crash
+            # after the second rename)
+            olds = glob.glob(os.path.join(self.path, "_old_*"))
+            if not olds:
+                return None
+            os.rename(max(olds, key=os.path.getmtime), self.data_dir)
         return spark.read.parquet(self.data_dir)
 
     def _commit(self, df: DataFrame) -> None:
+        """Write `df` beside the table, then swap it in by two renames
+        (`read` rolls a swap that a crash cut in half back)."""
         tmp = os.path.join(self.path, f"_tmp_{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(tmp)
         old = self.data_dir
@@ -175,8 +185,13 @@ class CheckpointTable:
         import json
 
         os.makedirs(self.path, exist_ok=True)
-        with open(os.path.join(self.path, f"{proc_name}.json"), "w") as f:
+        # temp file + os.replace: a reader (or a crash) never sees a torn
+        # checkpoint; the temp name does not end in .json, so readers
+        # listing checkpoints skip it
+        path = os.path.join(self.path, f"{proc_name}.json")
+        with open(path + ".tmp", "w") as f:
             json.dump({"proc_name": proc_name, "sequence": sequence}, f)
+        os.replace(path + ".tmp", path)
 
     def load(self, proc_name: str) -> int | None:
         import json

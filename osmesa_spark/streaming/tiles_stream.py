@@ -205,10 +205,6 @@ def _grouped_tile_sink(
             cells=cells,
             key_col=key_col,
             facet_col=facet_col,
-            # no per-batch tile count: foreachBatch never reads it, and a
-            # fresh accumulator per micro-batch would accumulate forever
-            # in the driver's registry on a long-running stream
-            count_tiles=False,
         )
 
     return sink

@@ -381,6 +381,28 @@ def test_streaming_lag_report_matches_reference_arithmetic(tmp_path):
     assert all(r["now_sequence"] == 5_000_000 for r in got.values())
 
 
+def test_checkpoint_save_cut_by_a_crash_keeps_the_old_row(tmp_path, monkeypatch):
+    """A checkpoint write that dies halfway must leave the previous row
+    readable (load and the lag report), never a torn file."""
+    from osmesa_spark.sinks.upsert import CheckpointTable
+
+    ck = CheckpointTable(str(tmp_path / "cks"))
+    ck.save("TileUpdater", 4_999_980)
+
+    def torn_dump(obj, f, *a, **kw):
+        f.write('{"proc_name": "TileUpdater", "sequ')
+        raise OSError("crash mid-write")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        ck.save("TileUpdater", 4_999_990)
+    monkeypatch.undo()
+    assert ck.load("TileUpdater") == 4_999_980
+    now_epoch = 5_000_000 * 60 + 1347432900
+    (row,) = A.streaming_lag_report(str(tmp_path / "cks"), now_epoch)
+    assert (row["proc_name"], row["checkpoint"]) == ("TileUpdater", 4_999_980)
+
+
 def test_write_training_shards_roundtrip_and_manifest(spark, tmp_path):
     """One file per shard; manifest recomputable from what a loader reads
     back (order-independent checksum); rerun produces identical manifest."""

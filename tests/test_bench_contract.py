@@ -59,3 +59,95 @@ def test_headline_names_resolve_in_registry():
     assert not missing, f"HEADLINE names not in registry: {missing}"
     dupes = {n for n in bench.HEADLINE if bench.HEADLINE.count(n) > 1}
     assert not dupes, f"duplicate HEADLINE entries: {dupes}"
+
+
+# ---------------------------------------------------------------------------
+# the traced benchmark reaches into the package by name: keep those names
+# ---------------------------------------------------------------------------
+
+def _own_nodes(scope):
+    """The nodes of `scope`, not descending into nested functions."""
+    import ast
+
+    stack = list(ast.iter_child_nodes(scope))
+    while stack:
+        node = stack.pop()
+        yield node
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            stack.extend(ast.iter_child_nodes(node))
+
+
+def _resolve(module: str, attrs: list[str]):
+    """Import `module`, then read `attrs` off it one by one (a missing
+    attribute may still be a submodule: `from pkg import mod`)."""
+    import importlib
+
+    obj = importlib.import_module(module)
+    for i, a in enumerate(attrs):
+        if not hasattr(obj, a):
+            importlib.import_module(".".join([module, *attrs[: i + 1]]))
+        obj = getattr(obj, a)
+    return obj
+
+
+def test_traced_benchmark_names_resolve():
+    """Every `_patch(owner, "name", …)` target of the benchmark resolves,
+    and so does every name it imports from `osmesa_spark` and every
+    attribute it reads off one: a rename in the package cannot silently
+    break the traced run. The names come from the benchmark's source
+    (`perfbench/workloads.py`, `bench.py`), parsed, never imported."""
+    import ast
+    import importlib
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    missing, checked = [], {"_patch": 0, "attr": 0}
+
+    def visit(path, scope, names):
+        # name -> (module to load, module to start from, attributes): a
+        # function sees its own imports and those of every enclosing scope
+        names = dict(names)
+        for node in _own_nodes(scope):
+            if isinstance(node, ast.Import):
+                for a in node.names:  # `import a.b` binds `a`, `a.b` loaded
+                    top = a.name if a.asname else a.name.split(".")[0]
+                    names[a.asname or top] = (a.name, top, [])
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                for a in node.names:
+                    names[a.asname or a.name] = (node.module, node.module, [a.name])
+
+        def get(name, attrs=()):
+            load, base, chain = names[name]
+            importlib.import_module(load)
+            return _resolve(base, [*chain, *attrs])
+
+        for node in _own_nodes(scope):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(path, node, names)
+            elif (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+                    and node.func.id == "_patch"):
+                owner, chain = node.args[0], []
+                while isinstance(owner, ast.Attribute):
+                    chain.insert(0, owner.attr)
+                    owner = owner.value
+                checked["_patch"] += 1
+                if not hasattr(get(owner.id, chain), node.args[1].value):
+                    missing.append(f"{path.name}:{node.lineno} _patch {node.args[1].value}")
+            elif (isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
+                    and names.get(node.value.id, ("",))[0].startswith("osmesa_spark")):
+                checked["attr"] += 1
+                try:
+                    get(node.value.id, [node.attr])
+                except (ImportError, AttributeError):
+                    missing.append(f"{path.name}:{node.lineno} {node.value.id}.{node.attr}")
+        for name, (module, *_) in names.items():
+            if module.startswith("osmesa_spark"):
+                try:
+                    get(name)
+                except (ImportError, AttributeError):
+                    missing.append(f"{path.name}: import {name} from {module}")
+
+    for path in (root / "perfbench" / "workloads.py", root / "bench.py"):
+        visit(path, ast.parse(path.read_text(), str(path)), {})
+    assert checked["_patch"] and checked["attr"], checked
+    assert not missing, sorted(set(missing))

@@ -63,8 +63,8 @@ def test_pyramid_write_and_read_back(spark, pyramid_df, tmp_path):
     n_points = pyramid_df.where(F.col("zoom") == 6).agg(
         F.sum("value")
     ).first()[0]
-    n_tiles = mvt.write_tile_pyramid(
-        pyramid_df, root, cells=16, sequence=100
+    n_tiles = mvt.write_tile_pyramid_grouped(
+        pyramid_df.withColumn("sequence", F.lit(100)), root, cells=16
     )
     files = glob.glob(f"{root}/**/*.mvt.gz", recursive=True)
     assert len(files) == n_tiles > 0
@@ -93,13 +93,13 @@ def test_upsert_idempotent_and_merging(spark, pyramid_df, tmp_path):
             tot += sum(f.tags["density"] for f in layers["density"])
         return tot
 
-    mvt.write_tile_pyramid(z0, root, cells=16, sequence=1)
+    mvt.write_tile_pyramid_grouped(z0.withColumn("sequence", F.lit(1)), root, cells=16)
     assert z0_total() == base_total
     # same sequence re-applied -> skipped (idempotent)
-    mvt.write_tile_pyramid(z0, root, cells=16, sequence=1)
+    mvt.write_tile_pyramid_grouped(z0.withColumn("sequence", F.lit(1)), root, cells=16)
     assert z0_total() == base_total
     # new sequence -> merged by __id, densities sum
-    mvt.write_tile_pyramid(z0, root, cells=16, sequence=2)
+    mvt.write_tile_pyramid_grouped(z0.withColumn("sequence", F.lit(2)), root, cells=16)
     assert z0_total() == 2 * base_total
     some = glob.glob(f"{root}/0/*/*.mvt.gz")[0]
     layers = mvt.decode_tile(gzip.decompress(open(some, "rb").read()))
@@ -184,7 +184,7 @@ def test_save_in_zips_z2_order_and_readback(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "tx int, ty int, data binary")
     root = str(tmp_path / "zips")
-    n = mvt.save_tiles_in_zips(df, root, zoom=10)
+    n = mvt.save_pyramid_in_zips(df.withColumn("zoom", F.lit(10)), root)
     # ancestors: tx>>2 in {2,3}, ty>>2 in {1,2} → 4 zips at zoom 8
     assert n == 4
     import os
@@ -212,5 +212,5 @@ def test_save_in_zips_z2_order_and_readback(spark, tmp_path):
     assert mvt.read_zip_tile(root, 10, 99, 99) is None
     # idempotent byte-stable re-run
     before = open(zpath, "rb").read()
-    mvt.save_tiles_in_zips(df, root, zoom=10)
+    mvt.save_pyramid_in_zips(df.withColumn("zoom", F.lit(10)), root)
     assert open(zpath, "rb").read() == before

@@ -79,12 +79,12 @@ def test_tile_upsert_over_memstore():
     MemStore.wipe("tiles")
     root = "mem://tiles/pyramid"
     assert mvt.read_tile(root, 3, 1, 2) is None
-    r1 = mvt.upsert_tile(root, 3, 1, 2, [_feat(7, 5)], "density", sequence=100)
+    r1 = mvt.upsert_tile_multi(root, 3, 1, 2, {100: [_feat(7, 5)]}, "density")
     assert r1 == "written"
-    r2 = mvt.upsert_tile(root, 3, 1, 2, [_feat(7, 3)], "density", sequence=101)
+    r2 = mvt.upsert_tile_multi(root, 3, 1, 2, {101: [_feat(7, 3)]}, "density")
     assert r2 == "updated"
     # re-delivery of an already-committed sequence is a no-op
-    r3 = mvt.upsert_tile(root, 3, 1, 2, [_feat(7, 99)], "density", sequence=100)
+    r3 = mvt.upsert_tile_multi(root, 3, 1, 2, {100: [_feat(7, 99)]}, "density")
     assert r3 == "skipped"
     layers = mvt.read_tile(root, 3, 1, 2)
     (f,) = layers["density"]
@@ -96,9 +96,11 @@ def test_tile_upsert_over_memstore():
 
 
 def test_tile_pyramid_file_uri_root(spark, tmp_path):
-    """write_tile_pyramid with a file:// URI root — executor-side writes
+    """write_tile_pyramid_grouped with a file:// URI root — executor-side writes
     scheme-routed through the store seam, same layout as bare paths."""
     import os
+
+    from pyspark.sql import functions as F
 
     from osmesa_spark.operators import vectorgrid as VG
 
@@ -109,7 +111,9 @@ def test_tile_pyramid_file_uri_root(spark, tmp_path):
     base = VG.tile_points(pts, zoom=4, cells=16)
     vec = VG.vectorize(base, cells=16)
     root_uri = f"file://{tmp_path}/tiles"
-    n = mvt.write_tile_pyramid(vec, root_uri, cells=16, sequence=1)
+    n = mvt.write_tile_pyramid_grouped(
+        vec.withColumn("sequence", F.lit(1)), root_uri, cells=16
+    )
     assert n > 0
     written = [
         p for p in (tmp_path / "tiles").rglob("*.mvt.gz")

@@ -577,6 +577,41 @@ def test_users_table_latest_name_wins(spark, tmp_path):
     assert rows == {1: "alice_renamed", 2: "bob", 3: "carol"}
 
 
+def test_table_swap_cut_by_a_crash_rolls_back(spark, tmp_path, monkeypatch):
+    """A crash between the commit's two renames (`data` → `_old_*`,
+    `_tmp_*` → `data`) must not lose the table: the next read rolls the
+    swap back, and the next upsert merges into the old rows instead of
+    replacing the table with one batch."""
+    import os
+
+    from osmesa_spark.sinks.upsert import UsersTable
+
+    t = UsersTable(str(tmp_path / "users"))
+    t.upsert_users(
+        spark.createDataFrame([(1, "alice"), (2, "bob")], "id long, name string")
+    )
+    real_rename, calls = os.rename, []
+
+    def crash_on_second_rename(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("crash between the swap's renames")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_second_rename)
+    with pytest.raises(OSError):
+        t.upsert_users(
+            spark.createDataFrame([(3, "carol")], "id long, name string")
+        )
+    monkeypatch.undo()
+    assert not os.path.exists(t.data_dir)  # the crash left the swap cut
+    rows = {r["id"]: r["name"] for r in t.read(spark).collect()}
+    assert rows == {1: "alice", 2: "bob"}
+    t.upsert_users(spark.createDataFrame([(3, "carol")], "id long, name string"))
+    rows = {r["id"]: r["name"] for r in t.read(spark).collect()}
+    assert rows == {1: "alice", 2: "bob", 3: "carol"}
+
+
 def test_hashtag_dictionary_stable_ids(spark, tmp_path):
     """S8 insert-returning dictionary: ids never change once assigned,
     new hashtags extend above the current max, lookups are lowercase."""

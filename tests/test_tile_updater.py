@@ -108,6 +108,32 @@ def test_update_tiles_snapshot_end_to_end(spark, diffs, tmp_path):
     assert flat2 == flat
 
 
+def test_update_tiles_counts_in_the_write_job(spark, diffs, tmp_path):
+    """The returned tile count is the write job's own result: no second
+    action re-plans and re-shuffles the per-zoom fan-out just to count."""
+    from tests.conftest import jobs_launched
+
+    with jobs_launched(spark) as jobs:
+        n = U.update_tiles(
+            diffs, str(tmp_path / "tiles"), schema="snapshot", zoom=[5, 6]
+        )
+    assert n > 0
+    assert len(jobs) <= 2, sorted(jobs)
+
+
+def test_upserted_tiles_are_byte_stable(spark, diffs, tmp_path):
+    """Tile puts carry no wall-clock time: the gzip header's mtime field
+    (bytes 4:8) is zero, so re-writing identical content rewrites
+    identical bytes."""
+    root = str(tmp_path / "tiles")
+    U.update_tiles(diffs, root, schema="snapshot", zoom=6)
+    mvt.upsert_tile_multi(root, 3, 1, 2, {7: [feat(1, 1)]}, "elements")
+    paths = glob.glob(f"{root}/**/*.mvt.gz", recursive=True)
+    assert len(paths) > 1
+    for p in paths:
+        assert open(p, "rb").read()[4:8] == b"\0\0\0\0", p
+
+
 def test_update_tiles_history_accumulates(spark, diffs, tmp_path):
     root = str(tmp_path / "tiles")
     U.update_tiles(diffs, root, schema="history", zoom=6)
