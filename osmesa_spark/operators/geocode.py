@@ -41,6 +41,24 @@ except Exception:  # pragma: no cover
 BBoxCountries = dict[str, tuple[float, float, float, float]]
 
 
+def representative_point(geom_col: str) -> tuple[Column, Column]:
+    """(lon, lat) of a geometry's representative point: the vertex
+    centroid (a point's one vertex) — what every geocode path looks up."""
+    n = F.greatest(F.size(geom_col), F.lit(1)).cast("double")
+
+    def mean(field: str) -> Column:
+        return (
+            F.aggregate(
+                F.transform(geom_col, lambda v: v.getField(field)),
+                F.lit(0.0),
+                lambda acc, x: acc + x,
+            )
+            / n
+        )
+
+    return mean("lon"), mean("lat")
+
+
 def _country_array(countries: BBoxCountries) -> Column:
     return F.array(
         *[
@@ -439,23 +457,7 @@ def geocode_grid(
     index, fp = _grid_index(spark, countries, nx, ny)
     cells_df, cands_df = grid_index_frames(spark, countries, index, fp)
 
-    n = F.greatest(F.size(geom_col), F.lit(1)).cast("double")
-    cx = (
-        F.aggregate(
-            F.transform(geom_col, lambda v: v.getField("lon")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / n
-    )
-    cy = (
-        F.aggregate(
-            F.transform(geom_col, lambda v: v.getField("lat")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / n
-    )
+    cx, cy = representative_point(geom_col)
     empty_s = F.array().cast("array<string>")
     lon, lat = F.col("__gx"), F.col("__gy")
     hits = F.filter(
@@ -544,24 +546,9 @@ def geocode(
     """Attach country codes using the feature's first vertex (points) /
     vertex centroid (lines, rings) — the reference geocodes representative
     points too (Countries.scala lookup by coordinate)."""
-    n = F.greatest(F.size(geom_col), F.lit(1)).cast("double")
-    cx = (
-        F.aggregate(
-            F.transform(geom_col, lambda v: v.getField("lon")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / n
+    return features.withColumn(
+        out_col, lookup_codes(*representative_point(geom_col), countries)
     )
-    cy = (
-        F.aggregate(
-            F.transform(geom_col, lambda v: v.getField("lat")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / n
-    )
-    return features.withColumn(out_col, lookup_codes(cx, cy, countries))
 
 
 def geocode_polygons(
@@ -572,24 +559,36 @@ def geocode_polygons(
 ) -> DataFrame:
     """Polygon-exact twin of `geocode`: representative point (first vertex /
     vertex centroid) against true country rings via the Column ray-cast."""
-    n = F.greatest(F.size(geom_col), F.lit(1)).cast("double")
-    cx = (
-        F.aggregate(
-            F.transform(geom_col, lambda v: v.getField("lon")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / n
+    return features.withColumn(
+        out_col,
+        lookup_codes_polygon(*representative_point(geom_col), countries),
     )
-    cy = (
-        F.aggregate(
-            F.transform(geom_col, lambda v: v.getField("lat")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+
+
+def is_polygon_countries(countries: dict) -> bool:
+    """Polygon form: values are vertex lists [(lon, lat), ...]; bbox form:
+    4-float tuples."""
+    v = next(iter(countries.values()), None)
+    return bool(v) and isinstance(v[0], (list, tuple))
+
+
+def geocode_countries(
+    features: DataFrame, countries: dict | None
+) -> DataFrame:
+    """`countries` for the stats pipelines, batch and streaming: bbox
+    rectangles (code → (x0, y0, x1, y1)) go through `geocode`; TRUE
+    polygon rings (code → [(lon, lat), ...], concave-safe ray-cast —
+    Countries.scala parity) through `geocode_polygons_auto`, which picks
+    the literal or the grid plan by complexity (identical results; the
+    grid's stream-static broadcast join is supported on streams too);
+    None attaches an empty array."""
+    if countries is None:
+        return features.withColumn(
+            "countries", F.array().cast("array<string>")
         )
-        / n
-    )
-    return features.withColumn(out_col, lookup_codes_polygon(cx, cy, countries))
+    if is_polygon_countries(countries):
+        return geocode_polygons_auto(features, countries)
+    return geocode(features, countries)
 
 
 # ---------------------------------------------------------------------------

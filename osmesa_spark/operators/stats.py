@@ -32,7 +32,7 @@ from osmesa_spark.functions.maps import map_entry, map_sum_agg, simplify_counts
 from osmesa_spark.functions.text import changeset_hashtags
 from osmesa_spark.operators import geometry as G
 from osmesa_spark.operators import preprocess as P
-from osmesa_spark.operators.geocode import BBoxCountries, geocode
+from osmesa_spark.operators.geocode import BBoxCountries, geocode_countries
 from osmesa_spark.util import column_memo
 
 # (name, predicate-factory) families for DefaultCounts
@@ -113,42 +113,18 @@ def default_measurements(tags_col: str = "tags") -> F.Column:
     )
 
 
-def _is_polygon_countries(countries: dict) -> bool:
-    """Polygon form: values are vertex lists [(lon, lat), ...]; bbox form:
-    4-float tuples."""
-    v = next(iter(countries.values()), None)
-    return bool(v) and isinstance(v[0], (list, tuple))
-
-
 def build_features(
     history: DataFrame, countries: dict | None = None
 ) -> DataFrame:
-    """history → unified point/way features with deltas (and countries).
-    `countries` takes either bbox rectangles (code → (x0, y0, x1, y1)) or
-    TRUE polygon rings (code → [(lon, lat), ...], concave-safe ray-cast —
-    Countries.scala parity)."""
-    from osmesa_spark.operators.geocode import geocode_polygons_auto
-
+    """history → unified point/way features with deltas (and countries,
+    see `geocode.geocode_countries`)."""
     nodes = P.preprocess_nodes(history)
     ways = P.preprocess_ways(history)
     points = G.construct_point_geometries(nodes)
     lines = G.reconstruct_way_geometries(ways, nodes)
     feats = points.unionByName(lines)
     feats = G.with_prev_geom(feats)
-    feats = G.with_deltas(feats)
-    if countries is not None:
-        # polygon countries dispatch literal-vs-grid by complexity (the
-        # broadcast grid index is the STRtree-equivalent scale path;
-        # identical results — see tests/test_geocode.py equivalence tests)
-        coder = (
-            geocode_polygons_auto
-            if _is_polygon_countries(countries)
-            else geocode
-        )
-        feats = coder(feats, countries)
-    else:
-        feats = feats.withColumn("countries", F.array().cast("array<string>"))
-    return feats
+    return geocode_countries(G.with_deltas(feats), countries)
 
 
 def changeset_stats(

@@ -17,11 +17,16 @@ connection (`sqlite3.Connection.create_function`). Map/array columns are
 carried as canonical JSON text. Swapping the connection factory for
 psycopg2/JDBC changes nothing above the DB-API seam.
 
-Scale shape: the driver never sees the data — `foreachPartition` opens one
-connection per partition (the reference opens one per ForeachWriter
-partition too), writes chunks of `batch_size`, and the target DB serializes
-writers. Contention on one SQLite file is the local stand-in for Postgres
-row locks; the retry loop is the same code path either way.
+Scale shape: the driver never sees the data — each partition of the
+write (`_write_rows`, a `mapInArrow` Dataset action) opens one connection
+(the reference opens one per ForeachWriter partition too), writes chunks
+of `BATCH_SIZE`, and the target DB serializes writers. Contention on one
+SQLite file is the local stand-in for Postgres row locks; the retry loop
+is the same code path either way.
+
+The streaming stats chain is `stats_stream.start_stats_query` with a
+`JdbcStatsSink` as its table (`run_streaming_stats_to_jdbc`): the same
+foreachBatch body as the parquet table's.
 """
 
 from __future__ import annotations
@@ -387,73 +392,70 @@ def _execute_chunked(db_path: str, sql: str, rows: list[tuple]) -> None:
         con.close()
 
 
+def _write_rows(df: DataFrame, db_path: str, sql: str, params) -> int:
+    """Execute `sql` once per row of `df` (`params(row)` → its bind
+    values), one connection per partition, chunked with retry. Returns the
+    rows written. The write is a Dataset action (`mapInArrow` + a sum),
+    not `foreachPartition`: PySpark runs that through `.rdd`, which leaves
+    an Observation on the plan waiting forever."""
+    from osmesa_spark.session import ship_package
+
+    ship_package(df.sparkSession)
+
+    def write(batches):
+        import pyarrow as pa
+
+        rows = [params(r) for b in batches for r in b.to_pylist()]
+        if rows:
+            _execute_chunked(db_path, sql, rows)
+        yield pa.RecordBatch.from_pydict({"n": [len(rows)]})
+
+    return df.mapInArrow(write, "n bigint").agg(F.sum("n")).first()[0] or 0
+
+
 class JdbcStatsSink:
     """Streaming-compatible changeset-stats upsert over a DB-API target.
 
     `upsert_stats(batch)` takes the same frame shape as
     `ParquetUpsertTable.upsert_stats` — (id, counts map, measurements map,
-    total_edits, augmented_diffs array) — so the two sinks are drop-in
-    interchangeable behind `run_streaming_stats_to_upsert`-style runners.
+    total_edits, augmented_diffs array), pre-merged by the same
+    `premerge_stats` — and `save_checkpoint` has `CheckpointTable.save`'s
+    signature, so the two are drop-in interchangeable behind
+    `stats_stream.start_stats_query`.
     """
 
     def __init__(self, db_path: str):
         self.db_path = db_path
         ensure_schema(db_path)
 
-    def upsert_stats(self, batch: DataFrame) -> None:
-        from osmesa_spark.functions.maps import sum_map_values
+    def upsert_stats(self, batch: DataFrame) -> int:
+        """Upsert one row per `premerge_stats` (id, sequence-set) part, so
+        the statement's guard skips a replayed sequence's row alone while
+        a new sequence's row for the same id still applies. Returns the
+        rows sent. Runs exactly one Spark action over `batch` (see
+        `_write_rows`), so an Observation on it completes."""
+        from osmesa_spark.sinks.upsert import premerge_stats
 
-        # Pre-merge per (id, sequence-set), NOT per id: collapsing all of an
-        # id's sequences into one row would let the overlap guard discard a
-        # NEW sequence's edits whenever a replayed sequence rides the same
-        # batch (at-least-once redelivery with shifted foreachBatch
-        # boundaries). Kept per-sequence, the replayed row is skipped alone
-        # and the new row still applies — the PG writer's row-by-row
-        # same-(id, sequence) guard semantics. Same-(id, sequence) duplicates
-        # within the batch still merge to one row (guard parity).
-        merged = batch.groupBy(
-            "id", F.array_sort("augmented_diffs").alias("augmented_diffs")
-        ).agg(
-            sum_map_values(F.collect_list("counts"), "bigint").alias("counts"),
-            sum_map_values(F.collect_list("measurements"), "double").alias(
-                "measurements"
+        return _write_rows(
+            premerge_stats(batch),
+            self.db_path,
+            STATS_UPSERT_SQL,
+            lambda row: (
+                row["id"],
+                json.dumps(dict(row["measurements"] or {}), sort_keys=True),
+                json.dumps(dict(row["counts"] or {}), sort_keys=True),
+                row["total_edits"],
+                json.dumps(sorted(row["augmented_diffs"] or [])),
             ),
-            F.sum("total_edits").alias("total_edits"),
         )
-        db_path = self.db_path
 
-        def write_partition(rows) -> None:
-            payload = [
-                (
-                    row["id"],
-                    json.dumps(
-                        dict(row["measurements"] or {}), sort_keys=True
-                    ),
-                    json.dumps(dict(row["counts"] or {}), sort_keys=True),
-                    row["total_edits"],
-                    json.dumps(sorted(row["augmented_diffs"] or [])),
-                )
-                for row in rows
-            ]
-            if payload:
-                _execute_chunked(db_path, STATS_UPSERT_SQL, payload)
-
-        merged.foreachPartition(write_partition)
-
-    def upsert_users(self, batch: DataFrame) -> None:
-        merged = (
-            batch.select("id", "name")
-            .groupBy("id")
-            .agg(F.max("name").alias("name"))
+    def upsert_users(self, batch: DataFrame) -> int:
+        return _write_rows(
+            batch.groupBy("id").agg(F.max("name").alias("name")),
+            self.db_path,
+            USERS_UPSERT_SQL,
+            lambda row: (row["id"], row["name"]),
         )
-        db_path = self.db_path
-
-        def write_partition(rows) -> None:
-            payload = [(row["id"], row["name"]) for row in rows]
-            if payload:
-                _execute_chunked(db_path, USERS_UPSERT_SQL, payload)
-
-        merged.foreachPartition(write_partition)
 
     def upsert_hashtags(self, batch: DataFrame) -> dict[str, int]:
         """Insert new hashtags (existing keep their serial id), return the
@@ -566,28 +568,17 @@ def run_streaming_stats_to_jdbc(
     proc_name: str = "augmented-diff-stats",
     countries=None,
 ):
-    """writeStream.foreachBatch → rollup + JDBC upsert + checkpoint row —
-    the reference's actual sink chain (ChangesetStatsUpdater → ForeachWriter
-    → Postgres). Twin of `run_streaming_stats_to_upsert` with the parquet
-    table swapped for the DB; the rollup runs statelessly on the bounded
-    micro-batch, and a replayed batch is a no-op under the DB's guard."""
-    from osmesa_spark.streaming.stats_stream import stats_upsert_rows
+    """The reference's actual sink chain (ChangesetStatsUpdater →
+    ForeachWriter → Postgres): the one stats query
+    (`stats_stream.start_stats_query`) with a `JdbcStatsSink` as its table
+    and the DB's checkpoints table as its checkpoint row. The rollup runs
+    statelessly on the bounded micro-batch, the batch's max sequence rides
+    the upsert's one action, and a replayed batch is a no-op under the
+    DB's guard. Returns the query."""
+    from osmesa_spark.streaming.stats_stream import start_stats_query
 
     sink = JdbcStatsSink(db_path)
-
-    def write_batch(batch: DataFrame, epoch_id: int) -> None:
-        sink.upsert_stats(stats_upsert_rows(batch, countries))
-        # max(sequence) is a separate read: foreachPartition's write does
-        # not complete an Observation. Checkpointing past it is safe: rows
-        # carry single-sequence augmented_diffs, so a redelivered sequence
-        # is skipped row-by-row by the guard while unseen ones still apply.
-        max_seq = batch.agg(F.max("sequence")).first()[0]
-        if max_seq is not None:
-            sink.save_checkpoint(proc_name, int(max_seq))
-
-    return (
-        diffs_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(write_batch)
-        .start()
+    return start_stats_query(
+        diffs_stream, checkpoint_dir, sink, sink.save_checkpoint,
+        proc_name, countries, None,
     )

@@ -31,7 +31,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from osmesa_spark.functions.maps import merge_counts
+from osmesa_spark.functions.maps import sum_map_values
 
 # The reference's upsert statement (parity documentation; executed verbatim
 # when this sink is pointed at JDBC instead of parquet).
@@ -47,6 +47,10 @@ SET measurements = merge_measurements(c.measurements, EXCLUDED.measurements),
     updated_at   = now()
 WHERE NOT c.augmented_diffs && EXCLUDED.augmented_diffs
 """.strip()
+
+
+# the stats frame both stats tables upsert (changesets-table shape)
+STATS_COLS = ["id", "counts", "measurements", "total_edits", "augmented_diffs"]
 
 
 class ParquetUpsertTable:
@@ -70,109 +74,106 @@ class ParquetUpsertTable:
 
     def _commit(self, df: DataFrame) -> None:
         """Write `df` beside the table, then swap it in by two renames
-        (`read` rolls a swap that a crash cut in half back)."""
+        (`read` rolls a swap that a crash cut in half back). A successful
+        swap sweeps every staging dir, its own `_old_*` and any `_tmp_*` /
+        `_old_*` a crash left behind (one writer per table)."""
         tmp = os.path.join(self.path, f"_tmp_{uuid.uuid4().hex}")
         df.write.mode("overwrite").parquet(tmp)
-        old = self.data_dir
-        bak = os.path.join(self.path, f"_old_{uuid.uuid4().hex}")
-        if os.path.exists(old):
-            os.rename(old, bak)
-        os.rename(tmp, old)
-        if os.path.exists(bak):
-            shutil.rmtree(bak)
+        if os.path.exists(self.data_dir):
+            os.rename(
+                self.data_dir,
+                os.path.join(self.path, f"_old_{uuid.uuid4().hex}"),
+            )
+        os.rename(tmp, self.data_dir)
+        for pattern in ("_tmp_*", "_old_*"):
+            for left in glob.glob(os.path.join(self.path, pattern)):
+                shutil.rmtree(left, ignore_errors=True)
 
     def upsert_stats(self, batch: DataFrame) -> None:
         """Merge a stats micro-batch: sum maps, add total_edits, union
         augmented_diffs — skipping batch rows whose sequences were already
         applied (idempotence guard).
 
-        CONTRACT (r10 ADVICE): this method always runs exactly ONE Spark
-        action over `batch`'s plan (the tmp-dir parquet write in _commit,
-        on both the fresh-table and merge branches) — callers such as
-        stats_stream's foreachBatch sink attach an Observation to the
-        batch and block on Observation.get right after this returns, which
-        only terminates because the write executed the observed plan. Any
-        future backend that can return without running an action over
-        `batch` must keep an equivalent action (or the caller must fall
-        back to an explicit agg)."""
-        spark = batch.sparkSession
-        existing = self.read(spark)
-        cols = [
-            "id",
-            "counts",
-            "measurements",
-            "total_edits",
-            "augmented_diffs",
-        ]
-        batch = batch.select(*cols)
-        # one row per id within the batch: the PG sink upserts row-by-row so
-        # a second same-(id, sequence) row would trip its own guard — merge
-        # intra-batch contributions first (strictly more faithful than
-        # dropping them; see ChangesetStatsForeachWriter.scala:39-73)
-        from osmesa_spark.functions.maps import sum_map_values
+        The guard runs per `premerge_stats` row, before the rows merge per
+        id, as the JDBC sink's row-by-row statement does: a batch that
+        re-delivers an applied sequence and brings a new one for the same
+        changeset skips the first and applies the second. Stored and batch
+        rows meet in one group-by-id (one shuffle); the sequences stored
+        for an id decide which batch parts apply.
 
-        batch = batch.groupBy("id").agg(
-            sum_map_values(F.collect_list("counts"), "bigint").alias("counts"),
-            sum_map_values(F.collect_list("measurements"), "double").alias(
-                "measurements"
-            ),
-            F.sum("total_edits").alias("total_edits"),
-            F.array_distinct(
-                F.flatten(F.collect_list("augmented_diffs"))
-            ).alias("augmented_diffs"),
+        CONTRACT (r10 ADVICE): this method always runs exactly ONE Spark
+        action over `batch`'s plan (the tmp-dir parquet write in _commit)
+        — callers such as stats_stream's foreachBatch sink attach an
+        Observation to the batch and block on Observation.get right after
+        this returns, which only terminates because the write executed the
+        observed plan. Any future backend that can return without running
+        an action over `batch` must keep an equivalent action (or the
+        caller must fall back to an explicit agg)."""
+        parts = premerge_stats(batch).select(
+            *STATS_COLS, F.lit(False).alias("stored")
         )
-        if existing is None:
-            self._commit(batch)
-            return
-        e = existing.alias("e")
-        b = batch.alias("b")
-        joined = e.join(b, F.col("e.id") == F.col("b.id"), "full_outer")
-        # guard: overlap of already-applied sequences with the batch's
-        already = (
-            F.size(
-                F.array_intersect(
-                    F.coalesce(F.col("e.augmented_diffs"), F.array().cast("array<int>")),
-                    F.coalesce(F.col("b.augmented_diffs"), F.array().cast("array<int>")),
-                )
-            )
-            > 0
+        existing = self.read(batch.sparkSession)
+        if existing is not None:
+            parts = existing.select(
+                *STATS_COLS, F.lit(True).alias("stored")
+            ).unionByName(parts)
+        def seqs(p):
+            return p["augmented_diffs"]
+
+        grouped = parts.groupBy("id").agg(
+            F.collect_list(F.struct(*STATS_COLS[1:], "stored")).alias("parts")
         )
-        take_batch = F.col("b.id").isNotNull() & ~already
-        merged = joined.select(
-            F.coalesce(F.col("e.id"), F.col("b.id")).alias("id"),
-            F.when(
-                take_batch, merge_counts(F.col("e.counts"), F.col("b.counts"), "bigint")
-            )
-            .otherwise(F.coalesce(F.col("e.counts"), F.col("b.counts")))
-            .alias("counts"),
-            F.when(
-                take_batch,
-                merge_counts(
-                    F.col("e.measurements"), F.col("b.measurements"), "double"
-                ),
-            )
-            .otherwise(F.coalesce(F.col("e.measurements"), F.col("b.measurements")))
-            .alias("measurements"),
-            (
-                F.coalesce(F.col("e.total_edits"), F.lit(0))
-                + F.when(take_batch, F.coalesce(F.col("b.total_edits"), F.lit(0)))
-                .otherwise(F.lit(0))
-            ).alias("total_edits"),
-            F.when(
-                take_batch,
-                F.array_union(
-                    F.coalesce(F.col("e.augmented_diffs"), F.array().cast("array<int>")),
-                    F.coalesce(F.col("b.augmented_diffs"), F.array().cast("array<int>")),
-                ),
-            )
-            .otherwise(
-                F.coalesce(
-                    F.col("e.augmented_diffs"), F.col("b.augmented_diffs")
-                )
-            )
-            .alias("augmented_diffs"),
+        applied = F.flatten(
+            F.transform(F.filter("parts", lambda p: p["stored"]), seqs)
         )
-        self._commit(merged)
+        take = grouped.select(
+            "id",
+            F.filter(
+                "parts",
+                lambda p: p["stored"]
+                | (F.size(F.array_intersect(seqs(p), applied)) == 0),
+            ).alias("take"),
+        )
+        self._commit(
+            take.select(
+                "id",
+                sum_map_values(
+                    F.transform("take", lambda p: p["counts"]), "bigint"
+                ).alias("counts"),
+                sum_map_values(
+                    F.transform("take", lambda p: p["measurements"]), "double"
+                ).alias("measurements"),
+                F.aggregate(
+                    "take",
+                    F.lit(0).cast("bigint"),
+                    lambda acc, p: acc + F.coalesce(p["total_edits"], F.lit(0)),
+                ).alias("total_edits"),
+                F.array_sort(
+                    F.array_distinct(F.flatten(F.transform("take", seqs)))
+                ).alias("augmented_diffs"),
+            )
+        )
+
+
+def premerge_stats(batch: DataFrame) -> DataFrame:
+    """One row per (id, sorted sequence set) of a stats batch — the unit
+    both stats tables guard. Not per id: collapsing all of an id's
+    sequences into one row would let the overlap guard discard a NEW
+    sequence's edits whenever a replayed sequence rides the same batch
+    (at-least-once redelivery with shifted foreachBatch boundaries).
+    Same-(id, sequences) rows — one changeset's groups that differ in uid
+    or user — merge and apply together, where the PG writer's row-by-row
+    guard would keep only the first (ChangesetStatsForeachWriter.scala:
+    39-73)."""
+    return batch.groupBy(
+        "id", F.array_sort("augmented_diffs").alias("augmented_diffs")
+    ).agg(
+        sum_map_values(F.collect_list("counts"), "bigint").alias("counts"),
+        sum_map_values(F.collect_list("measurements"), "double").alias(
+            "measurements"
+        ),
+        F.sum("total_edits").alias("total_edits"),
+    )
 
 
 class CheckpointTable:
@@ -317,9 +318,15 @@ class ErrorsTable(ParquetUpsertTable):
         ).dropDuplicates(["sequence", "payload_hash"])
         existing = self.read(batch.sparkSession)
         if existing is not None:
+            # null-safe on sequence: a line with no parseable sequence
+            # (and no numeric file name) is keyed by its payload alone
+            seen = existing.select(
+                F.col("sequence").alias("_seq"), F.col("payload_hash").alias("_hash")
+            )
             keyed = keyed.join(
-                existing.select("sequence", "payload_hash"),
-                ["sequence", "payload_hash"],
+                seen,
+                F.col("sequence").eqNullSafe(F.col("_seq"))
+                & (F.col("payload_hash") == F.col("_hash")),
                 "left_anti",
             )
             if keyed.isEmpty():

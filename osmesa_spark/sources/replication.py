@@ -81,8 +81,19 @@ def read_augmented_diffs(
             F.col("value"),
             schema,
             {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_corrupt"},
-        ).alias("r")
-    ).select("r.*")
+        ).alias("r"),
+        F.col("_metadata.file_name").alias("_file"),
+    ).select("r.*", "_file")
+    # a malformed line parses to all-null fields: its sequence comes from
+    # the drop file's name (`<sequence>.jsonl`, the pairs parser's
+    # `seq_hint`), so dead-letter rows stay keyed per sequence
+    df = df.withColumn(
+        "sequence",
+        F.coalesce(
+            F.col("sequence"),
+            F.regexp_extract("_file", r"^(\d+)\.", 1).try_cast("int"),
+        ),
+    ).drop("_file")
     if start_sequence is not None:
         df = df.where(F.col("sequence") >= start_sequence)
     if end_sequence is not None:

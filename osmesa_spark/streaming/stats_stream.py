@@ -1,11 +1,15 @@
 """Streaming changeset stats — parity with
 `osmesa.apps.streaming.StreamingChangesetStatsUpdater`
-(`src/apps/src/main/scala/osmesa/apps/streaming/StreamingChangesetStatsUpdater.scala:80-142`).
+(`src/apps/src/main/scala/osmesa/apps/streaming/StreamingChangesetStatsUpdater.scala:80-216`).
 
-Chain (§3.2): augdiff stream → foreachBatch: per micro-batch, the bounded
-rollup (tagged filter → geocode → event time from sequence (T1) →
-groupBy(timestamp, sequence, changeset, uid, user) map-sum agg (T4/A2)) →
-idempotent upsert (T6) + checkpoint bookkeeping (T7).
+One query per augmented-diff feed (`start_stats_query`), whose one
+foreachBatch body every runner shares — parquet table, JDBC
+(`sinks.jdbc.run_streaming_stats_to_jdbc`) and the dead-letter wiring:
+per micro-batch, split off the corrupt lines (`split_errors`), roll up the
+bounded batch (tagged filter → deltas → geocode → event time from sequence
+(T1) → groupBy(timestamp, sequence, changeset, uid, user) map-sum agg
+(T4/A2)) → idempotent upsert (T6) → dead-letter append (ErrorHandler) →
+checkpoint row (T7).
 
 No state store: the reference's 0 s watermark (T2) rests on sequences
 arriving whole and in order, so a sequence's groups are final once its own
@@ -13,11 +17,13 @@ batch is read and the state only delays them by one (eviction) batch. Our
 source hands over one `<sequence>.jsonl` per trigger, so the sink rolls up
 the bounded micro-batch (T8) and the batch that reads a sequence also
 checkpoints it; a replayed batch is a no-op under the upsert's overlap
-guard. A sequence split across two files (outside that contract) was
-dropped as late by the stateful rollup; now the guard skips the changesets
-that already hold the sequence and applies the rest. Upgrading from the
-stateful runner: restart on a fresh checkpoint directory — the guard makes
-the replay a no-op.
+guard and the errors table's (sequence, payload) key. A sequence split
+across two files (outside that contract) was dropped as late by the
+stateful rollup; now the guard skips the changesets that already hold the
+sequence and applies the rest. Upgrading from the stateful runner, or from
+the two-query dead-letter wiring (its `errors/` checkpoint is no longer
+read): restart on a fresh checkpoint directory — the guards make the
+replay a no-op.
 
 Also provides the watermarked stream-stream join (J9/T5):
 augdiffs ⋈ changeset metadata on `changeset`, watermarks 0s / 25h
@@ -33,7 +39,8 @@ from pyspark.sql import functions as F
 from osmesa_spark.functions.maps import sum_map_values
 from osmesa_spark.functions.tags import is_tagged
 from osmesa_spark.functions.timeseq import sequence_to_timestamp
-from osmesa_spark.operators.geocode import BBoxCountries, geocode
+from osmesa_spark.operators import geometry as G
+from osmesa_spark.operators.geocode import BBoxCountries, geocode_countries
 from osmesa_spark.operators.stats import default_counts, default_measurements
 from osmesa_spark.sinks.upsert import CheckpointTable, ParquetUpsertTable
 
@@ -41,56 +48,18 @@ from osmesa_spark.sinks.upsert import CheckpointTable, ParquetUpsertTable
 def augdiff_feature_stats(
     diffs: DataFrame, countries: dict | None = None
 ) -> DataFrame:
-    """Per-feature counts/measurements on an (augmented-diff) element stream.
-    Works identically on bounded and unbounded inputs (T8). `countries`
-    takes bbox rectangles or TRUE polygon rings (ray-cast, concave-safe) —
-    same dual form as the batch pipeline."""
-    from osmesa_spark.operators.geocode import geocode_polygons_auto
-    from osmesa_spark.operators.stats import _is_polygon_countries
-
-    feats = diffs.where(is_tagged("tags")).withColumn(
-        "event_time", sequence_to_timestamp("sequence")
+    """Per-feature counts/measurements on an (augmented-diff) element
+    stream. Works identically on bounded and unbounded inputs (T8); the
+    deltas and the geocode are the batch pipeline's (`with_deltas`,
+    `geocode_countries`). The diff carries both geometries, and the prev
+    geometry shares the feature's `geomType` (withAreaDelta parity,
+    StreamingChangesetStatsUpdater.scala:119)."""
+    feats = (
+        diffs.where(is_tagged("tags"))
+        .withColumn("event_time", sequence_to_timestamp("sequence"))
+        .withColumn("prevGeomType", F.col("geomType"))
     )
-    if countries is not None:
-        # complexity-dispatched on streams too: the grid path's
-        # stream-static broadcast join is supported by Structured Streaming
-        # and keeps per-row cost bounded by the cell's candidates
-        coder = (
-            geocode_polygons_auto
-            if _is_polygon_countries(countries)
-            else geocode
-        )
-        feats = coder(feats, countries)
-    else:
-        feats = feats.withColumn("countries", F.array().cast("array<string>"))
-    # deltas on the stream come from geom/prevGeom pairs carried by the diff
-    from osmesa_spark.functions import geo
-
-    line_len = F.when(
-        F.col("geomType") == "LineString", geo.line_length_m("geom")
-    ).otherwise(F.lit(0.0))
-    prev_len = F.when(
-        F.col("geomType") == "LineString", geo.line_length_m("prevGeom")
-    ).otherwise(F.lit(0.0))
-    # withAreaDelta parity (StreamingChangesetStatsUpdater.scala:119): the
-    # diff carries both ring geometries, so the polygon area delta is the
-    # same Column fold the batch path uses (augdiffs tag the FEATURE's
-    # geomType; the prev ring shares it)
-    ring_area = F.when(
-        F.col("geomType") == "Polygon", geo.ring_area_m2("geom")
-    ).otherwise(F.lit(0.0))
-    prev_area = F.when(
-        F.col("geomType") == "Polygon", geo.ring_area_m2("prevGeom")
-    ).otherwise(F.lit(0.0))
-    feats = feats.withColumn(
-        "linearDelta", F.abs(F.coalesce(line_len, F.lit(0.0)) - F.coalesce(prev_len, F.lit(0.0)))
-    ).withColumn(
-        "areaDelta",
-        F.abs(
-            F.coalesce(ring_area, F.lit(0.0))
-            - F.coalesce(prev_area, F.lit(0.0))
-        ),
-    )
+    feats = geocode_countries(G.with_deltas(feats), countries)
     return feats.select(
         "event_time",
         "sequence",
@@ -138,81 +107,109 @@ def stats_upsert_rows(
     )
 
 
-def run_streaming_stats_to_upsert(
-    diffs_stream: DataFrame,
-    table_path: str,
-    checkpoint_dir: str,
-    proc_name: str = "augmented-diff-stats",
-    countries: BBoxCountries | None = None,
-    observe_metrics: bool = False,
-):
-    """writeStream.foreachBatch → rollup of the bounded micro-batch +
-    idempotent upsert + checkpoint row — the full streaming sink chain
-    (S7 + S10 semantics), stateless (module docstring). Returns the query.
+def _ingest_metrics(columns: list[str]) -> dict:
+    """The `stats_ingest` fields over an unfiltered (raw or good) augdiff
+    frame: rollup groups and edits of the tagged good rows, the sequence
+    range and the dead-lettered line count. `observe` rejects DISTINCT,
+    hence the group count as the size of a key set."""
+    dead = (
+        F.col("_corrupt").isNotNull() if "_corrupt" in columns else F.lit(False)
+    )
+    rolled = ~dead & is_tagged("tags")
+    metrics = {
+        "finalized_groups": F.size(
+            F.collect_set(
+                F.when(rolled, F.struct("sequence", "changeset", "uid", "user"))
+            )
+        ),
+        "edits": F.count(F.when(rolled, 1)),
+        "min_seq": F.min("sequence"),
+        "max_seq": F.max("sequence"),
+        "dead_lettered": F.count(F.when(dead, 1)),
+    }
+    return {name: c.alias(name) for name, c in metrics.items()}
 
-    `observe_metrics=True` attaches a Dataset.observe node to the tagged
-    input stream (observations made inside foreachBatch never reach the
-    progress events): per micro-batch, (finalized_groups, edits, min_seq,
-    max_seq) surface in `observedMetrics['stats_ingest']` — the keep-up /
-    lag dashboard feed — piggybacking the batch's one read. `observe`
-    rejects DISTINCT, hence the group count as the size of a key set."""
-    if observe_metrics:
-        diffs_stream = diffs_stream.where(is_tagged("tags")).observe(
-            "stats_ingest",
-            F.size(
-                F.collect_set(F.struct("sequence", "changeset", "uid", "user"))
-            ).alias("finalized_groups"),
-            F.count(F.lit(1)).alias("edits"),
-            F.min("sequence").alias("min_seq"),
-            F.max("sequence").alias("max_seq"),
-        )
-    table = ParquetUpsertTable(table_path)
-    checkpoints = CheckpointTable(f"{table_path}/_checkpoints")
+
+def start_stats_query(
+    diffs_stream: DataFrame,
+    checkpoint_dir: str,
+    table,
+    save_checkpoint,
+    proc_name: str,
+    countries: dict | None,
+    errors,
+):
+    """The one stats query every runner starts: writeStream.foreachBatch →
+    the bounded rollup upserted into `table` (`ParquetUpsertTable` or
+    `sinks.jdbc.JdbcStatsSink`, same `upsert_stats` frame), then the
+    batch's dead-letter rows appended to `errors` (an `ErrorsTable`, or
+    None to drop them; only a stream carrying `_corrupt` has any), then
+    `save_checkpoint(proc_name, max_sequence)` — S7 + S10 semantics,
+    stateless (module docstring).
+
+    Two observations, one read per micro-batch. `stats_ingest` sits on the
+    unfiltered stream, so its `_ingest_metrics` reach the progress events'
+    `observedMetrics` (observations made inside foreachBatch never do) —
+    the keep-up / lag dashboard feed. Inside the sink an `Observation`
+    rides the upsert's one action and yields the batch's max sequence
+    (every row's, dead-lettered ones included) and its dead-letter count,
+    so an empty dead-letter branch runs no job. With an errors branch the
+    batch is persisted around both writes: the second write reads the
+    cache, so the source is parsed once and `stats_ingest` counts once."""
+    from pyspark.sql import Observation
+
+    from osmesa_spark.sources.replication import split_errors
+
+    metrics = _ingest_metrics(diffs_stream.columns)
+    corrupt = "_corrupt" in diffs_stream.columns
+    errors = errors if corrupt else None
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql import Observation
-
-        # max(sequence) rides the upsert's write as an Observation: rollup,
-        # upsert and checkpoint value are one Spark action per micro-batch
-        seq_obs = Observation()
-        observed = batch.observe(seq_obs, F.max("sequence").alias("max_seq"))
-        table.upsert_stats(stats_upsert_rows(observed, countries))
-        max_seq = seq_obs.get["max_seq"]
-        if max_seq is not None:
-            checkpoints.save(proc_name, int(max_seq))
+        if errors is not None:
+            batch = batch.persist()
+        try:
+            obs = Observation()
+            observed = batch.observe(
+                obs, metrics["max_seq"], metrics["dead_lettered"]
+            )
+            good = split_errors(observed)[0] if corrupt else observed
+            table.upsert_stats(stats_upsert_rows(good, countries))
+            seen = obs.get
+            if errors is not None and seen["dead_lettered"]:
+                errors.append_errors(split_errors(batch)[1])
+            if seen["max_seq"] is not None:
+                save_checkpoint(proc_name, int(seen["max_seq"]))
+        finally:
+            if errors is not None:
+                batch.unpersist()
 
     return (
-        diffs_stream.writeStream.outputMode("append")
+        diffs_stream.observe("stats_ingest", *metrics.values())
+        .writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(sink)
         .start()
     )
 
 
-def run_streaming_errors_to_table(
-    errors_stream: DataFrame,
+def run_streaming_stats_to_upsert(
+    diffs_stream: DataFrame,
     table_path: str,
     checkpoint_dir: str,
+    proc_name: str = "augmented-diff-stats",
+    countries: BBoxCountries | None = None,
 ):
-    """Dead-letter branch sink: the `split_errors` stream → persistent
-    `errors` table (05-errors.sql shape; ErrorHandler parity,
-    StreamingChangesetStatsUpdater.scala:149-216). Idempotent under
-    foreachBatch retries via the table's (sequence, payload-hash)
-    conflict key. Returns the query."""
-    from osmesa_spark.sinks.upsert import ErrorsTable
-
-    table = ErrorsTable(table_path)
-
-    def sink(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        table.append_errors(batch)
-
-    return (
-        errors_stream.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(sink)
-        .start()
+    """The stats query (`start_stats_query`) into a `ParquetUpsertTable` at
+    `table_path`, its checkpoint rows in `<table_path>/_checkpoints`.
+    Returns the query."""
+    return start_stats_query(
+        diffs_stream,
+        checkpoint_dir,
+        ParquetUpsertTable(table_path),
+        CheckpointTable(f"{table_path}/_checkpoints").save,
+        proc_name,
+        countries,
+        None,
     )
 
 
@@ -225,23 +222,27 @@ def run_streaming_stats_with_deadletter(
     countries: BBoxCountries | None = None,
 ):
     """The reference's full StreamingChangesetStatsUpdater wiring: ONE raw
-    augmented-diff stream (carrying `_corrupt`) split into the stats
-    rollup → idempotent upsert AND the dead-letter → errors-table branch
-    (ErrorHandler). Two independent streaming queries over the same file
-    source — each owns its offsets/checkpoint, so a crash in one never
-    stalls or double-applies the other; both sinks are idempotent, so the
-    pair is exactly-once end to end. Returns (stats_query, errors_query)."""
-    from osmesa_spark.sources.replication import split_errors
+    augmented-diff stream (carrying `_corrupt`) split, inside one query's
+    sink, into the stats rollup → idempotent upsert and the dead-letter →
+    `ErrorsTable` branch (ErrorHandler, 05-errors.sql shape). The query
+    checkpoints at `<checkpoint_dir>/stats`; both tables are conflict-keyed
+    per sequence, so a replayed batch is a no-op in each and the pair is
+    exactly-once end to end.
 
-    good, errors = split_errors(raw_diffs_stream)
-    stats_q = run_streaming_stats_to_upsert(
-        good, table_path, f"{checkpoint_dir}/stats",
-        proc_name=proc_name, countries=countries,
+    Returns `(query, query)` — the same query twice, which keeps the
+    (stats, errors) pair callers wait on and stop."""
+    from osmesa_spark.sinks.upsert import ErrorsTable
+
+    q = start_stats_query(
+        raw_diffs_stream,
+        f"{checkpoint_dir}/stats",
+        ParquetUpsertTable(table_path),
+        CheckpointTable(f"{table_path}/_checkpoints").save,
+        proc_name,
+        countries,
+        ErrorsTable(errors_path),
     )
-    errors_q = run_streaming_errors_to_table(
-        errors, errors_path, f"{checkpoint_dir}/errors"
-    )
-    return stats_q, errors_q
+    return q, q
 
 
 def merged_changeset_stream(

@@ -90,22 +90,17 @@ def _resolve(module: str, attrs: list[str]):
     return obj
 
 
-def test_traced_benchmark_names_resolve():
-    """Every `_patch(owner, "name", …)` target of the benchmark resolves,
-    and so does every name it imports from `osmesa_spark` and every
-    attribute it reads off one: a rename in the package cannot silently
-    break the traced run. The names come from the benchmark's source
-    (`perfbench/workloads.py`, `bench.py`), parsed, never imported."""
+BENCH_SOURCES = ("perfbench/workloads.py", "bench.py")
+
+
+def _scopes(path):
+    """(scope node, names) for every scope of the source file `path`:
+    `names` maps each name its imports bind to (module to load, module to
+    start from, attributes); a function sees its own imports and those of
+    every enclosing scope."""
     import ast
-    import importlib
-    import pathlib
 
-    root = pathlib.Path(__file__).resolve().parents[1]
-    missing, checked = [], {"_patch": 0, "attr": 0}
-
-    def visit(path, scope, names):
-        # name -> (module to load, module to start from, attributes): a
-        # function sees its own imports and those of every enclosing scope
+    def visit(scope, names):
         names = dict(names)
         for node in _own_nodes(scope):
             if isinstance(node, ast.Import):
@@ -115,39 +110,105 @@ def test_traced_benchmark_names_resolve():
             elif isinstance(node, ast.ImportFrom) and node.level == 0:
                 for a in node.names:
                     names[a.asname or a.name] = (node.module, node.module, [a.name])
-
-        def get(name, attrs=()):
-            load, base, chain = names[name]
-            importlib.import_module(load)
-            return _resolve(base, [*chain, *attrs])
-
+        yield scope, names
         for node in _own_nodes(scope):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                visit(path, node, names)
-            elif (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
-                    and node.func.id == "_patch"):
-                owner, chain = node.args[0], []
-                while isinstance(owner, ast.Attribute):
-                    chain.insert(0, owner.attr)
-                    owner = owner.value
-                checked["_patch"] += 1
-                if not hasattr(get(owner.id, chain), node.args[1].value):
-                    missing.append(f"{path.name}:{node.lineno} _patch {node.args[1].value}")
-            elif (isinstance(node, ast.Attribute) and isinstance(node.value, ast.Name)
-                    and names.get(node.value.id, ("",))[0].startswith("osmesa_spark")):
-                checked["attr"] += 1
-                try:
-                    get(node.value.id, [node.attr])
-                except (ImportError, AttributeError):
-                    missing.append(f"{path.name}:{node.lineno} {node.value.id}.{node.attr}")
-        for name, (module, *_) in names.items():
-            if module.startswith("osmesa_spark"):
-                try:
-                    get(name)
-                except (ImportError, AttributeError):
-                    missing.append(f"{path.name}: import {name} from {module}")
+                yield from visit(node, names)
 
-    for path in (root / "perfbench" / "workloads.py", root / "bench.py"):
-        visit(path, ast.parse(path.read_text(), str(path)), {})
+    yield from visit(ast.parse(path.read_text(), str(path)), {})
+
+
+def _get(names, name, attrs=()):
+    import importlib
+
+    load, base, chain = names[name]
+    importlib.import_module(load)
+    return _resolve(base, [*chain, *attrs])
+
+
+def _package_name(names, node) -> bool:
+    import ast
+
+    return isinstance(node, ast.Name) and names.get(
+        node.id, ("",)
+    )[0].startswith("osmesa_spark")
+
+
+def _bench_paths():
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    return [root / p for p in BENCH_SOURCES]
+
+
+def test_traced_benchmark_names_resolve():
+    """Every `_patch(owner, "name", …)` target of the benchmark resolves,
+    and so does every name it imports from `osmesa_spark` and every
+    attribute it reads off one: a rename in the package cannot silently
+    break the traced run. The names come from the benchmark's source
+    (`perfbench/workloads.py`, `bench.py`), parsed, never imported."""
+    import ast
+
+    missing, checked = [], {"_patch": 0, "attr": 0}
+    for path in _bench_paths():
+        for scope, names in _scopes(path):
+            for node in _own_nodes(scope):
+                if (isinstance(node, ast.Call) and isinstance(node.func, ast.Name)
+                        and node.func.id == "_patch"):
+                    owner, chain = node.args[0], []
+                    while isinstance(owner, ast.Attribute):
+                        chain.insert(0, owner.attr)
+                        owner = owner.value
+                    checked["_patch"] += 1
+                    if not hasattr(_get(names, owner.id, chain), node.args[1].value):
+                        missing.append(f"{path.name}:{node.lineno} _patch {node.args[1].value}")
+                elif isinstance(node, ast.Attribute) and _package_name(names, node.value):
+                    checked["attr"] += 1
+                    try:
+                        _get(names, node.value.id, [node.attr])
+                    except (ImportError, AttributeError):
+                        missing.append(f"{path.name}:{node.lineno} {node.value.id}.{node.attr}")
+            for name, (module, *_) in names.items():
+                if module.startswith("osmesa_spark"):
+                    try:
+                        _get(names, name)
+                    except (ImportError, AttributeError):
+                        missing.append(f"{path.name}: import {name} from {module}")
     assert checked["_patch"] and checked["attr"], checked
     assert not missing, sorted(set(missing))
+
+
+def test_benchmark_calls_bind_to_package_signatures():
+    """Every call the benchmark makes into `osmesa_spark` — `f(...)` on an
+    imported name, `mod.f(...)` on an imported module — binds to the
+    target's signature: as many positional arguments, and keyword names it
+    accepts. A runner signature change fails here, not in the benchmark."""
+    import ast
+    import inspect
+
+    bad, checked = [], 0
+    for path in _bench_paths():
+        for scope, names in _scopes(path):
+            for node in _own_nodes(scope):
+                if not isinstance(node, ast.Call):
+                    continue
+                func, chain = node.func, []
+                while isinstance(func, ast.Attribute):
+                    chain.insert(0, func.attr)
+                    func = func.value
+                if not _package_name(names, func) or any(
+                    isinstance(a, ast.Starred) for a in node.args
+                ) or any(k.arg is None for k in node.keywords):
+                    continue
+                try:  # an unresolvable name fails the test above
+                    target = _get(names, func.id, chain)
+                    sig = inspect.signature(target)
+                except (ImportError, AttributeError, TypeError, ValueError):
+                    continue
+                checked += 1
+                try:
+                    sig.bind(*node.args, **{k.arg: None for k in node.keywords})
+                except TypeError as e:
+                    bad.append(f"{path.name}:{node.lineno} {ast.unparse(node.func)}: {e}")
+    assert checked, "no call into osmesa_spark found"
+    assert not bad, bad

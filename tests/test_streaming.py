@@ -605,11 +605,118 @@ def test_table_swap_cut_by_a_crash_rolls_back(spark, tmp_path, monkeypatch):
         )
     monkeypatch.undo()
     assert not os.path.exists(t.data_dir)  # the crash left the swap cut
+    assert any(n.startswith("_tmp_") for n in os.listdir(t.path))
     rows = {r["id"]: r["name"] for r in t.read(spark).collect()}
     assert rows == {1: "alice", 2: "bob"}
     t.upsert_users(spark.createDataFrame([(3, "carol")], "id long, name string"))
     rows = {r["id"]: r["name"] for r in t.read(spark).collect()}
     assert rows == {1: "alice", 2: "bob", 3: "carol"}
+    # a successful swap sweeps the `_tmp_*` copy the cut one left behind
+    t.upsert_users(spark.createDataFrame([(4, "dan")], "id long, name string"))
+    assert sorted(os.listdir(t.path)) == ["data"]
+    assert len(t.read(spark).collect()) == 4
+
+
+def test_parquet_and_jdbc_tables_guard_the_same_batch_alike(spark, tmp_path):
+    """A batch that re-delivers an applied sequence and brings a new one
+    for the same changeset: both stats tables skip the replayed part and
+    apply the new one, so they store equal rows."""
+    from osmesa_spark.sinks.jdbc import JdbcStatsSink
+
+    schema = (
+        "id long, counts map<string,bigint>, "
+        "measurements map<string,double>, total_edits long, "
+        "augmented_diffs array<int>"
+    )
+    first = spark.createDataFrame(
+        [(7, {"roads_added": 1}, {"road_km_added": 0.5}, 1, [1001])], schema
+    )
+    batch = spark.createDataFrame(
+        [
+            (7, {"roads_added": 1}, {"road_km_added": 0.5}, 1, [1001]),
+            (7, {"roads_added": 2}, {"road_km_added": 1.0}, 2, [1002]),
+            (8, {"pois_added": 1}, {}, 1, [1002]),
+        ],
+        schema,
+    )
+    parquet = ParquetUpsertTable(str(tmp_path / "stats"))
+    jdbc = JdbcStatsSink(str(tmp_path / "stats.db"))
+    for table in (parquet, jdbc):
+        table.upsert_stats(first)
+        table.upsert_stats(batch)
+    got = [
+        {
+            "id": r["id"],
+            "counts": dict(r["counts"]),
+            "measurements": dict(r["measurements"]),
+            "total_edits": r["total_edits"],
+            "augmented_diffs": sorted(r["augmented_diffs"]),
+        }
+        for r in parquet.read(spark).orderBy("id").collect()
+    ]
+    assert got == jdbc.read_stats()
+    assert got[0]["total_edits"] == 3
+    assert got[0]["augmented_diffs"] == [1001, 1002]
+    assert got[0]["measurements"] == {"road_km_added": 1.5}
+
+
+def test_dead_letter_replay_appends_nothing(spark, tmp_path):
+    """A malformed flat line keeps its drop file's sequence, so the errors
+    table's (sequence, payload) key matches a replayed batch and
+    re-appending it adds no row."""
+    from osmesa_spark.sinks.upsert import ErrorsTable
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "1005.jsonl").write_text(
+        '{"sequence": 1005, "id": BROKEN-1\n{"sequence": 1005, "id": BROKEN-2\n'
+    )
+    _, errors = R.split_errors(R.read_augmented_diffs(spark, str(drop)))
+    assert [r["sequence"] for r in errors.collect()] == [1005, 1005]
+    table = ErrorsTable(str(tmp_path / "errors"))
+    table.append_errors(errors)
+    table.append_errors(errors)
+    assert table.read(spark).count() == 2
+
+
+def test_stats_with_deadletter_is_one_query(spark, dirs, tmp_path):
+    """The stats and dead-letter branches share one streaming query: both
+    elements of the returned pair are the same query, one query starts,
+    and the checkpoint dir holds only its `stats/` checkpoint."""
+    import os
+
+    from osmesa_spark.sinks.upsert import ErrorsTable
+
+    before = len(spark.streams.active)
+    ckpt = tmp_path / "ckpt"
+    stats_q, errors_q = S.run_streaming_stats_with_deadletter(
+        R.read_augmented_diffs(spark, str(dirs / "augdiffs"), streaming=True),
+        str(tmp_path / "stats"),
+        str(tmp_path / "errors"),
+        str(ckpt),
+        countries=COUNTRIES,
+    )
+    try:
+        assert stats_q is errors_q
+        assert len(spark.streams.active) == before + 1
+        stats_q.processAllAvailable()
+    finally:
+        stats_q.stop()
+    assert os.listdir(ckpt) == ["stats"]
+    good, errors = R.split_errors(
+        R.read_augmented_diffs(spark, str(dirs / "augdiffs"))
+    )
+    stored = ParquetUpsertTable(str(tmp_path / "stats")).read(spark)
+    assert stored.agg(F.sum("total_edits")).first()[0] == good.count()
+    # the table keys on (sequence, payload): the fixture repeats a line
+    assert ErrorsTable(str(tmp_path / "errors")).read(spark).count() == (
+        errors.select("sequence", "payload").distinct().count()
+    )
+    ingest = [
+        p["observedMetrics"]["stats_ingest"] for p in stats_q.recentProgress
+    ]
+    assert sum(m["dead_lettered"] for m in ingest) == errors.count()
+    assert sum(m["edits"] for m in ingest) == good.count()
 
 
 def test_hashtag_dictionary_stable_ids(spark, tmp_path):
@@ -1062,10 +1169,10 @@ def test_sketch_table_migrates_legacy_layout(spark, tmp_path):
 
 
 def test_streaming_observe_metrics_surface_in_progress(spark, dirs, tmp_path):
-    """observe_metrics=True: every committed micro-batch reports
-    (finalized_groups, edits, min_seq, max_seq) through observedMetrics in
-    the progress events — the keep-up dashboard feed — and the totals
-    reconcile with the batch rollup over the same fixture."""
+    """Every committed micro-batch reports (finalized_groups, edits,
+    min_seq, max_seq) through observedMetrics in the progress events — the
+    keep-up dashboard feed — and the totals reconcile with the batch
+    rollup over the same fixture."""
     good_stream, _ = R.split_errors(
         R.read_augmented_diffs(spark, str(dirs / "augdiffs"), streaming=True)
     )
@@ -1074,7 +1181,6 @@ def test_streaming_observe_metrics_surface_in_progress(spark, dirs, tmp_path):
         str(tmp_path / "obs_table"),
         str(tmp_path / "obs_ckpt"),
         countries=COUNTRIES,
-        observe_metrics=True,
     )
     deadline = time.time() + 120
     while time.time() < deadline:
