@@ -1,16 +1,24 @@
 """Similarity search over an embedding column (`array<float>`).
 
-Two paths:
-  * brute-force top-k cosine — correctness baseline. The query set is small
-    and **broadcast**, so the big side streams through a single narrow stage:
-    no shuffle of the corpus at all; per-partition top-k via window rank is
-    bounded by AQE-coalesced partitions.
-  * IVF-style partitioned search — corpus bucketed by a coarse quantizer
-    (here: provided `label` column, or a hyperplane-LSH bucket), query probes
-    only its bucket. Turns O(N) per query into O(N/buckets); the bucket id is
-    a join key so Spark co-partitions both sides.
+Every top-k probe here runs ONE kernel, `_probe`: spread the corpus,
+derive its keys, join the query keys (broadcast by default), drop
+self-pairs, score, and rank the top k per query with one literal-bounded
+row_number window keyed (score, neighbor id), which `WindowGroupLimit`
+prunes per partition before the exchange. The public probes are key and
+score generators over it:
+  * every pair, no key: `knn_bruteforce`, `knn_l2`, `knn_quantized`,
+    `knn_rp`, `knn_pq` (ADC codes against per-query lookup rows),
+    `hard_negatives` and the Hamming shortlist of `knn_binary_rerank`;
+  * a bucket equi-key, so a query meets O(N/buckets) rows: `knn_ivf` (a
+    label column), `knn_lsh` and `knn_lsh_multiprobe` (sign-LSH bits),
+    `ivf_probe_frozen` (under `knn_ivf_nprobe`) and `knn_ivfpq` (coarse
+    cells), `knn_label_accuracy` (a shuffled leave-one-out self-probe);
+  * a shortlist re-ranked exactly: `knn_pq_rerank` and the second stage
+    of `knn_binary_rerank`.
+Threshold self-joins (`neardup_cosine`) are not top-k probes and keep
+their own join.
 
-Dot products stay in the JVM via `F.zip_with` + `F.aggregate` (no Python).
+Vector arithmetic stays in the JVM via `zip_with` + `aggregate` (no Python).
 """
 
 from __future__ import annotations
@@ -18,7 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from osmesa_spark.functions.litexpr import q as _qn
+from osmesa_spark.functions.litexpr import darr, dlit, q as _qn
+from osmesa_spark.util import ensure_parallelism
 
 
 # --- expression builders: each renders ONE Spark-SQL string -----------------
@@ -28,8 +37,8 @@ from osmesa_spark.functions.litexpr import q as _qn
 # or literal (a DSL cosine is 370 calls, the SQL string 3), and embedded
 # trained-model literals (codebooks, centroids, hyperplanes) reached
 # 13-15k calls ≈ 2-4 s of serial DRIVER time per ANN query construction
-# (see functions/litexpr.py and OPTIMIZATION_r10.md). Column names are
-# backtick-quoted with `q`, one part at a time for qualified names.
+# (see functions/litexpr.py). Column names are backtick-quoted with `q`,
+# one part at a time for qualified names.
 
 
 def _dot_sql(a_sql: str, b_sql: str) -> str:
@@ -41,16 +50,19 @@ def _dot_sql(a_sql: str, b_sql: str) -> str:
     )
 
 
-def _sq_l2_sql(vec_sql: str, centroid: list[float], round_to: int = 6) -> str:
-    """Squared L2 distance to a literal centroid, rounded like the kmeans
-    kernel so probe selection replays identically cross-engine."""
-    from osmesa_spark.functions.litexpr import darr
-
+def _sq_l2_pair_sql(a_sql: str, b_sql: str, round_to: int = 6) -> str:
+    """Squared L2 distance between two double arrays, rounded like the
+    kmeans kernel so probe selection replays identically cross-engine."""
     return (
-        f"round(aggregate(zip_with({vec_sql}, {darr(centroid)}, "
+        f"round(aggregate(zip_with({a_sql}, {b_sql}, "
         f"(a, b) -> (a - b) * (a - b)), 0.0D, (acc, v) -> acc + v), "
         f"{round_to})"
     )
+
+
+def _sq_l2_sql(vec_sql: str, centroid: list[float], round_to: int = 6) -> str:
+    """`_sq_l2_pair_sql` to a literal centroid."""
+    return _sq_l2_pair_sql(vec_sql, darr(centroid), round_to)
 
 
 def _pq_dists_sql(
@@ -118,8 +130,6 @@ def _lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
     Disjoint bits, so integer + IS bitwise-or; same `_dot_sql` casts. The
     vector is LET-BOUND so its cast/projection evaluates once per row
     instead of once per plane."""
-    from osmesa_spark.functions.litexpr import darr
-
     terms = ["0"]
     for i, p in enumerate(planes):
         terms.append(
@@ -130,21 +140,70 @@ def _lsh_bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
     return f"element_at(transform(array({vec_sql}), vb -> {body}), 1)"
 
 
-def _topk_by_cos(
-    scored: DataFrame,
+# --- the probe kernel ---------------------------------------------------------
+# Scores over the kernel's side names: `qvec`/`cvec` (query/corpus vector),
+# `qv`/`v` (the same cast to double), `luts`/`codes` (PQ lookup rows/codes).
+_COS = f"round({_cosine_sql('`qvec`', '`cvec`')}, 6)"
+_D2 = _sq_l2_pair_sql("`qv`", "`v`")
+# PQ asymmetric distance: the sum of one lookup-row entry per code
+_ADC = (
+    "round(aggregate(zip_with(`codes`, `luts`, (c, row) -> "
+    "element_at(row, c)), 0.0D, (acc, d) -> acc + d), 6)"
+)
+_OUT = ("query_id", "neighbor_id", "rank")
+
+
+def _probe(
+    corpus: DataFrame,
+    queries: DataFrame,
+    on: str | None,
+    score_sql: str,
     k: int,
-    part_col: str = "query_id",
-    order_col: str = "cos",
-    id_col: str = "neighbor_id",
+    ascending: bool = False,
+    keep: str | None = None,
+    spread: bool = True,
+    broadcast: bool = True,
+    *,
+    cols: list[Column | str],
+    id_col: str = "vec_id",
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Deterministic per-query top-k: row_number by (order_col DESC,
-    id_col ASC) within part_col, keep rank <= k — the shared tail of
-    every kNN probe. The tie-break convention lives HERE once; seven
-    probes reuse it (WindowGroupLimit prunes per-partition before the
-    exchange, so this is a TakeOrdered-per-key, not a full sort)."""
-    w = Window.partitionBy(part_col).orderBy(
-        F.col(order_col).desc(), F.col(id_col)
+    """The top-k probe under every kNN operator in this module.
+
+    `corpus` is spread first (`ensure_parallelism` on `id_col`: a
+    broadcast join keeps the streamed side's partitioning, so a 1-split
+    scan would score every pair on one core), then projected to
+    `neighbor_id` plus `cols`, its keys — so PQ codes, sign words and
+    bucket ids evaluate after the exchange, once per row. `spread=False`
+    probes a frame as it is laid out: an index (pinned or bucketed
+    inverted lists, checkpointed residuals) or a shortlist.
+
+    `queries` carries `query_id` and its keys; it is broadcast unless
+    `broadcast=False` (a corpus-sized query side: Catalyst picks the
+    join). `on` names the key both sides carry; None pairs every row.
+    Self-pairs (query_id = neighbor_id) are dropped. `score_sql` is one SQL
+    expression over both sides' columns; `keep`, an optional SQL predicate
+    on `score`, filters before the rank.
+
+    The rank is one row_number per query by (score DESC — ASC when
+    `ascending` — then neighbor_id ASC) with the literal bound `k`, so
+    `WindowGroupLimit` prunes it per partition before the exchange: a
+    take-ordered per key, not a full sort.
+
+    Output: (query_id, neighbor_id, *carry, score, rank)."""
+    if spread:
+        corpus = ensure_parallelism(corpus, id_col)
+    c = corpus.select(F.col(id_col).alias("neighbor_id"), *cols)
+    q = F.broadcast(queries) if broadcast else queries
+    other = F.col("query_id") != F.col("neighbor_id")
+    pairs = c.join(q, on).where(other) if on else c.join(q, other)
+    scored = pairs.select(
+        "query_id", "neighbor_id", *carry, F.expr(score_sql).alias("score")
     )
+    if keep:
+        scored = scored.where(keep)
+    score = F.col("score").asc() if ascending else F.col("score").desc()
+    w = Window.partitionBy("query_id").orderBy(score, F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).where(
         F.col("rank") <= k
     )
@@ -165,25 +224,31 @@ def knn_bruteforce(
     """Exact top-k cosine neighbors for each query vector.
     Output: (query_id, neighbor_id, rank) — rank 1..k, self excluded.
     `queries` is broadcast; ties broken by neighbor id for determinism."""
-    from osmesa_spark.util import ensure_parallelism
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    # broadcast joins preserve the probe side's partitioning — a 1-split
-    # corpus scan would evaluate every dot product on one core
-    c = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
-        )
-    )
-    return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
+    return _probe(
+        corpus, q, None, _COS, k, cols=[F.col(vec_col).alias("cvec")],
+        id_col=id_col,
+    ).select(*_OUT)
+
+
+def knn_l2(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact top-k by rounded squared L2 — the reference for the PQ probes,
+    whose ADC approximates L2, not cosine. Same output shape as
+    knn_bruteforce, rank 1..k by ascending distance."""
+    v = F.col(vec_col).cast("array<double>")
+    q = queries.select(F.col(id_col).alias("query_id"), v.alias("qv"))
+    return _probe(
+        corpus, q, None, _D2, k, ascending=True, cols=[v.alias("v")],
+        id_col=id_col,
+    ).select(*_OUT)
 
 
 def knn_ivf(
@@ -197,28 +262,15 @@ def knn_ivf(
     """IVF-style ANN: probe only the query's coarse bucket (`bucket_col` —
     a precomputed centroid/cluster id). Same output shape as brute force.
     At scale, bucket both sides and the join co-partitions by bucket."""
-    from osmesa_spark.util import ensure_parallelism
-
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
         F.col(bucket_col).alias("bucket"),
     )
-    c = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.col(bucket_col).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
-        )
-    )
-    return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
+    cols = [F.col(vec_col).alias("cvec"), F.col(bucket_col).alias("bucket")]
+    return _probe(
+        corpus, q, "bucket", _COS, k, cols=cols, id_col=id_col
+    ).select(*_OUT)
 
 
 def knn_ivf_nprobe(
@@ -298,18 +350,11 @@ def ivf_probe_frozen(
         F.expr(qv_sql).alias("qvec"),
         probes.alias("cluster"),
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-    scored = (
-        assigned.join(q, "cluster")
-        .where(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            F.round(cosine("qvec", "v"), 6).alias("cos"),
-        )
-    )
-    return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
+    return _probe(
+        assigned, q, "cluster", _COS, k, spread=False,
+        broadcast=broadcast_queries,
+        cols=["cluster", F.col("v").alias("cvec")], id_col=id_col,
+    ).select(*_OUT)
 
 
 def neardup_cosine(
@@ -327,8 +372,6 @@ def neardup_cosine(
     scalar, so each pair costs one dot product + one multiply instead of
     dot + two array norms (bit-identical result, same op order).
     Output: (id_a, id_b, cos), id_a < id_b, cos rounded 6dp."""
-    from osmesa_spark.util import ensure_parallelism
-
     side = ensure_parallelism(df, id_col).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
@@ -373,13 +416,27 @@ def quantize_int8(
     memory-bandwidth cut for ANN at scale — IVF probes compare int8 dots,
     rescaling by scale_a·scale_b only for the final top-k. Pure Column
     math, stays in codegen; output (id, scale, qvec)."""
+    scale, qvec = _int8(vec_col)
+    return df.select(
+        F.col(id_col).alias("id"), scale.alias("scale"), qvec.alias("qvec")
+    )
+
+
+def _int8(vec_col: str) -> tuple[Column, Column]:
+    """`quantize_int8`'s (scale, qvec) columns."""
     v = F.transform(vec_col, lambda x: x.cast("double"))
     scale = F.greatest(
         F.array_max(F.transform(v, F.abs)) / F.lit(127.0), F.lit(1e-12)
     )
     qvec = F.transform(v, lambda x: F.floor(x / scale + F.lit(0.5)).cast("int"))
-    return df.select(
-        F.col(id_col).alias("id"), scale.alias("scale"), qvec.alias("qvec")
+    return scale, qvec
+
+
+def _idot_sql(a_sql: str, b_sql: str) -> str:
+    """Exact integer dot product of two bigint arrays, as a double."""
+    return (
+        f"CAST(aggregate(zip_with({a_sql}, {b_sql}, (x, y) -> x * y), "
+        f"CAST(0 AS BIGINT), (acc, v) -> acc + v) AS DOUBLE)"
     )
 
 
@@ -395,40 +452,16 @@ def knn_quantized(
     cancel inside the cosine ratio), so each comparison moves 4× fewer bytes
     than float32 and the arithmetic is exact until one final double division.
     Broadcast query side, same output shape as knn_bruteforce."""
-    from osmesa_spark.util import ensure_parallelism
-
-    def q8(df: DataFrame, prefix: str) -> DataFrame:
-        z = quantize_int8(df, vec_col=vec_col, id_col=id_col)
-        return z.select(
-            F.col("id").alias(f"{prefix}_id"),
-            F.transform("qvec", lambda x: x.cast("bigint")).alias(f"{prefix}_q"),
-        )
-
-    qs = q8(queries, "query")
-    cs = q8(ensure_parallelism(corpus, id_col), "neighbor")
-    idot = lambda a, b: F.aggregate(  # noqa: E731
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, v: acc + v,
+    q8 = F.transform(_int8(vec_col)[1], lambda x: x.cast("bigint"))
+    q, c = "`qvec`", "`cvec`"
+    icos = (
+        f"round({_idot_sql(q, c)} / greatest(sqrt({_idot_sql(q, q)}) * "
+        f"sqrt({_idot_sql(c, c)}), 1e-12D), 6)"
     )
-    scored = cs.join(
-        F.broadcast(qs), F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            idot(F.col("query_q"), F.col("neighbor_q")).cast("double")
-            / F.greatest(
-                F.sqrt(idot(F.col("query_q"), F.col("query_q")).cast("double"))
-                * F.sqrt(
-                    idot(F.col("neighbor_q"), F.col("neighbor_q")).cast("double")
-                ),
-                F.lit(1e-12),
-            ),
-            6,
-        ).alias("cos"),
-    )
-    return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
+    qs = queries.select(F.col(id_col).alias("query_id"), q8.alias("qvec"))
+    return _probe(
+        corpus, qs, None, icos, k, cols=[q8.alias("cvec")], id_col=id_col
+    ).select(*_OUT)
 
 
 def lsh_planes(dim: int, n_planes: int = 6, seed: int = 97) -> list[list[float]]:
@@ -458,29 +491,14 @@ def knn_lsh(
     is an equi-join key, so Spark co-partitions corpus and probes; per-probe
     work drops from O(N) to O(N / 2^planes) at the usual LSH recall
     trade-off. Same output shape as knn_bruteforce."""
-    from osmesa_spark.util import ensure_parallelism
-
-    bucket = F.expr(_lsh_bucket_sql(_qn(vec_col), planes))
+    bucket = F.expr(_lsh_bucket_sql(_qn(vec_col), planes)).alias("bucket")
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        bucket.alias("bucket"),
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"), bucket
     )
-    c = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        bucket.alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
-        )
-    )
-    return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
+    cols = [F.col(vec_col).alias("cvec"), bucket]
+    return _probe(
+        corpus, q, "bucket", _COS, k, cols=cols, id_col=id_col
+    ).select(*_OUT)
 
 
 def knn_lsh_multiprobe(
@@ -504,8 +522,6 @@ def knn_lsh_multiprobe(
     match at most one probe (an item has one bucket), so no dedup stage
     is needed. Candidate superset ⇒ recall@k is monotonically ≥ the
     single-probe `knn_lsh` (asserted in tests). Same output shape."""
-    from osmesa_spark.util import ensure_parallelism
-
     b_sql = _lsh_bucket_sql(_qn(vec_col), planes)
     probes = F.expr(
         "explode(array("
@@ -517,21 +533,10 @@ def knn_lsh_multiprobe(
         F.col(vec_col).alias("qvec"),
         probes.alias("bucket"),
     )
-    c = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        F.expr(b_sql).alias("bucket"),
-    )
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
-        )
-    )
-    return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
+    cols = [F.col(vec_col).alias("cvec"), F.expr(b_sql).alias("bucket")]
+    return _probe(
+        corpus, q, "bucket", _COS, k, cols=cols, id_col=id_col
+    ).select(*_OUT)
 
 
 def kmeans_lloyd(
@@ -748,19 +753,18 @@ def knn_label_accuracy(
 
     Scale shape: corpus-wide leave-one-out means BOTH join sides are the
     corpus, so this deliberately does NOT reuse `knn_lsh` (which
-    broadcasts its bounded probe side) — the bucket self-join shuffles
-    both sides on the bucket key (pair work Σ|bucket|², the
-    `density_census` bound); the vote is one (query,label) partial agg
-    followed by a deterministic argmax (count desc, label asc) via a
-    row_number window over the (query,label) vote counts — ORDER-based,
-    not value-negation, so string labels rank correctly. Bucketed base
-    checkpointed once for both join sides and
-    the verdict join-back.
+    broadcasts its bounded probe side) — the kernel runs with
+    `broadcast=False` and the bucket self-join shuffles both sides on the
+    bucket key (pair work Σ|bucket|², the `density_census` bound); the
+    vote is one (query,label) partial agg followed by a deterministic
+    argmax (count desc, label asc) via a row_number window over the
+    (query,label) vote counts — ORDER-based, not value-negation, so string
+    labels rank correctly. The bucketed base is spread and checkpointed
+    once, BEFORE the kernel (which then probes it as laid out), for both
+    join sides and the verdict join-back.
 
     Output: (vec_id, true_label, pred_label, correct) — vectors with no
     same-bucket neighbor get pred_label null / correct false."""
-    from osmesa_spark.util import ensure_parallelism
-
     base = (
         ensure_parallelism(df, id_col)
         .select(
@@ -774,27 +778,15 @@ def knn_label_accuracy(
         # keep it computed once); saves the construction-time job
         .localCheckpoint(eager=False)
     )
-    a = base.select(
-        "bucket", F.col("id").alias("id_a"), F.col("v").alias("va")
+    q = base.select(
+        F.col("id").alias("query_id"), F.col("v").alias("qvec"), "bucket"
     )
-    b = base.select(
-        "bucket",
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("label").alias("label_b"),
+    cols = [F.col("v").alias("cvec"), F.col("label").alias("label_b"), "bucket"]
+    topk = _probe(
+        base, q, "bucket", _COS, k, spread=False, broadcast=False, cols=cols,
+        id_col="id", carry=("label_b",),
     )
-    scored = (
-        a.join(b, "bucket")
-        .where(F.col("id_a") != F.col("id_b"))
-        .select(
-            "id_a",
-            "label_b",
-            F.round(cosine("va", "vb"), 6).alias("cos"),
-            "id_b",
-        )
-    )
-    topk = _topk_by_cos(scored, k, part_col="id_a", id_col="id_b")
-    votes = topk.groupBy("id_a", "label_b").agg(
+    votes = topk.groupBy(F.col("query_id").alias("id_a"), "label_b").agg(
         F.count(F.lit(1)).alias("cnt")
     )
     # argmax by (cnt DESC, label ASC) as an ORDER-based rank, never
@@ -851,10 +843,6 @@ def mmr_select(
     the id column keeps the caller's name AND type (string/int doc ids
     round-trip unchanged)."""
     spark = corpus.sparkSession
-    from osmesa_spark.util import ensure_parallelism
-
-    from osmesa_spark.functions.litexpr import darr, dlit
-
     vc_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
     base = (
         ensure_parallelism(corpus, id_col)
@@ -953,8 +941,6 @@ def density_census(
     neighbors iff its self-cosine clears the radius (always, except the
     zero vector, whose guarded cosine is 0). Results are value-identical
     to the naive formulation (the DuckDB oracle replays the naive one)."""
-    from osmesa_spark.util import ensure_parallelism
-
     raw = ensure_parallelism(df, id_col).select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -1279,8 +1265,6 @@ def knn_pq(
 
     Output: (query_id, neighbor_id, rank) — rank 1..k by ascending ADC
     (squared-L2 approximation), self excluded, id tie-breaks."""
-    from osmesa_spark.util import ensure_parallelism
-
     books = pq_train(
         corpus, m=m, k=k_centroids, iters=iters, id_col=id_col,
         vec_col=vec_col, seed=seed,
@@ -1298,12 +1282,7 @@ def knn_pq(
         # matching the oracle's ORDER BY (dist, cid)
         return _argmin_pos_sql(_pq_dists_sql(sub_sql(s), books[s]))
 
-    cs = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.expr(
-            "array(" + ",".join(code_sql(s) for s in range(m)) + ")"
-        ).alias("codes"),
-    )
+    codes = F.expr("array(" + ",".join(code_sql(s) for s in range(m)) + ")")
     qs = queries.select(
         F.col(id_col).alias("query_id"),
         F.expr(
@@ -1312,28 +1291,10 @@ def knn_pq(
             + ")"
         ).alias("luts"),
     )
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("codes"), F.col("luts"),
-                lambda c, row: F.element_at(row, c),
-            ),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        ),
-        6,
-    )
-    scored = cs.join(
-        F.broadcast(qs), F.col("query_id") != F.col("neighbor_id")
-    ).select("query_id", "neighbor_id", adc.alias("adc"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _probe(
+        corpus, qs, None, _ADC, k, ascending=True,
+        cols=[codes.alias("codes")], id_col=id_col,
+    ).select(*_OUT)
 
 
 def knn_pq_rerank(
@@ -1368,31 +1329,14 @@ def knn_pq_rerank(
         corpus, queries, k=shortlist, m=m, k_centroids=k_centroids,
         iters=iters, seed=seed, id_col=id_col, vec_col=vec_col,
     ).select("query_id", "neighbor_id")
-    cs = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    qs = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with("qv", "v", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        ),
-        6,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2"), "neighbor_id")
-    return (
-        cs.join(F.broadcast(short), "neighbor_id")
-        .join(F.broadcast(qs), "query_id")
-        .select("query_id", "neighbor_id", d2.alias("d2"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    v = F.col(vec_col).cast("array<double>")
+    qs = queries.select(F.col(id_col).alias("query_id"), v.alias("qv"))
+    # the corpus streams as scanned (no second spread) and meets the
+    # broadcast (query, shortlisted id, query vector) rows on the id
+    return _probe(
+        corpus, short.join(F.broadcast(qs), "query_id"), "neighbor_id", _D2,
+        k, ascending=True, spread=False, cols=[v.alias("v")], id_col=id_col,
+    ).select(*_OUT)
 
 
 def pq_encode(
@@ -1467,8 +1411,6 @@ def knn_ivfpq(
     Output: (query_id, neighbor_id, rank) — rank 1..k by ascending
     residual-ADC within the query's nprobe nearest coarse cells, self
     excluded."""
-    from osmesa_spark.util import ensure_parallelism
-
     assigned, coarse = kmeans_lloyd(
         ensure_parallelism(corpus, id_col), k=coarse_k, iters=iters,
         id_col=id_col, vec_col=vec_col, seed=seed, emit_residual=True,
@@ -1476,8 +1418,6 @@ def knn_ivfpq(
     )
 
     def cent_lookup_sql(cluster_sql: str) -> str:
-        from osmesa_spark.functions.litexpr import darr
-
         whens = " ".join(
             f"WHEN {cluster_sql} = {int(cid)} THEN {darr(c)}"
             for cid, c in coarse
@@ -1504,12 +1444,8 @@ def knn_ivfpq(
             _pq_dists_sql(f"slice({vec_sql}, {s * ds + 1}, {ds})", books[s])
         )
 
-    cs = resid.select(
-        F.col(id_col).alias("neighbor_id"),
-        "cluster",
-        F.expr(
-            "array(" + ",".join(code_sql("`r`", s) for s in range(m)) + ")"
-        ).alias("codes"),
+    codes = F.expr(
+        "array(" + ",".join(code_sql("`r`", s) for s in range(m)) + ")"
     )
 
     # query side: rank the coarse cells by the same rounded-L2 with cid
@@ -1547,30 +1483,11 @@ def knn_ivfpq(
             + ")"
         ).alias("luts"),
     )
-    adc = F.round(
-        F.aggregate(
-            F.zip_with(
-                F.col("codes"), F.col("luts"),
-                lambda c, row: F.element_at(row, c),
-            ),
-            F.lit(0.0),
-            lambda acc, d: acc + d,
-        ),
-        6,
-    )
-    scored = (
-        cs.join(F.broadcast(qs), "cluster")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", adc.alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    # the checkpointed residuals are probed as laid out: no second spread
+    return _probe(
+        resid, qs, "cluster", _ADC, k, ascending=True, spread=False,
+        cols=["cluster", codes.alias("codes")], id_col=id_col,
+    ).select(*_OUT)
 
 
 def hard_negatives(
@@ -1589,37 +1506,23 @@ def hard_negatives(
     (cos ≥ dup_threshold) filtered BEFORE the rank window, so the top-k
     always holds usable negatives instead of k slots wasted on dups.
 
-    Same plan shape as knn_bruteforce (broadcast query side, spread probe
-    side, per-partition WindowGroupLimit top-k); at scale swap the scored
-    pass for any ANN shortlist (knn_pq/knn_ivfpq) and keep the band
-    filter + window.
+    Same plan shape as knn_bruteforce, the band being the probe kernel's
+    pre-rank `keep` filter; at scale swap the scored pass for any ANN
+    shortlist (knn_pq/knn_ivfpq) and keep the band filter + window.
 
     Output: (query_id, negative_id, cos, rank) — rank 1..k by descending
     cosine below the duplicate band."""
-    from osmesa_spark.util import ensure_parallelism
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    c = ensure_parallelism(corpus, id_col).select(
-        F.col(id_col).alias("negative_id"), F.col(vec_col).alias("cvec")
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("negative_id"))
-        .select(
-            "query_id",
-            "negative_id",
-            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
-        )
-        .where(F.col("cos") < dup_threshold)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("negative_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "negative_id", "cos", "rank")
+    return _probe(
+        corpus, q, None, _COS, k, keep=f"score < {dlit(dup_threshold)}",
+        cols=[F.col(vec_col).alias("cvec")], id_col=id_col,
+    ).select(
+        "query_id",
+        F.col("neighbor_id").alias("negative_id"),
+        F.col("score").alias("cos"),
+        "rank",
     )
 
 
@@ -1708,28 +1611,19 @@ def knn_rp(
     d_out/dim of the full arithmetic; at 100 TB the persisted short
     vectors also shrink the scan surface by the same factor). Same output
     shape as knn_bruteforce."""
-    from osmesa_spark.util import ensure_parallelism
-
     q = random_projection(queries, signs, id_col, vec_col).select(
         F.col(id_col).alias("query_id"), F.col("rp").alias("qvec")
     )
-    # the Exchange sits BETWEEN the projection and the join: Catalyst's
-    # project-collapsing would otherwise inline the d_out-fold projection
-    # into every pair-side reference (dot + norm per query pair — up to
-    # 2·|queries| recomputes per corpus row); expressions don't cross an
-    # exchange, so each row projects exactly once and the shuffle ships
-    # the SHORT vectors
-    c = ensure_parallelism(
-        random_projection(corpus, signs, id_col, vec_col), id_col
-    ).select(F.col(id_col).alias("neighbor_id"), F.col("rp").alias("cvec"))
-    scored = c.join(
-        F.broadcast(q), F.col("query_id") != F.col("neighbor_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.round(cosine("qvec", "cvec"), 6).alias("cos"),
-    )
-    return _topk_by_cos(scored, k).select("query_id", "neighbor_id", "rank")
+    # the kernel's spread Exchange sits BETWEEN the projection and the
+    # join: Catalyst's project-collapsing would otherwise inline the
+    # d_out-fold projection into every pair-side reference (dot + norm
+    # per query pair — up to 2·|queries| recomputes per corpus row);
+    # expressions don't cross an exchange, so each row projects exactly
+    # once and the shuffle ships the SHORT vectors
+    return _probe(
+        random_projection(corpus, signs, id_col, vec_col), q, None, _COS, k,
+        cols=[F.col("rp").alias("cvec")], id_col=id_col,
+    ).select(*_OUT)
 
 
 def kmeans_assign(
@@ -1754,8 +1648,6 @@ def kmeans_assign(
     eval; the HOF form stays compiled. argmin = array_min over
     (dist, cid) structs: lexicographic struct ordering IS the
     first-minimum tie-break."""
-    from osmesa_spark.functions.litexpr import darr
-
     # the vector cast is let-bound: referenced once per centroid, it would
     # otherwise re-allocate the double array k times per row
     v_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
@@ -1817,51 +1709,31 @@ def knn_binary_rerank(
     the exact rerank joins the float vectors back for `shortlist` rows
     per query only. Output: (query_id, neighbor_id, rank), self excluded,
     ties by (cos desc, neighbor_id)."""
-    from osmesa_spark.util import ensure_parallelism
-
-    qwords = _binary_sign_pack_sql(_qn(vec_col), dim)
+    words = _binary_sign_pack_sql(_qn(vec_col), dim)
     q = queries.select(
         F.col(id_col).alias("query_id"),
-        *[F.expr(w).alias(f"qb{i}") for i, w in enumerate(qwords)],
+        *[F.expr(w).alias(f"qb{i}") for i, w in enumerate(words)],
     )
-    c = ensure_parallelism(corpus, id_col)
-    cb = c.select(
-        F.col(id_col).alias("neighbor_id"),
-        *[F.expr(w).alias(f"cb{i}") for i, w in enumerate(qwords)],
+    hamming = " + ".join(
+        f"bit_count(`qb{i}` ^ `cb{i}`)" for i in range(len(words))
     )
-    ham = None
-    for i in range(len(qwords)):
-        t = F.bit_count(F.col(f"qb{i}").bitwiseXOR(F.col(f"cb{i}")))
-        ham = t if ham is None else ham + t
-    wham = Window.partitionBy("query_id").orderBy(
-        F.col("hamming"), F.col("neighbor_id")
-    )
-    short = (
-        cb.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", ham.alias("hamming"))
-        .withColumn("hrank", F.row_number().over(wham))
-        .where(F.col("hrank") <= shortlist)
+    short = _probe(
+        corpus, q, None, hamming, shortlist, ascending=True,
+        cols=[F.expr(w).alias(f"cb{i}") for i, w in enumerate(words)],
+        id_col=id_col,
+    ).select("query_id", "neighbor_id")
+    # the rerank probes the shortlist — already spread and keyed by query —
+    # with its float vectors fetched by id, against the query vectors
+    fetched = short.join(
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
+        ),
+        "neighbor_id",
     )
     qv = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
     )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    rer = (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine("qvec", "cvec"), 6).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _probe(
+        fetched, qv, "query_id", _COS, k, spread=False,
+        cols=["query_id", "cvec"], id_col="neighbor_id",
+    ).select(*_OUT)

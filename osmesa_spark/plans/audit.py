@@ -24,6 +24,10 @@ class PlanAudit:
     nested_loop_joins: int = 0
     cartesian_products: int = 0
     exchanges: int = 0
+    # the split of `exchanges` by kind (a ReusedExchange is in neither)
+    broadcast_exchanges: int = 0
+    shuffle_exchanges: int = 0
+    window_group_limits: int = 0
     python_stages: int = 0
     scans: list[dict] = field(default_factory=list)  # {schema, pushed}
     # optimized-plan Window lines whose spec has NO partition columns —
@@ -79,6 +83,9 @@ def audit_plan(df: DataFrame) -> PlanAudit:
         nested_loop_joins=plan.count("BroadcastNestedLoopJoin"),
         cartesian_products=plan.count("CartesianProduct"),
         exchanges=plan.count("Exchange"),
+        broadcast_exchanges=plan.count("BroadcastExchange"),
+        shuffle_exchanges=len(re.findall(r"(?<![A-Za-z])Exchange\b", plan)),
+        window_group_limits=plan.count("WindowGroupLimit"),
         python_stages=plan.count("ArrowEvalPython")
         + plan.count("MapInPandas")
         + plan.count("BatchEvalPython"),

@@ -2373,6 +2373,29 @@ def q_knn_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.knn_binary_rerank(e, e.where(F.col("vec_id") < 8), k=5)
 
 
+def _recall_at_k(exact: DataFrame, approx: DataFrame, k: int = 5) -> DataFrame:
+    """Per-query recall@k of an approximate probe against the exact one:
+    (query_id, recall_at_k). `exact` has exactly k rows per query, so one
+    left join against the (broadcast) approximate pairs scores every query
+    in a single pass — consuming `exact` twice (a hits join plus a
+    query-list join) would plan its brute-force subtree twice over."""
+    pair = ["query_id", "neighbor_id"]
+    marked = exact.select(*pair).join(
+        F.broadcast(approx.select(*pair).withColumn("hit", F.lit(1))),
+        pair,
+        "left",
+    )
+    return (
+        marked.groupBy("query_id")
+        .agg(
+            F.round(
+                F.sum(F.coalesce("hit", F.lit(0))) / float(k), 2
+            ).alias(f"recall_at_{k}")
+        )
+        .orderBy("query_id")
+    )
+
+
 @register(
     "ann_recall_binary",
     """
@@ -2444,26 +2467,9 @@ def q_knn_binary_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_recall_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
-    bf = sim.knn_bruteforce(e, q, k=5).select("query_id", "neighbor_id")
-    bq = sim.knn_binary_rerank(e, q, k=5, shortlist=8).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        bf.join(bq, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    return (
-        bf.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.round(
-                F.coalesce(F.col("hits"), F.lit(0)) / 5.0, 2
-            ).alias("recall_at_5"),
-        )
-        .orderBy("query_id")
+    return _recall_at_k(
+        sim.knn_bruteforce(e, q, k=5),
+        sim.knn_binary_rerank(e, q, k=5, shortlist=8),
     )
 
 
@@ -2803,50 +2809,10 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     "recall/probe-cost dial (similarity extension)",
 )
 def q_ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from osmesa_spark.util import ensure_parallelism
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
-    qs = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    cs = ensure_parallelism(e, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with("qv", "v", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        ),
-        6,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2"), "neighbor_id")
-    bf = (
-        cs.join(F.broadcast(qs), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", d2.alias("d2"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id")
-    )
-    ivf = sim.knn_ivfpq(e, q, k=5, nprobe=2).select(
-        "query_id", "neighbor_id"
-    )
-    marked = bf.join(
-        F.broadcast(ivf.withColumn("hit", F.lit(1))),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return (
-        marked.groupBy("query_id")
-        .agg(
-            F.round(
-                F.sum(F.coalesce("hit", F.lit(0))) / 5.0, 2
-            ).alias("recall_at_5")
-        )
-        .orderBy("query_id")
+    return _recall_at_k(
+        sim.knn_l2(e, q, k=5), sim.knn_ivfpq(e, q, k=5, nprobe=2)
     )
 
 
@@ -6428,26 +6394,8 @@ def q_neardup_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_recall_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
-    bf = sim.knn_bruteforce(e, q, k=5).select("query_id", "neighbor_id")
-    lsh = sim.knn_lsh(e, q, _LSH_PLANES, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        bf.join(lsh, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    return (
-        bf.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.round(F.coalesce("hits", F.lit(0)) / 5.0, 2).alias(
-                "recall_at_5"
-            ),
-        )
-        .orderBy("query_id")
+    return _recall_at_k(
+        sim.knn_bruteforce(e, q, k=5), sim.knn_lsh(e, q, _LSH_PLANES, k=5)
     )
 
 
@@ -6591,24 +6539,8 @@ def q_knn_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_recall_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
-    bf = sim.knn_bruteforce(e, q, k=5).select("query_id", "neighbor_id")
-    rp = sim.knn_rp(e, q, _RP_SIGNS, k=5).select("query_id", "neighbor_id")
-    hits = (
-        bf.join(rp, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    return (
-        bf.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.round(F.coalesce("hits", F.lit(0)) / 5.0, 2).alias(
-                "recall_at_5"
-            ),
-        )
-        .orderBy("query_id")
+    return _recall_at_k(
+        sim.knn_bruteforce(e, q, k=5), sim.knn_rp(e, q, _RP_SIGNS, k=5)
     )
 
 
@@ -6673,26 +6605,8 @@ def q_ann_recall_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = e.where(F.col("vec_id") < 8)
     tq = trunc.where(F.col("vec_id") < 8)
-    bf = sim.knn_bruteforce(e, q, k=5).select("query_id", "neighbor_id")
-    tr = sim.knn_bruteforce(trunc, tq, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    hits = (
-        bf.join(tr, ["query_id", "neighbor_id"])
-        .groupBy("query_id")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    return (
-        bf.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.round(F.coalesce("hits", F.lit(0)) / 5.0, 2).alias(
-                "recall_at_5"
-            ),
-        )
-        .orderBy("query_id")
+    return _recall_at_k(
+        sim.knn_bruteforce(e, q, k=5), sim.knn_bruteforce(trunc, tq, k=5)
     )
 
 
@@ -6750,54 +6664,10 @@ def q_ann_recall_trunc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
-    # exact squared-L2 top-k baseline (same broadcast/probe shape as
-    # knn_bruteforce; ADC approximates L2, so the reference metric is L2)
-    from osmesa_spark.util import ensure_parallelism
-
-    qs = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"),
-    )
-    cs = ensure_parallelism(e, "vec_id").select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").cast("array<double>").alias("v"),
-    )
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with("qv", "v", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        ),
-        6,
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("d2"), "neighbor_id")
-    bf = (
-        cs.join(F.broadcast(qs), F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", d2.alias("d2"))
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id")
-    )
-    pq = sim.knn_pq_rerank(
-        e, q, k=5, shortlist=50, k_centroids=16
-    ).select("query_id", "neighbor_id")
-    # bf has exactly 5 rows per query, so one left-join against the
-    # (broadcast) PQ result scores recall in a single pass — consuming bf
-    # TWICE (hits join + query-list join) would plan its exact-L2
-    # BroadcastNestedLoopJoin subtree twice over
-    marked = bf.join(
-        F.broadcast(pq.withColumn("hit", F.lit(1))),
-        ["query_id", "neighbor_id"],
-        "left",
-    )
-    return (
-        marked.groupBy("query_id")
-        .agg(
-            F.round(
-                F.sum(F.coalesce("hit", F.lit(0))) / 5.0, 2
-            ).alias("recall_at_5")
-        )
-        .orderBy("query_id")
+    # ADC approximates L2, so the exact reference metric is L2, not cosine
+    return _recall_at_k(
+        sim.knn_l2(e, q, k=5),
+        sim.knn_pq_rerank(e, q, k=5, shortlist=50, k_centroids=16),
     )
 
 
@@ -8098,24 +7968,9 @@ def q_knn_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_recall_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") < 8)
-    bf = sim.knn_bruteforce(e, q, k=5).select("query_id", "neighbor_id")
-    mp = sim.knn_lsh_multiprobe(e, q, _LSH_PLANES, k=5).select(
-        "query_id", "neighbor_id"
-    )
-    hits = bf.join(mp, ["query_id", "neighbor_id"]).groupBy("query_id").agg(
-        F.count(F.lit(1)).alias("hits")
-    )
-    return (
-        bf.select("query_id")
-        .distinct()
-        .join(hits, "query_id", "left")
-        .select(
-            "query_id",
-            F.round(F.coalesce("hits", F.lit(0)) / 5.0, 2).alias(
-                "recall_at_5"
-            ),
-        )
-        .orderBy("query_id")
+    return _recall_at_k(
+        sim.knn_bruteforce(e, q, k=5),
+        sim.knn_lsh_multiprobe(e, q, _LSH_PLANES, k=5),
     )
 
 

@@ -172,6 +172,67 @@ def test_similarity_broadcasts_and_spreads(spark):
         assert a.exchanges >= 1, f"{name}: probe side never repartitioned"
 
 
+# (broadcast, shuffle) exchanges each top-k probe planned before its body
+# was folded into the one probe kernel, on the SF_CORRECT embeddings with
+# queries vec_id < 8 (knn_l2: the exact-L2 baseline that ann_recall_pq and
+# ann_recall_ivfpq wrote inline, a knn_bruteforce-shaped plan). A changed
+# count means the fold moved an expression or a join across an exchange —
+# e.g. knn_rp's projection must stay BELOW its spread.
+PROBE_EXCHANGES = {
+    "knn_bruteforce": (1, 2),
+    "knn_l2": (1, 2),
+    "knn_ivf": (1, 2),
+    "ivf_probe_frozen": (1, 1),
+    "ivf_probe_frozen_unbroadcast": (1, 1),
+    "knn_quantized": (1, 2),
+    "knn_lsh": (1, 2),
+    "knn_lsh_multiprobe": (1, 2),
+    "knn_rp": (1, 2),
+    "knn_pq": (1, 2),
+    "knn_pq_rerank": (3, 3),
+    "knn_ivfpq": (1, 1),
+    "knn_binary_rerank": (3, 2),
+    "hard_negatives": (1, 2),
+    "knn_label_accuracy": (1, 2),
+}
+
+
+@pytest.fixture(scope="module")
+def probe_inputs(spark):
+    from osmesa_spark.operators.similarity import rp_signs
+    from tests.test_knn_probe import ProbeInputs
+
+    e = Q._t(spark, SF_CORRECT, "embeddings")
+    return ProbeInputs(
+        e, e.where("vec_id < 8"), 64, Q._LSH_PLANES, rp_signs(64, d_out=16)
+    )
+
+
+@pytest.mark.parametrize("name", sorted(PROBE_EXCHANGES))
+def test_knn_probe_plan_shape(probe_inputs, name):
+    """Every top-k probe plans all-JVM, prunes its literal-k rank window
+    with WindowGroupLimit, and keeps its exchanges where they were."""
+    from tests.test_knn_probe import PROBES
+
+    a = audit_plan(PROBES[name](probe_inputs))
+    assert a.python_stages == 0, f"{name}: Python stage in the probe plan"
+    assert a.window_group_limits >= 1, f"{name}: rank window not pruned"
+    got = (a.broadcast_exchanges, a.shuffle_exchanges)
+    assert got == PROBE_EXCHANGES[name], (
+        f"{name}: (broadcast, shuffle) exchanges {got}, "
+        f"expected {PROBE_EXCHANGES[name]}"
+    )
+
+
+def test_ann_recall_lsh_job_count(spark):
+    """The benchmark's recall query: one recall tail over the two probes
+    must not launch more jobs than the two hand-written tails it replaced
+    (10 jobs on SF_CORRECT)."""
+    with jobs_launched(spark) as jobs:
+        Q.registry()["ann_recall_lsh"].spark(spark, SF_CORRECT).collect()
+    assert len(jobs) <= 10, f"ann_recall_lsh launched {len(jobs)} jobs"
+
+
 def test_bpe_tokens_stay_jvm_side(spark):
     df = Q.registry()["doc_bpe_tokens"].spark(spark, SF_CORRECT)
     assert_scaleable(df, allow_python=False, max_scan_cols=3)
