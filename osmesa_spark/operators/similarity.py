@@ -775,7 +775,9 @@ def knn_label_accuracy(
         )
         # lazy: both join sides + the verdict join-back sit under ONE
         # action — its first stage materializes the blocks (cache locks
-        # keep it computed once); saves the construction-time job
+        # keep it computed once). Building the operator still launches
+        # one job: AQE materializes the spread's exchange to build the
+        # checkpoint's RDD
         .localCheckpoint(eager=False)
     )
     q = base.select(

@@ -13,20 +13,24 @@ Semantics rebuilt:
   * checkpoint table `(proc_name, sequence)` upsert — DbUtils.saveLocations
     parity (S10/T7)
 
-Backend: a parquet-directory table with atomic directory swap. The merge is
-computed BY SPARK (distributed full-outer merge, same shape as J3); only the
-commit (directory rename) is a driver-side metadata operation, so the
-pattern scales to any table size. With a real warehouse this maps 1:1 onto
-`MERGE INTO` (Delta/Iceberg) or `INSERT ... ON CONFLICT` (JDBC) — the SQL the
-reference runs is documented in UPSERT_SQL below for parity evidence.
+Backend: `VersionedTable`, the one commit every parquet table here uses
+(stats, users, hashtags, errors, and the streaming sketch and manifest).
+A commit stages the whole new table state in a fresh version dir, then
+flips one symlink onto it; that `os.replace` is the only mutation of
+committed state, so a crash at any instant leaves the old or the new
+version, never a mix. The merge is computed BY SPARK (distributed
+group-by-id, same shape as J3); only the flip and the GC are driver-side
+metadata operations, so the pattern scales to any table size. With a real
+warehouse this maps 1:1 onto `MERGE INTO` (Delta/Iceberg) or
+`INSERT ... ON CONFLICT` (JDBC) — the SQL the reference runs is documented
+in UPSERT_SQL below for parity evidence.
 """
 
 from __future__ import annotations
 
-import glob
+import json
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,65 +57,95 @@ WHERE NOT c.augmented_diffs && EXCLUDED.augmented_diffs
 STATS_COLS = ["id", "counts", "measurements", "total_edits", "augmented_diffs"]
 
 
-class ParquetUpsertTable:
-    """A tiny atomic parquet table with reference-parity merge semantics."""
+class VersionedTable:
+    """A parquet table whose every state is one committed version.
+
+    Layout: `<path>/v_<20-digit n>/` holds a version's part files and its
+    `_meta.json` dict (Spark, pyarrow and DuckDB's `*.parquet` glob all
+    skip `_`-prefixed files); `<path>/data` is a relative symlink to the
+    committed version, so `data/` reads as a plain parquet dir.
+
+    `commit` writes `v_<n+1>` and its meta, flips `data` onto it with one
+    `os.replace` of a fresh link (the only mutation of committed state),
+    then removes every other `v_*`. A crash before the flip leaves the old
+    version committed and a staged dir the next commit overwrites or
+    removes; a crash after it leaves the new one. One writer per table."""
 
     def __init__(self, path: str):
         self.path = path
         self.data_dir = os.path.join(path, "data")
 
+    def _current_version(self) -> str | None:
+        """Name of the committed version dir, None while the table is
+        empty."""
+        if not os.path.lexists(self.data_dir):
+            return None
+        return os.readlink(self.data_dir)
+
     def read(self, spark: SparkSession) -> DataFrame | None:
         if not os.path.exists(self.data_dir):
-            # a crash between _commit's two renames leaves `data` absent
-            # and the previous table whole under `_old_*`: roll it back
-            # (the newest one; an older one is a leftover of a crash
-            # after the second rename)
-            olds = glob.glob(os.path.join(self.path, "_old_*"))
-            if not olds:
-                return None
-            os.rename(max(olds, key=os.path.getmtime), self.data_dir)
+            return None
         return spark.read.parquet(self.data_dir)
 
-    def _commit(self, df: DataFrame) -> None:
-        """Write `df` beside the table, then swap it in by two renames
-        (`read` rolls a swap that a crash cut in half back). A successful
-        swap sweeps every staging dir, its own `_old_*` and any `_tmp_*` /
-        `_old_*` a crash left behind (one writer per table)."""
-        tmp = os.path.join(self.path, f"_tmp_{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.data_dir):
-            os.rename(
-                self.data_dir,
-                os.path.join(self.path, f"_old_{uuid.uuid4().hex}"),
-            )
-        os.rename(tmp, self.data_dir)
-        for pattern in ("_tmp_*", "_old_*"):
-            for left in glob.glob(os.path.join(self.path, pattern)):
-                shutil.rmtree(left, ignore_errors=True)
+    def meta(self) -> dict | None:
+        """The committed version's meta dict, None while the table is
+        empty."""
+        if not os.path.exists(self.data_dir):
+            return None
+        with open(os.path.join(self.data_dir, "_meta.json")) as f:
+            return json.load(f)
+
+    def commit(self, df: DataFrame, meta: dict | None = None) -> None:
+        cur = self._current_version()
+        version = f"v_{(int(cur[2:]) if cur else 0) + 1:020d}"
+        stage = os.path.join(self.path, version)
+        df.write.mode("overwrite").parquet(stage)
+        with open(os.path.join(stage, "_meta.json"), "w") as f:
+            json.dump(meta or {}, f)
+            f.flush()
+            os.fsync(f.fileno())
+        # a link a cut flip left behind is replaced, not reused
+        link = self.data_dir + ".tmp"
+        if os.path.lexists(link):
+            os.remove(link)
+        os.symlink(version, link)
+        os.replace(link, self.data_dir)
+        fd = os.open(self.path, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
+        for name in os.listdir(self.path):
+            if name.startswith("v_") and name != version:
+                shutil.rmtree(os.path.join(self.path, name), ignore_errors=True)
+
+
+class ParquetUpsertTable(VersionedTable):
+    """The changesets stats table with reference-parity merge semantics."""
 
     def upsert_stats(self, batch: DataFrame) -> None:
         """Merge a stats micro-batch: sum maps, add total_edits, union
         augmented_diffs — skipping batch rows whose sequences were already
         applied (idempotence guard).
 
-        The guard runs per `premerge_stats` row, before the rows merge per
-        id, as the JDBC sink's row-by-row statement does: a batch that
-        re-delivers an applied sequence and brings a new one for the same
-        changeset skips the first and applies the second. Stored and batch
-        rows meet in one group-by-id (one shuffle); the sequences stored
-        for an id decide which batch parts apply.
+        Stored rows and raw batch rows meet in ONE group-by-id (one
+        shuffle); the sequences stored for an id decide which batch rows
+        apply. The guard runs per batch row, as the JDBC sink's row-by-row
+        statement runs it per `premerge_stats` row: rows with the same
+        sequence set overlap alike, so a batch that re-delivers an applied
+        sequence and brings a new one for the same changeset skips the
+        first and applies the second. Null maps and null total_edits count
+        as nothing, as `premerge_stats`' collect_list/sum count them.
 
         CONTRACT (r10 ADVICE): this method always runs exactly ONE Spark
-        action over `batch`'s plan (the tmp-dir parquet write in _commit)
+        action over `batch`'s plan (the version write in `commit`)
         — callers such as stats_stream's foreachBatch sink attach an
         Observation to the batch and block on Observation.get right after
         this returns, which only terminates because the write executed the
         observed plan. Any future backend that can return without running
         an action over `batch` must keep an equivalent action (or the
         caller must fall back to an explicit agg)."""
-        parts = premerge_stats(batch).select(
-            *STATS_COLS, F.lit(False).alias("stored")
-        )
+        parts = batch.select(*STATS_COLS, F.lit(False).alias("stored"))
         existing = self.read(batch.sparkSession)
         if existing is not None:
             parts = existing.select(
@@ -119,6 +153,12 @@ class ParquetUpsertTable:
             ).unionByName(parts)
         def seqs(p):
             return p["augmented_diffs"]
+
+        def summed(field, value_type):
+            maps = F.transform("take", lambda p: p[field])
+            return sum_map_values(
+                F.filter(maps, lambda m: m.isNotNull()), value_type
+            ).alias(field)
 
         grouped = parts.groupBy("id").agg(
             F.collect_list(F.struct(*STATS_COLS[1:], "stored")).alias("parts")
@@ -134,15 +174,11 @@ class ParquetUpsertTable:
                 | (F.size(F.array_intersect(seqs(p), applied)) == 0),
             ).alias("take"),
         )
-        self._commit(
+        self.commit(
             take.select(
                 "id",
-                sum_map_values(
-                    F.transform("take", lambda p: p["counts"]), "bigint"
-                ).alias("counts"),
-                sum_map_values(
-                    F.transform("take", lambda p: p["measurements"]), "double"
-                ).alias("measurements"),
+                summed("counts", "bigint"),
+                summed("measurements", "double"),
                 F.aggregate(
                     "take",
                     F.lit(0).cast("bigint"),
@@ -157,7 +193,9 @@ class ParquetUpsertTable:
 
 def premerge_stats(batch: DataFrame) -> DataFrame:
     """One row per (id, sorted sequence set) of a stats batch — the unit
-    both stats tables guard. Not per id: collapsing all of an id's
+    the JDBC sink's row-by-row statement guards (`ParquetUpsertTable`
+    applies the same guard per raw row inside its one group-by). Not per
+    id: collapsing all of an id's
     sequences into one row would let the overlap guard discard a NEW
     sequence's edits whenever a replayed sequence rides the same batch
     (at-least-once redelivery with shifted foreachBatch boundaries).
@@ -183,8 +221,6 @@ class CheckpointTable:
         self.path = path
 
     def save(self, proc_name: str, sequence: int) -> None:
-        import json
-
         os.makedirs(self.path, exist_ok=True)
         # temp file + os.replace: a reader (or a crash) never sees a torn
         # checkpoint; the temp name does not end in .json, so readers
@@ -195,8 +231,6 @@ class CheckpointTable:
         os.replace(path + ".tmp", path)
 
     def load(self, proc_name: str) -> int | None:
-        import json
-
         p = os.path.join(self.path, f"{proc_name}.json")
         if not os.path.exists(p):
             return None
@@ -219,7 +253,7 @@ class UsersTable(ParquetUpsertTable):
         )
         existing = self.read(spark)
         if existing is None:
-            self._commit(batch)
+            self.commit(batch)
             return
         e, b = existing.alias("e"), batch.alias("b")
         merged = e.join(b, F.col("e.id") == F.col("b.id"), "full_outer").select(
@@ -227,7 +261,7 @@ class UsersTable(ParquetUpsertTable):
             # batch name wins when present — the UPDATE branch
             F.coalesce(F.col("b.name"), F.col("e.name")).alias("name"),
         )
-        self._commit(merged)
+        self.commit(merged)
 
 
 def _assign_serial_ids(
@@ -286,14 +320,14 @@ class HashtagDictTable(ParquetUpsertTable):
         tags = batch.select(F.lower(F.col("hashtag")).alias("hashtag")).distinct()
         existing = self.read(spark)
         if existing is None:
-            self._commit(_assign_serial_ids(tags, base=0))
+            self.commit(_assign_serial_ids(tags, base=0))
             return self.read(spark)
         new = tags.join(existing, "hashtag", "left_anti")
         if new.isEmpty():
             return existing
         base = existing.agg(F.max("id")).first()[0] or 0
         assigned = _assign_serial_ids(new, base=base)
-        self._commit(existing.unionByName(assigned))
+        self.commit(existing.unionByName(assigned))
         return self.read(spark)
 
 
@@ -331,6 +365,6 @@ class ErrorsTable(ParquetUpsertTable):
             )
             if keyed.isEmpty():
                 return
-            self._commit(existing.unionByName(keyed))
+            self.commit(existing.unionByName(keyed))
         else:
-            self._commit(keyed)
+            self.commit(keyed)

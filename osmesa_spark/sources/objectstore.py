@@ -11,8 +11,10 @@ IO, mirroring the reference's URI-dispatched read/write
     re-compress.
 
 Backends:
-  * `LocalStore` — filesystem; atomic tmp+rename writes; encoding metadata
-    in an in-process table (file:// ignores encoding in the reference too).
+  * `LocalStore` — filesystem; atomic tmp+rename writes; keeps no
+    metadata (file:// ignores encoding in the reference too): `encoding`
+    reads "gzip" off the stored bytes' magic, so any store opened on the
+    root reports it.
   * `MemStore` — named in-memory buckets for tests (moto-style). Lives in
     the creating process only: fine for driver-side unit tests, NOT visible
     across Spark Python workers — use file:// or s3:// for executor writes.
@@ -38,6 +40,10 @@ except Exception:  # pragma: no cover
     HAVE_BOTO3 = False
 
 
+def _is_gzip(raw: bytes) -> bool:
+    return raw[:2] == b"\x1f\x8b"
+
+
 class ObjectStore:
     """get/put/exists/list over opaque byte objects."""
 
@@ -61,20 +67,18 @@ class ObjectStore:
         return None
 
     def get_decoded(self, key: str) -> bytes | None:
-        """get + transparent gunzip when the object was labeled
-        Content-Encoding: gzip — what an HTTP tile client does."""
+        """get + transparent gunzip of a gzip object (a `gzip` label always
+        sits on gzip bytes, so the magic decides) — what an HTTP tile
+        client does."""
         raw = self.get(key)
         if raw is None:
             return None
-        if self.encoding(key) == "gzip" or raw[:2] == b"\x1f\x8b":
-            return gzip.decompress(raw)
-        return raw
+        return gzip.decompress(raw) if _is_gzip(raw) else raw
 
 
 class LocalStore(ObjectStore):
     def __init__(self, root: str):
         self.root = root
-        self._encodings: dict[str, str] = {}
 
     def _path(self, key: str) -> str:
         return os.path.join(self.root, key)
@@ -95,8 +99,6 @@ class LocalStore(ObjectStore):
         with open(tmp, "wb") as fh:
             fh.write(data)
         os.replace(tmp, p)  # readers never observe partial tiles
-        if content_encoding is not None:
-            self._encodings[key] = content_encoding
 
     def list(self, prefix: str = "") -> list[str]:
         out = []
@@ -112,7 +114,7 @@ class LocalStore(ObjectStore):
         return sorted(out)
 
     def encoding(self, key: str) -> str | None:
-        return self._encodings.get(key)
+        return "gzip" if _is_gzip(self.get(key) or b"") else None
 
 
 class MemStore(ObjectStore):

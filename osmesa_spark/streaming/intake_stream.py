@@ -24,7 +24,7 @@ Per arriving file (micro-batch):
          so crash-replay cannot double-append
        * the incremental shard manifest folds the batch in via
          `ManifestTable.merge_batch` (batch-id high-watermark no-op on
-         replay; single-step versioned commit + atomic pointer flip)
+         replay; one versioned commit + atomic link flip)
 
 Scale shape: every stage is per-batch bounded — nothing rescans history;
 dedup state is watermark-bounded; the ratio table is ≤ n_buckets rows and

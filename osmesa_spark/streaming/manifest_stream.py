@@ -14,12 +14,10 @@ micro-batch with the SAME batch_id after a crash, and batch ids are
 strictly increasing — so unlike the replication-sequence sinks (which
 need an applied-set because sequences can interleave), a single high-
 watermark suffices: a batch at or below the committed watermark is a
-no-op. Commit is the same single-step versioned layout as the streaming
-CMS sketch (`sketch_stream.SketchTable`): stage the complete new state
-(manifest parquet + meta JSON) in a fresh version dir, fsync, then
-atomically replace one pointer file — a crash at any instant leaves the
-pointer naming a fully-written version, so the manifest and the
-watermark can never disagree.
+no-op. The manifest and the watermark are one `sinks.upsert.VersionedTable`
+commit (manifest parquet + `{"batch"}` meta staged in a fresh version
+dir, then one atomic link flip), so a crash at any instant leaves a
+fully-written version and the two can never disagree.
 
 Reference frame: the same committed-state discipline as the reference's
 tile/JDBC sinks (osmesa `ChangesetStatsForeachWriter` idempotence model);
@@ -29,9 +27,7 @@ the manifest itself is the training-loader contract from
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,59 +37,24 @@ from osmesa_spark.operators.curation import (
     shard_assignment,
     shard_manifest,
 )
+from osmesa_spark.sinks.upsert import VersionedTable
 
 
-class ManifestTable:
-    """Persisted shard manifest (parquet) + applied-batch watermark (JSON),
-    committed via single-step versioned directories."""
-
-    CURRENT = "CURRENT"
+class ManifestTable(VersionedTable):
+    """Persisted shard manifest, one `VersionedTable` commit per batch:
+    the manifest is the version's parquet and the applied-batch watermark
+    (`{"batch"}`) is its meta, so the two flip together."""
 
     def __init__(self, path: str, n_shards: int = 16, id_col: str = "doc_id",
                  text_col: str = "text"):
-        self.path = path
+        super().__init__(path)
         self.n_shards = n_shards
         self.id_col = id_col
         self.text_col = text_col
-        os.makedirs(path, exist_ok=True)
-
-    def _pointer(self) -> str:
-        return os.path.join(self.path, self.CURRENT)
-
-    def _current_version(self) -> str | None:
-        ptr = self._pointer()
-        if os.path.exists(ptr):
-            with open(ptr) as f:
-                name = f.read().strip()
-            return name or None
-        return None
-
-    def _version_paths(self, version: str) -> tuple[str, str]:
-        base = os.path.join(self.path, version)
-        return os.path.join(base, "manifest"), os.path.join(base, "meta.json")
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        version = self._current_version()
-        if version is None:
-            return None
-        data_dir = self._version_paths(version)[0]
-        if not os.path.exists(data_dir):
-            return None
-        return spark.read.parquet(data_dir)
 
     def last_batch(self) -> int:
-        version = self._current_version()
-        if version is None:
-            return -1
-        meta = self._version_paths(version)[1]
-        with open(meta) as f:
-            return int(json.load(f)["batch"])
-
-    def _gc(self, keep: str) -> None:
-        for name in os.listdir(self.path):
-            if name.startswith("v_") and name != keep:
-                shutil.rmtree(os.path.join(self.path, name),
-                              ignore_errors=True)
+        meta = self.meta()
+        return -1 if meta is None else int(meta["batch"])
 
     def merge_batch(self, batch: DataFrame, batch_id: int) -> None:
         """Fold one micro-batch into the committed manifest; replay of an
@@ -108,22 +69,7 @@ class ManifestTable:
         )
         existing = self.read(spark)
         merged = inc if existing is None else merge_manifests(existing, inc)
-        cur = self._current_version()
-        cur_n = 0 if cur is None else int(cur.split("_")[1])
-        version = f"v_{cur_n + 1:020d}"
-        data_dir, meta = self._version_paths(version)
-        merged.write.mode("overwrite").parquet(data_dir)
-        with open(meta, "w") as f:
-            json.dump({"batch": int(batch_id)}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        ptr_tmp = self._pointer() + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(version)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ptr_tmp, self._pointer())
-        self._gc(keep=version)
+        self.commit(merged, {"batch": int(batch_id)})
 
 
 def run_streaming_manifest(

@@ -19,13 +19,11 @@ cannot double-count.
 
 from __future__ import annotations
 
-import json
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from osmesa_spark.operators.sketches import _cms_pos
+from osmesa_spark.sinks.upsert import VersionedTable
 
 
 def cms_increments(
@@ -57,49 +55,18 @@ def cms_increments(
     )
 
 
-class SketchTable:
-    """Persisted CMS counters (parquet) + the applied-sequence set (JSON).
+class SketchTable(VersionedTable):
+    """Persisted CMS counters, one `VersionedTable` commit per merge: the
+    counters are the version's parquet and the applied-sequence set
+    (`{"watermark", "recent"}`) is its meta.
 
     `merge` drops increments of already-applied sequences BEFORE summing,
     so redelivery is a no-op; the applied set is the same bookkeeping the
     MVT sink keeps per tile, held table-wide here because the sketch is
-    one global object.
-
-    Commits are SINGLE-STEP: each merge writes a complete new version
-    directory (counters parquet + applied.json together) and then
-    atomically replaces one pointer file (`CURRENT`) onto it. A crash at
-    any instant leaves the pointer naming a fully-written version — the
-    counters and the applied set can never disagree, so replay after a
-    crash neither double-counts nor undercounts. Orphaned version
-    directories from interrupted merges are garbage-collected on the next
-    successful commit."""
-
-    CURRENT = "CURRENT"
-
-    def __init__(self, path: str):
-        self.path = path
-
-    # -- versioned-layout plumbing ------------------------------------
-    def _pointer(self) -> str:
-        return os.path.join(self.path, self.CURRENT)
-
-    def _current_version(self) -> str | None:
-        """Name of the committed version dir, or None if the table is
-        empty. Falls back to the pre-versioned flat layout (counters/ +
-        applied.json at the table root) so existing tables keep working;
-        their first merge rewrites them into the versioned layout."""
-        ptr = self._pointer()
-        if os.path.exists(ptr):
-            with open(ptr) as f:
-                name = f.read().strip()
-            return name or None
-        if os.path.exists(os.path.join(self.path, "counters")):
-            return ""  # legacy flat layout: version dir IS the root
-        return None
-
-    def _version_paths(self, version: str) -> tuple[str, str]:
-        base = os.path.join(self.path, version) if version else self.path
-        return os.path.join(base, "counters"), os.path.join(base, "applied.json")
+    one global object. Counters and applied set are staged together and
+    committed by the one link flip, so a crash at any instant leaves them
+    agreeing — replay after a crash neither double-counts nor undercounts;
+    the next commit removes whatever a cut merge staged."""
 
     # bookkeeping bound: the explicit applied set keeps only the newest
     # MAX_RECENT sequences; everything at or below the watermark counts as
@@ -111,49 +78,15 @@ class SketchTable:
     MAX_RECENT = 1000
 
     def _state(self) -> tuple[int, set[int]]:
-        version = self._current_version()
-        if version is None:
+        meta = self.meta()
+        if meta is None:
             return -1, set()
-        meta = self._version_paths(version)[1]
-        if not os.path.exists(meta):
-            return -1, set()
-        with open(meta) as f:
-            data = json.load(f)
-        if isinstance(data, list):  # pre-watermark format
-            return -1, set(data)
-        return data["watermark"], set(data["recent"])
+        return meta["watermark"], set(meta["recent"])
 
     def applied(self) -> set[int]:
         """Explicitly-tracked applied sequences (the recent window only;
         sequences at or below the watermark are applied implicitly)."""
         return self._state()[1]
-
-    def read(self, spark: SparkSession) -> DataFrame | None:
-        version = self._current_version()
-        if version is None:
-            return None
-        data_dir = self._version_paths(version)[0]
-        if not os.path.exists(data_dir):
-            return None
-        return spark.read.parquet(data_dir)
-
-    def _gc(self, keep: str) -> None:
-        """Drop version dirs an interrupted merge left behind, legacy
-        flat-layout files a migration superseded, and the old scheme's
-        _tmp/_old staging dirs. The committed version named by CURRENT is
-        never touched."""
-        import shutil
-
-        for name in os.listdir(self.path):
-            full = os.path.join(self.path, name)
-            stale_version = name.startswith("v_") and name != keep
-            legacy = keep and name in ("counters", "applied.json",
-                                       "_tmp_counters", "_old_counters")
-            if stale_version or legacy:
-                if os.path.isdir(full):
-                    shutil.rmtree(full, ignore_errors=True)
-                else:
-                    os.remove(full)
 
     def merge(self, inc: DataFrame) -> None:
         spark = inc.sparkSession
@@ -186,26 +119,8 @@ class SketchTable:
         dropped = all_applied[: -self.MAX_RECENT]
         if dropped:
             watermark = max(watermark, dropped[-1])
-        cur = self._current_version()
-        cur_n = 0 if cur in (None, "") else int(cur.split("_")[1])
-        version = f"v_{cur_n + 1:020d}"
-        data_dir, meta = self._version_paths(version)
-        # stage the ENTIRE new state (counters + applied set) in the new
-        # version dir, fsync the meta, then flip the pointer atomically —
-        # the only mutation of committed state is one os.replace
-        merged.write.mode("overwrite").parquet(data_dir)
-        with open(meta, "w") as f:
-            json.dump({"watermark": watermark, "recent": kept}, f)
-            f.flush()
-            os.fsync(f.fileno())
+        self.commit(merged, {"watermark": watermark, "recent": kept})
         fresh.unpersist()
-        ptr_tmp = self._pointer() + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(version)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ptr_tmp, self._pointer())
-        self._gc(keep=version)
 
     def estimates(self, keys: DataFrame, key_col: str,
                   depth: int = 4, width: int = 512) -> DataFrame:

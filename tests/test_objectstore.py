@@ -35,13 +35,28 @@ def test_memstore_roundtrip_and_encoding():
 
 def test_localstore_atomic_and_list(tmp_path):
     s = LocalStore(str(tmp_path))
-    s.put("z/1/2.mvt.gz", b"abc", content_encoding="gzip")
-    assert s.get("z/1/2.mvt.gz") == b"abc"
+    payload = gzip.compress(b"abc")
+    s.put("z/1/2.mvt.gz", payload, content_encoding="gzip")
+    assert s.get("z/1/2.mvt.gz") == payload
     assert s.encoding("z/1/2.mvt.gz") == "gzip"
     assert s.list() == ["z/1/2.mvt.gz"]
     assert not any(
         p.name.endswith(".tmp") for p in tmp_path.rglob("*") if p.is_file()
     ), "tmp file left behind — write not atomic"
+
+
+def test_localstore_encoding_survives_a_fresh_store(tmp_path):
+    """A file root keeps no metadata: the gzip label a tile upsert put is
+    read back off the stored bytes by a store opened afterwards."""
+    root = str(tmp_path / "pyramid")
+    mvt.upsert_tile_multi(root, 3, 1, 2, {100: [_feat(7, 5)]}, "density")
+    store, prefix = open_store(root)
+    key = join_key(prefix, "3/1/2.mvt.gz")
+    assert store.get(key) is not None
+    assert store.encoding(key) == "gzip"
+    store.put("plain", b"abc")
+    assert store.encoding("plain") is None
+    assert store.encoding("missing") is None
 
 
 def test_open_store_dispatch(tmp_path):

@@ -887,3 +887,41 @@ def test_changeset_stats_construction_launches_no_jobs(spark, tmp_path):
     with jobs_launched(spark) as jobs:
         stats.changeset_stats(history, changesets, countries=countries)
     assert not jobs, f"construction launched {len(jobs)} jobs"
+
+
+def test_stats_upsert_is_one_shuffle(spark, tmp_path, monkeypatch):
+    """The parquet stats upsert merges the stored table and a batch in ONE
+    group-by-id: its write plan has exactly one shuffle exchange. The
+    overlap guard runs per batch row inside that group-by; a separate
+    (id, sequences) premerge aggregation would add a second exchange."""
+    from pyspark.sql import DataFrameWriter
+
+    from osmesa_spark.sinks.upsert import ParquetUpsertTable
+
+    schema = (
+        "id long, counts map<string,bigint>, "
+        "measurements map<string,double>, total_edits long, "
+        "augmented_diffs array<int>"
+    )
+    table = ParquetUpsertTable(str(tmp_path / "stats"))
+    table.upsert_stats(spark.createDataFrame(
+        [(7, {"roads_added": 1}, {"road_km_added": 0.5}, 1, [1001])], schema
+    ))
+    written = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *a, **kw):
+        written.append(self._df)
+        return real(self, path, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    table.upsert_stats(spark.createDataFrame(
+        [
+            (7, {"roads_added": 2}, {"road_km_added": 1.0}, 2, [1002]),
+            (8, {"pois_added": 1}, {}, 1, [1002]),
+        ],
+        schema,
+    ))
+    (df,) = written
+    shuffles = audit_plan(df).shuffle_exchanges
+    assert shuffles == 1, f"the upsert's write plan has {shuffles} shuffles"

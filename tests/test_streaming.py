@@ -577,44 +577,161 @@ def test_users_table_latest_name_wins(spark, tmp_path):
     assert rows == {1: "alice_renamed", 2: "bob", 3: "carol"}
 
 
-def test_table_swap_cut_by_a_crash_rolls_back(spark, tmp_path, monkeypatch):
-    """A crash between the commit's two renames (`data` → `_old_*`,
-    `_tmp_*` → `data`) must not lose the table: the next read rolls the
-    swap back, and the next upsert merges into the old rows instead of
-    replacing the table with one batch."""
-    import os
+class _Users:
+    """A `UsersTable` and its three deliveries."""
 
-    from osmesa_spark.sinks.upsert import UsersTable
+    def __init__(self, spark, path):
+        from osmesa_spark.sinks.upsert import UsersTable
 
-    t = UsersTable(str(tmp_path / "users"))
-    t.upsert_users(
-        spark.createDataFrame([(1, "alice"), (2, "bob")], "id long, name string")
-    )
-    real_rename, calls = os.rename, []
+        self.spark, self.table = spark, UsersTable(path)
 
-    def crash_on_second_rename(src, dst):
-        calls.append(src)
-        if len(calls) == 2:
-            raise OSError("crash between the swap's renames")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_on_second_rename)
-    with pytest.raises(OSError):
-        t.upsert_users(
-            spark.createDataFrame([(3, "carol")], "id long, name string")
+    def deliver(self, i):
+        rows = [[(1, "alice"), (2, "bob")], [(3, "carol")], [(4, "dan")]][i]
+        self.table.upsert_users(
+            self.spark.createDataFrame(rows, "id long, name string")
         )
+
+
+class _Sketch:
+    """A `SketchTable` fed one sequence per delivery."""
+
+    def __init__(self, spark, path):
+        from osmesa_spark.streaming.sketch_stream import SketchTable
+
+        self.spark, self.table = spark, SketchTable(path)
+
+    def deliver(self, i):
+        from osmesa_spark.streaming.sketch_stream import cms_increments
+
+        df = self.spark.createDataFrame(
+            [(i + 1, f"user{j % (i + 2)}") for j in range(9)],
+            "sequence long, uid string",
+        )
+        self.table.merge(cms_increments(df, "uid", depth=2, width=16))
+
+
+class _Manifest:
+    """A `ManifestTable` fed one micro-batch of ten docs per delivery."""
+
+    def __init__(self, spark, path):
+        from osmesa_spark.streaming.manifest_stream import ManifestTable
+
+        self.spark, self.table = spark, ManifestTable(path, n_shards=4)
+
+    def deliver(self, i):
+        docs = self.spark.range(10 * i, 10 * i + 10).select(
+            F.col("id").alias("doc_id"),
+            F.concat(F.lit("doc "), F.col("id")).alias("text"),
+        )
+        self.table.merge_batch(docs, batch_id=i)
+
+
+_KINDS = {"users": _Users, "sketch": _Sketch, "manifest": _Manifest}
+
+
+def _snapshot(kind):
+    """(rows, meta) as a fresh table object on the same path reads them."""
+    fresh = type(kind.table)(kind.table.path)
+    rows = sorted(tuple(r) for r in fresh.read(kind.spark).collect())
+    return rows, fresh.meta()
+
+
+@pytest.fixture(scope="module")
+def uncut_states(spark, tmp_path_factory):
+    """Per kind, the snapshots of an uncut table after each of its three
+    deliveries, built on first use."""
+    states: dict = {}
+
+    def get(name):
+        if name not in states:
+            kind = _KINDS[name](spark, str(tmp_path_factory.mktemp(name)))
+            states[name] = []
+            for i in range(3):
+                kind.deliver(i)
+                states[name].append(_snapshot(kind))
+        return states[name]
+
+    return get
+
+
+@pytest.mark.parametrize("step", ["write", "meta", "link", "replace", "gc"])
+@pytest.mark.parametrize("name", sorted(_KINDS))
+def test_commit_cut_by_a_crash_reads_old_or_new(
+    spark, tmp_path, monkeypatch, uncut_states, name, step
+):
+    """A crash cuts the second commit of a table of each kind at one step
+    of `VersionedTable.commit`: right after the version write, in the
+    middle of the meta write (a torn `_meta.json`), right after the link
+    creation, right after the `os.replace` flip, or before the GC. A fresh
+    table object then reads exactly the old rows and meta (cut before the
+    flip) or exactly the new ones (cut after it), never a mix; the
+    cut delivery's replay and a further delivery then commit, leaving
+    exactly one version dir and no link leftover."""
+    import json
+    import os
+    import shutil
+
+    from pyspark.sql import DataFrameWriter
+
+    old, new, final = uncut_states(name)
+    kind = _KINDS[name](spark, str(tmp_path / "table"))
+    kind.deliver(0)
+    assert _snapshot(kind) == old
+    path = kind.table.path
+
+    def mine(p):
+        return str(p).startswith(path)
+
+    def after(real):
+        """`real`, dying right after it acts on a path of the table (its
+        second argument: the write's path, the link's name, the flip's
+        target)."""
+        def cut(*a, **kw):
+            out = real(*a, **kw)
+            if mine(a[1]):
+                raise OSError(f"crash after the {step} step")
+            return out
+        return cut
+
+    if step == "write":
+        monkeypatch.setattr(DataFrameWriter, "parquet",
+                            after(DataFrameWriter.parquet))
+    elif step == "meta":
+        real_dump = json.dump
+
+        def torn(obj, f, *a, **kw):
+            if not mine(getattr(f, "name", "")):
+                return real_dump(obj, f, *a, **kw)
+            f.write(json.dumps(obj)[:3])
+            raise OSError("crash in the meta write")
+
+        monkeypatch.setattr(json, "dump", torn)
+    elif step == "link":
+        monkeypatch.setattr(os, "symlink", after(os.symlink))
+    elif step == "replace":
+        monkeypatch.setattr(os, "replace", after(os.replace))
+    else:
+        real_rmtree = shutil.rmtree
+
+        def dies(p, *a, **kw):
+            if mine(p):
+                raise OSError("crash before the GC")
+            return real_rmtree(p, *a, **kw)
+
+        monkeypatch.setattr(shutil, "rmtree", dies)
+    with pytest.raises(OSError, match="crash"):
+        kind.deliver(1)
     monkeypatch.undo()
-    assert not os.path.exists(t.data_dir)  # the crash left the swap cut
-    assert any(n.startswith("_tmp_") for n in os.listdir(t.path))
-    rows = {r["id"]: r["name"] for r in t.read(spark).collect()}
-    assert rows == {1: "alice", 2: "bob"}
-    t.upsert_users(spark.createDataFrame([(3, "carol")], "id long, name string"))
-    rows = {r["id"]: r["name"] for r in t.read(spark).collect()}
-    assert rows == {1: "alice", 2: "bob", 3: "carol"}
-    # a successful swap sweeps the `_tmp_*` copy the cut one left behind
-    t.upsert_users(spark.createDataFrame([(4, "dan")], "id long, name string"))
-    assert sorted(os.listdir(t.path)) == ["data"]
-    assert len(t.read(spark).collect()) == 4
+
+    flipped = step in ("replace", "gc")
+    assert _snapshot(kind) == (new if flipped else old)
+    kind.deliver(1)
+    assert _snapshot(kind) == new
+    kind.deliver(2)
+    assert _snapshot(kind) == final
+    names = os.listdir(path)
+    assert len([n for n in names if n.startswith("v_")]) == 1, names
+    assert "data.tmp" not in names
 
 
 def test_parquet_and_jdbc_tables_guard_the_same_batch_alike(spark, tmp_path):
@@ -1122,50 +1239,6 @@ def test_sketch_table_commit_is_atomic(spark, tmp_path):
     # exactly one committed version dir remains next to CURRENT
     versions = [n for n in os.listdir(tbl.path) if n.startswith("v_")]
     assert len(versions) == 1
-
-
-def test_sketch_table_migrates_legacy_layout(spark, tmp_path):
-    """A table written by the pre-versioned flat layout (counters/ +
-    applied.json at the root) is readable as-is, and its first merge
-    rewrites it into the versioned layout without changing semantics."""
-    import json as _json
-    import os
-
-    from osmesa_spark.streaming.sketch_stream import SketchTable, cms_increments
-
-    path = str(tmp_path / "legacy_table")
-
-    def batch_for(seq: int):
-        df = spark.createDataFrame(
-            [(seq, f"user{i % 3}") for i in range(9)],
-            "sequence long, uid string",
-        )
-        return cms_increments(df, "uid", depth=2, width=16)
-
-    # hand-write the legacy layout: counters parquet + flat applied.json
-    batch_for(1).groupBy("row", "pos").agg(
-        F.sum("inc").alias("cnt")
-    ).write.parquet(os.path.join(path, "counters"))
-    with open(os.path.join(path, "applied.json"), "w") as f:
-        _json.dump({"watermark": -1, "recent": [1]}, f)
-
-    tbl = SketchTable(path)
-    assert tbl._state() == (-1, {1})
-    legacy = {(r["row"], r["pos"]): r["cnt"]
-              for r in tbl.read(spark).collect()}
-
-    tbl.merge(batch_for(1))  # already applied: no-op, layout unchanged
-    assert {(r["row"], r["pos"]): r["cnt"]
-            for r in tbl.read(spark).collect()} == legacy
-
-    tbl.merge(batch_for(2))  # first real merge migrates to versioned
-    assert os.path.exists(os.path.join(path, "CURRENT"))
-    assert not os.path.exists(os.path.join(path, "applied.json"))
-    after = {(r["row"], r["pos"]): r["cnt"]
-             for r in tbl.read(spark).collect()}
-    # one sequence = 9 rows × depth 2 = 18 increments
-    assert sum(after.values()) == sum(legacy.values()) + 18
-    assert tbl._state()[1] == {1, 2}
 
 
 def test_streaming_observe_metrics_surface_in_progress(spark, dirs, tmp_path):
@@ -2033,3 +2106,54 @@ def test_stats_with_deadletter_exactly_once_across_restart(spark, tmp_path):
     assert got == want
     assert sum(e for e, _ in got.values()) == good.count()
     assert ErrorsTable(errors_path).read(spark).count() == injected
+
+
+def test_committed_tables_read_at_rest(spark, tmp_path):
+    """The at-rest paths outside readers use — the benchmark's catch-up
+    checks and the reference's lag monitor — read the committed rows after
+    one stats + dead-letter micro-batch: the stats table through
+    `data_dir` (pyarrow) and `stats/data/*.parquet` (DuckDB), the errors
+    table through `errors/data` (pyarrow), and the checkpoint row as
+    `_checkpoints/<proc>.json`."""
+    import json
+    import os
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    drop, root = tmp_path / "drop", tmp_path / "root"
+    write_augdiff_dropdir(str(drop), n_sequences=1, per_seq=30, corrupt_every=7)
+    stats_q, _ = S.run_streaming_stats_with_deadletter(
+        R.read_augmented_diffs(spark, str(drop), streaming=True),
+        str(root / "stats"),
+        str(root / "errors"),
+        str(tmp_path / "ckpt"),
+        countries=COUNTRIES,
+    )
+    try:
+        stats_q.processAllAvailable()
+    finally:
+        stats_q.stop()
+
+    table = ParquetUpsertTable(str(root / "stats"))
+    committed = sorted(
+        (r["id"], r["total_edits"]) for r in table.read(spark).collect()
+    )
+    assert sum(e for _, e in committed) == 30
+    at_rest = pq.read_table(table.data_dir, columns=["id", "total_edits"])
+    assert sorted(zip(*at_rest.to_pydict().values())) == committed
+    glob = os.path.join(root, "stats", "data", "*.parquet")
+    assert sorted(duckdb.sql(
+        f"SELECT id, total_edits FROM read_parquet('{glob}')"
+    ).fetchall()) == committed
+    _, dead = R.split_errors(R.read_augmented_diffs(spark, str(drop)))
+    want = {(r["sequence"], r["payload"]) for r in dead.collect()}
+    errors = pq.read_table(os.path.join(root, "errors", "data"))
+    got = errors.select(["sequence", "payload"]).to_pydict()
+    assert errors.num_rows == len(want) > 0
+    assert set(zip(got["sequence"], got["payload"])) == want
+    with open(os.path.join(root, "stats", "_checkpoints",
+                           "augmented-diff-stats.json")) as f:
+        assert json.load(f) == {
+            "proc_name": "augmented-diff-stats", "sequence": 1000
+        }
