@@ -292,7 +292,7 @@ def measure_streaming_minutely_batch(spark) -> float:
     """BASELINE.md target 3 (<60 s minutely batch), measured as an actual
     stream, not inferred from batch numbers: one augmented-diff sequence of
     4000 features lands in a drop-dir; wall-clock covers readStream pickup →
-    dead-letter split → watermarked geocoded stats rollup → idempotent
+    dead-letter split → geocoded stats rollup → idempotent
     parquet upsert + checkpoint row, i.e. the full StreamingChangesetStats
     ingest chain. 4000 elements/minute is at the high end of real minutely
     replication traffic, so this is the conservative SLA proxy."""
@@ -308,10 +308,11 @@ def measure_streaming_minutely_batch(spark) -> float:
     try:
         drop = os.path.join(base, "augdiffs")
         write_augdiff_dropdir(drop, n_sequences=1, per_seq=4000, corrupt_every=97)
-        # the rollup is a 0-second-watermark append aggregation: sequence
-        # 1000's groups finalize when sequence 1001's event time arrives —
-        # exactly how a live minutely feed behaves. Drop a 1-row follow-on
-        # sequence so the measured cycle includes the flush.
+        # the stream is stateless: the upsert sink rolls up each bounded
+        # micro-batch, so sequence 1000 commits in the batch that reads it
+        # and needs no later sequence to finalize. The 1-row follow-on
+        # sequence is kept so the measured cycle stays comparable across
+        # rounds.
         with open(os.path.join(drop, "1001.jsonl"), "w") as f:
             f.write(
                 json.dumps({

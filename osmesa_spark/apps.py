@@ -207,8 +207,8 @@ def footprint(
     to an allow-list fetched via `read_text_lines`.
 
     Output: (entity, zoom, abs_col, abs_row, value) for zooms
-    base_zoom..0 — the faceted pyramid (one partial-agg shuffle per level,
-    facet key rides the same exchange). For the reference's vector-tile
+    base_zoom..0 — the keyed `point_pyramid` (the entity key rides both
+    of its partial-agg shuffles). For the reference's vector-tile
     output, `vectorgrid.vectorize(..., key_cols=["entity"])` it and feed
     `sinks.mvt.write_tile_pyramid_grouped` with `key_col="entity"` and a
     `sequence` column (`F.lit(s)` for a one-off run): one tile tree per
@@ -216,11 +216,7 @@ def footprint(
     from osmesa_spark.functions.text import changeset_hashtags
     from osmesa_spark.operators import vectorgrid as VG
 
-    nodes = history.where(
-        (F.col("type") == "node")
-        & F.col("lat").isNotNull()
-        & F.col("lon").isNotNull()
-    )
+    nodes = VG.located_nodes(history)
     if kind == "user":
         pts = nodes.select(F.col("uid").alias("entity"), "lon", "lat")
     elif kind == "hashtag":
@@ -239,10 +235,7 @@ def footprint(
         # the corpus — no forced broadcast; optimizer decides by size
     else:
         raise ValueError(f"unknown footprint kind: {kind!r}")
-    base = VG.tile_points(
-        pts, zoom=base_zoom, cells=cells, key_cols=["entity"]
-    )
-    return VG.pyramid(base, base_zoom=base_zoom, key_cols=["entity"])
+    return VG.point_pyramid(pts, base_zoom, cells, keys=["entity"])
 
 
 def changeset_stats_app(
@@ -267,13 +260,7 @@ def edit_histogram_app(
     density pyramid (unfaceted)."""
     from osmesa_spark.operators import vectorgrid as VG
 
-    nodes = history.where(
-        (F.col("type") == "node")
-        & F.col("lat").isNotNull()
-        & F.col("lon").isNotNull()
-    )
-    base = VG.tile_points(nodes, zoom=base_zoom, cells=cells)
-    return VG.pyramid(base, base_zoom=base_zoom)
+    return VG.point_pyramid(VG.located_nodes(history), base_zoom, cells)
 
 
 def tile_updater(
@@ -357,13 +344,8 @@ def generate_vt_zips(
     from osmesa_spark.operators import vectorgrid as VG
     from osmesa_spark.sinks.mvt import encode_tiles, save_pyramid_in_zips
 
-    pts = history.where(
-        (F.col("type") == "node")
-        & F.col("lat").isNotNull()
-        & F.col("lon").isNotNull()
-    ).select("lon", "lat")
-    base = VG.tile_points(pts, zoom=base_zoom, cells=cells)
-    vect = VG.vectorize(VG.pyramid(base, base_zoom=base_zoom), cells=cells)
+    pyr = VG.point_pyramid(VG.located_nodes(history), base_zoom, cells)
+    vect = VG.vectorize(pyr, cells=cells)
     encoded = encode_tiles(vect, cells=cells)
     return {"zips": save_pyramid_in_zips(encoded, root)}
 

@@ -1,27 +1,31 @@
-"""Vector-grid tile pipeline: tile → rasterize → pyramid → vectorize.
+"""Vector-grid tile pipeline: located points → pyramid → vectorize.
 
 Parity target: the typed-Dataset chain in
 `src/analytics/src/main/scala/osmesa/analytics/vectorgrid/Implicits.scala`
 (G1 tile :57-140, G2 rasterize :351-408, G3 downsample :188-220,
 G4 merge :154-179, G5 pyramid :145-152, G6 vectorize :222-244) and its
-drivers `EditHistogram.scala` / `Footprints.scala`.
+drivers `EditHistogram.scala` / `Footprints.scala`. Every edit-activity
+tile set — the batch histogram, footprint and GenerateVT apps and the
+four streaming tile twins — is `point_pyramid` (G1–G5) then, where tiles
+are written, `vectorize` (G6).
 
 Spark-first redesign — the reference keeps a `Map[Long,Int]` sparse tile per
 row and merges tiles in `mapGroups` lambdas (opting out of Catalyst,
 SURVEY §3.3). We instead keep the raster in **long format**: one row per
-non-zero cell `(zoom, tx, ty, cell_col, cell_row, value)`. Consequences:
+non-zero cell `(zoom, abs_col, abs_row, value)`. Consequences:
 
   * rasterize/merge/downsample collapse to `groupBy(...).sum(...)` — fully
     codegen'd, partially aggregated map-side, no opaque lambdas;
   * downsample is pure integer math on absolute cell coordinates
-    (`abs >> dz`), so a pyramid level is ONE hash-agg off the previous —
-    data volume shrinks ~4× per level, and the shuffle key
-    (zoom, tile, cell) is uniformly distributed by construction;
-  * the sparse map-per-tile shape only materializes at the MVT encode
-    boundary (`to_sparse_tiles`), mirroring `RasterTileWithKey`
-    (`vectorgrid/package.scala:70-84`) for the sink.
+    (`abs >> dz`), so every pyramid level comes out of ONE hash-agg over
+    the fanned-out base cells, and the shuffle key (zoom, cell) is
+    uniformly distributed by construction;
+  * the per-tile cell list only materializes at the MVT sink boundary
+    (`sinks.mvt._group_cells`: one row per tile with its cell structs),
+    the role `RasterTileWithKey` (`vectorgrid/package.scala:70-84`)
+    plays in the reference.
 
-Default geometry matches the reference: 128×128 cells, base zoom 10
+Default geometry matches the reference: 128×128 cells
 (`VectorGrid.scala:21-27`); footprints profile 512 cells / zoom 14
 (`Footprints.scala:24-25`).
 """
@@ -29,103 +33,71 @@ Default geometry matches the reference: 128×128 cells, base zoom 10
 from __future__ import annotations
 
 import math
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from osmesa_spark.functions import geo
 
 BASE_CELLS = 128
-BASE_ZOOM = 10
 
 
-def tile_points(
-    df: DataFrame,
-    zoom: int = BASE_ZOOM,
-    cells: int = BASE_CELLS,
-    lon_col: str = "lon",
-    lat_col: str = "lat",
+def located_nodes(df: DataFrame) -> DataFrame:
+    """The point source of every edit pyramid: node versions that carry
+    coordinates (`type == 'node'`, lat and lon both set)."""
+    return df.where(
+        (F.col("type") == "node")
+        & F.col("lat").isNotNull()
+        & F.col("lon").isNotNull()
+    )
+
+
+def point_pyramid(
+    points: DataFrame,
+    zoom: int,
+    cells: int,
+    keys: Sequence[str] = (),
     weight_col: str | None = None,
-    key_cols: list[str] | None = None,
 ) -> DataFrame:
-    """G1+G2 fast path for points: assign (zoom, tx, ty, ccol, crow) and sum
-    weights per cell — `x/y` are Web-Mercator unit coordinates so the cell is
-    `floor(unit * 2^zoom * cells) mod cells`.
+    """G1+G2+G5 for points: every zoom level `zoom..0` of the per-cell
+    weight sums, as (keys…, zoom, abs_col, abs_row, value).
 
-    `key_cols` facets the histogram per entity (user id, hashtag, …) — the
-    FacetedEditHistogram/Footprint shape: one extra grouping key, same
-    single partial-agg shuffle."""
-    keys = list(key_cols or [])
+    Rasterize: `lon`/`lat` map to Web-Mercator unit coordinates, the
+    absolute cell is `floor(unit * 2^zoom * cells)` and one group-by sums
+    the weights (1 per point without `weight_col`) per cell. `keys`
+    facets the histogram per entity (sequence, user id, hashtag, facet) —
+    the FacetedEditHistogram/Footprint shape: extra grouping keys on the
+    same partial-agg shuffle.
+
+    Pyramid: each base cell fans out to its zoom+1 ancestors (`explode`
+    over the zoom delta — a no-shuffle generator, ancestor = `abs >> dz`),
+    then ONE group-by sums every level. One exchange per level would cost
+    more in per-stage scheduling and first-run codegen than in data at
+    every measured size. Shuffle volume stays bounded: the fan-out is
+    collapsed map-side by the partial aggregation (ancestor keys repeat
+    within a task), so the second exchange carries about
+    Σ_z |level z| ≈ 1.33× the base cells."""
+    keys = list(keys)
     n_abs = float((1 << zoom) * cells)
-    ux = geo.lon_to_unit(F.col(lon_col))
-    uy = geo.lat_to_unit(F.col(lat_col))
-    abs_col = F.least(
-        F.greatest(F.floor(ux * n_abs), F.lit(0)), F.lit(n_abs - 1)
-    ).cast("bigint")
-    abs_row = F.least(
-        F.greatest(F.floor(uy * n_abs), F.lit(0)), F.lit(n_abs - 1)
-    ).cast("bigint")
+
+    def cell(unit: Column) -> Column:
+        return F.least(
+            F.greatest(F.floor(unit * n_abs), F.lit(0)), F.lit(n_abs - 1)
+        ).cast("bigint")
+
     w = F.col(weight_col) if weight_col else F.lit(1)
-    keyed = df.select(
-        *keys,
-        F.lit(zoom).alias("zoom"),
-        abs_col.alias("abs_col"),
-        abs_row.alias("abs_row"),
-        w.cast("bigint").alias("value"),
-    )
-    return (
-        keyed.groupBy(*keys, "zoom", "abs_col", "abs_row")
-        .agg(F.sum("value").alias("value"))
-    )
-
-
-def downsample(
-    raster: DataFrame, dz: int = 1, key_cols: list[str] | None = None
-) -> DataFrame:
-    """G3: parent level(s) — absolute cell coords shift right by dz, values
-    sum (reference resamples with Sum, Implicits.scala:188-220)."""
-    keys = list(key_cols or [])
-    return (
-        raster.select(
+    base = (
+        points.select(
             *keys,
-            (F.col("zoom") - dz).alias("zoom"),
-            F.shiftrightunsigned("abs_col", dz).alias("abs_col"),
-            F.shiftrightunsigned("abs_row", dz).alias("abs_row"),
-            "value",
+            F.lit(zoom).alias("zoom"),
+            cell(geo.lon_to_unit(F.col("lon"))).alias("abs_col"),
+            cell(geo.lat_to_unit(F.col("lat"))).alias("abs_row"),
+            w.cast("bigint").alias("value"),
         )
         .groupBy(*keys, "zoom", "abs_col", "abs_row")
         .agg(F.sum("value").alias("value"))
     )
-
-
-def pyramid(
-    base: DataFrame,
-    base_zoom: int = BASE_ZOOM,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """G5: all zoom levels base_zoom..0 as one DataFrame.
-
-    INPUT CONTRACT (r10 ADVICE): `base` must hold rows whose `zoom`
-    column equals `base_zoom` and must already be aggregated one row per
-    (keys, zoom, abs_col, abs_row) — the level count derives from each
-    row's `zoom` value (base_zoom is the documented expectation, not a
-    clamp), and the single groupBy below SUMS the base level together
-    with its ancestors, so un-aggregated duplicate base rows would be
-    summed rather than passed through. Every in-repo caller builds `base`
-    with a per-cell aggregation at base_zoom.
-
-    Single-pass shape: each base cell fans out to its base_zoom+1
-    ancestors (`explode` over the zoom delta — a no-shuffle generator),
-    then ONE groupBy sums every level together. The chained-halving
-    union this replaces built base_zoom+1 plan branches with one
-    hash-agg exchange per level (66 exchanges at zoom 10 with the
-    branch prefixes); per-stage scheduling plus first-run codegen of
-    that plan dominated the data cost at every measured size. Shuffle
-    volume stays bounded: the fan-out is collapsed map-side by the
-    partial aggregation (ancestor keys repeat within a task), so the
-    exchange carries about Σ_z |level z| ≈ 1.33× the base cells —
-    the same bytes the chained version moved across its 11 stages."""
-    keys = list(key_cols or [])
     fan = base.select(
         *keys,
         "zoom",
@@ -149,17 +121,20 @@ def pyramid(
     )
 
 
-def with_tile_coords(
+def vectorize(
     raster: DataFrame,
     cells: int = BASE_CELLS,
     key_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Split absolute cell coords into (tx, ty, ccol, crow). cells must be a
-    power of two; tiles coarser than one cell collapse to tile (0,0).
-    `key_cols` carries facet/entity columns through unchanged."""
+    """G6: non-zero cells → features with Z-order `__id` per tile
+    (Implicits.scala:222-244; z-index :228-238). Absolute cell coords
+    split into (tx, ty, ccol, crow); cells must be a power of two, and
+    tiles coarser than one cell collapse to tile (0,0). `key_cols` carries
+    facet/entity columns through unchanged (faceted pyramid shape)."""
+    keys = key_cols or []
     bits = int(math.log2(cells))
-    return raster.select(
-        *(key_cols or []),
+    tiled = raster.select(
+        *keys,
         "zoom",
         F.shiftrightunsigned("abs_col", bits).alias("tx"),
         F.shiftrightunsigned("abs_row", bits).alias("ty"),
@@ -167,20 +142,8 @@ def with_tile_coords(
         (F.col("abs_row") % cells).alias("crow"),
         "value",
     )
-
-
-def vectorize(
-    raster: DataFrame,
-    cells: int = BASE_CELLS,
-    key_cols: list[str] | None = None,
-) -> DataFrame:
-    """G6: non-zero cells → features with Z-order `__id` per tile
-    (Implicits.scala:222-244; z-index :228-238). `key_cols` carries
-    facet/entity columns through unchanged (faceted pyramid shape)."""
-    bits = int(math.log2(cells))
-    tiled = with_tile_coords(raster, cells, key_cols=key_cols)
     return tiled.select(
-        *(key_cols or []),
+        *keys,
         "zoom",
         "tx",
         "ty",
@@ -188,27 +151,4 @@ def vectorize(
         "ccol",
         "crow",
         "value",
-    )
-
-
-def to_sparse_tiles(raster: DataFrame, cells: int = BASE_CELLS) -> DataFrame:
-    """Assemble the reference's RasterTileWithKey shape for the MVT sink:
-    one row per (zoom, tx, ty) with cells as map<bigint,bigint> keyed by
-    row-major index (vectorgrid/package.scala:70-84)."""
-    tiled = with_tile_coords(raster, cells)
-    return (
-        tiled.select(
-            "zoom",
-            "tx",
-            "ty",
-            (F.col("crow") * cells + F.col("ccol")).alias("idx"),
-            "value",
-        )
-        .groupBy("zoom", "tx", "ty")
-        .agg(
-            F.map_from_entries(
-                F.array_sort(F.collect_list(F.struct("idx", "value")))
-            ).alias("cells"),
-            F.sum("value").alias("total"),
-        )
     )

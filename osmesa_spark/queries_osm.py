@@ -29,7 +29,6 @@ from osmesa_spark import datagen
 from osmesa_spark.functions.text import changeset_hashtags
 from osmesa_spark.operators import geometry as G
 from osmesa_spark.operators import preprocess as P
-from osmesa_spark.operators import vectorgrid as VG
 from osmesa_spark.operators.stats import changeset_stats
 from osmesa_spark.util import ctx_memo, path_stamp
 
@@ -1169,17 +1168,13 @@ _TILE_BASE_ZOOM = 6
 
 
 def osm_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    nodes = (
-        _history(spark)
-        .where(
-            (F.col("type") == "node")
-            & F.col("lat").isNotNull()
-            & F.col("lon").isNotNull()
-        )
-        .select(F.col("lon").cast("double"), F.col("lat").cast("double"))
+    """EditHistogramTileCreator parity via `apps.edit_histogram_app`: one
+    density per tile (cells=1) for zooms base..0."""
+    from osmesa_spark import apps as A
+
+    pyr = A.edit_histogram_app(
+        spark, _history(spark), base_zoom=_TILE_BASE_ZOOM, cells=1
     )
-    base = VG.tile_points(nodes, zoom=_TILE_BASE_ZOOM, cells=1)
-    pyr = VG.pyramid(base, base_zoom=_TILE_BASE_ZOOM)
     return pyr.select(
         F.col("zoom").cast("int").alias("zoom"),
         F.col("abs_col").alias("tx"),
@@ -1219,9 +1214,9 @@ OSM_TILE_PYRAMID_SQL = (
 
 def osm_user_footprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FootprintCreator parity via the faceted pyramid: per-user node-edit
-    densities for zooms base..0 — the downsample path must agree with the
-    oracle's independent per-level floor (floor(u·2^z) ≡ floor(u·2^{z+1})>>1)
-    for EVERY facet."""
+    densities for zooms base..0 — the pyramid's `abs >> dz` ancestors
+    must agree with the oracle's independent per-level floor
+    (floor(u·2^z) ≡ floor(u·2^{z+1})>>1) for EVERY facet."""
     from osmesa_spark import apps as A
 
     fp = A.footprint(

@@ -2,17 +2,20 @@
 `osmesa.apps.streaming.StreamingEditHistogramTileUpdater`
 (`src/apps/src/main/scala/osmesa/apps/streaming/StreamingEditHistogramTileUpdater.scala:114-138`),
 `StreamingFacetedEditHistogramTileUpdater` (`:114-214`, facet-map points),
+`StreamingUserFootprintTileUpdater` (uid-keyed footprints),
 `HashtagFootprintUpdater` (`HashtagFootprintUpdater.scala:169-190`,
 changes ⋈ changeset-hashtags → per-hashtag keyed footprints), and the
 incremental multi-sequence tile upsert they all drive
 (`EditHistogram.scala:219-305`).
 
-T8 twin design: the SAME vectorgrid chain (tile → rasterize → pyramid →
-vectorize, operators/vectorgrid.py) runs per micro-batch inside
-`foreachBatch`, with `sequence` riding the grouping keys so per-sequence
-cells survive the rasterize agg; the MVT sink's committed-sequence layer
-(sinks/mvt.py) makes re-delivery of a sequence a no-op, so
-restart-from-checkpoint or at-least-once replay cannot double-count — the
+T8 twin design: the batch apps' vectorgrid chain (`point_pyramid` →
+`vectorize`, operators/vectorgrid.py) runs per micro-batch inside ONE
+`foreachBatch` start (`_start`), with `sequence` riding the grouping keys
+so per-sequence cells survive the rasterize agg. A twin is its point
+extractor, its keys and a call to `_start`. The MVT sink's
+committed-sequence layer (sinks/mvt.py) makes re-delivery of a sequence
+to a tile a no-op, so restart-from-checkpoint or at-least-once replay —
+also of a batch whose write was cut part-way — cannot double-count; the
 reference gets the same property from `getCommittedSequences`
 (`VectorGrid.scala:35-43`).
 
@@ -25,6 +28,8 @@ nothing round-trips through the driver."""
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -34,24 +39,28 @@ from osmesa_spark.operators import vectorgrid as vg
 from osmesa_spark.sinks import mvt
 
 
+def _pyramid_cells(
+    points: DataFrame,
+    zoom: int,
+    cells: int,
+    keys: tuple[str, ...],
+    weight_col: str | None = None,
+) -> DataFrame:
+    """Every twin's tile chain: the keyed point pyramid, vectorized."""
+    pyr = vg.point_pyramid(
+        points, zoom, cells, keys=keys, weight_col=weight_col
+    )
+    return vg.vectorize(pyr, cells=cells, key_cols=list(keys))
+
+
 def edit_tiles_for_batch(
     batch: DataFrame, zoom: int, cells: int
 ) -> DataFrame:
     """Bounded vectorgrid chain for one micro-batch of the changes stream:
-    visible nodes with coords → per-sequence base raster → pyramid →
-    vectorized cells, `sequence` carried as a facet key."""
-    pts = batch.where(
-        (F.col("type") == "node")
-        & F.col("visible")
-        & F.col("lat").isNotNull()
-        & F.col("lon").isNotNull()
-    ).select("sequence", "lon", "lat")
-    base = vg.tile_points(pts, zoom=zoom, cells=cells, key_cols=["sequence"])
-    return vg.vectorize(
-        vg.pyramid(base, base_zoom=zoom, key_cols=["sequence"]),
-        cells=cells,
-        key_cols=["sequence"],
-    )
+    visible located nodes → per-sequence pyramid → vectorized cells,
+    `sequence` carried as a facet key."""
+    pts = vg.located_nodes(batch).where(F.col("visible"))
+    return _pyramid_cells(pts, zoom, cells, ("sequence",))
 
 
 def node_facets(tags_col: Column, version: Column, visible: Column) -> Column:
@@ -115,14 +124,8 @@ def faceted_edit_tiles_for_batch(
         "lat",
         F.explode("facets").alias("facet", "w"),
     ).where(F.col("w") > 0)
-    keys = ["sequence", "facet"]
-    base = vg.tile_points(
-        pts, zoom=zoom, cells=cells, weight_col="w", key_cols=keys
-    )
-    return vg.vectorize(
-        vg.pyramid(base, base_zoom=zoom, key_cols=keys),
-        cells=cells,
-        key_cols=keys,
+    return _pyramid_cells(
+        pts, zoom, cells, ("sequence", "facet"), weight_col="w"
     )
 
 
@@ -147,11 +150,7 @@ def hashtag_footprint_points(
         F.col("createdAt").alias("cs_createdAt"),
         F.explode(changeset_hashtags(F.col("tags"))).alias("hashtag"),
     )
-    nodes = changes.where(
-        (F.col("type") == "node")
-        & F.col("lat").isNotNull()
-        & F.col("lon").isNotNull()
-    )
+    nodes = vg.located_nodes(changes)
     if nodes.isStreaming:
         nodes = nodes.withWatermark("timestamp", "25 hours")
     nodes = nodes.select("timestamp", "sequence", "changeset", "lat", "lon")
@@ -187,19 +186,25 @@ def hashtag_footprint_points(
     ).drop("cs_sequence")
 
 
-def _grouped_tile_sink(
+def _start(
+    stream: DataFrame,
+    tiles_for_batch,
     tile_root: str,
+    checkpoint_dir: str,
     zoom: int,
     cells: int,
     layer_name: str,
-    tiles_for_batch,
     key_col: str | None = None,
     facet_col: str | None = None,
 ):
+    """The one tile-twin start: each micro-batch of `stream` goes through
+    `tiles_for_batch(batch, zoom, cells)` into the grouped MVT sink, run
+    to the end of the available input (`availableNow`) under
+    `checkpoint_dir`. Returns the StreamingQuery (caller awaits/stops)."""
+
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        vec = tiles_for_batch(batch, zoom, cells)
         mvt.write_tile_pyramid_grouped(
-            vec,
+            tiles_for_batch(batch, zoom, cells),
             tile_root,
             layer_name=layer_name,
             cells=cells,
@@ -207,7 +212,12 @@ def _grouped_tile_sink(
             facet_col=facet_col,
         )
 
-    return sink
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def run_streaming_tile_updater(
@@ -220,15 +230,9 @@ def run_streaming_tile_updater(
 ):
     """Attach the tile-upsert foreachBatch sink to a streaming CHANGES
     DataFrame and return the StreamingQuery (caller awaits/stops)."""
-    return (
-        changes.writeStream.foreachBatch(
-            _grouped_tile_sink(
-                tile_root, zoom, cells, layer_name, edit_tiles_for_batch
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        changes, edit_tiles_for_batch, tile_root, checkpoint_dir, zoom,
+        cells, layer_name,
     )
 
 
@@ -244,20 +248,9 @@ def run_streaming_faceted_tile_updater(
     stream → facet map → per-facet tiles, tags `density:<facet>` per cell
     feature (EditHistogram.scala:183-211 tag shape), idempotent per
     sequence."""
-    return (
-        diffs.writeStream.foreachBatch(
-            _grouped_tile_sink(
-                tile_root,
-                zoom,
-                cells,
-                layer_name,
-                faceted_edit_tiles_for_batch,
-                facet_col="facet",
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        diffs, faceted_edit_tiles_for_batch, tile_root, checkpoint_dir, zoom,
+        cells, layer_name, facet_col="facet",
     )
 
 
@@ -275,40 +268,15 @@ def run_streaming_user_footprint(
     `tile_root/<uid>/` (Footprints.update keyed URIs), idempotent per
     sequence. Same keyed-pyramid chain as the hashtag footprint, minus
     the metadata join — the key comes off the element itself."""
-    nodes = changes.where(
-        (F.col("type") == "node")
-        & F.col("lat").isNotNull()
-        & F.col("lon").isNotNull()
-    ).select(
+    nodes = vg.located_nodes(changes).select(
         "sequence",
         F.col("uid").cast("string").alias("key"),
         "lon",
         "lat",
     )
-
-    def tiles_for_batch(batch: DataFrame, z: int, c: int) -> DataFrame:
-        keys = ["key", "sequence"]
-        base = vg.tile_points(batch, zoom=z, cells=c, key_cols=keys)
-        return vg.vectorize(
-            vg.pyramid(base, base_zoom=z, key_cols=keys),
-            cells=c,
-            key_cols=keys,
-        )
-
-    return (
-        nodes.writeStream.foreachBatch(
-            _grouped_tile_sink(
-                tile_root,
-                zoom,
-                cells,
-                layer_name,
-                tiles_for_batch,
-                key_col="key",
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        nodes, partial(_pyramid_cells, keys=("key", "sequence")), tile_root,
+        checkpoint_dir, zoom, cells, layer_name, key_col="key",
     )
 
 
@@ -325,29 +293,8 @@ def run_streaming_hashtag_footprint(
     with their changeset's hashtags, then one footprint pyramid PER HASHTAG
     under `tile_root/<hashtag>/` (the reference's keyed Footprints URIs,
     Footprints.scala:42-53), idempotent per sequence."""
-
-    def tiles_for_batch(batch: DataFrame, z: int, c: int) -> DataFrame:
-        keys = ["hashtag", "sequence"]
-        base = vg.tile_points(batch, zoom=z, cells=c, key_cols=keys)
-        return vg.vectorize(
-            vg.pyramid(base, base_zoom=z, key_cols=keys),
-            cells=c,
-            key_cols=keys,
-        )
-
-    joined = hashtag_footprint_points(changes, changeset_meta)
-    return (
-        joined.writeStream.foreachBatch(
-            _grouped_tile_sink(
-                tile_root,
-                zoom,
-                cells,
-                layer_name,
-                tiles_for_batch,
-                key_col="hashtag",
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start(
+        hashtag_footprint_points(changes, changeset_meta),
+        partial(_pyramid_cells, keys=("hashtag", "sequence")), tile_root,
+        checkpoint_dir, zoom, cells, layer_name, key_col="hashtag",
     )

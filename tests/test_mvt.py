@@ -54,8 +54,7 @@ def pyramid_df(spark):
         (F.col("value") - 100.0).alias("lon"),
         ((F.col("user_id") * 7) % 140 - 70.0).cast("double").alias("lat"),
     )
-    base = vg.tile_points(pts, zoom=6, cells=16)
-    return vg.vectorize(vg.pyramid(base, base_zoom=6), cells=16)
+    return vg.vectorize(vg.point_pyramid(pts, 6, 16), cells=16)
 
 
 def test_pyramid_write_and_read_back(spark, pyramid_df, tmp_path):

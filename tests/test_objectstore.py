@@ -123,7 +123,7 @@ def test_tile_pyramid_file_uri_root(spark, tmp_path):
         [(float(i % 30) * 3, float(i % 15) * 3) for i in range(300)],
         "lon double, lat double",
     )
-    base = VG.tile_points(pts, zoom=4, cells=16)
+    base = VG.point_pyramid(pts, 4, 16).where(F.col("zoom") == 4)
     vec = VG.vectorize(base, cells=16)
     root_uri = f"file://{tmp_path}/tiles"
     n = mvt.write_tile_pyramid_grouped(

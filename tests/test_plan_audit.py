@@ -925,3 +925,86 @@ def test_stats_upsert_is_one_shuffle(spark, tmp_path, monkeypatch):
     (df,) = written
     shuffles = audit_plan(df).shuffle_exchanges
     assert shuffles == 1, f"the upsert's write plan has {shuffles} shuffles"
+
+
+@pytest.fixture(scope="module")
+def edit_frames(spark, tmp_path_factory):
+    """Small static frames of the three replication feeds: changes,
+    augmented-diff elements (corrupt lines dropped) and changeset
+    metadata."""
+    from osmesa_spark.datagen import (
+        write_augdiff_dropdir,
+        write_changes_osc_dropdir,
+        write_changeset_meta_dropdir,
+    )
+    from osmesa_spark.sources import replication as R
+
+    base = tmp_path_factory.mktemp("edit_frames")
+    write_augdiff_dropdir(str(base / "aug"), n_sequences=3, per_seq=30, corrupt_every=0)
+    write_changes_osc_dropdir(str(base / "chg"), n_sequences=3, per_seq=20)
+    write_changeset_meta_dropdir(str(base / "meta"), n_sequences=3, per_seq=10)
+
+    def static(df):
+        return spark.createDataFrame(df.collect(), df.schema)
+
+    diffs, _ = R.split_errors(R.read_augmented_diffs(spark, str(base / "aug")))
+    return (
+        static(R.read_changes_xml(spark, str(base / "chg"))),
+        static(diffs),
+        static(R.read_changeset_metadata(spark, str(base / "meta"))),
+    )
+
+
+def _pyramid_chains(spark, changes, diffs, meta):
+    from pyspark.sql import functions as F
+
+    from osmesa_spark import apps as A
+    from osmesa_spark.operators import vectorgrid as VG
+    from osmesa_spark.streaming import tiles_stream as T
+
+    users = VG.located_nodes(changes).select(
+        "sequence", F.col("uid").cast("string").alias("key"), "lon", "lat"
+    )
+    hashtags = T.hashtag_footprint_points(changes, meta)
+    return {
+        "edit_tiles_for_batch": T.edit_tiles_for_batch(changes, 6, 16),
+        "faceted_edit_tiles_for_batch": T.faceted_edit_tiles_for_batch(
+            diffs, 6, 16
+        ),
+        "user_footprint_twin": T._pyramid_cells(users, 6, 16, ("key", "sequence")),
+        "hashtag_footprint_twin": T._pyramid_cells(
+            hashtags, 6, 16, ("hashtag", "sequence")
+        ),
+        "edit_histogram_app": A.edit_histogram_app(spark, changes),
+        "footprint_user": A.footprint(spark, changes, kind="user"),
+        "footprint_hashtag": A.footprint(
+            spark, changes, changesets=meta, kind="hashtag"
+        ),
+    }
+
+
+# (shuffle exchanges, Python stages) of each chain, as measured before the
+# chains were folded onto `vectorgrid.point_pyramid`: the per-cell
+# rasterize and the pyramid fan-out are one partial-agg exchange each, the
+# hashtag chains add the two sides of their changeset join, and no chain
+# runs Python
+PYRAMID_CHAIN_SHAPES = {
+    "edit_tiles_for_batch": (2, 0),
+    "faceted_edit_tiles_for_batch": (2, 0),
+    "user_footprint_twin": (2, 0),
+    "hashtag_footprint_twin": (4, 0),
+    "edit_histogram_app": (2, 0),
+    "footprint_user": (2, 0),
+    "footprint_hashtag": (4, 0),
+}
+
+
+def test_pyramid_chains_keep_their_plans(spark, edit_frames):
+    """Every batch and streaming edit pyramid runs the plan shape it ran
+    as a hand-copied chain: the same shuffle exchanges, no Python stage."""
+    chains = _pyramid_chains(spark, *edit_frames)
+    got = {
+        name: (audit_plan(df).shuffle_exchanges, audit_plan(df).python_stages)
+        for name, df in chains.items()
+    }
+    assert got == PYRAMID_CHAIN_SHAPES

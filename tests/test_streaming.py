@@ -264,6 +264,71 @@ def test_streaming_faceted_tile_updater(spark, dirs, tmp_path):
     assert facet_totals(6) == expected
 
 
+def test_faceted_tile_twin_cut_mid_batch_restarts_exactly_once(
+    spark, dirs, tmp_path, monkeypatch
+):
+    """Crash mid-batch: the tile sink's first write lands only the zoom
+    >= 3 tiles of the batch and then raises, so the query fails and Spark
+    never commits the batch. The runner restarted on the same checkpoint
+    replays it: the tiles that already hold its sequences skip them, the
+    rest are written, and the per-facet totals at every zoom equal a
+    clean run's."""
+    import glob
+    import gzip
+    from collections import defaultdict
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from osmesa_spark.sinks import mvt
+    from osmesa_spark.streaming.tiles_stream import (
+        run_streaming_faceted_tile_updater,
+    )
+
+    def facet_totals(root):
+        tot = defaultdict(int)
+        for p in glob.glob(f"{root}/*/*/*.mvt.gz"):
+            zoom = int(p[len(root) + 1:].split("/", 1)[0])
+            layers = mvt.decode_tile(gzip.decompress(open(p, "rb").read()))
+            for f in layers["density"]:
+                for k, v in f.tags.items():
+                    if k.startswith("density:"):
+                        tot[(zoom, k.split(":", 1)[1])] += v
+        return dict(tot)
+
+    def run(root, ckpt):
+        diffs, _ = R.split_errors(
+            R.read_augmented_diffs(spark, str(dirs / "augdiffs"), streaming=True)
+        )
+        q = run_streaming_faceted_tile_updater(
+            diffs, root, ckpt, zoom=6, cells=16
+        )
+        try:
+            assert q.awaitTermination(120), "the tile twin did not finish"
+        finally:
+            q.stop()
+
+    real = mvt.write_tile_pyramid_grouped
+
+    def cut(vectorized, *args, **kwargs):
+        real(vectorized.where(F.col("zoom") >= 3), *args, **kwargs)
+        raise RuntimeError("tile write cut mid-batch")
+
+    root, ckpt = str(tmp_path / "tiles"), str(tmp_path / "ckpt")
+    monkeypatch.setattr(mvt, "write_tile_pyramid_grouped", cut)
+    with pytest.raises(StreamingQueryException, match="cut mid-batch"):
+        run(root, ckpt)
+    monkeypatch.undo()
+    cut_zooms = {z for z, _ in facet_totals(root)}
+    assert cut_zooms == {3, 4, 5, 6}, "the cut batch was not partly written"
+
+    run(root, ckpt)
+    clean = str(tmp_path / "clean")
+    run(clean, str(tmp_path / "clean_ckpt"))
+    want = facet_totals(clean)
+    assert {z for z, _ in want} == set(range(7))
+    assert facet_totals(root) == want
+
+
 def test_streaming_hashtag_footprint(spark, dirs, tmp_path):
     """HashtagFootprintUpdater twin: changes ⋈ changeset hashtags →
     per-hashtag keyed tile trees, idempotent on replay."""

@@ -1,5 +1,5 @@
-"""Vector-grid pipeline property tests: pyramid sum preservation, cell
-bounds, z-order bijectivity, sparse-tile assembly."""
+"""Vector-grid pipeline property tests: pyramid sum preservation, level
+agreement, cell bounds, z-order bijectivity."""
 
 from __future__ import annotations
 
@@ -22,14 +22,13 @@ def points(spark):
 
 
 def test_rasterize_total_preserved(spark, points):
-    base = VG.tile_points(points, zoom=10, weight_col="w")
+    pyr = VG.point_pyramid(points, 10, 128, weight_col="w")
     total_in = points.agg(F.sum("w")).first()[0]
-    assert base.agg(F.sum("value")).first()[0] == total_in
+    assert pyr.where(F.col("zoom") == 10).agg(F.sum("value")).first()[0] == total_in
 
 
 def test_pyramid_sum_preserved_per_level(spark, points):
-    base = VG.tile_points(points, zoom=6)
-    pyr = VG.pyramid(base, base_zoom=6)
+    pyr = VG.point_pyramid(points, 6, 128)
     sums = {
         r["zoom"]: r["s"]
         for r in pyr.groupBy("zoom").agg(F.sum("value").alias("s")).collect()
@@ -39,18 +38,22 @@ def test_pyramid_sum_preserved_per_level(spark, points):
 
 
 def test_downsample_parent_relation(spark, points):
-    base = VG.tile_points(points, zoom=4)
-    parent = VG.downsample(base, 1)
-    # recompute parents directly from raw points at zoom 3
-    direct = VG.tile_points(points, zoom=3)
-    a = sorted(map(tuple, parent.collect()))
-    b = sorted(map(tuple, direct.collect()))
-    assert a == b
+    """Level z of a zoom-4 pyramid is exactly the base level of a pyramid
+    rasterized from the raw points at zoom z, for every z: the `abs >> dz`
+    ancestors agree with the per-level floor."""
+    pyr = VG.point_pyramid(points, 4, 128, keys=["w"])
+    for z in range(0, 5):
+        level = pyr.where(F.col("zoom") == z)
+        direct = VG.point_pyramid(points, z, 128, keys=["w"]).where(
+            F.col("zoom") == z
+        )
+        assert sorted(map(tuple, level.collect())) == sorted(
+            map(tuple, direct.collect())
+        ), f"zoom {z}"
 
 
 def test_vectorize_zorder_unique_per_tile(spark, points):
-    base = VG.tile_points(points, zoom=8)
-    feats = VG.vectorize(base)
+    feats = VG.vectorize(VG.point_pyramid(points, 8, 128))
     dup = (
         feats.groupBy("zoom", "tx", "ty", "__id")
         .count()
@@ -60,11 +63,3 @@ def test_vectorize_zorder_unique_per_tile(spark, points):
     assert dup == 0
     bad = feats.where((F.col("ccol") >= 128) | (F.col("crow") >= 128)).count()
     assert bad == 0
-
-
-def test_sparse_tiles_shape(spark, points):
-    base = VG.tile_points(points, zoom=8)
-    tiles = VG.to_sparse_tiles(base)
-    row = tiles.first()
-    assert row["total"] == sum(row["cells"].values())
-    assert all(0 <= k < 128 * 128 for k in row["cells"])
