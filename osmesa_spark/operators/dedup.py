@@ -21,6 +21,8 @@ not required.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -141,18 +143,114 @@ def minhash_signatures(
     return hv.select("id", F.expr(f"array({mins})").alias("sig"))
 
 
-def _pair_combinations(ids: Column) -> Column:
-    """All (id_a < id_b) pairs from a SORTED id array, in-column:
-    array<struct<id_a, id_b>> of size n·(n−1)/2."""
+def _pair_combinations(
+    arr: Column, pair: Callable[[Column, Column], Column]
+) -> Column:
+    """`pair(x, y)` for every x before y in the array `arr`, in-column:
+    n·(n−1)/2 elements. The one in-column pair expression: bucket members
+    in `_band_pairs`, tag keys in the tag co-occurrence query."""
     return F.flatten(
         F.transform(
-            ids,
+            arr,
             lambda x, i: F.transform(
-                F.slice(ids, i + 2, F.greatest(F.size(ids) - i - 1, F.lit(0))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+                F.slice(arr, i + 2, F.greatest(F.size(arr) - i - 1, F.lit(0))),
+                lambda y: pair(x, y),
             ),
         )
     )
+
+
+def _band_pairs(
+    rows: DataFrame,
+    bands: list[str],
+    payload: str,
+    verify_sql: str | None = None,
+    max_bucket: int | None = None,
+) -> DataFrame:
+    """The banded pair kernel of `lsh_candidate_pairs`, `simhash_dedup`
+    and `multimodal.phash_pairs`. Each (id, ...) row of `rows` explodes
+    into one (band, val) membership per SQL band value in `bands`; each
+    (band, val) group's sorted members pair in-column. `payload` is the
+    SQL of a row's full fingerprint `fp`. With `verify_sql`, a predicate
+    over the pair's `hamming`, members shuffle as struct(id, fp) and pairs
+    are (id_a, id_b, hamming); without it they shuffle as bare ids and
+    pairs are (id_a, id_b).
+
+    In-column pairing, not a bucket self-join: a self-join executes the
+    fingerprint lineage on both sides (Catalyst does not dedupe a plan
+    referenced twice); the groupBy computes each fingerprint once and
+    shuffles one narrow row per membership.
+
+    `max_bucket` caps degenerate groups: over-cap (band, val) groups never
+    collect a member list; their members group by the full fingerprint
+    and join the group's min-id representative by linear star edges, so
+    certain duplicates survive the cap and only distinct-fingerprint
+    collisions are skipped. A count census, a broadcast anti-join and
+    semi-join of the few over-cap keys, and a min-by-key join: partition-
+    local pruning in the spirit of REPOSE (ICDE 2021). Its three consumers
+    read `rows` pinned once, so the fingerprint kernel never re-executes
+    per branch. None keeps exact all-pairs semantics."""
+    if max_bucket is not None:
+        rows = rows.localCheckpoint(eager=False)
+    structs = ",".join(
+        f"named_struct('band', {b}, 'val', {v})" for b, v in enumerate(bands)
+    )
+    banded = rows.select(
+        "id",
+        F.expr(payload).alias("fp"),
+        F.expr(f"explode(array({structs}))").alias("b"),
+    ).select("id", "fp", "b.band", "b.val")
+
+    def member(id_col: str) -> Column:
+        if verify_sql:
+            return F.struct(F.col(id_col).alias("id"), "fp")
+        return F.col(id_col)
+
+    def pair(x: Column, y: Column) -> Column:
+        if not verify_sql:
+            return F.struct(x.alias("id_a"), y.alias("id_b"))
+        hamming = F.bit_count(x["fp"].bitwiseXOR(y["fp"]))
+        return F.struct(
+            x["id"].alias("id_a"), y["id"].alias("id_b"), hamming.alias("hamming")
+        )
+
+    star = None
+    if max_bucket is not None:
+        over = (
+            banded.groupBy("band", "val")
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .where(F.col("__n") > max_bucket)
+            .select("band", "val")
+        )
+        # over-cap keys are pathologies, few by definition: broadcast them
+        # as an exclusion list rather than shuffling the corpus-sized
+        # membership table against itself
+        members = (
+            banded.join(F.broadcast(over), ["band", "val"], "left_semi")
+            .select("id", "fp")
+            .distinct()
+        )
+        banded = banded.join(F.broadcast(over), ["band", "val"], "left_anti")
+        reps = members.groupBy("fp").agg(F.min("id").alias("__rep"))
+        # a star edge's two ends share one fingerprint: hamming 0
+        star = (
+            members.join(reps, "fp")
+            .where(F.col("id") != F.col("__rep"))
+            .select(pair(member("__rep"), member("id")).alias("p"))
+            .select("p.*")
+        )
+    groups = banded.groupBy("band", "val").agg(
+        F.array_sort(F.collect_list(member("id"))).alias("ms")
+    ).where(F.size("ms") >= 2)
+    pairs = groups.select(
+        F.explode(_pair_combinations(F.col("ms"), pair)).alias("p")
+    ).select("p.*")
+    if verify_sql:
+        pairs = pairs.where(verify_sql)
+    if star is not None:
+        pairs = pairs.unionByName(star)
+    # one band emits each pair once
+    return pairs.distinct() if len(bands) > 1 else pairs
 
 
 def lsh_candidate_pairs(
@@ -162,97 +260,77 @@ def lsh_candidate_pairs(
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Band the signature and emit candidate pairs per (band, band-hash)
-    bucket. Returns (id_a, id_b) pairs with id_a < id_b, distinct.
-
-    Shape: groupBy(band, bucket) → collect member ids → in-column pair
-    combinations — NOT a bucket self-join. A self-join executes the whole
-    minhash lineage twice (Catalyst does not dedupe a plan referenced on
-    both sides); the groupBy computes signatures once and shuffles one
-    narrow (band, bucket, id) row per membership. Cross-bucket pairs are
-    never materialized — the LSH guarantee that keeps near-dup detection
-    subquadratic. Bucket membership lists are small by design (near-dup
-    buckets); a pathological hot bucket is O(n²) in EITHER shape, and
-    the pair explosion happens after the exchange at full parallelism.
+    bucket through the banded kernel `_band_pairs`: bare ids, no verify.
+    Returns (id_a, id_b) pairs with id_a < id_b, distinct.
 
     `max_bucket` caps degenerate buckets at 100 TB scale: a bucket holding
     millions of ids (boilerplate/empty-text collisions) would materialize
     one reducer-side array AND emit useless O(n²) candidates — standard
     LSH practice (datasketch, Spark MinHashLSH) bounds such buckets, since
-    exact grouping of their members is cheaper than pairing them. Members
-    of an over-cap bucket are NOT silently dropped: they are routed
-    through exact FULL-SIGNATURE dedup — grouped by the whole minhash
-    signature and connected to the group's min-id representative by
-    linear star edges — so certainly-duplicate docs (the usual cause of a
-    degenerate bucket) still reach the verify/CC stages, while
-    distinct-signature hash collisions (the useless O(n²) part) are the
-    only thing skipped; those may still pair via their other bands. The
-    cap branch never collects an over-cap member list: it is a count
-    aggregate + two broadcast joins + a min-by-key join, all linear.
-    None (default) keeps exact all-pairs semantics for the fixture-scale
-    oracle. Measured cost of the cap (sf0.1, local[32], A/B same session):
-    ~0.3-0.5 s per call (~25-40%) — the census pass + signature
+    exact grouping of their members is cheaper than pairing them. Over-cap
+    members are grouped by xxhash64 of the whole signature, one narrow
+    bigint per membership, so certainly-duplicate docs still reach the
+    verify/CC stages. Measured cost of the cap (sf0.1, local[32], A/B same
+    session): ~0.3-0.5 s per call (~25-40%) — the census pass + signature
     materialization that bound reducer memory; worth it everywhere a real
     corpus can contain boilerplate floods."""
-    if max_bucket is not None:
-        # the cap branch fans into three consumers (size census, anti-join,
-        # semi-join): pin the SIGNATURES once — one narrow row per doc —
-        # so the minhash md5 hot path never re-executes per branch; the
-        # banding below is cheap integer/concat work each consumer
-        # re-derives from the materialized rows
-        sigs = sigs.localCheckpoint(eager=False)
-    band_structs = ",".join(
-        "named_struct('band', {b}, 'bucket', concat_ws(',', {elems}))".format(
-            b=b,
-            elems=",".join(
-                f"CAST(element_at(`sig`, {b * rows_per_band + r + 1}) "
-                f"AS STRING)"
-                for r in range(rows_per_band)
-            ),
-        )
+    cell = "CAST(element_at(`sig`, {}) AS STRING)"
+    buckets = [
+        "concat_ws(',', {})".format(",".join(
+            cell.format(b * rows_per_band + r + 1) for r in range(rows_per_band)
+        ))
         for b in range(bands)
+    ]
+    return _band_pairs(sigs, buckets, "xxhash64(`sig`)", max_bucket=max_bucket)
+
+
+def _posting_pairs(
+    postings: DataFrame,
+    max_df: int,
+    weight: str,
+    totals: DataFrame,
+    score_sql: list[str],
+) -> DataFrame:
+    """The posting-list pair kernel of `sparse_cosine_pairs` and
+    `winnow_overlap_pairs`. `postings` holds one (id, key, df, ...) row
+    per document and key, `df` being the key's document frequency. Keys
+    in more than `max_df` documents are pruned first: a key every
+    document shares would fan out O(N²) join rows through its one posting
+    list. The kept postings self-join on `key` into id_a < id_b pairs,
+    their other columns suffixed `_a` and `_b`, and `weight` (a SQL
+    aggregate with its alias, say `sum(wt_a * wt_b) AS dot`) sums each
+    pair's shared keys. The caller's per-doc `totals` (id, total) join on
+    both sides as `total_a` and `total_b`, and `score_sql` lists the
+    output columns after (id_a, id_b).
+
+    No broadcast hint on the totals joins: totals are per doc (corpus-
+    sized at 100 TB). Catalyst still broadcasts a side under the
+    threshold; above it the join degrades to a sort-merge join on id."""
+    idx = postings.where(F.col("df") <= max_df)
+    carried = [c for c in idx.columns if c not in ("id", "key", "df")]
+    a, b = (
+        idx.select(
+            F.col("id").alias(f"id_{s}"),
+            "key",
+            *[F.col(c).alias(f"{c}_{s}") for c in carried],
+        )
+        for s in "ab"
     )
-    banded = sigs.select(
-        "id",
-        # full-signature fingerprint for the over-cap exact-dedup route;
-        # one narrow bigint per membership, never the sig array itself
-        F.xxhash64("sig").alias("sig_key"),
-        F.expr(f"explode(array({band_structs}))").alias("bb"),
-    ).select("id", "sig_key", "bb.band", "bb.bucket")
-    if max_bucket is not None:
-        over = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > max_bucket)
-            .select("band", "bucket")
+    na, nb = (
+        totals.select(
+            F.col("id").alias(f"id_{s}"), F.col("total").alias(f"total_{s}")
         )
-        # over-cap (band,bucket) keys are pathologies, few by definition —
-        # broadcast them as an exclusion list rather than shuffling the
-        # corpus-sized membership table against itself
-        small = banded.join(F.broadcast(over), ["band", "bucket"], "left_anti")
-        members = (
-            banded.join(F.broadcast(over), ["band", "bucket"], "left_semi")
-            .select("id", "sig_key")
-            .distinct()
-        )
-        reps = members.groupBy("sig_key").agg(F.min("id").alias("__rep"))
-        star = (
-            members.join(reps, "sig_key")
-            .where(F.col("id") != F.col("__rep"))
-            .select(F.col("__rep").alias("id_a"), F.col("id").alias("id_b"))
-        )
-    else:
-        small, star = banded, None
-    buckets = (
-        small.groupBy("band", "bucket")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .where(F.size("ids") >= 2)
+        for s in "ab"
     )
-    pairs = buckets.select(
-        F.explode(_pair_combinations(F.col("ids"))).alias("p")
-    ).select("p.id_a", "p.id_b")
-    if star is not None:
-        pairs = pairs.unionByName(star)
-    return pairs.distinct()
+    return (
+        a.join(b, "key")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.expr(weight))
+        .join(na, "id_a")
+        .join(nb, "id_b")
+        .select("id_a", "id_b", *[F.expr(c) for c in score_sql])
+    )
 
 
 def sparse_cosine_pairs(
@@ -264,7 +342,8 @@ def sparse_cosine_pairs(
 ) -> DataFrame:
     """Sparse TF-IDF cosine near-dup pairs via INVERTED-INDEX join — the
     token-space counterpart of MinHash (exact weights, no signature
-    approximation). Per-(doc, term) tf·idf weights; a term-keyed self-join
+    approximation). Per-(doc, term) tf·idf weights are the postings of
+    the posting-list kernel `_posting_pairs`: a term-keyed self-join
     accumulates partial dot products; full doc norms normalize.
 
     Scale bound: terms with document frequency > `max_df` are pruned from
@@ -276,11 +355,9 @@ def sparse_cosine_pairs(
     test_sparse_cosine_survives_stopword_flood.
 
     Output: (id_a, id_b, cos) — id_a < id_b, cos 6dp, cos >= threshold."""
-    from osmesa_spark.functions.text import word_tokens
-
     words = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(word_tokens(text_col)).alias("w"),
+        F.col(id_col).alias("id"),
+        F.explode(word_tokens(text_col)).alias("key"),
     )
     # tf feeds THREE consumers (the n_docs scalar, the df_ marginal and
     # the wts projection) — without a pin the tokenize+count subtree runs
@@ -290,48 +367,73 @@ def sparse_cosine_pairs(
     # a pinned plan's non-result stages to build its RDD); the n_docs count
     # below materializes the blocks, and everything downstream reads them.
     # An eager pin costs one job more (its own result job).
-    tf = words.groupBy("doc_id", "w").agg(
+    tf = words.groupBy("id", "key").agg(
         F.count(F.lit(1)).cast("double").alias("tf")
     ).localCheckpoint(eager=False)
-    df_ = tf.groupBy("w").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    n_docs = tf.select("doc_id").distinct().count()
-    wts = tf.join(df_, "w").select(
-        "doc_id",
-        "w",
+    df_ = tf.groupBy("key").agg(F.count(F.lit(1)).cast("double").alias("df"))
+    n_docs = tf.select("id").distinct().count()
+    wts = tf.join(df_, "key").select(
+        "id",
+        "key",
         (F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df"))).alias("wt"),
         "df",
     )
-    norms = wts.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("nrm")
+    # the norms run over every term, before the max_df prune
+    norms = wts.groupBy("id").agg(
+        F.sqrt(F.sum(F.col("wt") * F.col("wt"))).alias("total")
     )
-    idx = wts.where(F.col("df") <= max_df).select("doc_id", "w", "wt")
-    a = idx.select(
-        F.col("doc_id").alias("id_a"), "w", F.col("wt").alias("wa")
+    return _posting_pairs(
+        wts,
+        max_df,
+        "sum(wt_a * wt_b) AS dot",
+        norms,
+        ["round(dot / greatest(total_a * total_b, 1e-12), 6) AS cos"],
+    ).where(F.col("cos") >= F.lit(threshold))
+
+
+def _pair_sides(pairs: DataFrame, per_id: DataFrame) -> DataFrame:
+    """(id_a, id_b, a, b): each pair of `pairs` with the `per_id`
+    (id, ...) rows of its two ends as structs `a` and `b`; a pair with an
+    end missing from `per_id` drops out.
+
+    One join, not two: each pair explodes into (id_a, id_b, id) rows,
+    `per_id` joins in once, and a groupBy on the pair key re-pairs the
+    ends. Joining per side would execute `per_id`'s projection (shingle
+    hashing, the CPU hot spot) twice — Catalyst does not dedupe a subplan
+    referenced twice."""
+    end = F.struct(*[c for c in per_id.columns if c != "id"])
+    sides = pairs.select(
+        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
     )
-    b = idx.select(
-        F.col("doc_id").alias("id_b"), "w", F.col("wt").alias("wb")
-    )
-    dots = (
-        a.join(b, "w")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot"))
-    )
-    na = norms.select(F.col("doc_id").alias("id_a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col("doc_id").alias("id_b"), F.col("nrm").alias("nb"))
-    cos = F.round(
-        F.col("dot") / F.greatest(F.col("na") * F.col("nb"), F.lit(1e-12)), 6
-    )
-    # no broadcast HINT on the norm joins: norms is PER-DOC (corpus-sized
-    # at 100 TB) — forcing it into executor memory is the one shape that
-    # cannot scale. Catalyst still broadcasts when the side fits the
-    # threshold; above it the join degrades to SMJ on id (regime-tested).
     return (
-        dots.join(na, "id_a")
-        .join(nb, "id_b")
-        .select("id_a", "id_b", cos.alias("cos"))
-        .where(F.col("cos") >= F.lit(threshold))
+        sides.join(per_id, "id")
+        .groupBy("id_a", "id_b")
+        .agg(*[
+            F.first(F.when(F.col("id") == F.col(f"id_{s}"), end), True).alias(s)
+            for s in "ab"
+        ])
+        .where(F.col("a").isNotNull() & F.col("b").isNotNull())
     )
+
+
+def _shingle_pairs(
+    df: DataFrame,
+    pairs: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+) -> DataFrame:
+    """`_pair_sides` over each doc's distinct n-gram shingle set `sh`:
+    the input of the pair verifiers."""
+    from osmesa_spark.functions.litexpr import q as _qn
+
+    sh = ensure_parallelism(df.select(id_col, text_col), id_col).select(
+        F.col(id_col).alias("id"),
+        F.expr(
+            f"array_distinct({shingles_sql(_qn(text_col), shingle_n)})"
+        ).alias("sh"),
+    )
+    return _pair_sides(pairs, sh)
 
 
 def jaccard_verify(
@@ -343,40 +445,11 @@ def jaccard_verify(
     threshold: float = 0.5,
 ) -> DataFrame:
     """Exact n-gram Jaccard on candidate pairs: (id_a, id_b, jaccard) with
-    jaccard ≥ threshold. Shingle sets are joined in (two broadcast-or-shuffle
-    hash joins keyed on id), then compared with array set ops in-column."""
-    from osmesa_spark.functions.litexpr import q as _qn
-
-    sh = ensure_parallelism(df.select(id_col, text_col), id_col).select(
-        F.col(id_col).alias("id"),
-        F.expr(
-            f"array_distinct({shingles_sql(_qn(text_col), shingle_n)})"
-        ).alias("sh"),
-    )
-    # One join, not two: explode each pair into (id_a, id_b, id) rows, join
-    # the shingle sets once, re-pair with a groupBy on the pair key. Joining
-    # sh per side would execute the shingle-hash projection (the CPU hot
-    # spot) twice — Catalyst does not dedupe a subplan referenced twice.
-    sides = pairs.select(
-        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
-    )
-    joined = (
-        sides.join(sh, "id")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.first(
-                F.when(F.col("id") == F.col("id_a"), F.col("sh")),
-                ignorenulls=True,
-            ).alias("sh_a"),
-            F.first(
-                F.when(F.col("id") == F.col("id_b"), F.col("sh")),
-                ignorenulls=True,
-            ).alias("sh_b"),
-        )
-        .where(F.col("sh_a").isNotNull() & F.col("sh_b").isNotNull())
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    jaccard ≥ threshold. Shingle sets are joined in once (`_shingle_pairs`),
+    then compared with array set ops in-column."""
+    joined = _shingle_pairs(df, pairs, text_col, id_col, shingle_n)
+    inter = F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
+    union = F.size(F.array_union("a.sh", "b.sh")).cast("double")
     return (
         joined.select(
             "id_a",
@@ -402,35 +475,10 @@ def containment_verify(
     near-1 containment while its Jaccard stays low (the CCNet/RefinedWeb
     sub-dup signal the symmetric metric misses). Same single-join shape as
     jaccard_verify."""
-    from osmesa_spark.functions.litexpr import q as _qn
-
-    sh = ensure_parallelism(df.select(id_col, text_col), id_col).select(
-        F.col(id_col).alias("id"),
-        F.expr(
-            f"array_distinct({shingles_sql(_qn(text_col), shingle_n)})"
-        ).alias("sh"),
-    )
-    sides = pairs.select(
-        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
-    )
-    joined = (
-        sides.join(sh, "id")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.first(
-                F.when(F.col("id") == F.col("id_a"), F.col("sh")),
-                ignorenulls=True,
-            ).alias("sh_a"),
-            F.first(
-                F.when(F.col("id") == F.col("id_b"), F.col("sh")),
-                ignorenulls=True,
-            ).alias("sh_b"),
-        )
-        .where(F.col("sh_a").isNotNull() & F.col("sh_b").isNotNull())
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    cont_a = inter / F.greatest(F.size("sh_a").cast("double"), F.lit(1.0))
-    cont_b = inter / F.greatest(F.size("sh_b").cast("double"), F.lit(1.0))
+    joined = _shingle_pairs(df, pairs, text_col, id_col, shingle_n)
+    inter = F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
+    cont_a = inter / F.greatest(F.size("a.sh").cast("double"), F.lit(1.0))
+    cont_b = inter / F.greatest(F.size("b.sh").cast("double"), F.lit(1.0))
     return (
         joined.select(
             "id_a",
@@ -486,45 +534,18 @@ def simhash_dedup(
 ) -> DataFrame:
     """Near-dup pairs by SimHash: block on the top `prefix_bits` of the
     fingerprint (Manku-style single-table probe), then exact Hamming ≤
-    max_hamming within a block via bit_count(xor)."""
+    max_hamming within a block via bit_count(xor).
+
+    The block is the banded kernel `_band_pairs` with one band, so the
+    simhash fold (the CPU hot spot) runs once per doc."""
     sh = ensure_parallelism(df.select(id_col, text_col), id_col).select(
         F.col(id_col).alias("id"), simhash64(text_col, bits).alias("sh")
     )
-    blocked = sh.withColumn(
-        "block", F.shiftrightunsigned("sh", bits - prefix_bits)
-    )
-    # groupBy(block) + in-column pairing instead of a block self-join: the
-    # self-join would run the simhash fold (the CPU hot spot) on both sides;
-    # this computes each fingerprint once and shuffles one narrow row per
-    # doc. Members sort by (id, sh) struct so pairs come out id_a < id_b.
-    members = blocked.groupBy("block").agg(
-        F.array_sort(F.collect_list(F.struct("id", "sh"))).alias("ms")
-    ).where(F.size("ms") >= 2)
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("ms"),
-                lambda x, i: F.transform(
-                    F.slice(
-                        F.col("ms"),
-                        i + 2,
-                        F.greatest(F.size("ms") - i - 1, F.lit(0)),
-                    ),
-                    lambda y: F.struct(
-                        x["id"].alias("id_a"),
-                        y["id"].alias("id_b"),
-                        F.bit_count(x["sh"].bitwiseXOR(y["sh"])).alias(
-                            "hamming"
-                        ),
-                    ),
-                ),
-            )
-        )
-    )
-    return (
-        members.select(pair.alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
-        .where(F.col("hamming") <= max_hamming)
+    return _band_pairs(
+        sh,
+        [f"shiftrightunsigned(sh, {bits - prefix_bits})"],
+        "sh",
+        f"hamming <= {max_hamming}",
     )
 
 
@@ -1073,60 +1094,43 @@ def winnow_overlap_pairs(
     shared fingerprint (positional guarantee MinHash lacks), so it catches
     block-level copying that whole-document signatures dilute.
 
-    Scale shape: the fingerprint equi-join is the LSH-bucket pattern with
-    the same skew discipline — fingerprints occurring in more than
-    `max_df` docs are pruned FIRST (a ubiquitous shingle-min carries no
-    match signal, and unpruned it would fan out quadratically, the hot-
-    bucket failure). Per-doc fingerprint counts are taken AFTER pruning so
-    the containment denominator matches the join surface. One shuffle per
-    stage, all shuffles keyed on the 60-bit fingerprint or the id pair.
+    Scale shape: the fingerprints are the postings of the posting-list
+    kernel `_posting_pairs`, with the same skew discipline as the LSH
+    buckets — fingerprints occurring in more than `max_df` docs are
+    pruned FIRST (a ubiquitous shingle-min carries no match signal, and
+    unpruned it would fan out quadratically, the hot-bucket failure).
+    Per-doc fingerprint counts are taken AFTER pruning so the containment
+    denominator matches the join surface. One shuffle per stage, all
+    shuffles keyed on the 60-bit fingerprint or the id pair.
 
     Output: (id_a, id_b, shared, overlap) — id_a < id_b, overlap 6dp."""
     from osmesa_spark.functions.litexpr import q as _qn
     from osmesa_spark.functions.text import winnow_fingerprints
-    from osmesa_spark.util import ensure_parallelism
 
     d = ensure_parallelism(df.select(id_col, text_col), id_col)
     hashes = F.expr(shingle_hashes_sql(_qn(text_col), shingle_n))
     fps = d.select(
         F.col(id_col).alias("id"),
-        F.explode(winnow_fingerprints(hashes, window=window)).alias("fp"),
+        F.explode(winnow_fingerprints(hashes, window=window)).alias("key"),
     ).localCheckpoint(eager=False)
-    keep = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df_")).where(
-        F.col("df_") <= max_df
+    keep = fps.groupBy("key").agg(F.count(F.lit(1)).alias("df")).where(
+        F.col("df") <= max_df
     )
-    # lazy: counts/a/b all sit under the caller's single action — the first
-    # stage to touch `pruned` materializes it (partition-level cache locks
-    # keep it computed once). Creating the pin still runs the per-fp count
-    # and the semi-join's shuffle stages as jobs (3 at construction); lazy
-    # only drops the checkpoint's own result job
-    pruned = fps.join(keep.select("fp"), "fp", "left_semi").localCheckpoint(
-        eager=False
-    )
-    counts = pruned.groupBy("id").agg(F.count(F.lit(1)).alias("n_fp"))
-    a = pruned.select(F.col("id").alias("id_a"), "fp")
-    b = pruned.select(F.col("id").alias("id_b"), "fp")
-    shared = (
-        a.join(b, "fp")
-        .where(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= min_shared)
-    )
-    na = counts.select(F.col("id").alias("id_a"), F.col("n_fp").alias("n_a"))
-    nb = counts.select(F.col("id").alias("id_b"), F.col("n_fp").alias("n_b"))
-    return (
-        shared.join(na, "id_a")
-        .join(nb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "shared",
-            F.round(
-                F.col("shared") / F.least("n_a", "n_b"), 6
-            ).alias("overlap"),
-        )
-    )
+    # The containment denominator counts the fingerprints that survive the
+    # prune, so the postings arrive pruned (the kernel's df filter keeps
+    # them all). Lazy pin: the totals and both join sides read it under
+    # the caller's one action; creating it runs the per-fp count and the
+    # join's shuffle stages as jobs (3 at construction), lazy only drops
+    # the checkpoint's own result job
+    pruned = fps.join(keep, "key").localCheckpoint(eager=False)
+    counts = pruned.groupBy("id").agg(F.count(F.lit(1)).alias("total"))
+    return _posting_pairs(
+        pruned,
+        max_df,
+        "count(1) AS shared",
+        counts,
+        ["shared", "round(shared / least(total_a, total_b), 6) AS overlap"],
+    ).where(F.col("shared") >= min_shared)
 
 
 def dedup_paragraphs(

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from osmesa_spark.operators.dedup import _band_pairs
 from osmesa_spark.session import ship_package
 from osmesa_spark.util import ensure_parallelism
 
@@ -193,15 +194,36 @@ def _map_batches(
 # DataFrame-level operators
 # ---------------------------------------------------------------------------
 
+def _synthesized(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    kernel: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: T.StructType,
+    *carry: str,
+) -> DataFrame:
+    """`kernel` over the fake media blobs synthesized from `df`'s
+    (id_col, text_col) rows in the same Python worker batch: payload bytes
+    never cross the Arrow boundary, whose JVM→Python→JVM serialization of
+    every blob, not the kernel, is the cost at 100 TB of media. `carry`
+    columns ride through unchanged (every media kernel keeps row order)."""
+
+    def fused(pdf: pd.DataFrame) -> pd.DataFrame:
+        out = kernel(_synthesize_batch(pdf, id_col, text_col))
+        for c in carry:
+            out[c] = pdf[c].values
+        return out[schema.fieldNames()]
+
+    spread = ensure_parallelism(df.select(id_col, text_col, *carry), id_col)
+    return _map_batches(spread, fused, schema)
+
+
 def synthesize_media(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """Deterministic fake media blobs from a text column (test corpus):
     header OSMM + kind + dims, payload = utf8 bytes of the text."""
-    spread = ensure_parallelism(df.select(id_col, text_col), id_col)
-    return _map_batches(
-        spread, lambda pdf: _synthesize_batch(pdf, id_col, text_col), MEDIA_SCHEMA
-    )
+    return _synthesized(df, id_col, text_col, lambda m: m, MEDIA_SCHEMA)
 
 
 def extract_features(media: DataFrame) -> DataFrame:
@@ -214,17 +236,9 @@ def extract_features(media: DataFrame) -> DataFrame:
 def synthesize_and_extract(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Fused synthesize→extract: one mapInPandas pass, so payload bytes
-    cross the Arrow boundary zero times (they are born and consumed inside
-    the same Python worker batch). Composing the un-fused operators instead
-    pays JVM→Python→JVM serialization of every blob at the stage boundary —
-    at 100 TB of media that transfer, not the kernel, is the bottleneck."""
-    spread = ensure_parallelism(df.select(id_col, text_col), id_col)
-    return _map_batches(
-        spread,
-        lambda pdf: _extract_batch(_synthesize_batch(pdf, id_col, text_col)),
-        FEATURE_SCHEMA,
-    )
+    """Fused synthesize→extract (`_synthesized`): one mapInPandas pass,
+    payload bytes cross the Arrow boundary zero times."""
+    return _synthesized(df, id_col, text_col, _extract_batch, FEATURE_SCHEMA)
 
 
 def synthesize_and_resize(
@@ -234,10 +248,7 @@ def synthesize_and_resize(
     tw: int = 4,
     th: int = 3,
 ) -> DataFrame:
-    """Fused synthesize→resize twin of `synthesize_and_extract`: payload
-    bytes are born and consumed inside one Python worker batch, never
-    crossing the Arrow boundary — composing the un-fused stages pays a
-    JVM→Python→JVM round-trip of every blob in between."""
+    """Fused synthesize→resize twin of `synthesize_and_extract`."""
     schema = T.StructType(
         [
             T.StructField("media_id", T.LongType()),
@@ -246,13 +257,8 @@ def synthesize_and_resize(
             T.StructField("thumb", T.ArrayType(T.LongType())),
         ]
     )
-    spread = ensure_parallelism(df.select(id_col, text_col), id_col)
-    return _map_batches(
-        spread,
-        lambda pdf: _resize_batch(
-            _synthesize_batch(pdf, id_col, text_col), tw, th
-        ),
-        schema,
+    return _synthesized(
+        df, id_col, text_col, lambda m: _resize_batch(m, tw, th), schema
     )
 
 
@@ -375,15 +381,9 @@ def synthesize_and_audio_stats(
     blobs are born and consumed in one Python worker batch, zero Arrow
     round-trips of payload bytes; only audio-kind ids (id % 3 == 1)
     synthesize at all."""
-    spread = ensure_parallelism(
-        df.where((F.col(id_col) % 3) == 1).select(id_col, text_col), id_col
-    )
-    return _map_batches(
-        spread,
-        lambda pdf: _audio_stats_batch(
-            _synthesize_batch(pdf, id_col, text_col)
-        ),
-        AUDIO_STATS_SCHEMA,
+    audio = df.where((F.col(id_col) % 3) == 1)
+    return _synthesized(
+        audio, id_col, text_col, _audio_stats_batch, AUDIO_STATS_SCHEMA
     )
 
 
@@ -427,6 +427,26 @@ def phash60(thumb: Column | str) -> Column:
     return out
 
 
+def _phash_fingerprints(
+    docs: DataFrame, id_col: str, text_col: str, *carry: str
+) -> DataFrame:
+    """(id, *carry, ph): each doc's 60-bit dHash — the fused decode →
+    `PHASH_CELLS`-cell thumbnail kernel (`_synthesized`), then `phash60`
+    in pure Columns. The streaming twin carries its event time."""
+    schema = T.StructType(
+        [T.StructField("media_id", T.LongType())]
+        + [docs.schema[c] for c in carry]
+        + [T.StructField("thumb", T.ArrayType(T.LongType()))]
+    )
+    thumbs = _synthesized(
+        docs, id_col, text_col, lambda m: _resize_batch(m, PHASH_CELLS, 1),
+        schema, *carry,
+    )
+    return thumbs.select(
+        F.col("media_id").alias("id"), *carry, phash60("thumb").alias("ph")
+    )
+
+
 def phash_pairs(
     docs: DataFrame,
     max_hamming: int = 3,
@@ -435,26 +455,18 @@ def phash_pairs(
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Image near-duplicate pairs by perceptual hash: decode → 61-cell
-    thumbnail (one fused Arrow kernel pass, payload never re-emitted) →
-    pure-Column dHash → banded LSH candidate join → exact Hamming verify.
+    thumbnail (`_phash_fingerprints`) → banded candidate pairs → exact
+    Hamming verify, through the banded kernel `dedup._band_pairs`.
 
     LSH guarantee: the fingerprint splits into `max_hamming + 1` equal
     bands, so any pair within Hamming ≤ max_hamming is identical in at
     least one band (pigeonhole) — candidate recall is EXACT, not
-    probabilistic. Scale shape mirrors `simhash_dedup`: fingerprints are
-    computed once and shuffled as one narrow row per image (groupBy-band +
-    in-column pairing, no self-join that would re-run the kernel), so the
-    corpus-sized cost is a single bounded-width shuffle; only same-band
-    groups pair up. 100 TB honesty: a degenerate band value (e.g. all-zero
-    thumbs from empty bodies) creates a quadratic bucket — `max_bucket`
-    bounds it the way `lsh_candidate_pairs` does: over-cap (band, val)
-    groups never collect a member list or emit O(n²) pairs; their members
-    are grouped by the FULL 60-bit fingerprint and connected to the
-    group's min-id representative with linear star edges (hamming 0 by
-    construction — identical fingerprints), so true duplicates survive
-    the cap and only distinct-fingerprint band collisions are skipped
-    (those can still pair via their other bands). None (default)
-    preserves exact all-pairs semantics for the fixture-scale oracle.
+    probabilistic. Fingerprints are computed once and shuffled as one
+    narrow row per image; only same-band groups pair up. 100 TB honesty:
+    a degenerate band value (e.g. all-zero thumbs from empty bodies)
+    creates a quadratic bucket, which `max_bucket` bounds: over-cap
+    members group by the FULL 60-bit fingerprint (star edges at hamming
+    0). None (default) keeps exact all-pairs semantics.
 
     Returns (id_a, id_b, hamming), id_a < id_b, hamming ≤ max_hamming."""
     n_bands = max_hamming + 1
@@ -464,89 +476,10 @@ def phash_pairs(
         )
     width = PHASH_BITS // n_bands
     mask = (1 << width) - 1
-    thumbs = synthesize_and_resize(
-        docs, text_col=text_col, id_col=id_col, tw=PHASH_CELLS, th=1
+    return _band_pairs(
+        _phash_fingerprints(docs, id_col, text_col),
+        [f"shiftrightunsigned(ph, {b * width}) & {mask}" for b in range(n_bands)],
+        "ph",
+        f"hamming <= {max_hamming}",
+        max_bucket,
     )
-    ph = thumbs.select(
-        F.col("media_id").alias("id"), phash60("thumb").alias("ph")
-    )
-    if max_bucket is not None:
-        # cap branch fans into three consumers — pin the per-image
-        # fingerprints once (narrowest possible row) so the thumbnail
-        # Arrow kernel never re-executes; banding is re-derived cheaply
-        ph = ph.localCheckpoint(eager=False)
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.shiftrightunsigned("ph", b * width)
-                    .bitwiseAND(F.lit(mask))
-                    .alias("val"),
-                )
-                for b in range(n_bands)
-            ]
-        )
-    )
-    banded = ph.select("id", "ph", bands.alias("b")).select(
-        "id", "ph", "b.band", "b.val"
-    )
-    star = None
-    if max_bucket is not None:
-        over = (
-            banded.groupBy("band", "val")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .where(F.col("__n") > max_bucket)
-            .select("band", "val")
-        )
-        small = banded.join(F.broadcast(over), ["band", "val"], "left_anti")
-        omembers = (
-            banded.join(F.broadcast(over), ["band", "val"], "left_semi")
-            .select("id", "ph")
-            .distinct()
-        )
-        reps = omembers.groupBy("ph").agg(F.min("id").alias("__rep"))
-        star = (
-            omembers.join(reps, "ph")
-            .where(F.col("id") != F.col("__rep"))
-            .select(
-                F.col("__rep").alias("id_a"),
-                F.col("id").alias("id_b"),
-                F.lit(0).cast("int").alias("hamming"),
-            )
-        )
-        banded = small
-    members = (
-        banded.groupBy("band", "val")
-        .agg(F.array_sort(F.collect_list(F.struct("id", "ph"))).alias("ms"))
-        .where(F.size("ms") >= 2)
-    )
-    pair = F.explode(
-        F.flatten(
-            F.transform(
-                F.col("ms"),
-                lambda x, i: F.transform(
-                    F.slice(
-                        F.col("ms"),
-                        i + 2,
-                        F.greatest(F.size("ms") - i - 1, F.lit(0)),
-                    ),
-                    lambda y: F.struct(
-                        x["id"].alias("id_a"),
-                        y["id"].alias("id_b"),
-                        F.bit_count(x["ph"].bitwiseXOR(y["ph"])).alias(
-                            "hamming"
-                        ),
-                    ),
-                ),
-            )
-        )
-    )
-    pairs = (
-        members.select(pair.alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
-        .where(F.col("hamming") <= max_hamming)
-    )
-    if star is not None:
-        pairs = pairs.unionByName(star)
-    return pairs.distinct()  # the same pair can surface from several bands

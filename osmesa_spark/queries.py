@@ -3458,26 +3458,7 @@ def q_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("id"),
         F.array_distinct(_shingles("text", 3)).alias("shs"),
     )
-    per = sigs.join(shd, "id")
-    sides = cand.select(
-        "id_a", "id_b", F.explode(F.array("id_a", "id_b")).alias("id")
-    )
-    joined = (
-        sides.join(per, "id")
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.first(
-                F.when(F.col("id") == F.col("id_a"),
-                       F.struct("sig", "shs")),
-                ignorenulls=True,
-            ).alias("a"),
-            F.first(
-                F.when(F.col("id") == F.col("id_b"),
-                       F.struct("sig", "shs")),
-                ignorenulls=True,
-            ).alias("b"),
-        )
-    )
+    joined = dd._pair_sides(cand, sigs.join(shd, "id"))
     matches = F.aggregate(
         F.zip_with(
             F.col("a.sig"), F.col("b.sig"),

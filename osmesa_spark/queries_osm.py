@@ -2199,22 +2199,15 @@ def osm_tag_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("s.tags").alias("tags"))
     )
     from osmesa_spark.functions.text import _let
+    from osmesa_spark.operators.dedup import _pair_combinations
 
     ks = F.array_sort(F.map_keys(F.col("tags")))
     # let-bind the sorted key array: referencing `ks` inside the pair
     # lambdas re-derived map_keys+array_sort per pair position
     pairs = _let(
         ks,
-        lambda k: F.flatten(
-            F.transform(
-                F.sequence(F.lit(1), F.size(k) - 1),
-                lambda i: F.transform(
-                    F.slice(k, i + 1, F.size(k) - i),
-                    lambda k2: F.struct(
-                        F.element_at(k, i).alias("k1"), k2.alias("k2")
-                    ),
-                ),
-            )
+        lambda k: _pair_combinations(
+            k, lambda k1, k2: F.struct(k1.alias("k1"), k2.alias("k2"))
         ),
     )
     return (

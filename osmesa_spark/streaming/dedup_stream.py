@@ -31,7 +31,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from osmesa_spark.functions.text import doc_fingerprint
@@ -159,42 +158,9 @@ def streaming_phash_dedup(
 
     Returns (id, event_time, ph). Bounded input: plain dropDuplicates on
     the same fingerprint (T8 batch/stream twin)."""
-    from osmesa_spark.operators.multimodal import (
-        PHASH_CELLS,
-        _resize_batch,
-        _synthesize_batch,
-        phash60,
-    )
-    from osmesa_spark.session import ship_package
-    from osmesa_spark.util import ensure_parallelism
+    from osmesa_spark.operators.multimodal import _phash_fingerprints
 
-    ship_package(docs.sparkSession)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = _resize_batch(
-                _synthesize_batch(pdf, id_col, text_col), PHASH_CELLS, 1
-            )
-            # _synthesize_batch and _resize_batch are order-preserving
-            out[time_col] = pdf[time_col].values
-            yield out[["media_id", time_col, "thumb"]]
-
-    src = docs.select(id_col, text_col, time_col)
-    if not docs.isStreaming:
-        src = ensure_parallelism(src, id_col)
-    thumbs = src.mapInPandas(
-        kernel,
-        schema=(
-            f"media_id long, {time_col} timestamp, thumb array<bigint>"
-        ),
-    )
-    with_ph = thumbs.select(
-        F.col("media_id").alias("id"),
-        time_col,
-        phash60("thumb").alias("ph"),
-    )
+    with_ph = _phash_fingerprints(docs, id_col, text_col, time_col)
     if with_ph.isStreaming:
         return with_ph.withWatermark(
             time_col, horizon

@@ -1008,3 +1008,86 @@ def test_pyramid_chains_keep_their_plans(spark, edit_frames):
         for name, df in chains.items()
     }
     assert got == PYRAMID_CHAIN_SHAPES
+
+
+def _pair_generators(docs):
+    from osmesa_spark.operators import dedup as dd
+    from osmesa_spark.operators import multimodal as mm
+
+    def capped_lsh():
+        return dd.lsh_candidate_pairs(
+            dd.minhash_signatures(docs), 4, 4, max_bucket=1000
+        )
+
+    return {
+        "lsh": lambda: dd.lsh_candidate_pairs(dd.minhash_signatures(docs), 4, 4),
+        "lsh_capped": capped_lsh,
+        "phash": lambda: mm.phash_pairs(docs, 3),
+        "phash_capped": lambda: mm.phash_pairs(docs, 3, max_bucket=500),
+        "simhash": lambda: dd.simhash_dedup(docs),
+        "sparse_cosine": lambda: dd.sparse_cosine_pairs(docs),
+        "winnow": lambda: dd.winnow_overlap_pairs(docs),
+        "jaccard_verify": lambda: dd.jaccard_verify(docs, capped_lsh()),
+        "containment_verify": lambda: dd.containment_verify(
+            docs, capped_lsh()
+        ),
+    }
+
+
+# Each threshold pair generator and pair verifier on the SF_CORRECT
+# documents, as measured before the generators were folded onto
+# `dedup._band_pairs` and `dedup._posting_pairs` and the verifiers onto
+# `dedup._pair_sides` (shuffle partitions 8, SPARK_GRAFT_CPUS=4, one
+# fresh session, in this order): (broadcast, shuffle, Python) exchanges
+# of the final plan, jobs at construction, jobs in the collect, rows.
+# The capped banded runs add the census, the two broadcast over-cap
+# lists and the star-edge joins; construction jobs come from the lazy
+# pins.
+PAIR_GENERATOR_PLANS = {
+    "lsh": ((0, 3, 0), 0, 4, 25),
+    "lsh_capped": ((4, 7, 0), 1, 5, 25),
+    "phash": ((0, 3, 1), 0, 4, 25),
+    "phash_capped": ((4, 7, 0), 1, 5, 25),
+    "simhash": ((0, 2, 0), 0, 3, 415),
+    "sparse_cosine": ((7, 7, 0), 4, 8, 113),
+    "winnow": ((3, 3, 0), 3, 5, 92),
+    "jaccard_verify": ((5, 9, 0), 1, 7, 25),
+    "containment_verify": ((5, 9, 0), 1, 7, 25),
+}
+
+
+def _pair_generator_shape(spark, build):
+    """((broadcast, shuffle, Python) exchanges, construction jobs, action
+    jobs, rows) of one pair generator. The listener bus is drained inside
+    each block, so a job counts in the block that started it."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    with jobs_launched(spark) as built:
+        df = build()
+        bus.waitUntilEmpty()
+    a = audit_plan(df)
+    with jobs_launched(spark) as ran:
+        rows = len(df.collect())
+        bus.waitUntilEmpty()
+    exchanges = (a.broadcast_exchanges, a.shuffle_exchanges, a.python_stages)
+    return exchanges, len(built), len(ran), rows
+
+
+def test_pair_generators_keep_their_plans(spark):
+    """Every banded and posting-list pair generator, and both verifiers,
+    keep their exchanges exactly and launch no more jobs than they did as
+    hand-copied plans. Construction jobs depend on what the session
+    memoised before, so jobs are only bounded from above."""
+    docs = Q._t(spark, SF_CORRECT, "documents")
+    got = {
+        name: _pair_generator_shape(spark, build)
+        for name, build in _pair_generators(docs).items()
+    }
+    assert {n: (g[0], g[3]) for n, g in got.items()} == {
+        n: (w[0], w[3]) for n, w in PAIR_GENERATOR_PLANS.items()
+    }
+    for name, (_, built, ran, _) in got.items():
+        _, max_built, max_ran, _ = PAIR_GENERATOR_PLANS[name]
+        assert built <= max_built and ran <= max_ran, (
+            f"{name}: {built} construction / {ran} action jobs, "
+            f"expected at most {max_built} / {max_ran}"
+        )

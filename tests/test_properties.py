@@ -195,6 +195,116 @@ def test_winnow_matches_python_reference(spark):
         assert sorted(set(got[i])) == expected, f"case {i}: {t!r}"
 
 
+def _near_twin_corpus(
+    spark, seed: int, n: int = 40, length: int = 40, vocab: int = 60
+):
+    """Seeded random docs over a small vocabulary, every third one with a
+    near-twin that differs in one or two words, plus one exact copy."""
+    rng = random.Random(seed)
+    words = [f"w{i}" for i in range(vocab)]
+    rows = []
+    for i in range(n):
+        toks = [rng.choice(words) for _ in range(length)]
+        rows.append((i, " ".join(toks)))
+        if i % 3 == 0:
+            twin = list(toks)
+            for _ in range(1 + i % 2):
+                twin[rng.randrange(length)] = rng.choice(words)
+            rows.append((1000 + i, " ".join(twin)))
+    rows.append((2000, rows[0][1]))
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def test_banded_pairs_match_python_banding(spark):
+    """The banded kernel's two document callers against Python banding
+    over their collected fingerprints: simhash blocks on the top prefix
+    bits and keeps Hamming ≤ max_hamming; uncapped LSH pairs every two
+    docs that agree on all rows of any band."""
+    from osmesa_spark.operators import dedup as dd
+
+    docs = _near_twin_corpus(spark, 5)
+    sh = {
+        r.doc_id: r.sh
+        for r in docs.select("doc_id", dd.simhash64("text", 60).alias("sh"))
+        .collect()
+    }
+    ids = sorted(sh)
+    same_block = {
+        (a, b): bin(sh[a] ^ sh[b]).count("1")
+        for i, a in enumerate(ids)
+        for b in ids[i + 1:]
+        if sh[a] >> 56 == sh[b] >> 56
+    }
+    want = {(a, b, h) for (a, b), h in same_block.items() if h <= 8}
+    got = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in dd.simhash_dedup(docs, prefix_bits=4, max_hamming=8).collect()
+    }
+    assert got == want
+    assert any(h > 0 for _, _, h in want), "no accepted pair at Hamming > 0"
+    assert len(want) < len(same_block), "no same-block pair rejected"
+
+    sigs = dd.minhash_signatures(docs)
+    sig = {r.id: list(r.sig) for r in sigs.collect()}
+    ids = sorted(sig)
+    want = {
+        (a, b)
+        for i, a in enumerate(ids)
+        for b in ids[i + 1:]
+        if any(sig[a][k : k + 4] == sig[b][k : k + 4] for k in range(0, 16, 4))
+    }
+    got = {
+        (r.id_a, r.id_b)
+        for r in dd.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4).collect()
+    }
+    assert got == want
+    assert any(sig[a] != sig[b] for a, b in want), "only identical signatures"
+
+
+def test_posting_pairs_match_python_tfidf_cosine(spark):
+    """The posting-list kernel against a Python tf·idf cosine: norms over
+    every term, dot products over the terms with df ≤ max_df only, pairs
+    kept at cos ≥ threshold. A stop-word in every doc exercises the
+    prune."""
+    import math
+    import re
+    from collections import Counter
+
+    from osmesa_spark.operators.dedup import sparse_cosine_pairs
+
+    docs = _near_twin_corpus(spark, 8, length=12, vocab=200)
+    rows = [(r.doc_id, "the " + r.text) for r in docs.collect()]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    tf = {i: Counter(re.findall("[a-z0-9]+", t.lower())) for i, t in rows}
+    df_ = Counter(w for c in tf.values() for w in c)
+    n = len(tf)
+    wt = {i: {w: c[w] * math.log(n / df_[w]) for w in c} for i, c in tf.items()}
+    nrm = {i: math.sqrt(sum(x * x for x in v.values())) for i, v in wt.items()}
+    max_df, threshold = 10, 0.5
+    ids = sorted(wt)
+    cos = {}
+    for i, a in enumerate(ids):
+        for b in ids[i + 1:]:
+            shared = [
+                w for w in wt[a] if w in wt[b] and df_[w] <= max_df
+            ]
+            if shared:
+                dot = sum(wt[a][w] * wt[b][w] for w in shared)
+                cos[(a, b)] = dot / max(nrm[a] * nrm[b], 1e-12)
+    want = {k: v for k, v in cos.items() if v >= threshold}
+    got = {
+        (r.id_a, r.id_b): r.cos
+        for r in sparse_cosine_pairs(
+            docs, max_df=max_df, threshold=threshold
+        ).collect()
+    }
+    assert set(got) == set(want)
+    assert all(abs(got[k] - want[k]) <= 1e-6 for k in want)
+    assert df_["the"] > max_df
+    assert any(v < 1 - 1e-9 for v in want.values()), "only identical docs"
+    assert len(want) < len(cos), "no posting-list pair rejected"
+
+
 def test_zorder_bijective(spark):
     from pyspark.sql import functions as F
 
