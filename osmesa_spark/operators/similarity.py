@@ -60,32 +60,30 @@ def _sq_l2_pair_sql(a_sql: str, b_sql: str, round_to: int = 6) -> str:
     )
 
 
-def _sq_l2_sql(vec_sql: str, centroid: list[float], round_to: int = 6) -> str:
-    """`_sq_l2_pair_sql` to a literal centroid."""
-    return _sq_l2_pair_sql(vec_sql, darr(centroid), round_to)
-
-
 def _pq_dists_sql(
     sub_sql: str, book: list[tuple[int, list[float]]], round_to: int = 6
 ) -> str:
-    """Rounded squared-L2 from a sub-vector to EVERY centroid of a
-    codebook, as ONE transform over a literal array-of-centroids: the
-    fold lambda appears once in the expression tree instead of once per
-    centroid, which keeps a k=16 codebook inside the whole-stage-codegen
+    """Rounded squared-L2 from a (sub-)vector to EVERY centroid of a
+    literal codebook — the one distance row behind every codebook lookup
+    (k-means assignment, coarse-cell ranking, PQ codes and lookup rows).
+    ONE transform over a literal array-of-centroids: the fold lambda
+    appears once in the expression tree instead of once per centroid,
+    which keeps a k=16 codebook inside the whole-stage-codegen
     method-size limit (k separate per-centroid folds overflow it and
     drop the stage to interpreted evaluation — ~2× wall at k=16).
-    Identical per-centroid arithmetic and output order (ascending cid).
-    The sub-vector is LET-BOUND (one-element transform) so its slice/cast
-    evaluates once per row instead of once per centroid (r11: HOF lambdas
-    re-evaluate captured subtrees per element)."""
+    Output order is the codebook's. The sub-vector is LET-BOUND
+    (one-element transform) so its slice/cast evaluates once per row
+    instead of once per centroid (r11: HOF lambdas re-evaluate captured
+    subtrees per element). A NULL vector has no distances: the row is
+    NULL, not k NULLs, so no argmin or top-n can pick a cell for it."""
     from osmesa_spark.functions.litexpr import darr2
 
     cb = darr2([c for _, c in book])
     return (
-        f"element_at(transform(array({sub_sql}), sv -> "
-        f"transform({cb}, cent -> round(aggregate(zip_with(sv, cent, "
-        f"(x, c) -> (x - c) * (x - c)), 0.0D, (acc, t) -> acc + t), "
-        f"{round_to}))), 1)"
+        f"element_at(transform(array({sub_sql}), sv -> CASE WHEN sv IS NOT "
+        f"NULL THEN transform({cb}, cent -> round(aggregate(zip_with(sv, "
+        f"cent, (x, c) -> (x - c) * (x - c)), 0.0D, (acc, t) -> acc + t), "
+        f"{round_to})) END), 1)"
     )
 
 
@@ -99,6 +97,54 @@ def _argmin_pos_sql(dists_sql: str) -> str:
         f"element_at(transform(array({dists_sql}), dv -> "
         f"CAST(array_position(dv, array_min(dv)) AS INT)), 1)"
     )
+
+
+def _cids_sql(book: list[tuple[int, list[float]]]) -> str:
+    """The codebook's cluster ids as a literal INT array, in book order."""
+    return "array(" + ",".join(str(int(c)) for c, _ in book) + ")"
+
+
+def _pq_code_sql(
+    sub_sql: str, book: list[tuple[int, list[float]]], round_to: int = 6
+) -> str:
+    """1-based position of the nearest centroid (ties to the first, so to
+    the lowest cid in an ascending-cid codebook)."""
+    return _argmin_pos_sql(_pq_dists_sql(sub_sql, book, round_to))
+
+
+def _cid_sql(
+    vec_sql: str, book: list[tuple[int, list[float]]], round_to: int = 6
+) -> str:
+    """Cluster id of the nearest centroid of an ascending-cid codebook.
+    `try_element_at`: plain element_at on a literal array reads a NULL
+    position as an index (Spark 4.1 codegen skips the null check), which
+    would hand a NULL vector the last cid."""
+    return (
+        f"try_element_at({_cids_sql(book)}, "
+        f"{_pq_code_sql(vec_sql, book, round_to)})"
+    )
+
+
+def _nearest_cids_sql(
+    vec_sql: str, book: list[tuple[int, list[float]]], n: int
+) -> str:
+    """Cluster ids of the `n` nearest centroids, nearest first — (dist,
+    cid) structs sort lexicographically, so ties break to the lower cid."""
+    return (
+        f"transform(slice(array_sort(zip_with({_pq_dists_sql(vec_sql, book)}, "
+        f"{_cids_sql(book)}, (d, c) -> named_struct('d', d, 'cid', c))), 1, "
+        f"{int(n)}), s -> s.cid)"
+    )
+
+
+def _per_sub_sql(vec_sql: str, books: list, each) -> str:
+    """`array(each(slice_s, book_s) for every PQ subspace s)`: each book
+    quantizes the next contiguous slice of the vector."""
+    ds = len(books[0][0][1])  # sub-dim from a codebook centroid, no job
+    return "array(" + ",".join(
+        each(f"slice({vec_sql}, {s * ds + 1}, {ds})", b)
+        for s, b in enumerate(books)
+    ) + ")"
 
 
 def _norm_sql(a_sql: str) -> str:
@@ -336,19 +382,12 @@ def ivf_probe_frozen(
     either (asserted in tests/test_colocate.py)."""
 
     qv_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
-    structs = ",".join(
-        f"named_struct('d', {_sq_l2_sql(qv_sql, v)}, "
-        f"'cid', CAST({int(cid)} AS INT))"
-        for cid, v in cents
-    )
-    probes = F.expr(
-        f"explode(transform(slice(array_sort(array({structs})), 1, "
-        f"{int(nprobe)}), s -> s.cid))"
-    )
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.expr(qv_sql).alias("qvec"),
-        probes.alias("cluster"),
+        F.expr(f"explode({_nearest_cids_sql(qv_sql, cents, nprobe)})").alias(
+            "cluster"
+        ),
     )
     return _probe(
         assigned, q, "cluster", _COS, k, spread=False,
@@ -556,135 +595,63 @@ def kmeans_lloyd(
     the clustering primitive under SemDeDup-style semantic dedup and
     diversity-balanced sampling.
 
-    Determinism (so a SQL oracle can replay it): initial centroids are the
-    `k` rows with the smallest portable hash of the id (stable across
-    engines); each assignment uses squared-L2 **rounded to `round_to`
-    decimals** with cluster-id tie-break (centroids sorted by id, argmin
-    takes the first); updated centroid components are means rounded the
-    same way, which re-quantizes the float-sum ordering noise between
-    engines at every round.
+    The codebook is `pq_train`'s with one subspace (k-means IS the m=1
+    product quantizer), so seeding, rounding, tie-breaks and the update
+    rounds are exactly pq_train's: `iters` rounds ⇒ iters-1 updates, then
+    one assignment against the returned centroids.
 
-    Scale shape: assignment and partial sums run in ONE Arrow-batched
-    numpy kernel per round (`mapInPandas`) — dense k*dim distance algebra
-    is exactly what vectorized kernels are for, and the plan stays
-    fixed-size. (The all-Column alternative unrolls k*dim*2 expression
-    nodes whose Catalyst+janino compile time dominates wall clock at ANY
-    data size; numpy executes the same arithmetic vectorized.) Per-batch
-    per-cluster (count, sum) rows — numPartitions*k of them, never the
-    data — are combined on the driver: hand-rolled map-side combine. The
-    update round shuffles nothing."""
+    Scale shape: training launches pq_train's jobs (the seed pick and one
+    Arrow-batched update kernel per round, combined on the driver — the
+    update rounds shuffle nothing). The assignment is ONE lazy
+    Arrow-batched numpy kernel (`mapInPandas`) over the rounded
+    squared-L2 — dense k*dim distance algebra is what vectorized kernels
+    are for, and the plan stays fixed-size."""
     import numpy as np
     import pandas as pd
 
-    from osmesa_spark.operators.dedup import _portable_hash
+    (book,) = pq_train(
+        df, m=1, k=k, iters=iters, id_col=id_col, vec_col=vec_col,
+        seed=seed, round_to=round_to,
+    )
+    cid_arr = np.array([c for c, _ in book], dtype=np.int64)
+    C = np.array([c for _, c in book], dtype=np.float64)
 
-    if iters < 1:
-        # the final loop round produces the assignment output; with no
-        # rounds there is nothing to return
-        raise ValueError(f"kmeans_lloyd: iters must be >= 1, got {iters}")
+    def assign(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            X = np.array(pdf["v"].tolist(), dtype=np.float64)
+            D = np.round(
+                ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1), round_to
+            )
+            a = D.argmin(1)
+            out = {"vid": pdf["vid"], "cluster": cid_arr[a].astype("int32")}
+            if emit_vector:
+                out["v"] = pdf["v"]
+            if emit_residual:
+                # residual vs the ASSIGNED centroid, computed in the same
+                # kernel pass: IEEE-identical to a downstream zip_with(v,
+                # centroid) subtraction, one less full-corpus stage (the
+                # IVF-PQ encode input)
+                out["r"] = list(X - C[a])
+            yield pd.DataFrame(out)
+
+    # emit_vector: consumers that need (id, cluster, vector) — e.g.
+    # SemDeDup's cluster-blocked self-join — skip a join back to the source
+    # table entirely (the kernel already holds the row)
+    schema = "vid long, cluster int"
+    if emit_vector:
+        schema += ", v array<double>"
+    if emit_residual:
+        schema += ", r array<double>"
     v = df.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
     )
-    seeds = (
-        v.select(
-            "v", _portable_hash(F.col("vid").cast("string"), seed).alias("h"),
-            "vid",
-        )
-        .orderBy("h", "vid")
-        .limit(k)
-        .collect()
-    )
-    if not seeds:
-        raise ValueError("kmeans_lloyd: input frame has no rows")
-    # dim from the seed rows — no separate first() job
-    dim = len(seeds[0]["v"])
-    cids = list(range(len(seeds)))
-    cents = np.array([list(r["v"]) for r in seeds], dtype=np.float64)
-
-    for it in range(iters):
-        cid_arr = np.array(cids, dtype=np.int64)
-        C = cents
-
-        if it < iters - 1:
-
-            def partial(batches, C=C, cid_arr=cid_arr):
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.array(pdf["v"].tolist(), dtype=np.float64)
-                    D = np.round(
-                        ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1),
-                        round_to,
-                    )
-                    a = D.argmin(1)
-                    rows = {"cluster": [], "n": [], "s": []}
-                    for i, cid in enumerate(cid_arr):
-                        m = a == i
-                        if m.any():
-                            rows["cluster"].append(int(cid))
-                            rows["n"].append(int(m.sum()))
-                            rows["s"].append(X[m].sum(0).tolist())
-                    yield pd.DataFrame(rows)
-
-            parts = v.mapInPandas(
-                partial, schema="cluster int, n long, s array<double>"
-            ).collect()
-            sums: dict[int, object] = {}
-            ns: dict[int, int] = {}
-            for r in parts:
-                c = r["cluster"]
-                sums[c] = sums.get(c, np.zeros(dim)) + np.array(r["s"])
-                ns[c] = ns.get(c, 0) + r["n"]
-            cids = sorted(ns)
-            cents = np.array(
-                [np.round(sums[c] / ns[c], round_to) for c in cids]
-            )
-        else:
-
-            def assign(batches, C=C, cid_arr=cid_arr, emit=emit_vector,
-                       emit_r=emit_residual):
-                for pdf in batches:
-                    if len(pdf) == 0:
-                        continue
-                    X = np.array(pdf["v"].tolist(), dtype=np.float64)
-                    D = np.round(
-                        ((X[:, None, :] - C[None, :, :]) ** 2).sum(-1),
-                        round_to,
-                    )
-                    a = D.argmin(1)
-                    out = {
-                        "vid": pdf["vid"],
-                        "cluster": cid_arr[a].astype("int32"),
-                    }
-                    if emit:
-                        out["v"] = pdf["v"]
-                    if emit_r:
-                        # residual vs the ASSIGNED centroid, computed in the
-                        # same kernel pass: IEEE-identical to a downstream
-                        # zip_with(v, centroid) subtraction, one less
-                        # full-corpus stage (the IVF-PQ encode input)
-                        out["r"] = list(X - C[a])
-                    yield pd.DataFrame(out)
-
-            # emit_vector: consumers that need (id, cluster, vector) — e.g.
-            # SemDeDup's cluster-blocked self-join — skip a join back to
-            # the source table entirely (the kernel already holds the row)
-            schema = "vid long, cluster int"
-            if emit_vector:
-                schema += ", v array<double>"
-            if emit_residual:
-                schema += ", r array<double>"
-            out = v.mapInPandas(assign, schema=schema).withColumnRenamed(
-                "vid", id_col
-            )
-            if return_centroids:
-                # the codebook the final assignment used, as (cid, centroid)
-                # pairs — residual encoders (IVF-PQ) subtract exactly these
-                return out, [
-                    (int(c), cents[i].tolist()) for i, c in enumerate(cids)
-                ]
-            return out
+    out = v.mapInPandas(assign, schema=schema).withColumnRenamed("vid", id_col)
+    # return_centroids: the codebook the assignment used, as (cid, centroid)
+    # pairs — residual encoders (IVF-PQ) subtract exactly these
+    return (out, book) if return_centroids else out
 
 
 def embedding_dim_stats(
@@ -1138,17 +1105,23 @@ def pq_train(
     compress a dim-D float32 vector to `m` small integers, and query
     distances are m table lookups instead of dim multiplies.
 
-    Determinism mirrors `kmeans_lloyd` exactly (portable-hash seeding with
-    the SAME k seed rows for every subspace, distances and centroid means
-    rounded to `round_to` decimals, cluster-id tie-breaks) so a SQL oracle
-    can replay the whole training per subspace.
+    This is the one deterministic Lloyd trainer: `kmeans_lloyd` is its
+    m=1 codebook. Determinism (so a SQL oracle can replay the training per
+    subspace): the initial centroids are the SAME `k` rows in every
+    subspace, those with the smallest portable hash of the id (stable
+    across engines); each assignment uses squared-L2 rounded to `round_to`
+    decimals with cluster-id tie-break (centroids sorted by id, argmin
+    takes the first); updated centroid components are means rounded the
+    same way, which re-quantizes the float-sum ordering noise between
+    engines at every round.
 
     Scale shape: ONE Arrow-batched kernel pass per Lloyd round computes the
     per-subspace partial (count, sum) rows for ALL m subspaces together —
     per batch that is ≤ m·k bounded rows out, never the data; the driver
-    combines m·k·(dim/m) doubles. `iters` follows kmeans_lloyd semantics:
-    iters-1 update rounds (iters=2 ⇒ codebook after one update, the
-    _KMEANS_SQL c1 stage).
+    combines m·k·(dim/m) doubles, a hand-rolled map-side combine, so the
+    update rounds shuffle nothing. `iters` counts Lloyd rounds including
+    the caller's final assignment: iters-1 update rounds (iters=2 ⇒
+    codebook after one update, the _KMEANS_SQL c1 stage).
 
     Returns, per subspace, the (cluster_id, centroid) list sorted by
     cluster id — empty clusters drop, ids stay stable for oracle replay."""
@@ -1157,6 +1130,10 @@ def pq_train(
 
     from osmesa_spark.operators.dedup import _portable_hash
 
+    if iters < 1:
+        # the last round is the caller's assignment: with no rounds there
+        # is no codebook to assign against
+        raise ValueError(f"pq_train: iters must be >= 1, got {iters}")
     v = df.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("v"),
@@ -1272,26 +1249,14 @@ def knn_pq(
         vec_col=vec_col, seed=seed,
     )
 
-    ds = len(books[0][0][1])  # sub-dim from a codebook centroid, no job
     vec_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
-
-    def sub_sql(s: int) -> str:
-        return f"slice({vec_sql}, {s * ds + 1}, {ds})"
-
-    def code_sql(s: int) -> str:
-        # 1-based position of the first minimal distance — centroids are in
-        # ascending-cid order, so ties break to the smallest cluster id,
-        # matching the oracle's ORDER BY (dist, cid)
-        return _argmin_pos_sql(_pq_dists_sql(sub_sql(s), books[s]))
-
-    codes = F.expr("array(" + ",".join(code_sql(s) for s in range(m)) + ")")
+    # codes are 1-based positions into the ascending-cid codebooks, so ties
+    # break to the smallest cluster id, matching the oracle's ORDER BY
+    # (dist, cid)
+    codes = F.expr(_per_sub_sql(vec_sql, books, _pq_code_sql))
     qs = queries.select(
         F.col(id_col).alias("query_id"),
-        F.expr(
-            "array("
-            + ",".join(_pq_dists_sql(sub_sql(s), books[s]) for s in range(m))
-            + ")"
-        ).alias("luts"),
+        F.expr(_per_sub_sql(vec_sql, books, _pq_dists_sql)).alias("luts"),
     )
     return _probe(
         corpus, qs, None, _ADC, k, ascending=True,
@@ -1350,32 +1315,18 @@ def pq_encode(
     """Encode every corpus vector to its m PQ codebook indices — the
     persistable compressed representation (m small ints instead of dim
     floats, a 32-64× storage cut at dim=64/m=4) that `knn_pq`-style ADC
-    probes can scan WITHOUT touching the raw vectors. Pure Column
-    literal-fold argmin per subspace (same expression knn_pq builds
-    inline); codes are 1-based positions into each subspace's
-    ascending-cid codebook.
+    probes can scan WITHOUT touching the raw vectors. Pure Column: one
+    `_pq_dists_sql` argmin per subspace, the distance row knn_pq ranks.
 
     Output: (id, codes: array<int>) — each code is the assigned CLUSTER ID
     (stable under codebook reordering, directly replayable by the SQL
-    oracle's per-subspace assignment). Write this next to the corpus once,
-    and every subsequent probe job reads m-byte codes, not vectors."""
-
-    m = len(books)
-    ds = len(books[0][0][1])  # sub-dim from a codebook centroid, no job
+    oracle's per-subspace assignment); a NULL vector's codes are NULL.
+    Write this next to the corpus once, and every subsequent probe job
+    reads m-byte codes, not vectors."""
     vec_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
-
-    def code_sql(s: int) -> str:
-        pos = _argmin_pos_sql(
-            _pq_dists_sql(f"slice({vec_sql}, {s * ds + 1}, {ds})", books[s])
-        )
-        cids = "array(" + ",".join(str(int(c)) for c, _ in books[s]) + ")"
-        return f"element_at({cids}, {pos})"
-
     return corpus.select(
         F.col(id_col).alias("id"),
-        F.expr(
-            "array(" + ",".join(code_sql(s) for s in range(m)) + ")"
-        ).alias("codes"),
+        F.expr(_per_sub_sql(vec_sql, books, _cid_sql)).alias("codes"),
     )
 
 
@@ -1438,35 +1389,19 @@ def knn_ivfpq(
         seed=seed + 1,
     )
 
-    dim = len(coarse[0][1])
-    ds = dim // m
-
-    def code_sql(vec_sql: str, s: int) -> str:
-        return _argmin_pos_sql(
-            _pq_dists_sql(f"slice({vec_sql}, {s * ds + 1}, {ds})", books[s])
-        )
-
-    codes = F.expr(
-        "array(" + ",".join(code_sql("`r`", s) for s in range(m)) + ")"
-    )
+    codes = F.expr(_per_sub_sql("`r`", books, _pq_code_sql))
 
     # query side: rank the coarse cells by the same rounded-L2 with cid
     # tie-break and probe the nprobe nearest — the standard recall/cost
     # dial (nprobe=1 ⇒ exactly the argmin cell); each probed cell gets its
     # OWN query residual, so the lookup rows are per (query, cell)
     qv_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
-    coarse_dists = _pq_dists_sql(qv_sql, coarse)
-    cid_lits = "array(" + ",".join(str(int(cid)) for cid, _ in coarse) + ")"
-    ranked_cells = (
-        f"slice(array_sort(zip_with({coarse_dists}, {cid_lits}, "
-        f"(d, c) -> named_struct('d', d, 'cid', c))), 1, {int(nprobe)})"
-    )
     qs0 = queries.select(
         F.col(id_col).alias("query_id"),
-        F.expr(f"explode({ranked_cells})").alias("probe"),
+        F.expr(f"explode({_nearest_cids_sql(qv_sql, coarse, nprobe)})").alias(
+            "cluster"
+        ),
         F.expr(qv_sql).alias("qv"),
-    ).select(
-        "query_id", F.col("probe.cid").alias("cluster"), "qv"
     )
     q_resid_sql = (
         f"zip_with(`qv`, {cent_lookup_sql('`cluster`')}, (x, c) -> x - c)"
@@ -1474,16 +1409,7 @@ def knn_ivfpq(
     qs = qs0.select(
         "query_id",
         "cluster",
-        F.expr(
-            "array("
-            + ",".join(
-                _pq_dists_sql(
-                    f"slice({q_resid_sql}, {s * ds + 1}, {ds})", books[s]
-                )
-                for s in range(m)
-            )
-            + ")"
-        ).alias("luts"),
+        F.expr(_per_sub_sql(q_resid_sql, books, _pq_dists_sql)).alias("luts"),
     )
     # the checkpointed residuals are probed as laid out: no second spread
     return _probe(
@@ -1643,28 +1569,14 @@ def kmeans_assign(
     rounded to `round_to`, ties to the lowest cluster id), but because the
     centroids are plan literals the whole thing is a pure-Column
     projection — k·dim multiply-adds per row, no shuffle, no Python, and
-    an external oracle can replay it exactly. Distances fold through
-    `zip_with` + `aggregate` lambdas (left-to-right, the list_sum order)
-    rather than k·dim unrolled expression nodes — the unrolled form blows
-    janino's 64 KB generated-method limit and falls back to interpreted
-    eval; the HOF form stays compiled. argmin = array_min over
-    (dist, cid) structs: lexicographic struct ordering IS the
-    first-minimum tie-break."""
-    # the vector cast is let-bound: referenced once per centroid, it would
-    # otherwise re-allocate the double array k times per row
+    an external oracle can replay it exactly. The distances are ONE
+    `_pq_dists_sql` row (one fold lambda over the literal codebook,
+    left-to-right, the list_sum order) and the cluster is the cid at its
+    first minimum. A NULL vector gets a NULL cluster."""
     v_sql = f"CAST({_qn(vec_col)} AS ARRAY<DOUBLE>)"
-    structs = ",".join(
-        f"named_struct('d', round(aggregate(zip_with(vv, {darr(cent)}, "
-        f"(x, c) -> (x - c) * (x - c)), 0.0D, (acc, x) -> acc + x), "
-        f"{round_to}), 'cid', {int(cid)})"
-        for cid, cent in sorted(centroids)
-    )
     return df.select(
         F.col(id_col),
-        F.expr(
-            f"CAST(element_at(transform(array({v_sql}), "
-            f"vv -> array_min(array({structs})).cid), 1) AS INT)"
-        ).alias("cluster"),
+        F.expr(_cid_sql(v_sql, sorted(centroids), round_to)).alias("cluster"),
     )
 
 

@@ -36,11 +36,16 @@ def spark():
 @contextlib.contextmanager
 def jobs_launched(spark):
     """Yield a set that holds, once the block exits, the ids of the Spark
-    jobs (outside any job group) that started inside it."""
-    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    jobs (outside any job group) that started inside it. The status
+    tracker is fed by the asynchronous listener bus, so the bus is drained
+    before each read: a job counts in the block that started it."""
+    sc = spark.sparkContext._jsc.sc()
+    tracker, bus = sc.statusTracker(), sc.listenerBus()
+    bus.waitUntilEmpty()
     before = set(tracker.getJobIdsForGroup(None))
     jobs: set = set()
     yield jobs
+    bus.waitUntilEmpty()
     jobs.update(set(tracker.getJobIdsForGroup(None)) - before)
 
 

@@ -9,11 +9,11 @@ Covers:
     extremes, inf/−inf, NaN) plus seeded random bit patterns;
   * darr / larr round-trips;
   * the similarity builders (_dot_sql, _norm_sql, _cosine_sql,
-    _lsh_bucket_sql, _sq_l2_sql, _pq_dists_sql) against Python/numpy
+    _lsh_bucket_sql, _sq_l2_pair_sql, _pq_dists_sql) against Python/numpy
     replays on seeded random vectors;
   * word_tokens_sql / shingles_sql against a Python `re` replay;
-  * kmeans_assign (pure-SQL literal-fold argmin) against the numpy
-    replay of the Arrow kernel's rounded-distance argmin;
+  * kmeans_assign (the argmin of one `_pq_dists_sql` row) against the
+    numpy replay of the Arrow kernel's rounded-distance argmin;
   * minhash_signatures against a hashlib/md5 Python replay;
   * the let-binding lint: a computed input appears exactly once in every
     builder that feeds it to a higher-order-function lambda (Spark-free).
@@ -163,7 +163,7 @@ def test_word_tokens_and_shingles_sql_match_python_re(spark):
 def test_lsh_bucket_and_sq_l2_sql_match_python_replay(vec_df):
     from osmesa_spark.operators.similarity import (
         _lsh_bucket_sql,
-        _sq_l2_sql,
+        _sq_l2_pair_sql,
         lsh_planes,
     )
 
@@ -172,7 +172,7 @@ def test_lsh_bucket_and_sq_l2_sql_match_python_replay(vec_df):
     rows = vec_df.select(
         "id", "a",
         F.expr(_lsh_bucket_sql("`a`", planes)).alias("bucket"),
-        F.expr(_sq_l2_sql("`a`", cent)).alias("d2"),
+        F.expr(_sq_l2_pair_sql("`a`", darr(cent))).alias("d2"),
     ).collect()
     for r in rows:
         want_bucket = 0

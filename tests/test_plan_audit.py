@@ -1056,20 +1056,30 @@ PAIR_GENERATOR_PLANS = {
 }
 
 
-def _pair_generator_shape(spark, build):
+def _plan_shape(spark, build):
     """((broadcast, shuffle, Python) exchanges, construction jobs, action
-    jobs, rows) of one pair generator. The listener bus is drained inside
-    each block, so a job counts in the block that started it."""
-    bus = spark.sparkContext._jsc.sc().listenerBus()
+    jobs, rows) of the frame `build()` returns."""
     with jobs_launched(spark) as built:
         df = build()
-        bus.waitUntilEmpty()
     a = audit_plan(df)
     with jobs_launched(spark) as ran:
         rows = len(df.collect())
-        bus.waitUntilEmpty()
     exchanges = (a.broadcast_exchanges, a.shuffle_exchanges, a.python_stages)
     return exchanges, len(built), len(ran), rows
+
+
+def _assert_plans_kept(got, want):
+    """Exchanges and rows exactly as pinned; jobs at most as pinned
+    (construction jobs depend on what the session memoised before)."""
+    assert {n: (g[0], g[3]) for n, g in got.items()} == {
+        n: (w[0], w[3]) for n, w in want.items()
+    }
+    for name, (_, built, ran, _) in got.items():
+        _, max_built, max_ran, _ = want[name]
+        assert built <= max_built and ran <= max_ran, (
+            f"{name}: {built} construction / {ran} action jobs, "
+            f"expected at most {max_built} / {max_ran}"
+        )
 
 
 def test_pair_generators_keep_their_plans(spark):
@@ -1079,15 +1089,38 @@ def test_pair_generators_keep_their_plans(spark):
     memoised before, so jobs are only bounded from above."""
     docs = Q._t(spark, SF_CORRECT, "documents")
     got = {
-        name: _pair_generator_shape(spark, build)
+        name: _plan_shape(spark, build)
         for name, build in _pair_generators(docs).items()
     }
-    assert {n: (g[0], g[3]) for n, g in got.items()} == {
-        n: (w[0], w[3]) for n, w in PAIR_GENERATOR_PLANS.items()
+    _assert_plans_kept(got, PAIR_GENERATOR_PLANS)
+
+
+# Each registry query that trains or looks up a literal codebook (k-means,
+# PQ, IVF cells) and that PROBE_EXCHANGES does not already pin, on
+# SF_CORRECT as measured before the k-means trainer was folded onto
+# `pq_train` and the lookups onto `_pq_dists_sql` (shuffle partitions 8,
+# SPARK_GRAFT_CPUS=4, one warm session): (broadcast, shuffle, Python)
+# exchanges, jobs at construction, jobs in the collect, rows.
+CODEBOOK_PLANS = {
+    "kmeans_clusters": ((0, 1, 1), 3, 3, 500),
+    "ivf_append": ((0, 1, 0), 2, 3, 100),
+    "embedding_drift": ((3, 4, 0), 2, 10, 4),
+    "semdedup_prune": ((1, 2, 0), 8, 5, 250),
+    "embedding_prototypicality": ((1, 2, 1), 2, 5, 500),
+    "knn_ivf_nprobe": ((1, 1, 1), 2, 3, 40),
+    "ann_recall_pq": ((5, 6, 0), 2, 12, 8),
+    "embedding_pq_codes": ((0, 0, 0), 2, 1, 500),
+    "ann_recall_ivfpq": ((3, 4, 0), 7, 9, 8),
+}
+
+
+def test_codebook_builders_keep_their_plans(spark):
+    """Every k-means / PQ / IVF-cell query keeps its exchanges and rows
+    exactly and launches no more jobs than before the trainers and the
+    codebook lookups were folded."""
+    reg = Q.registry()
+    got = {
+        name: _plan_shape(spark, lambda: reg[name].spark(spark, SF_CORRECT))
+        for name in CODEBOOK_PLANS
     }
-    for name, (_, built, ran, _) in got.items():
-        _, max_built, max_ran, _ = PAIR_GENERATOR_PLANS[name]
-        assert built <= max_built and ran <= max_ran, (
-            f"{name}: {built} construction / {ran} action jobs, "
-            f"expected at most {max_built} / {max_ran}"
-        )
+    _assert_plans_kept(got, CODEBOOK_PLANS)

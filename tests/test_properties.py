@@ -1094,18 +1094,42 @@ def test_cms_estimate_unseen_keys_zero(spark):
     assert est["never_seen_2"] == 0
 
 
-def test_kmeans_rejects_bad_iters(spark):
-    """iters < 1 never reaches the assignment round, so the trainer must
-    refuse it up front instead of silently returning None."""
-    import pytest
-
-    from osmesa_spark.operators.similarity import kmeans_lloyd
+@pytest.mark.parametrize("trainer", ["kmeans_lloyd", "pq_train"])
+def test_kmeans_rejects_bad_iters(spark, trainer):
+    """iters < 1 leaves no round for the caller's assignment, so the one
+    Lloyd trainer (pq_train, under kmeans_lloyd) must refuse it up front
+    instead of silently returning the seed rows."""
+    from osmesa_spark.operators import similarity as sim
 
     df = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [1.0, 1.0])], "vec_id long, embedding array<double>"
+        [(1, [0.0] * 4), (2, [1.0] * 4)], "vec_id long, embedding array<double>"
     )
     with pytest.raises(ValueError, match="iters"):
-        kmeans_lloyd(df, k=2, iters=0)
+        getattr(sim, trainer)(df, k=2, iters=0)
+
+
+def test_null_vector_gets_no_codebook_cell(spark):
+    """A NULL embedding arriving at a frozen codebook (the append and
+    serving paths) has no distances: no cluster, no PQ code, and as a
+    query no probe rows — never the first or last cell by accident."""
+    from pyspark.sql import functions as F
+
+    from osmesa_spark.operators import similarity as sim
+
+    book = [(0, [0.0, 1.0]), (1, [1.0, 0.0]), (3, [2.0, 2.0])]
+    df = spark.createDataFrame(
+        [(1, [0.1, 0.9]), (2, None), (3, [2.0, 1.9]), (4, [1.0, 0.1])],
+        "vec_id long, embedding array<double>",
+    )
+    assigned = sim.kmeans_assign(df, book)
+    assert dict(map(tuple, assigned.collect())) == {1: 0, 2: None, 3: 3, 4: 1}
+    codes = dict(map(tuple, sim.pq_encode(df, [book]).collect()))
+    assert codes == {1: [0], 2: [None], 3: [3], 4: [1]}
+    lists = assigned.join(
+        df.select("vec_id", F.col("embedding").alias("v")), "vec_id"
+    )
+    probed = sim.ivf_probe_frozen(lists, df, book, k=2, nprobe=2)
+    assert {r["query_id"] for r in probed.collect()} == {1, 3, 4}
 
 
 def test_knn_ivfpq_respects_blobs(spark):
